@@ -1,19 +1,8 @@
-"""Seeded input generators for the benchmark.
+"""Seeded input generator for the benchmark's `join_exec` workload.
 
-`write_tables` writes the ten tables the engine's query inventory reads
-(`graft.engine.Tables.names`) with the schema and parquet encodings of the
-engine's own test data: a TPC-H-like star schema, an `events` stream, a
-`documents` corpus with planted near-duplicates and an `embeddings` table
-of unit vectors around ten cluster centres.
-
-`write_join_tables` writes the star schema of the `join_exec` workload:
-one fact table whose four foreign keys come twice, once uniform and once
-with the reference benchmark's exponential skew y = (16^x - 1) / 15, and
-four dimension tables.
-
-Money and rate columns are rounded to two decimals, as in the engine's test
-data: the queries sum them exactly and the DuckDB oracle must agree to the
-last bit.
+`write_join_tables` writes its star schema: one fact table whose four
+foreign keys come twice, once uniform and once with the reference
+benchmark's exponential skew y = (16^x - 1) / 15, and four dimension tables.
 """
 import os
 
@@ -21,124 +10,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-WORDS = ("a the data spark table query join hash sort scan filter group agg "
-         "key value row column batch stream window merge order line part "
-         "customer vector small big fast slow").split()
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-ADJECTIVES = ["small", "large", "red", "blue", "hot", "old", "green", "shiny"]
-NOUNS = ["ring", "widget", "bolt", "gear", "gizmo", "plate", "valve", "spring"]
-EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-LANGS = ["en", "de", "fr", "es", "zh"]
-
 
 def _write(dirpath, name, columns):
     pq.write_table(pa.table(columns), os.path.join(dirpath, name + ".parquet"))
-
-
-def _money(rng, lo, hi, n):
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _dates(rng, start, days, n):
-    """Midnight timestamps on `days` consecutive days from `start`."""
-    offsets = rng.integers(0, days, n) * 86_400_000_000
-    base = np.datetime64(start, "us")
-    return pa.array(base + offsets.astype("timedelta64[us]"), pa.timestamp("us"))
-
-
-def write_tables(dirpath, sf, seed):
-    """The ten inventory tables at scale factor `sf` (lineitem = 6M x sf rows)."""
-    os.makedirs(dirpath, exist_ok=True)
-    rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_line = int(1_500_000 * sf), int(6_000_000 * sf)
-    n_events, n_docs, n_vecs = int(1_000_000 * sf), int(50_000 * sf), int(20_000 * sf)
-    i32 = pa.int32()
-
-    _write(dirpath, "region", {
-        "r_regionkey": pa.array(range(5), i32), "r_name": REGIONS})
-    _write(dirpath, "nation", {
-        "n_nationkey": pa.array(range(25), i32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], i32)})
-    _write(dirpath, "customer", {
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), i32),
-        "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-        "c_mktsegment": [SEGMENTS[i] for i in rng.integers(0, 5, n_cust)]})
-    _write(dirpath, "supplier", {
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), i32),
-        "s_acctbal": _money(rng, -999.99, 9999.99, n_supp)})
-    keys = np.arange(n_part, dtype=np.int64)
-    _write(dirpath, "part", {
-        "p_partkey": keys,
-        "p_name": [f"{ADJECTIVES[a]} {NOUNS[b]}" for a, b in
-                   zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": [PART_TYPES[t] for t in rng.integers(0, 6, n_part)],
-        "p_size": pa.array(rng.integers(1, 51, n_part), i32),
-        "p_retailprice": np.round(900 + (keys % 1000) / 10, 2)})
-    _write(dirpath, "orders", {
-        "o_orderkey": np.arange(n_ord, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_ord),
-        "o_orderstatus": [("F", "O", "P")[s] for s in rng.integers(0, 3, n_ord)],
-        "o_totalprice": _money(rng, 1000, 500000, n_ord),
-        "o_orderdate": _dates(rng, "1995-01-01", 2404, n_ord),
-        "o_orderpriority": [PRIORITIES[p] for p in rng.integers(0, 5, n_ord)]})
-    qty = rng.integers(1, 51, n_line).astype(np.float64)
-    _write(dirpath, "lineitem", {
-        "l_orderkey": np.sort(rng.integers(0, n_ord, n_line)),
-        "l_partkey": rng.integers(0, n_part, n_line),
-        "l_suppkey": rng.integers(0, n_supp, n_line),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_line), i32),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * rng.uniform(900, 2100, n_line), 2),
-        "l_discount": rng.integers(0, 11, n_line) / 100,
-        "l_tax": rng.integers(0, 9, n_line) / 100,
-        "l_returnflag": [("A", "N", "R")[f] for f in rng.integers(0, 3, n_line)],
-        "l_linestatus": [("F", "O")[s] for s in rng.integers(0, 2, n_line)],
-        "l_shipdate": _dates(rng, "1995-01-02", 2498, n_line)})
-    ts = np.sort(rng.integers(0, 30 * 86_400_000_000, n_events))
-    _write(dirpath, "events", {
-        "event_id": np.arange(n_events, dtype=np.int64),
-        "ts": pa.array(np.datetime64("2024-01-01", "us") + ts.astype("timedelta64[us]"),
-                       pa.timestamp("us")),
-        "user_id": rng.integers(0, max(1, n_cust // 10), n_events),
-        "event_type": [EVENT_TYPES[e] for e in rng.integers(0, 5, n_events)],
-        "value": np.round(rng.exponential(60, n_events) + 0.01, 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)]})
-    # About one document in five after the first 50 is a copy of an earlier one
-    # with about a tenth of its words replaced: the near-duplicates that
-    # the MinHash, SimHash and quantized near-dup operators look for.
-    texts = []
-    for i in range(n_docs):
-        if i >= 50 and rng.random() < 0.2:
-            words = texts[int(rng.integers(0, i))].split()
-            for j in rng.integers(0, len(words), max(1, len(words) // 10)):
-                words[j] = WORDS[int(rng.integers(0, len(WORDS)))]
-        else:
-            words = [WORDS[w] for w in rng.integers(0, len(WORDS), int(rng.integers(4, 100)))]
-        texts.append(" ".join(words))
-    _write(dirpath, "documents", {
-        "doc_id": np.arange(n_docs, dtype=np.int64),
-        "text": texts,
-        "lang": [LANGS[g] for g in rng.integers(0, 5, n_docs)],
-        "source": [f"src{s}" for s in rng.integers(0, 20, n_docs)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64)})
-    centres = rng.normal(0, 1, (10, 64))
-    labels = rng.integers(0, 10, n_vecs)
-    vecs = centres[labels] + rng.normal(0, 0.8, (n_vecs, 64))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    _write(dirpath, "embeddings", {
-        "vec_id": np.arange(n_vecs, dtype=np.int64),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, i32)})
 
 
 def skewed(rng, n, hi):

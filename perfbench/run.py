@@ -31,11 +31,10 @@ sys.path.insert(0, HERE)
 import gen  # noqa: E402
 from fingerprint import fingerprint  # noqa: E402
 
-WORKLOADS = ("join_exec", "sql_mix", "ops_pipeline")
-# Inventory tables for sql_mix and ops_pipeline: fixed scale and seed, so
-# every run measures the same data; --seed orders the queries.
-INVENTORY_SF = 0.01
-INVENTORY_SEED = 42
+WORKLOADS = ("join_exec", "ops_pipeline")
+# ops_pipeline reads the two tables of the engine's sf 0.1 test data that
+# its queries use, committed here unchanged; --seed orders the queries.
+OPS_DATA = os.path.join(HERE, "data", "sf0.1")
 # join_exec star schema, generated from --seed.
 JOIN_FACT_ROWS = 300_000
 JOIN_DIM_ROWS = 50_000
@@ -111,10 +110,9 @@ def generated(path, write):
 
 
 def inputs(workload, seed):
+    if workload == "ops_pipeline":
+        return OPS_DATA
     data = os.path.join(WORK, "data")
-    if workload != "join_exec":
-        return generated(os.path.join(data, f"inventory-sf{INVENTORY_SF}"),
-                         lambda d: gen.write_tables(d, INVENTORY_SF, INVENTORY_SEED))
     path = os.path.join(data, f"join-{seed}")
     if os.path.isdir(data):  # keep one seed's star schema at a time
         for old in os.listdir(data):
@@ -128,8 +126,9 @@ def expected(workload, data, oracles):
     """The DuckDB answer of each query, as fingerprints, cached per data
     dir and oracle SQL."""
     key = hashlib.sha256(json.dumps(oracles[workload], sort_keys=True).encode()).hexdigest()
-    path = os.path.join(data, f"expected-{workload}-{key[:16]}.tsv")
+    path = os.path.join(WORK, "expected", f"{os.path.basename(data)}-{workload}-{key[:16]}.tsv")
     if not os.path.exists(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         con = duckdb.connect()
         for f in sorted(os.listdir(data)):
             if f.endswith(".parquet"):
@@ -152,7 +151,7 @@ def input_stamp(workload, data, seed):
               for f in sorted(os.listdir(data)) if f.endswith(".parquet")}
     scale = ({"fact_rows": JOIN_FACT_ROWS, "dim_rows": JOIN_DIM_ROWS, "data_seed": seed}
              if workload == "join_exec"
-             else {"sf": INVENTORY_SF, "data_seed": INVENTORY_SEED})
+             else {"sf": 0.1, "source": "engine test data"})
     return {"scale": scale, "tables": tables}
 
 

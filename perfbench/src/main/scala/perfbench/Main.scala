@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.{Random, Try}
 
 import org.apache.spark.ListenerBusDrain
@@ -14,7 +15,10 @@ import graft.engine.{GraftSession, Tables}
 /** One query execution. `window` is set when the query ran traced. */
 final case class Sample(query: String, seconds: Double, ok: Boolean, window: Option[Window])
 
-final case class Pass(samples: Seq[Sample], wallS: Double, cpuS: Double, traced: Boolean) {
+/** `jitS` and `gcS`, the JVM's compile and collection time during the pass,
+  * are recorded to explain pass times, not reported as metrics. */
+final case class Pass(samples: Seq[Sample], wallS: Double, cpuS: Double, traced: Boolean,
+    jitS: Double = 0, gcS: Double = 0) {
   def clean: Boolean = samples.forall(_.ok)
 }
 
@@ -37,12 +41,13 @@ final case class Pass(samples: Seq[Sample], wallS: Double, cpuS: Double, traced:
 object Main {
   /** Cores of the local master: at most 4, at most what the host has. */
   val MaxCores = 4
-  /** Pass time keeps falling for about five passes as the JIT compiles; the
-    * run budget allows one untimed warm pass. With four timed passes the
-    * median leaves out the slowest, usually the first. */
+  /** Pass time keeps falling while the JIT compiles, on `ops_pipeline` for
+    * longer than a run lasts; the run budget allows one untimed warm pass.
+    * With four timed passes the median leaves out the slowest, usually the
+    * first. */
   val WarmPasses = 1
   val MinTimedPasses = 4
-  /** Enough timed samples that the tail percentile has ten beyond it. */
+  /** The per-query tail in the artifact has this many samples beyond it. */
   val TailBeyond = 10
 
   def main(args: Array[String]): Unit = {
@@ -100,11 +105,9 @@ object Main {
 
     val warm = Seq.fill(WarmPasses)(runner.pass(traced = false))
 
-    val minPasses = math.max(MinTimedPasses,
-      math.ceil((TailBeyond + 1).toDouble / workload.queries.size).toInt)
     val timed = mutable.ArrayBuffer.empty[Pass]
     val tTimed = System.nanoTime
-    def enough(wantTraced: Boolean) = timed.count(_.traced == wantTraced) >= minPasses
+    def enough(wantTraced: Boolean) = timed.count(_.traced == wantTraced) >= MinTimedPasses
     while ((System.nanoTime - tTimed) / 1e9 < seconds || !enough(false) ||
         (traced && !enough(true)))
       timed += runner.pass(traced = traced && Set(1, 2)(timed.length % 4))
@@ -121,31 +124,11 @@ object Main {
     spark.stop()
 
     val plain = timed.filter(p => !p.traced && p.clean).toSeq
-    val tracedClean = timed.filter(p => p.traced && p.clean).toSeq
-    require(plain.nonEmpty && (!traced || tracedClean.nonEmpty),
-      s"no timed pass without a failed query (failures: ${runner.errors})")
-    val okSamples = plain.flatMap(_.samples).map(s => s.query -> s.seconds)
-    val tail = Stats.tail(Stats.relativeToOwnMedian(okSamples), TailBeyond).get
-    val endToEnd = Seq(
-      ("setup_s", setupS, "s"),
-      ("pass_s", Stats.median(plain.map(_.wallS)), "s"),
-      ("query_gmean_s", Stats.gmean(
-        okSamples.groupBy(_._1).values.map(v => Stats.median(v.map(_._2))).toSeq), "s"),
-      ("query_tail_rel", tail.value, "ratio"),
-      ("pass_cpu_s", Stats.median(plain.map(_.cpuS)), "s"),
-      ("retained_heap_mb", heapMb, "MB"))
-
-    val layers: Map[String, Double] = if (!traced) Map.empty else {
-      val perPass = tracedClean.map(p => Layers.of(p.samples.flatMap(_.window), k))
-      perPass.head.keys.map(m => m -> Stats.median(perPass.map(_(m)))).toMap ++ Map(
-        "engine.session_s" -> (tSession - t0) / 1e9,
-        "engine.register_s" -> (tRegister - tSession) / 1e9,
-        "trace.overhead" ->
-          Stats.median(tracedClean.map(_.wallS)) / Stats.median(plain.map(_.wallS)))
-    }
+    val tail = Stats.tail(
+      Stats.relativeToOwnMedian(plain.flatMap(_.samples).map(s => s.query -> s.seconds)), TailBeyond)
     val metrics =
-      if (traced) Layers.units.map { case (m, u) => (m, layers(m), u) }
-      else endToEnd
+      if (traced) perLayer((tSession - t0) / 1e9, (tRegister - tSession) / 1e9, timed.toSeq, k)
+      else endToEnd(setupS, heapMb, timed.toSeq)
 
     val all = cold +: (warm ++ timed.toSeq)
     val perQuery = workload.queries.map { q =>
@@ -167,6 +150,7 @@ object Main {
     }
     def passes(ps: Seq[Pass]) = Json.arr(ps.map(p => Json.obj(Seq(
       "wall_s" -> Json.num(p.wallS), "cpu_s" -> Json.num(p.cpuS),
+      "jit_s" -> Json.num(p.jitS), "gc_s" -> Json.num(p.gcS),
       "traced" -> p.traced.toString, "clean" -> p.clean.toString))))
     val rt = Runtime.getRuntime
     val artifact = Json.obj(Seq(
@@ -189,9 +173,9 @@ object Main {
         "cold_pass_s" -> Json.num(cold.wallS))),
       "warm_passes" -> passes(warm),
       "timed_passes" -> passes(timed.toSeq),
-      "query_tail" -> Json.obj(Seq(
-        "value" -> Json.num(tail.value), "percentile" -> Json.num(tail.percentile),
-        "samples" -> tail.samples.toString)),
+      "query_tail_rel" -> tail.map(t => Json.obj(Seq(
+        "value" -> Json.num(t.value), "percentile" -> Json.num(t.percentile),
+        "samples" -> t.samples.toString))).getOrElse("null"),
       "attempted" -> runner.attempted.toString,
       "failed" -> runner.failed.toString,
       "queries" -> Json.obj(perQuery),
@@ -203,6 +187,42 @@ object Main {
       "attempted" -> runner.attempted.toString,
       "failed" -> runner.failed.toString,
       "metrics" -> metricsJson(metrics))))
+  }
+
+  /** The end-to-end metrics that the run's timed passes allow. Pass and
+    * query times come only from untraced passes in which every query gave
+    * the right answer; with no such pass only `setup_s` and
+    * `retained_heap_mb` are left. */
+  def endToEnd(setupS: Double, heapMb: Double, timed: Seq[Pass]): Seq[(String, Double, String)] = {
+    val plain = timed.filter(p => !p.traced && p.clean)
+    val fromPasses = if (plain.isEmpty) Nil else {
+      val perQuery = plain.flatMap(_.samples).groupBy(_.query).values
+        .map(v => Stats.median(v.map(_.seconds))).toSeq
+      Seq(
+        ("pass_s", Stats.median(plain.map(_.wallS)), "s"),
+        ("query_gmean_s", Stats.gmean(perQuery), "s"),
+        ("pass_cpu_s", Stats.median(plain.map(_.cpuS)), "s"))
+    }
+    (("setup_s", setupS, "s") +: fromPasses) :+ (("retained_heap_mb", heapMb, "MB"))
+  }
+
+  /** The per-layer metrics, in `Layers.units` order: each the median over
+    * the clean traced passes of its per-pass total. Without a clean traced
+    * pass only the `engine` set-up times are left; `trace.overhead` needs a
+    * clean pass of each kind. */
+  def perLayer(sessionS: Double, registerS: Double, timed: Seq[Pass],
+      k: Int): Seq[(String, Double, String)] = {
+    val (tracedClean, plain) = timed.filter(_.clean).partition(_.traced)
+    val perPass = tracedClean.map(p => Layers.of(p.samples.flatMap(_.window), k))
+    val fromPasses = perPass.headOption.toSeq.flatMap(_.keys)
+      .map(m => m -> Stats.median(perPass.map(_(m)))).toMap
+    val overhead =
+      if (tracedClean.isEmpty || plain.isEmpty) Map.empty
+      else Map("trace.overhead" ->
+        Stats.median(tracedClean.map(_.wallS)) / Stats.median(plain.map(_.wallS)))
+    val layers = fromPasses ++ overhead ++
+      Map("engine.session_s" -> sessionS, "engine.register_s" -> registerS)
+    Layers.units.flatMap { case (m, u) => layers.get(m).map(v => (m, v, u)) }
   }
 
   private def metricsJson(ms: Seq[(String, Double, String)]): String =
@@ -223,18 +243,24 @@ final class Runner(spark: SparkSession, workload: Workload, dir: String,
   def pass(traced: Boolean): Pass = {
     val order = rng.shuffle(workload.queries)
     if (traced) spark.sparkContext.addSparkListener(tracer)
-    val cpu0 = cpuTime()
+    val (cpu0, jit0, gc0) = (cpuTime(), jitTime(), gcTime())
     val t0 = System.nanoTime
     val samples = order.map(q => query(q, traced))
     val wall = (System.nanoTime - t0) / 1e9
     val cpu = cpuTime() - cpu0
     if (traced) spark.sparkContext.removeSparkListener(tracer)
-    Pass(samples, wall, cpu, traced)
+    Pass(samples, wall, cpu, traced, jitTime() - jit0, gcTime() - gc0)
   }
 
   private def cpuTime(): Double =
     ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
+
+  private def jitTime(): Double =
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
+
+  private def gcTime(): Double =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
 
   private def query(q: BenchQuery, traced: Boolean): Sample = {
     attempted += 1

@@ -18,16 +18,15 @@ object Stats {
 
   /** A high percentile that still rests on data: the largest sample that
     * has at least `beyond` samples above it, with the percentile it sits at.
-    * With fewer than `beyond + 1` samples there is no such sample. */
+    * There is none when that sample would sit below the median: with so few
+    * samples the value reads the spread of the fastest runs, not a tail. */
   final case class Tail(value: Double, percentile: Double, samples: Int)
 
   def tail(xs: Seq[Double], beyond: Int = 10): Option[Tail] = {
     val n = xs.length
-    if (n <= beyond) None
-    else {
-      val i = n - 1 - beyond
-      Some(Tail(xs.sorted.apply(i), 100.0 * (i + 1) / n, n))
-    }
+    val i = n - 1 - beyond
+    if (i < 0 || 2 * (i + 1) < n) None
+    else Some(Tail(xs.sorted.apply(i), 100.0 * (i + 1) / n, n))
   }
 
   /** Each sample divided by the median of its own key: per-query latency

@@ -18,22 +18,14 @@ object Workloads {
   private def inventory(names: String*): Seq[BenchQuery] =
     names.map(n => BenchQuery(n, SparkEntry.queries(n), SparkEntry.oracleSql(n)))
 
-  /** Short relational queries on built-in and broadcast joins: the fixed
-    * per-query floor dominates, and no ParallelHashJoinExec runs, so this
-    * is the control for join changes. */
-  val sqlMix: Workload = Workload("sql_mix", Tables.names, inventory(
-    "q1_pricing_summary", "q3_shipping_priority", "q6_forecast_revenue",
-    "q13_customer_distribution", "e1_events_hourly", "j_left_outer",
-    "x2_sql_entry"))
-
   /** Iterative and ML operators: many driver round trips, checkpointed and
     * persisted state, size gates, broadcasts and codegen kernels. */
-  val opsPipeline: Workload = Workload("ops_pipeline", Tables.names, inventory(
+  val opsPipeline: Workload = Workload("ops_pipeline", Seq("documents", "embeddings"), inventory(
     "t26_incremental_dedup", "t6_minhash_lsh", "v8_quantized_neardup"))
 
   val joinExec: Workload = Workload("join_exec", JoinExec.tables, JoinExec.queries)
 
-  val all: Seq[Workload] = Seq(joinExec, sqlMix, opsPipeline)
+  val all: Seq[Workload] = Seq(joinExec, opsPipeline)
 
   def apply(name: String): Workload = all.find(_.name == name).getOrElse(
     throw new IllegalArgumentException(

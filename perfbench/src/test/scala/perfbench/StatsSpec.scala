@@ -19,9 +19,15 @@ class StatsSpec extends AnyFunSuite {
   test("tail is the largest sample with at least ten beyond it") {
     val xs = (1 to 20).map(_.toDouble).reverse
     assert(Stats.tail(xs, 10).contains(Stats.Tail(10.0, 50.0, 20)))
-    val eleven = (1 to 11).map(_.toDouble)
-    assert(Stats.tail(eleven, 10).contains(Stats.Tail(1.0, 100.0 / 11, 11)))
+    val hundred = (1 to 100).map(_.toDouble)
+    assert(Stats.tail(hundred, 10).contains(Stats.Tail(90.0, 90.0, 100)))
     assert(Stats.tail((1 to 10).map(_.toDouble), 10).isEmpty)
+  }
+
+  test("no tail below the median") {
+    // 19 samples: the 9th sits at p47, below the median.
+    assert(Stats.tail((1 to 19).map(_.toDouble), 10).isEmpty)
+    assert(Stats.tail((1 to 11).map(_.toDouble), 10).isEmpty)
   }
 
   test("samples relative to their own query's median") {
