@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans._
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, LogicalPlan, Project}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.internal.SQLConf
 
@@ -79,10 +79,13 @@ object AutoParallelJoin extends PredicateHelper {
     })
 
   /** Would Spark's JoinSelection pick a broadcast join here? Mirrors the
-    * reference's partitioned-mode-only guard (rs:84-86): converting a
-    * broadcast-eligible join would force two shuffles where Spark needs
-    * none — at 100 TB the small-dim broadcast is the right plan and the
-    * custom exec should only take the shuffled ones. */
+    * reference's partitioned-mode-only guard (rs:84-86): guarded mode
+    * leaves such joins to Spark's broadcast hash join. Converted, most of
+    * them would take the exec's shared build, itself a broadcast, so
+    * there is little to gain; but a left outer join whose right side is
+    * not 3× smaller than its left keeps the co-partitioned build, with
+    * two shuffles where Spark needs none. Required mode converts them
+    * all. */
   private def wouldBroadcast(jt: JoinType, j: Join, conf: SQLConf): Boolean = {
     def small(p: LogicalPlan): Boolean = {
       val threshold = conf.autoBroadcastJoinThreshold
@@ -103,13 +106,17 @@ object AutoParallelJoin extends PredicateHelper {
   }
 
   /** Rewrite every eligible Join in an (analyzed) plan to the explicit
-    * [[ParallelHashJoin]] node (required mode — broadcast guard off). */
+    * [[ParallelHashJoin]] node (required mode — broadcast guard off),
+    * building the smaller side as the strategy's transparent path does
+    * ([[ParallelHashJoinStrategy.sideSelectConfKey]]). */
   def rewritePlan(plan: LogicalPlan, conf: SQLConf): LogicalPlan =
     plan.transformUp {
       case j: Join =>
         extract(j, ignoreBroadcast = true, conf)
           .map { case (lk, rk, jt, cond) =>
-            ParallelHashJoin(j.left, j.right, lk, rk, jt, cond): LogicalPlan
+            val (node, reorder) =
+              ParallelHashJoinStrategy.transparentJoin(j, lk, rk, jt, cond, conf)
+            if (reorder) Project(j.output, node) else node
           }
           .getOrElse(j)
     }

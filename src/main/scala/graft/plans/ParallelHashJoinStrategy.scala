@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, 
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
 
 /** Planner strategy: [[ParallelHashJoin]] logical → physical.
   * The Spark analog of the reference's physical-optimizer rule
@@ -29,32 +29,47 @@ object ParallelHashJoinStrategy extends SparkStrategy {
 
   val implConfKey = "spark.graft.parallelHashJoin.impl"
 
-  /** Build-side selection for transparently-rewritten semi/anti joins
+  /** Build-side selection on the transparent path
     * (`spark.graft.parallelHashJoin.sideSelect`, default true).
     *
     * The reference's rule always builds LEFT (DataFusion convention,
     * where the optimizer has already put the small side left); Spark
-    * convention puts the small dim on the RIGHT, so a faithful
-    * build-left `LeftSemi`/`LeftAnti` hashes the FACT side and pays a
-    * bitset finalizer pass over it. The exec's probe-preserving kernel
-    * (the `right_semi.rs` mechanism) is the same join with the sides
-    * swapped: build the small right side, stream the fact, emit
-    * matched/unmatched probe rows — identical semantics AND output
-    * schema (semi/anti emit only the preserved side's columns).
-    * Measured (tools/BuildSideBench, 4M fact ⋉ 100k dim): semi 1.56×
-    * faster swapped (0.67× native SHJ), anti 1.09× faster swapped.
-    * Applied only on the TRANSPARENT path — the explicit API keeps the
-    * reference's fixed build-left — and only for equi-only semi/anti
-    * where the right side's stats are ≥3× smaller (plan stability on
-    * near-equal sides). */
+    * convention puts the small dim on the RIGHT, so a faithful build-left
+    * join hashes the FACT side. When the right side's stats are ≥3×
+    * smaller (plan stability on near-equal sides), the join is planned
+    * with its children swapped so the small side is built:
+    *  - `LeftSemi`/`LeftAnti` without a residual condition become the
+    *    exec's probe-preserving kernel (the `right_semi.rs` mechanism):
+    *    identical semantics AND output schema, and no bitset finalizer
+    *    pass over the fact. Measured on the co-partitioned shape (4M
+    *    fact ⋉ 100k dim, shuffled-hash): semi 1.56× faster swapped
+    *    (0.67× native SHJ), anti 1.09× faster swapped.
+    *  - `Inner` stays inner and `LeftOuter` becomes `RightOuter`; a
+    *    Project restores the join's column order.
+    * Swapped joins are the shared-build types, so a small swapped build
+    * side is broadcast rather than shuffled (see [[planJoin]]). Applied
+    * only on the TRANSPARENT path — the explicit API keeps the
+    * reference's fixed build-left. */
   val sideSelectConfKey = "spark.graft.parallelHashJoin.sideSelect"
 
-  private def swapToSmallBuild(
-      jt: JoinType, cond: Option[Expression], j: Join): Boolean =
-    (jt == LeftSemi || jt == LeftAnti) && cond.isEmpty &&
-      SQLConf.get.getConfString(sideSelectConfKey, "true").toBoolean &&
-      j.right.stats.sizeInBytes >= 0 &&
+  /** The transparent path's node for an extracted equi-join of `j`, with
+    * the build side chosen as above, and whether its output needs a
+    * Project back to `j.output`'s column order. */
+  private[plans] def transparentJoin(j: Join, leftKeys: Seq[Expression],
+      rightKeys: Seq[Expression], joinType: JoinType, condition: Option[Expression],
+      conf: SQLConf): (ParallelHashJoin, Boolean) = {
+    val rightSmaller = conf.getConfString(sideSelectConfKey, "true").toBoolean &&
       j.right.stats.sizeInBytes * 3 <= j.left.stats.sizeInBytes
+    def swapped(jt: JoinType, probePreserving: Boolean) =
+      ParallelHashJoin(j.right, j.left, rightKeys, leftKeys, jt, condition, probePreserving)
+    joinType match {
+      case LeftSemi | LeftAnti if rightSmaller && condition.isEmpty =>
+        (swapped(joinType, probePreserving = true), false)
+      case Inner if rightSmaller => (swapped(Inner, probePreserving = false), true)
+      case LeftOuter if rightSmaller => (swapped(RightOuter, probePreserving = false), true)
+      case _ => (ParallelHashJoin(j.left, j.right, leftKeys, rightKeys, joinType, condition), false)
+    }
+  }
 
   /** Spark's supported build-side combos (HashJoin rejects e.g.
     * semi/anti with a left build): prefer BuildLeft for reference
@@ -64,43 +79,52 @@ object ParallelHashJoinStrategy extends SparkStrategy {
     case _ => BuildRight // LeftOuter, LeftSemi, LeftAnti
   }
 
+  /** Shared build (see [[ParallelHashJoinExec]]) for the join types that
+    * allow it, when the build side's estimate fits both the broadcast
+    * threshold and the per-task build budget — the shared map has no
+    * spill path. Either setting at or below the estimate (e.g.
+    * `autoBroadcastJoinThreshold=-1`) keeps the co-partitioned shape. */
+  private def sharesBuild(joinType: JoinType, probePreserving: Boolean,
+      build: LogicalPlan): Boolean = {
+    val conf = SQLConf.get
+    val bound = math.min(conf.autoBroadcastJoinThreshold,
+      conf.getConfString(ParallelHashJoinExec.spillThresholdKey,
+        ParallelHashJoinExec.spillThresholdDefault).toLong)
+    ParallelHashJoinExec.canShareBuild(joinType, probePreserving) &&
+      bound > 0 && build.stats.sizeInBytes <= bound
+  }
+
   /** The `impl` knob dispatch shared by the explicit-node and the
     * transparent (auto) paths. */
-  private def planJoin(
-      leftKeys: Seq[Expression], rightKeys: Seq[Expression], joinType: JoinType,
-      condition: Option[Expression], left: LogicalPlan, right: LogicalPlan,
-      probePreserving: Boolean = false): Seq[SparkPlan] =
+  private def planJoin(j: ParallelHashJoin): Seq[SparkPlan] =
     SQLConf.get.getConfString(implConfKey, "chain") match {
-      case "codegen" if probePreserving =>
+      case "codegen" if j.probePreserving =>
         // control impl for probe-preserving semi/anti: Spark's own
         // LeftSemi/LeftAnti with children swapped (probe becomes the
         // preserved left side, build becomes the BuildRight hash side)
-        ShuffledHashJoinExec(rightKeys, leftKeys, joinType,
-          BuildRight, condition,
-          planLater(right), planLater(left)) :: Nil
+        ShuffledHashJoinExec(j.rightKeys, j.leftKeys, j.joinType,
+          BuildRight, j.condition,
+          planLater(j.right), planLater(j.left)) :: Nil
       case "codegen" =>
-        ShuffledHashJoinExec(leftKeys, rightKeys, joinType,
-          buildSideFor(joinType), condition,
-          planLater(left), planLater(right)) :: Nil
+        ShuffledHashJoinExec(j.leftKeys, j.rightKeys, j.joinType,
+          buildSideFor(j.joinType), j.condition,
+          planLater(j.left), planLater(j.right)) :: Nil
       case _ =>
-        ParallelHashJoinExec(leftKeys, rightKeys, joinType, condition,
-          planLater(left), planLater(right), probePreserving) :: Nil
+        ParallelHashJoinExec(j.leftKeys, j.rightKeys, j.joinType, j.condition,
+          planLater(j.left), planLater(j.right), j.probePreserving,
+          sharesBuild(j.joinType, j.probePreserving, j.left)) :: Nil
     }
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case j: ParallelHashJoin =>
-      planJoin(j.leftKeys, j.rightKeys, j.joinType, j.condition, j.left, j.right,
-        j.probePreserving)
+    case j: ParallelHashJoin => planJoin(j)
     // Transparent path (reference's UseParallelHashJoinRule applied to
     // ordinary SQL/DataFrame joins): conf-gated, guards in AutoParallelJoin.
     case j: Join if AutoParallelJoin.mode(SQLConf.get) != AutoParallelJoin.Off =>
       val required = AutoParallelJoin.mode(SQLConf.get) == AutoParallelJoin.Required
       AutoParallelJoin.extract(j, ignoreBroadcast = required, SQLConf.get) match {
-        case Some((lk, rk, jt, cond)) if swapToSmallBuild(jt, cond, j) =>
-          // build the (smaller) right side via the probe-preserving
-          // kernel with swapped children — see sideSelectConfKey doc
-          planJoin(rk, lk, jt, None, j.right, j.left, probePreserving = true)
-        case Some((lk, rk, jt, cond)) => planJoin(lk, rk, jt, cond, j.left, j.right)
+        case Some((lk, rk, jt, cond)) =>
+          val (node, reorder) = transparentJoin(j, lk, rk, jt, cond, SQLConf.get)
+          planJoin(node).map(p => if (reorder) ProjectExec(j.output, p) else p)
         case None => Nil
       }
     case _ => Nil

@@ -12,10 +12,12 @@ import graft.plans.{AutoParallelJoin, ParallelHashJoinApi, ParallelHashJoinExec,
 /** Pins the conditional build-side selection on the transparent path
   * (round-10 verdict #6): an auto-converted `LeftSemi`/`LeftAnti` whose
   * right side is ≥3× smaller by stats must plan as the probe-preserving
-  * kernel with swapped children (build = small right side), produce
-  * results identical to the stock planner, and revert to the faithful
-  * build-left shape when `sideSelect=false` — while the EXPLICIT API
-  * keeps the reference's fixed build-left regardless. */
+  * kernel with swapped children (build = small right side), an `Inner`
+  * or `LeftOuter` one as inner / right outer with swapped children under
+  * a column-restoring Project; all produce results identical to the
+  * stock planner, and revert to the faithful build-left shape when
+  * `sideSelect=false` — while the EXPLICIT API keeps the reference's
+  * fixed build-left regardless. */
 class BuildSideSelectSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -80,12 +82,49 @@ class BuildSideSelectSpec extends AnyFunSuite {
     }
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  test("auto inner and left outer with a 3x-smaller right side build it, sharing the build") {
+    import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
+    for ((jt, planned) <- Seq("inner" -> Inner, "left_outer" -> RightOuter)) {
+      val golden = sortedRows(fact.join(dim, col("k") === col("d_k"), jt))
+      withConf(AutoParallelJoin.autoConfKey -> "required") {
+        val df = fact.join(dim, col("k") === col("d_k"), jt)
+        val exec = phjOf(df)
+        assert(exec.joinType == planned, s"$jt should plan as $planned with the sides swapped")
+        assert(exec.left.output.map(_.name) == Seq("d_k"), s"$jt should build the small side")
+        assert(exec.sharedBuild, s"$jt's small swapped build should be shared")
+        assert(df.columns.toSeq == Seq("k", "v", "d_k"), "a Project restores the column order")
+        assert(sortedRows(df) == golden, s"$jt diverged under side-selected swap")
+      }
+    }
+  }
+
+  test("parallelSql builds the smaller side as the transparent strategy does") {
+    import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
+    fact.createOrReplaceTempView("bss_fact")
+    dim.createOrReplaceTempView("bss_dim")
+    val q = "SELECT f.k, f.v, d.d_k FROM bss_fact f JOIN bss_dim d ON f.k = d.d_k " +
+      "LEFT JOIN bss_dim e ON f.v = e.d_k"
+    val df = AutoParallelJoin.parallelSql(spark, q)
+    assert(sortedRows(df) == sortedRows(spark.sql(q)))
+    val execs = flatten(df.queryExecution.executedPlan).collect { case p: ParallelHashJoinExec => p }
+    assert(execs.map(_.joinType).toSet == Set(Inner, RightOuter))
+    execs.foreach { e =>
+      assert(e.left.output.map(_.name) == Seq("d_k"), s"${e.joinType} should build a dimension")
+      assert(e.sharedBuild, s"${e.joinType} over a dimension should share its build")
+    }
+  }
+
   test("sideSelect=false keeps the faithful build-left shape; near-equal sides never swap") {
     withConf(AutoParallelJoin.autoConfKey -> "required",
         ParallelHashJoinStrategy.sideSelectConfKey -> "false") {
       val exec = phjOf(fact.join(dim, col("k") === col("d_k"), "left_semi"))
       assert(!exec.probePreserving, "sideSelect=false must keep build-left")
       assert(exec.left.output.map(_.name) == Seq("k", "v"))
+      val inner = phjOf(fact.join(dim, col("k") === col("d_k")))
+      assert(inner.left.output.map(_.name) == Seq("k", "v"), "sideSelect=false builds inner left")
     }
     withConf(AutoParallelJoin.autoConfKey -> "required") {
       // same-size sides: under the 3x stats threshold — no swap

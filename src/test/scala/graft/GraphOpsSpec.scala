@@ -230,6 +230,11 @@ class GraphOpsSpec extends AnyFunSuite {
           case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
             if (s.physicalPlanDescription.contains("BroadcastExchange"))
               n.incrementAndGet()
+          // the start event carries the pre-adaptive plan: a broadcast
+          // that AQE adds at runtime shows only in its plan updates
+          case u: org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate =>
+            if (u.physicalPlanDescription.contains("BroadcastExchange"))
+              n.incrementAndGet()
           case _ =>
         }
       }

@@ -182,6 +182,88 @@ class JoinPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  // ---- build formulations (shared vs co-partitioned vs built-in) ----
+  // The planner picks a shared (broadcast) build for inner, right outer
+  // and the probe-preserving semi/anti when the build side's estimate is
+  // small, and the co-partitioned build otherwise. Both must give the
+  // built-in join's answer on dirty input. Inputs are local rows, whose
+  // size Spark can estimate (a parallelized RDD reports
+  // spark.sql.defaultSizeInBytes, which would never share).
+
+  private def localDf(rows: Seq[(Integer, Int)], k: String, v: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField(k, IntegerType, nullable = true),
+      StructField(v, IntegerType, nullable = false)))
+    spark.createDataFrame(rows.map(r => Row(r._1, r._2)).asJava, schema)
+  }
+
+  /** The join execs of `d`'s final plan, each with whether it runs fused
+    * inside a whole-stage-codegen stage. */
+  private def joinExecs(d: DataFrame): Seq[(graft.plans.ParallelHashJoinExec, Boolean)] = {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan, fused: Boolean): Seq[(SparkPlan, Boolean)] = (p, fused) +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> false)
+      case q: QueryStageExec => Seq(q.plan -> false)
+      case w: WholeStageCodegenExec => Seq(w.child -> true)
+      case i: InputAdapter => Seq(i.child -> false)
+      case other => other.children.map(_ -> fused)
+    }).flatMap { case (c, f) => walk(c, f) }
+    walk(d.queryExecution.executedPlan, fused = false).collect {
+      case (e: graft.plans.ParallelHashJoinExec, f) => (e, f)
+    }
+  }
+
+  test("shared build, co-partitioned build and built-in join agree on dirty input, all 8 types") {
+    import org.apache.spark.sql.functions.col
+    val nul = null.asInstanceOf[Integer]
+    val i: Int => Integer = Integer.valueOf
+    val giantKey = Seq.tabulate(120)(n => (i(7), n)) ++ Seq((i(1), 500), (nul, 501))
+    val fixtures: Seq[(String, Seq[(Integer, Int)], Seq[(Integer, Int)])] = Seq(
+      ("null and duplicate keys",
+        Seq((i(1), 10), (i(1), 11), (i(2), 20), (nul, 30), (nul, 31), (i(4), 40)),
+        Seq((i(1), 5), (i(2), 25), (i(2), 26), (nul, 35), (i(3), 45), (i(1), 12))),
+      ("empty build side", Nil, Seq((i(1), 1), (nul, 2), (i(2), 3))),
+      ("empty probe side", Seq((i(1), 1), (nul, 2)), Nil),
+      ("one giant key", giantKey, giantKey.map { case (k, v) => (k, v + 3) } ++ Seq((i(9), 0)))) ++
+      (1L to 4L).map(seed => (s"generated seed $seed",
+        sample(tableGen, seed + 500), sample(tableGen, seed + 1500)))
+    val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
+      "left_semi", "left_anti", "right_semi", "right_anti")
+    val sharable = Set("inner", "right_outer", "right_semi", "right_anti")
+    val formulations = Seq(
+      // codegen errors must fail here, not fall back to interpreted
+      "shared, codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
+      "shared, interpreted" -> Seq(graft.plans.ParallelHashJoinExec.codegenEnabledKey -> "false"),
+      "co-partitioned" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    for ((name, lRows, rRows) <- fixtures) {
+      val l = localDf(lRows, "lk", "lv")
+      val r = localDf(rRows, "rk", "rv")
+      for (jt <- allTypes; cond <- Seq(None, Some(col("lv") < col("rv")))) {
+        val want = sorted(nativeJoin(l, r, jt, cond))
+        for ((formulation, confs) <- formulations) {
+          val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+          confs.foreach { case (k, v) => spark.conf.set(k, v) }
+          try {
+            val got = ParallelHashJoinApi.parallelHashJoin(l, r, Seq("lk"), Seq("rk"), jt, cond)
+            assert(sorted(got) == want,
+              s"$formulation: $name jt=$jt cond=${cond.nonEmpty} l=$lRows r=$rRows")
+            val shared = formulation.startsWith("shared") && sharable(jt)
+            val Seq((exec, fused)) = joinExecs(got)
+            assert(exec.sharedBuild == shared,
+              s"$formulation: $name jt=$jt should plan sharedBuild=$shared")
+            assert(fused == !formulation.endsWith("interpreted"),
+              s"$formulation: $name jt=$jt fused=$fused")
+          } finally saved.foreach {
+            case (k, Some(v)) => spark.conf.set(k, v)
+            case (k, None) => spark.conf.unset(k)
+          }
+        }
+      }
+    }
+  }
+
   test("custom join with residual condition equals built-in, property-based") {
     import org.apache.spark.sql.functions.col
     for (seed <- 100L to 107L) {

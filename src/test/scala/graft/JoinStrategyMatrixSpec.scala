@@ -116,6 +116,61 @@ class JoinStrategyMatrixSpec extends AnyFunSuite {
     }
   }
 
+  /** The join's subtree in the final adaptive plan, through query stages. */
+  private def below(p: ParallelHashJoinExec): Seq[SparkPlan] = p.children.flatMap(flatten)
+
+  /** The node under `p` once codegen and query-stage wrappers are peeled. */
+  private def unwrapped(p: SparkPlan): SparkPlan = p match {
+    case i: org.apache.spark.sql.execution.InputAdapter => unwrapped(i.child)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => unwrapped(q.plan)
+    case r: ReusedExchangeExec => unwrapped(r.child)
+    case other => other
+  }
+
+  test("plan shape: a star join shares every build; full outer and over-budget builds shuffle") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val fact = spark.range(0, 20000, 1, 4).select(col("id").as("v") +:
+      (1 to 4).map(k => (col("id") * (k + 1) % 200).as(s"f$k")): _*)
+    def dim(k: Int) = spark.range(0, 150, 1, 2).select(col("id").as(s"d$k"), (col("id") * k).as(s"w$k"))
+    // the reference benchmark's right-deep four-dimension star, as in perfbench
+    val star = (4 to 1 by -1).foldLeft(fact) { (probe, k) =>
+      ParallelHashJoinApi.parallelHashJoin(dim(k), probe, Seq(s"d$k"), Seq(s"f$k"))
+    }.agg(count(lit(1)).as("n"), sum(col("w1") + col("w2") + col("w3") + col("w4")).as("w"))
+    val starBuiltin = (1 to 4).foldLeft(fact) { (probe, k) =>
+      probe.join(dim(k), col(s"f$k") === col(s"d$k"))
+    }.agg(count(lit(1)).as("n"), sum(col("w1") + col("w2") + col("w3") + col("w4")).as("w"))
+    assert(collected(star) == collected(starBuiltin))
+    val joins = finalPlan(star).collect { case p: ParallelHashJoinExec => p }
+    assert(joins.size == 4, s"expected 4 ParallelHashJoinExec, got ${joins.size}")
+    joins.foreach { j =>
+      assert(j.sharedBuild, s"star join on ${j.leftKeys} should share its build")
+      assert(unwrapped(j.left).isInstanceOf[BroadcastExchangeLike],
+        s"shared build's build child should be a broadcast, got ${unwrapped(j.left).nodeName}")
+    }
+    val top = joins.maxBy(below(_).size)
+    assert(!below(top).exists(_.isInstanceOf[ShuffleExchangeLike]),
+      "no exchange may move the fact table below the aggregate")
+
+    val full = ParallelHashJoinApi.parallelHashJoin(dim(1), fact, Seq("d1"), Seq("f1"), "full_outer")
+    assert(collected(full) == collected(dim(1).join(fact, col("d1") === col("f1"), "full_outer")))
+    val fullJoin = finalPlan(full).collect { case p: ParallelHashJoinExec => p }.head
+    assert(!fullJoin.sharedBuild)
+    assert(below(fullJoin).count(_.isInstanceOf[ShuffleExchangeLike]) == 2,
+      "full outer keeps one exchange per side")
+
+    // a build budget below the build side's estimate keeps the
+    // co-partitioned shape (whose chunked fallback bounds the build)
+    withConf(ParallelHashJoinExec.spillThresholdKey -> "1024") {
+      val inner = ParallelHashJoinApi.parallelHashJoin(dim(2), fact, Seq("d2"), Seq("f2"))
+      assert(collected(inner) == collected(dim(2).join(fact, col("d2") === col("f2"))))
+      val j = finalPlan(inner).collect { case p: ParallelHashJoinExec => p }.head
+      assert(!j.sharedBuild, "a build over the spill budget must not be shared")
+      assert(below(j).count(_.isInstanceOf[ShuffleExchangeLike]) == 2)
+      assert(!below(j).exists(_.isInstanceOf[BroadcastExchangeLike]))
+    }
+  }
+
   test("inner joins run inside WholeStageCodegen with same results") {
     val d = ParallelHashJoinApi.parallelHashJoin(
       part, li, Seq("p_partkey"), Seq("l_partkey"), "inner")

@@ -138,4 +138,44 @@ class OpenMapSpec extends AnyFunSuite {
     // absent key
     assert(map.headFor(probe(InternalRow(-1L))) == -1)
   }
+
+  test("long-key map: extreme and colliding keys, growth, chains, null keys") {
+    import org.apache.spark.sql.types.{IntegerType, StructType}
+    // keys spread over the whole long range (Fibonacci hashing must not
+    // cluster them), 0 and -1 (never confused with an empty slot), and
+    // multiples of the table size; 2 rows per key exercise the chains
+    val keys = Seq(0L, -1L, 1L, Long.MinValue, Long.MaxValue) ++
+      (1 to 6000).map(_ * 512L) ++ (1 to 6000).map(i => -i * 7919L * 104729L)
+    val keyProj = UnsafeProjection.create(
+      Seq(BoundReference(0, LongType, nullable = true)))
+    val rowProj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
+      LongType, LongType))
+    val map = new graft.plans.GraftLongMap(keyProj, LongType)
+    for (copy <- 0 until 2; (k, i) <- keys.zipWithIndex) {
+      map.append(rowProj(InternalRow(k, (i * 10 + copy).toLong)).copy())
+    }
+    map.append(rowProj(InternalRow(null, 99L)).copy())
+    assert(map.size == 2 * keys.size + 1)
+    val probe = UnsafeProjection.create(Seq(BoundReference(0, LongType, nullable = true)))
+    for ((k, i) <- keys.zipWithIndex) {
+      var idx = map.headFor(probe(InternalRow(k)))
+      var vals = List.empty[Long]
+      while (idx != -1) {
+        assert(map.rowAt(idx).getLong(0) == k)
+        vals ::= map.rowAt(idx).getLong(1)
+        idx = map.next(idx)
+      }
+      assert(vals.sorted == List(i * 10L, i * 10L + 1), s"chain for key $k")
+    }
+    assert(map.headFor(probe(InternalRow(12345L))) == -1, "absent key")
+    assert(map.headFor(probe(InternalRow(null))) == -1, "null keys never match")
+    // narrower integral keys widen to the same table
+    val intProj = UnsafeProjection.create(Seq(BoundReference(0, IntegerType, nullable = false)))
+    val ints = new graft.plans.GraftLongMap(intProj, IntegerType)
+    val intRow = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](IntegerType))
+    Seq(Int.MinValue, -1, 0, Int.MaxValue).foreach(v => ints.append(intRow(InternalRow(v)).copy()))
+    Seq(Int.MinValue, -1, 0, Int.MaxValue).zipWithIndex.foreach { case (v, i) =>
+      assert(ints.headFor(intProj(InternalRow(v))) == i)
+    }
+  }
 }

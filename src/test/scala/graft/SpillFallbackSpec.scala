@@ -173,7 +173,10 @@ class SpillFallbackSpec extends AnyFunSuite {
   }
 
   test("default threshold stays on the single-chunk fast path") {
+    // pinned to the co-partitioned build (one chunk per shuffle
+    // partition): a small build side would otherwise be shared, one chunk
     withConf("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       ParallelHashJoinExec.codegenEnabledKey -> "false") {
       val d = ParallelHashJoinApi.parallelHashJoin(
         part, li, Seq("p_partkey"), Seq("l_partkey"), "inner")
