@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   * map, once built, is read by every probe task on its executor at once
   * (lookups change no state). */
 trait GraftBuildMap {
-  /** `row` must already be owned by the caller (copied). */
+  /** The map keeps its own copy of `row`, so the caller may reuse it. */
   def append(row: InternalRow): Unit
   def size: Int
   def clear(): Unit
@@ -28,8 +28,10 @@ trait GraftBuildMap {
 /** Row storage and chain links shared by the compact maps: the bytes of
   * appended `UnsafeRow`s are copied into row pages and `rowAt` returns a
   * view made once per row, so the build rows a probe reads sit side by
-  * side in memory rather than one object pair each across the heap. A
-  * subclass indexes each row's non-null key. */
+  * side in memory rather than one object pair each across the heap.
+  * Pages start small and double, so a small build (one task's slice, one
+  * spill chunk) takes little memory. A subclass indexes each row's
+  * non-null key. */
 abstract class GraftPagedMap(keyProj: UnsafeProjection) extends GraftBuildMap {
   private val rowsBuf = new mutable.ArrayBuffer[InternalRow]()
   private var nextIdx = new Array[Int](1024)
@@ -50,12 +52,16 @@ abstract class GraftPagedMap(keyProj: UnsafeProjection) extends GraftBuildMap {
     clearIndex()
   }
 
-  /** The row as kept: an `UnsafeRow`'s bytes move into the row pages. */
+  /** The row as kept: an `UnsafeRow`'s bytes are copied into the row
+    * pages, any other row is copied as it is. */
   private def kept(row: InternalRow): InternalRow = row match {
     case u: UnsafeRow =>
       val n = u.getSizeInBytes
       if (page == null || pageUsed + n > page.length) {
-        page = new Array[Byte](math.max(GraftPagedMap.PageBytes, n))
+        val grown =
+          if (page == null) GraftPagedMap.FirstPageBytes
+          else math.min(page.length * 2, GraftPagedMap.PageBytes)
+        page = new Array[Byte](math.max(grown, n))
         pageUsed = 0
       }
       val at = Platform.BYTE_ARRAY_OFFSET + pageUsed
@@ -64,7 +70,7 @@ abstract class GraftPagedMap(keyProj: UnsafeProjection) extends GraftBuildMap {
       val view = new UnsafeRow(u.numFields)
       view.pointTo(page, at, n)
       view
-    case other => other
+    case other => other.copy()
   }
 
   final override def append(row: InternalRow): Unit = {
@@ -81,16 +87,19 @@ abstract class GraftPagedMap(keyProj: UnsafeProjection) extends GraftBuildMap {
 }
 
 object GraftPagedMap {
-  /** Size of one row page; a larger row gets a page of its own. */
-  private val PageBytes = 1 << 20
+  private val FirstPageBytes = 4 << 10
+
+  /** Largest row page: under half of G1's smallest region, so no page is
+    * a humongous allocation. A larger row gets a page of its own. */
+  private val PageBytes = 256 << 10
 }
 
 /** Open-addressing build map — the reference's version10 design
   * (reference `src/operator/version10/build_implementation.rs:13-191`,
   * `new_map_3/fixed_table.rs`: open-addressed slot table, probe
   * sequences, generational growth) in its single-writer form: a
-  * power-of-two slot array probed linearly, per-key chain heads, and the
-  * same int-chain row links as `GraftChainMap`. The reference's SIMD
+  * power-of-two slot array probed linearly, per-key chain heads, and
+  * int-chain row links (`GraftPagedMap.next`). The reference's SIMD
   * group scan and cooperative migration are dropped (one writer, no
   * contention); growth re-probes entries by their stored hash.
   *
@@ -99,8 +108,8 @@ object GraftPagedMap {
   * (low 32 bits; 0 = empty) into one long, so most mismatches are
   * rejected without leaving the slot array, and key bytes sit back to
   * back in one key page, compared in place. Rows are paged
-  * ([[GraftPagedMap]]). Selected via `spark.graft.parallelHashJoin.map`
-  * (the default, `open`) for keys other than one integral column. */
+  * ([[GraftPagedMap]]). The map for keys other than one integral
+  * column. */
 final class GraftOpenMap(keyProj: UnsafeProjection) extends GraftPagedMap(keyProj) {
   // per entry (one per distinct non-null key): chain head, key bytes at
   // keyPage[keyOff(e) until keyOff(e + 1)]

@@ -140,25 +140,23 @@ case class ParallelHashJoinExec(
     val spillThreshold = conf.getConfString(
       ParallelHashJoinExec.spillThresholdKey,
       ParallelHashJoinExec.spillThresholdDefault).toLong
-    val mapImpl = conf.getConfString(
-      ParallelHashJoinExec.mapImplKey, ParallelHashJoinExec.mapImplDefault)
     val buildTimeMetric = longMetric("buildTime")
     if (sharedBuild) {
       val build = left.executeBroadcast[Array[InternalRow]]()
       val keys = sharedBuildKeys
       right.execute().mapPartitions { probeIter =>
-        val map = SharedBuildMaps.mapFor(build.value, keys, mapImpl,
+        val map = SharedBuildMaps.mapFor(build.value, keys,
           buildRowsMetric, buildChunksMetric, buildTimeMetric)
         ParallelHashJoinExec.joinPartition(
           Iterator.empty, probeIter, buildOutput, probeOutput, buildKeys, probeKeys,
-          jt, cond, outAttrs, spillThreshold, mapImpl, probePreserving,
+          jt, cond, outAttrs, spillThreshold, probePreserving,
           numOutputRows, buildRowsMetric, buildChunksMetric, buildTimeMetric, map)
       }
     } else {
       left.execute().zipPartitions(right.execute()) { (buildIter, probeIter) =>
         ParallelHashJoinExec.joinPartition(
           buildIter, probeIter, buildOutput, probeOutput, buildKeys, probeKeys,
-          jt, cond, outAttrs, spillThreshold, mapImpl, probePreserving,
+          jt, cond, outAttrs, spillThreshold, probePreserving,
           numOutputRows, buildRowsMetric, buildChunksMetric, buildTimeMetric)
       }
     }
@@ -219,10 +217,9 @@ case class ParallelHashJoinExec(
       buildIter: Iterator[InternalRow],
       probeIter: Iterator[InternalRow],
       thresholdBytes: Long,
-      mapImpl: String,
       fallbackEnabled: Boolean): GraftCodegenBuild = {
     val t0 = System.nanoTime
-    val map = ParallelHashJoinExec.newBuildMap(mapImpl,
+    val map = ParallelHashJoinExec.newBuildMap(
       leftKeys.map(org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey), left.output)
     var bytes = 0L
     var warned = false
@@ -238,7 +235,7 @@ case class ParallelHashJoinExec(
             Iterator.single(row.copy()) ++ buildIter
           val fallback = ParallelHashJoinExec.joinPartition(
             rebuilt, probeIter, left.output, right.output, leftKeys, rightKeys,
-            joinType, condition, output, thresholdBytes, mapImpl, probePreserving,
+            joinType, condition, output, thresholdBytes, probePreserving,
             longMetric("numOutputRows"), longMetric("buildRows"),
             longMetric("buildChunks"), longMetric("buildTime"))
           return new GraftCodegenBuild(null, fallback)
@@ -251,7 +248,7 @@ case class ParallelHashJoinExec(
           warned = true
         }
       }
-      map.append(row.copy())
+      map.append(row)
     }
     longMetric("buildTime") += System.nanoTime - t0
     longMetric("buildRows") += map.size
@@ -261,8 +258,8 @@ case class ParallelHashJoinExec(
 
   /** Executor-side map of a shared build for the generated probe loop
     * (see [[SharedBuildMaps]]). */
-  def sharedBuildMap(build: Broadcast[Array[InternalRow]], mapImpl: String): GraftBuildMap =
-    SharedBuildMaps.mapFor(build.value, sharedBuildKeys, mapImpl,
+  def sharedBuildMap(build: Broadcast[Array[InternalRow]]): GraftBuildMap =
+    SharedBuildMaps.mapFor(build.value, sharedBuildKeys,
       longMetric("buildRows"), longMetric("buildChunks"), longMetric("buildTime"))
 
   /** Shared build: the probe child produces and this join consumes, as
@@ -279,13 +276,11 @@ case class ParallelHashJoinExec(
     val thisPlan = ctx.addReferenceObj("plan", this)
     val build = ctx.addReferenceObj("sharedBuild",
       left.executeBroadcast[Array[InternalRow]](), classOf[Broadcast[_]].getName)
-    val mapImpl = conf.getConfString(
-      ParallelHashJoinExec.mapImplKey, ParallelHashJoinExec.mapImplDefault)
     val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftSharedMap",
-      v => s"""$v = $thisPlan.sharedBuildMap($build, "$mapImpl");""", forceInline = true)
+      v => s"$v = $thisPlan.sharedBuildMap($build);", forceInline = true)
     s"""
        |${evaluateVariables(input)}
-       |${probeKernel(ctx, input, mapTerm, visitedTerm = "", mapImpl)}
+       |${probeKernel(ctx, input, mapTerm, visitedTerm = "")}
      """.stripMargin
   }
 
@@ -298,16 +293,14 @@ case class ParallelHashJoinExec(
       "graftStreamedInput", v => s"$v = inputs[0];", forceInline = true)
     val buildInput = ctx.addMutableState("scala.collection.Iterator",
       "graftBuildInput", v => s"$v = inputs[1];", forceInline = true)
-    val mapImpl = conf.getConfString(
-      ParallelHashJoinExec.mapImplKey, ParallelHashJoinExec.mapImplDefault)
     val fallbackEnabled = conf.getConfString(
       ParallelHashJoinExec.codegenFallbackKey, "true").toBoolean
     val buildResTerm = ctx.addMutableState("graft.plans.GraftCodegenBuild",
       "graftBuildRes",
       v => s"$v = $thisPlan.buildOrFallbackForCodegen($buildInput, " +
-        s"""$streamedInput, ${spillThreshold}L, "$mapImpl", $fallbackEnabled);""",
+        s"$streamedInput, ${spillThreshold}L, $fallbackEnabled);",
       forceInline = true)
-    val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftChainMap",
+    val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftBuildMap",
       v => s"$v = $buildResTerm.map();", forceInline = true)
     val fbTerm = ctx.addMutableState("scala.collection.Iterator", "graftFallbackIter",
       v => s"$v = $buildResTerm.fallback();", forceInline = true)
@@ -338,7 +331,7 @@ case class ParallelHashJoinExec(
         "graftFinIdx", v => s"$v = 0;", forceInline = true)
     else ""
     val numOutput = metricTerm(ctx, "numOutputRows")
-    val body = probeKernel(ctx, streamVars, mapTerm, visitedTerm, mapImpl)
+    val body = probeKernel(ctx, streamVars, mapTerm, visitedTerm)
 
     // Post-probe finalizer: walk the dense build-row index and emit the
     // rows the probe loop marked (semi) or left unmarked (outer/anti),
@@ -415,7 +408,7 @@ case class ParallelHashJoinExec(
     * columns are `streamVars`, against the build map `mapTerm`.
     * `visitedTerm` is the build-row bitset of the finalizer types. */
   private def probeKernel(ctx: CodegenContext, streamVars: Seq[ExprCode],
-      mapTerm: String, visitedTerm: String, mapImpl: String): String = {
+      mapTerm: String, visitedTerm: String): String = {
     // The probe key (same float normalization as the map) and its
     // lookup: one integral key is read as a long, as a `GraftLongMap`
     // indexes it; any other key is an UnsafeRow.
@@ -424,7 +417,7 @@ case class ParallelHashJoinExec(
       .map(org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey)
       .map(BindReferences.bindReference(_, right.output))
     val (keyCode, keyNull, lookup) =
-      if (mapImpl != "chain" && ParallelHashJoinExec.longKeyed(keyExprs)) {
+      if (ParallelHashJoinExec.longKeyed(keyExprs)) {
         val ev = keyExprs.head.genCode(ctx)
         (ev.code.toString, ev.isNull.toString,
           s"((graft.plans.GraftLongMap) $mapTerm).headForLong((long) ${ev.value})")
@@ -647,24 +640,19 @@ object ParallelHashJoinExec {
     * (see [[ParallelHashJoinExec.supportCodegen]]). */
   val codegenFallbackKey = "spark.graft.parallelHashJoin.codegenFallback"
 
-  /** Build-map layout knob — the analog of the reference's build-side
-    * version1..10 A/B family for the map itself: `open` (default;
-    * compact open-addressing tables, version10's shape — `GraftLongMap`
-    * for one integral key column, `GraftOpenMap` otherwise) or `chain`
-    * (boxed HashMap of key → chain head, version1's shape). Orthogonal to
-    * the `impl` exec knob. Measured on 50k build rows and 1.2M int-key
-    * probes, one thread: chain 0.70-0.87 s, open with row keys
-    * 0.26-0.36 s; the long-key table is the shape of Spark's own
-    * `LongHashedRelation`. */
-  val mapImplKey = "spark.graft.parallelHashJoin.map"
-  val mapImplDefault = "open"
-
-  /** An empty build map over `keys`, which read rows of `buildOutput`. */
-  private[plans] def newBuildMap(impl: String, keys: Seq[Expression],
+  /** An empty build map over `keys`, which read rows of `buildOutput`:
+    * the compact open-addressing tables of the reference's version10
+    * shape, picked by key type — `GraftLongMap` for one integral key
+    * column, `GraftOpenMap` otherwise. On 50k build rows and 1.2M
+    * int-key probes, one thread, the boxed `HashMap[UnsafeRow, Integer]`
+    * chain map these replaced took 0.70-1.16 s, `GraftOpenMap`
+    * 0.26-0.65 s and `GraftLongMap` 0.22-0.34 s. On the join benchmark's
+    * timed pass (10 rotating seeds, shared build), `GraftOpenMap` alone
+    * took 9% less than the chain map, and `GraftLongMap` 16% less again. */
+  private[graft] def newBuildMap(keys: Seq[Expression],
       buildOutput: Seq[Attribute]): GraftBuildMap = {
     val keyProj = UnsafeProjection.create(keys, buildOutput)
-    if (impl == "chain") new GraftChainMap(keyProj)
-    else if (longKeyed(keys)) new GraftLongMap(keyProj, keys.head.dataType)
+    if (longKeyed(keys)) new GraftLongMap(keyProj, keys.head.dataType)
     else new GraftOpenMap(keyProj)
   }
 
@@ -701,7 +689,6 @@ object ParallelHashJoinExec {
       condition: Option[Expression],
       outAttrs: Seq[Attribute],
       spillThresholdBytes: Long,
-      mapImpl: String,
       probePreserving: Boolean,
       numOutputRows: SQLMetric,
       buildRowsMetric: SQLMetric,
@@ -749,7 +736,7 @@ object ParallelHashJoinExec {
     }
 
     val chain: GraftBuildMap =
-      if (sharedMap != null) sharedMap else newBuildMap(mapImpl, normBuildKeys, buildOutput)
+      if (sharedMap != null) sharedMap else newBuildMap(normBuildKeys, buildOutput)
     val trackBuildMatches = joinType match {
       case LeftSemi | LeftAnti if probePreserving => false
       case LeftOuter | FullOuter | LeftSemi | LeftAnti => true
@@ -787,7 +774,7 @@ object ParallelHashJoinExec {
         chain.clear()
         buildStore.add(asUnsafe(row, toUnsafeBuild))
       } else {
-        chain.append(row.copy())
+        chain.append(row)
       }
     }
     if (buildStore != null) {
@@ -821,7 +808,7 @@ object ParallelHashJoinExec {
     }
 
     if (buildStore == null) {
-      // ===== fast path: whole build side resident in one chain map =====
+      // ===== fast path: whole build side resident in one build map =====
       if (sharedMap == null) buildChunksMetric += 1
       val matched = if (trackBuildMatches) new java.util.BitSet(chain.size) else null
 
@@ -970,7 +957,7 @@ object ParallelHashJoinExec {
         while (buildStoreIter.hasNext && chunkBytes < spillThresholdBytes) {
           val r = buildStoreIter.next()
           chunkBytes += r.getSizeInBytes
-          chain.append(r.copy()) // store iterator reuses its row buffer
+          chain.append(r)
         }
         chunkMatched = if (trackBuildMatches) new java.util.BitSet(chain.size) else null
         buildChunksMetric += 1
@@ -1130,27 +1117,33 @@ case class SharedBuildMode(keys: Seq[Expression]) extends BroadcastMode {
 /** Each executor's maps of its shared builds, one per broadcast value:
   * made by the first probe task that asks, read by every task that asks
   * while another still holds it. Both sides are held weakly — the value
-  * array as the key, the map by its users — so the cache never outlives
-  * the queries that use it; a map dropped while its broadcast lives is
-  * built again, and counted again. */
+  * array as the key, the map by the tasks that use it — because Spark
+  * keeps a broadcast value until the plan that made it is collected,
+  * often long after its query ends: on the join benchmark, maps held as
+  * long as their values kept 30-45 MB more heap after some runs. A map
+  * dropped while its value lives is built again; its build time counts
+  * again, its build rows and chunks are counted once per value. */
 private[plans] object SharedBuildMaps {
   private val maps =
     new java.util.WeakHashMap[Array[InternalRow], java.lang.ref.WeakReference[GraftBuildMap]]()
 
   /** The map over `rows`; the task that builds it records the build in
     * the given metrics. */
-  def mapFor(rows: Array[InternalRow], keys: Seq[Expression], mapImpl: String,
+  def mapFor(rows: Array[InternalRow], keys: Seq[Expression],
       buildRows: SQLMetric, buildChunks: SQLMetric, buildTime: SQLMetric): GraftBuildMap =
     rows.synchronized {
-      val cached = maps.synchronized(Option(maps.get(rows)).map(_.get).orNull)
+      val held = maps.synchronized(maps.get(rows))
+      val cached = if (held == null) null else held.get
       if (cached != null) cached
       else {
         val start = System.nanoTime
-        val map = ParallelHashJoinExec.newBuildMap(mapImpl, keys, Nil)
+        val map = ParallelHashJoinExec.newBuildMap(keys, Nil)
         rows.foreach(map.append)
         buildTime += System.nanoTime - start
-        buildRows += map.size
-        buildChunks += 1
+        if (held == null) {
+          buildRows += map.size
+          buildChunks += 1
+        }
         maps.synchronized(maps.put(rows, new java.lang.ref.WeakReference(map)))
         map
       }

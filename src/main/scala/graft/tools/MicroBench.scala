@@ -49,12 +49,6 @@ object MicroBench {
       // build side = left = dim, matching what the hinted built-ins hash
       "join_parallel_hash" -> time(noop(
         ParallelHashJoinApi.parallelHashJoin(dimR, base, Seq("d_id"), Seq("id1")))),
-      // the version10-echo open-addressing build map (A/B vs chain above)
-      "join_parallel_hash_open" -> time {
-        spark.conf.set(graft.plans.ParallelHashJoinExec.mapImplKey, "open")
-        try noop(ParallelHashJoinApi.parallelHashJoin(dimR, base, Seq("d_id"), Seq("id1")))
-        finally spark.conf.unset(graft.plans.ParallelHashJoinExec.mapImplKey)
-      },
       "sort_global" -> time(noop(base.orderBy(col("id1"), col("id2")))),
       "sort_within_partitions" -> time(noop(base.sortWithinPartitions(col("id1"), col("id2")))))
 

@@ -145,13 +145,14 @@ class JoinPropertiesSpec extends AnyFunSuite {
     val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
       "left_semi", "left_anti", "right_semi", "right_anti")
     val saved = Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey,
-      graft.plans.ParallelHashJoinExec.codegenEnabledKey,
-      graft.plans.ParallelHashJoinExec.mapImplKey)
+      graft.plans.ParallelHashJoinExec.codegenEnabledKey)
       .map(k => k -> spark.conf.getOption(k))
     spark.conf.set(graft.plans.ParallelHashJoinExec.spillThresholdKey, "64")
     spark.conf.set(graft.plans.ParallelHashJoinExec.codegenEnabledKey, "false")
     try {
       import org.apache.spark.sql.functions.col
+      // the key type picks the map layout: GraftLongMap for the integral
+      // keys, GraftOpenMap for the string and double keys
       val cells = for {
         (keyType, seedBase) <- Seq(
           (IntegerType: DataType) -> 300L, (LongType: DataType) -> 320L,
@@ -159,9 +160,6 @@ class JoinPropertiesSpec extends AnyFunSuite {
         nullTenths <- Seq(0, 2, 5)
       } yield (keyType, seedBase + nullTenths, nullTenths)
       for (((keyType, seed, nullTenths), cellIdx) <- cells.zipWithIndex) {
-        // alternate the layout across cells so both see every key type
-        val layout = if (cellIdx % 2 == 0) "chain" else "open"
-        spark.conf.set(graft.plans.ParallelHashJoinExec.mapImplKey, layout)
         val lRows = sample(typedTableGen(keyType, nullTenths), seed)
         val rRows = sample(typedTableGen(keyType, nullTenths), seed + 1000)
         val l = typedDf(lRows, keyType, "lk", "lv")
@@ -172,7 +170,7 @@ class JoinPropertiesSpec extends AnyFunSuite {
             l, r, Seq("lk"), Seq("rk"), jt, cond)
           val want = nativeJoin(l, r, jt, cond)
           assert(sorted(got) == sorted(want),
-            s"spill matrix: key=$keyType nulls=$nullTenths/10 layout=$layout " +
+            s"spill matrix: key=$keyType nulls=$nullTenths/10 " +
               s"jt=$jt cond=${cond.nonEmpty} seed=$seed l=$lRows r=$rRows")
         }
       }
