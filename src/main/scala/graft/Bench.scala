@@ -386,9 +386,13 @@ object Bench {
       // method "median5w9_warm1_cpre" since r22: the wide rows (listed
       // in `wide_rows`) carry 9 designed samples, everything else 5 —
       // artifacts reading "median5_warm1_cpre" predate the protocol
+      // host_cpus: the cores the JVM sees, next to the requested `cpus`
+      // the standing-slot pin keys on — a run asking for more cores than
+      // the host has shows it here
+      val hostCpus = Runtime.getRuntime.availableProcessors
       val wideJson = slice.filter(graft.tools.BenchProtocol.WideRows)
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","method":"median5w9_warm1_cpre","provenance":"live","cpus":"$cpus","wide_rows":$wideJson,"adjudicable":$adjudicable,"adjudicable_live":$adjudicable,"extra_conf":"$extraConfJson","canary_sec":$canary%.3f,"canary_drift":$canaryDrift%.3f,"canary_shuffle_sec":$canaryShuffle%.3f,"canary_shuffle_drift":$canaryShuffleDrift%.3f,"norm_parity_band":[$pLo%.2f,$pHi%.2f],"spliced":$splicedJson,"queries":$qs,"ratio_vs_last_good":$ratios,"ratio_vs_last_good_canary_norm":$ratiosNorm,"samples":$samplesJson,"samples_ts":$samplesTsJson,"samples_gc":$samplesGcJson,"canary_pre":$canaryPreJson,"gc_sec":$gcJson,"suspect_kind":$suspectKindJson,"spread":$spread,"variance":$variance%.3f,"variance_trimmed":$varianceTrimmed%.3f,"failed":$failed,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","method":"median5w9_warm1_cpre","provenance":"live","cpus":"$cpus","host_cpus":$hostCpus,"wide_rows":$wideJson,"adjudicable":$adjudicable,"adjudicable_live":$adjudicable,"extra_conf":"$extraConfJson","canary_sec":$canary%.3f,"canary_drift":$canaryDrift%.3f,"canary_shuffle_sec":$canaryShuffle%.3f,"canary_shuffle_drift":$canaryShuffleDrift%.3f,"norm_parity_band":[$pLo%.2f,$pHi%.2f],"spliced":$splicedJson,"queries":$qs,"ratio_vs_last_good":$ratios,"ratio_vs_last_good_canary_norm":$ratiosNorm,"samples":$samplesJson,"samples_ts":$samplesTsJson,"samples_gc":$samplesGcJson,"canary_pre":$canaryPreJson,"gc_sec":$gcJson,"suspect_kind":$suspectKindJson,"spread":$spread,"variance":$variance%.3f,"variance_trimmed":$varianceTrimmed%.3f,"failed":$failed,"sf":"$sfDir"}"""
     }
     val line = artifactLine(results, Nil)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_output.json")

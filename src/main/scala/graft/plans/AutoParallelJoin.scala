@@ -108,14 +108,14 @@ object AutoParallelJoin extends PredicateHelper {
   /** Rewrite every eligible Join in an (analyzed) plan to the explicit
     * [[ParallelHashJoin]] node (required mode — broadcast guard off),
     * building the smaller side as the strategy's transparent path does
-    * ([[ParallelHashJoinStrategy.sideSelectConfKey]]). */
+    * ([[ParallelHashJoinStrategy.transparentJoin]]). */
   def rewritePlan(plan: LogicalPlan, conf: SQLConf): LogicalPlan =
     plan.transformUp {
       case j: Join =>
         extract(j, ignoreBroadcast = true, conf)
           .map { case (lk, rk, jt, cond) =>
             val (node, reorder) =
-              ParallelHashJoinStrategy.transparentJoin(j, lk, rk, jt, cond, conf)
+              ParallelHashJoinStrategy.transparentJoin(j, lk, rk, jt, cond)
             if (reorder) Project(j.output, node) else node
           }
           .getOrElse(j)

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.mutable
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -46,7 +44,7 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   *    makes partitions key-disjoint.
   *
   * Join-type mechanics mirror the reference's probe kernels, and both
-  * formulations run the same interpreted and whole-stage-codegen kernels:
+  * formulations run the same kernels:
   *  - hash lookup, then real key equality (collision guard), then the
   *    residual non-equi `condition`
   *    (`probe_lookup_implementation/inner.rs:79-129`)
@@ -58,16 +56,23 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   *    but null-keyed build rows still surface as unmatched in
   *    outer/anti results.
   *
+  * One route runs every join: the whole-stage-codegen probe loop, whose
+  * co-partitioned build falls back at runtime to the interpreted chunk
+  * kernel of [[joinPartition]] when it overruns its byte budget. The
+  * same interpreted kernel runs from `doExecute` wherever Spark does not
+  * fuse the exec (`spark.sql.codegen.wholeStage=false`, or a generated
+  * stage that failed to compile).
+  *
   * Memory posture (beyond the reference, whose build map is unbounded —
   * `concurrent_self_hash_join_map.rs` grows until OOM): the co-partitioned
-  * build buffer is byte-tracked against
+  * build is byte-tracked against
   * `spark.graft.parallelHashJoin.buildSpillThreshold`; above it the
   * operator degrades to a chunked "grace" hash join — both sides land in
   * spill-capable row buffers (Spark's SMJ/Window machinery), then the
   * build side is processed one in-memory chunk at a time with the probe
-  * side re-scanned per chunk, probe-unmatched tracking deferred to a
-  * global pass. Same results for every join type; bounded memory. The
-  * shared build is planned only under that same budget.
+  * side re-scanned per chunk, probe-row matches carried from chunk to
+  * chunk. Same results for every join type; bounded memory. The shared
+  * build is planned only under that same budget.
   */
 case class ParallelHashJoinExec(
     leftKeys: Seq[Expression],
@@ -126,72 +131,310 @@ case class ParallelHashJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): ParallelHashJoinExec =
     copy(left = newLeft, right = newRight)
 
+  /** The per-partition build byte budget, read on the driver: the
+    * executors have no session conf. */
+  private def spillThreshold: Long = conf.getConfString(
+    ParallelHashJoinExec.spillThresholdKey, ParallelHashJoinExec.spillThresholdDefault).toLong
+
+  /** The map of a co-partitioned build, empty. */
+  private def newPartitionMap(): GraftBuildMap = ParallelHashJoinExec.newBuildMap(
+    leftKeys.map(org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey), left.output)
+
   protected override def doExecute(): RDD[InternalRow] = {
-    val numOutputRows = longMetric("numOutputRows")
-    val buildRowsMetric = longMetric("buildRows")
-    val buildChunksMetric = longMetric("buildChunks")
-    val buildOutput = left.output
-    val probeOutput = right.output
-    val buildKeys = leftKeys
-    val probeKeys = rightKeys
-    val jt = joinType
-    val cond = condition
-    val outAttrs = output
-    val spillThreshold = conf.getConfString(
-      ParallelHashJoinExec.spillThresholdKey,
-      ParallelHashJoinExec.spillThresholdDefault).toLong
-    val buildTimeMetric = longMetric("buildTime")
+    val thresholdBytes = spillThreshold
+    // the tasks call back into this plan: make its metrics before it ships
+    longMetric("numOutputRows")
     if (sharedBuild) {
       val build = left.executeBroadcast[Array[InternalRow]]()
-      val keys = sharedBuildKeys
       right.execute().mapPartitions { probeIter =>
-        val map = SharedBuildMaps.mapFor(build.value, keys,
-          buildRowsMetric, buildChunksMetric, buildTimeMetric)
-        ParallelHashJoinExec.joinPartition(
-          Iterator.empty, probeIter, buildOutput, probeOutput, buildKeys, probeKeys,
-          jt, cond, outAttrs, spillThreshold, probePreserving,
-          numOutputRows, buildRowsMetric, buildChunksMetric, buildTimeMetric, map)
+        joinPartition(sharedBuildMap(build), null, probeIter, thresholdBytes)
       }
     } else {
       left.execute().zipPartitions(right.execute()) { (buildIter, probeIter) =>
-        ParallelHashJoinExec.joinPartition(
-          buildIter, probeIter, buildOutput, probeOutput, buildKeys, probeKeys,
-          jt, cond, outAttrs, spillThreshold, probePreserving,
-          numOutputRows, buildRowsMetric, buildChunksMetric, buildTimeMetric)
+        val map = newPartitionMap()
+        joinPartition(map, buildPartition(buildIter, map, thresholdBytes), probeIter,
+          thresholdBytes)
       }
+    }
+  }
+
+  /** One partition's co-partitioned build: its rows go into `map` while
+    * their bytes fit `thresholdBytes`. The first row over the budget
+    * moves every row read so far into a spill-capable buffer, which takes
+    * the rest; that buffer is returned, and `map` is left empty for
+    * [[joinPartition]] to load chunk by chunk. Null when every row is in
+    * `map`. */
+  private def buildPartition(buildIter: Iterator[InternalRow], map: GraftBuildMap,
+      thresholdBytes: Long): GraftSpillableRowBuffer = {
+    val start = System.nanoTime
+    val genericRowBytes = 16L + 8L * left.output.length
+    var bytes = 0L
+    var spilled: GraftSpillableRowBuffer = null
+    lazy val toUnsafe = UnsafeProjection.create(left.output.map(_.dataType).toArray)
+    def spill(row: InternalRow): Unit = spilled.add(row match {
+      case u: UnsafeRow => u
+      case other => toUnsafe(other)
+    })
+    while (buildIter.hasNext && spilled == null) {
+      val row = buildIter.next()
+      bytes += (row match {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case _ => genericRowBytes
+      })
+      if (bytes <= thresholdBytes) map.append(row)
+      else {
+        spilled = new GraftSpillableRowBuffer()
+        (0 until map.size).foreach(i => spill(map.rowAt(i)))
+        map.clear()
+        spill(row)
+      }
+    }
+    if (spilled != null) buildIter.foreach(spill)
+    longMetric("buildTime") += System.nanoTime - start
+    if (spilled == null) {
+      longMetric("buildRows") += map.size
+      longMetric("buildChunks") += 1
+    } else {
+      longMetric("buildRows") += spilled.length
+    }
+    spilled
+  }
+
+  /** One partition's probe, mirroring the reference's
+    * `execute_streaming_join` (`parallel_hash_join_executor.rs:101-121`):
+    * stream the probe side against the build map, then emit the build
+    * rows the join type keeps. The build is probed one chunk at a time:
+    * all of `buildMap` as the only chunk, or, when `spilled` holds the
+    * build rows, chunks of them that fit `thresholdBytes`, loaded into
+    * `buildMap` in turn, with the probe side buffered and scanned once
+    * per chunk. Build-row matches are per chunk, since chunks are disjoint.
+    * Probe-row matches are carried from chunk to chunk in a bitset, and
+    * the last chunk pads (right/full outer) or emits (probe-preserving
+    * semi/anti) probe rows by it; with one chunk there is nothing to
+    * carry and the probe rows stream. */
+  private def joinPartition(
+      buildMap: GraftBuildMap,
+      spilled: GraftSpillableRowBuffer,
+      probeIter: Iterator[InternalRow],
+      thresholdBytes: Long): Iterator[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    val buildOutput = left.output
+    val probeOutput = right.output
+    // Normalize float/double keys (-0.0 → 0.0, canonical NaN) exactly as
+    // Spark's NormalizeFloatingNumbers does for native joins — our map
+    // compares raw UnsafeRow bytes, so un-normalized ±0.0 would fail to
+    // match where df.join matches it.
+    val probeKeyProj = UnsafeProjection.create(
+      rightKeys.map(org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey),
+      probeOutput)
+    // Null-padding makes the padded side's columns nullable even when the
+    // child schema says otherwise — the output projection MUST bind
+    // against nullability-adjusted attributes, or codegen elides the
+    // null check and reads 0 from the all-null pad row.
+    val buildOutForRead = joinType match {
+      case RightOuter | FullOuter => buildOutput.map(_.withNullability(true))
+      case _ => buildOutput
+    }
+    val probeOutForRead = joinType match {
+      case LeftOuter | FullOuter => probeOutput.map(_.withNullability(true))
+      case _ => probeOutput
+    }
+    val joinedOutput = buildOutForRead ++ probeOutForRead
+    val resultProj: UnsafeProjection = joinType match {
+      case LeftSemi | LeftAnti if probePreserving => UnsafeProjection.create(output, probeOutput)
+      case LeftSemi | LeftAnti => UnsafeProjection.create(output, buildOutput)
+      case _ => UnsafeProjection.create(output, joinedOutput)
+    }
+    val boundCondition: InternalRow => Boolean = condition match {
+      case Some(c) =>
+        val pred = Predicate.create(c, joinedOutput)
+        // partition-aware init so nondeterministic conditions (rand())
+        // draw independent streams per partition, as native joins do
+        pred.initialize(Option(org.apache.spark.TaskContext.get())
+          .map(_.partitionId()).getOrElse(0))
+        pred.eval _
+      case None => (_: InternalRow) => true
+    }
+    val joined = new JoinedRow
+    val nullBuildRow = new GenericInternalRow(buildOutput.length)
+    val nullProbeRow = new GenericInternalRow(probeOutput.length)
+
+    // the join type's decisions, made once
+    val marksBuild = joinType match {
+      case LeftOuter | FullOuter => true
+      case LeftSemi | LeftAnti => !probePreserving
+      case _ => false
+    }
+    val padsProbe = joinType == RightOuter || joinType == FullOuter
+    val emitOnMatch = joinType == LeftSemi
+    val padsBuild = joinType == LeftOuter || joinType == FullOuter
+
+    /** Inner and outer joins: each build row whose key matches and whose
+      * condition holds streams out joined to its probe row, marked in
+      * `buildMatched` (left/full outer). A probe row with no match is
+      * padded on the last chunk (right/full outer) unless `carried` says
+      * an earlier chunk matched it; an earlier chunk records its matches
+      * in `carried`. Lazy and zero-copy: each output row is consumed
+      * before the next is made (the SparkPlan iterator contract). */
+    def joinedRows(probe: Iterator[InternalRow], last: Boolean, carried: java.util.BitSet,
+        buildMatched: java.util.BitSet): Iterator[InternalRow] = new Iterator[InternalRow] {
+      private var probeRow: InternalRow = _
+      private var pIdx = -1
+      private var cursor = -1
+      private var found = false
+      private var pending = false
+
+      private def advance(): Boolean = {
+        while (true) {
+          while (cursor != -1) {
+            val idx = cursor
+            cursor = buildMap.next(idx)
+            joined(buildMap.rowAt(idx), probeRow)
+            if (boundCondition(joined)) {
+              if (buildMatched != null) buildMatched.set(idx)
+              found = true
+              return true
+            }
+          }
+          if (padsProbe && probeRow != null) {
+            val row = probeRow
+            probeRow = null
+            if (found) {
+              if (carried != null) carried.set(pIdx)
+            } else if (last && (carried == null || !carried.get(pIdx))) {
+              joined(nullBuildRow, row)
+              return true
+            }
+          }
+          if (!probe.hasNext) return false
+          probeRow = probe.next()
+          pIdx += 1
+          found = false
+          cursor = buildMap.headFor(probeKeyProj(probeRow))
+        }
+        false
+      }
+
+      override def hasNext: Boolean = pending || { pending = advance(); pending }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        pending = false
+        numOutputRows += 1
+        resultProj(joined)
+      }
+    }
+
+    /** Does a build row with `probeRow`'s key pass the condition? */
+    def anyMatch(probeRow: InternalRow): Boolean = {
+      var cursor = buildMap.headFor(probeKeyProj(probeRow))
+      while (cursor != -1) {
+        joined(buildMap.rowAt(cursor), probeRow)
+        if (boundCondition(joined)) return true
+        cursor = buildMap.next(cursor)
+      }
+      false
+    }
+
+    /** Probe-preserving semi/anti (reference right_semi.rs /
+      * right_anti.rs): a probe row is matched when this chunk or, per
+      * `carried`, an earlier one holds a build row with its key that
+      * passes the condition. The last chunk emits the matched (semi) or
+      * unmatched (anti) probe rows; an earlier one records its matches in
+      * `carried`. */
+    def probeRows(probe: Iterator[InternalRow], last: Boolean,
+        carried: java.util.BitSet): Iterator[InternalRow] = {
+      var pIdx = -1
+      probe.filter { probeRow =>
+        pIdx += 1
+        val matched = (carried != null && carried.get(pIdx)) || anyMatch(probeRow)
+        if (!last && matched) carried.set(pIdx)
+        last && matched == emitOnMatch
+      }.map { probeRow =>
+        numOutputRows += 1
+        resultProj(probeRow)
+      }
+    }
+
+    /** Build-preserving semi/anti: marks the build rows whose key matches
+      * a probe row and whose condition holds; emits nothing itself. */
+    def markBuildRows(probe: Iterator[InternalRow],
+        buildMatched: java.util.BitSet): Iterator[InternalRow] = new Iterator[InternalRow] {
+      override def hasNext: Boolean = {
+        probe.foreach { probeRow =>
+          var cursor = buildMap.headFor(probeKeyProj(probeRow))
+          while (cursor != -1) {
+            if (!buildMatched.get(cursor)) {
+              joined(buildMap.rowAt(cursor), probeRow)
+              if (boundCondition(joined)) buildMatched.set(cursor)
+            }
+            cursor = buildMap.next(cursor)
+          }
+        }
+        false
+      }
+      override def next(): InternalRow = throw new NoSuchElementException
+    }
+
+    /** The chunk now in `buildMap` (the per-chunk analog of the reference's
+      * last-owner finalizer): its probe kernel, then the build rows it
+      * keeps — unmatched ones null-padded (left/full outer), matched
+      * (semi) or unmatched (anti) ones as they are. */
+    def probeChunk(probe: Iterator[InternalRow], last: Boolean,
+        carried: java.util.BitSet): Iterator[InternalRow] = {
+      val buildMatched = if (marksBuild) new java.util.BitSet(buildMap.size) else null
+      val probed = joinType match {
+        case LeftSemi | LeftAnti if probePreserving => probeRows(probe, last, carried)
+        case LeftSemi | LeftAnti => markBuildRows(probe, buildMatched)
+        case _ => joinedRows(probe, last, carried, buildMatched)
+      }
+      val kept =
+        if (buildMatched == null) Iterator.empty
+        else Iterator.range(0, buildMap.size).filter(buildMatched.get(_) == emitOnMatch).map { i =>
+          numOutputRows += 1
+          if (padsBuild) resultProj(joined(buildMap.rowAt(i), nullProbeRow))
+          else resultProj(buildMap.rowAt(i))
+        }
+      probed ++ kept
+    }
+
+    if (spilled == null) probeChunk(probeIter, last = true, carried = null)
+    else {
+      val probeStore = new GraftSpillableRowBuffer()
+      val toUnsafeProbe = UnsafeProjection.create(probeOutput.map(_.dataType).toArray)
+      probeIter.foreach {
+        case u: UnsafeRow => probeStore.add(u)
+        case other => probeStore.add(toUnsafeProbe(other))
+      }
+      val carried =
+        if (padsProbe || probePreserving) new java.util.BitSet(probeStore.length) else null
+      val buildRows = spilled.iterator
+      new Iterator[Iterator[InternalRow]] {
+        override def hasNext: Boolean = buildRows.hasNext
+        override def next(): Iterator[InternalRow] = {
+          buildMap.clear()
+          var bytes = 0L
+          while (buildRows.hasNext && bytes < thresholdBytes) {
+            val row = buildRows.next()
+            bytes += row.getSizeInBytes
+            buildMap.append(row)
+          }
+          longMetric("buildChunks") += 1
+          probeChunk(probeStore.iterator, last = !buildRows.hasNext, carried)
+        }
+      }.flatten
     }
   }
 
   // ===== whole-stage codegen (reference O3-O9's codegen'd build/probe
   // variants, realized as Spark codegen instead of Rust monomorphization;
   // the probe loop fuses into the downstream pipeline like Spark's own
-  // shuffled-hash join) =====
-
-  /** Every join type fuses into whole-stage codegen. Inner, RightOuter
-    * and the probe-preserving semi/anti kernels stream row-at-a-time;
-    * the build-side-finalizer types (left outer/semi/anti, full outer)
-    * mark a visited bitset during the probe loop and then run a
-    * re-entrant finalizer loop over the dense build-row index after the
-    * probe input drains — the same produce-loop-then-finalizer shape
-    * Spark's own codegen'd full-outer shuffled-hash join uses.
-    *
-    * The spill guarantee survives fusion: the generated build helper
-    * byte-tracks against the budget and, on overrun, routes THAT
-    * PARTITION to the interpreted chunked grace join at runtime (the
-    * generated produce loop then just drains the fallback iterator).
-    * Every other partition keeps the fused fast path — codegen and
-    * bounded memory are no longer a config-time either/or. Setting
-    * `codegenFallback=false` restores the old static routing: an
-    * explicitly configured spill budget then disables fusion outright
-    * (and, with no budget set, overruns only warn — the unbounded-build
-    * posture of Spark's own codegen'd ShuffledHashJoinExec). */
-  override def supportCodegen: Boolean = {
-    val enabled =
-      conf.getConfString(ParallelHashJoinExec.codegenEnabledKey, "true").toBoolean
-    val runtimeFallback =
-      conf.getConfString(ParallelHashJoinExec.codegenFallbackKey, "true").toBoolean
-    enabled && (runtimeFallback || !conf.contains(ParallelHashJoinExec.spillThresholdKey))
-  }
+  // shuffled-hash join). Every join type fuses. Inner, RightOuter and
+  // the probe-preserving semi/anti kernels stream row-at-a-time; the
+  // build-side-finalizer types (left outer/semi/anti, full outer) mark a
+  // visited bitset during the probe loop and then run a re-entrant
+  // finalizer loop over the dense build-row index after the probe input
+  // drains — the same produce-loop-then-finalizer shape Spark's own
+  // codegen'd full-outer shuffled-hash join uses. =====
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     if (sharedBuild) right.asInstanceOf[CodegenSupport].inputRDDs()
@@ -201,59 +444,23 @@ case class ParallelHashJoinExec(
 
   override protected def canCheckLimitNotReached: Boolean = true
 
-  /** Executor-side build for the generated probe loop. Threshold is
-    * baked in at codegen time (driver side) because `conf` is not
-    * available on executors.
+  /** Executor-side co-partitioned build for the generated probe loop,
+    * through the same byte-tracked loop as `doExecute`. The budget is
+    * baked in at codegen time, on the driver.
     *
-    * On byte-budget overrun with `fallbackEnabled`, the partition
-    * DOWNGRADES AT RUNTIME to the interpreted chunked grace join: the
-    * rows buffered so far plus the remainder of the build input re-enter
-    * [[ParallelHashJoinExec.joinPartition]] (which re-applies the budget
-    * and takes its spill path), and the returned iterator carries the
-    * complete join result for this partition — the generated produce
+    * On a budget overrun the partition DOWNGRADES AT RUNTIME to the
+    * interpreted chunk kernel: the returned fallback iterator carries the
+    * complete join result for this partition, and the generated produce
     * loop just drains it. Partitions that stay under budget never leave
-    * the fused path. */
+    * the fused path, so codegen and bounded memory are not an either/or. */
   def buildOrFallbackForCodegen(
       buildIter: Iterator[InternalRow],
       probeIter: Iterator[InternalRow],
-      thresholdBytes: Long,
-      fallbackEnabled: Boolean): GraftCodegenBuild = {
-    val t0 = System.nanoTime
-    val map = ParallelHashJoinExec.newBuildMap(
-      leftKeys.map(org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey), left.output)
-    var bytes = 0L
-    var warned = false
-    while (buildIter.hasNext) {
-      val row = buildIter.next()
-      bytes += (row match {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case _ => 16L + 8L * left.output.length
-      })
-      if (bytes > thresholdBytes) {
-        if (fallbackEnabled) {
-          val rebuilt = Iterator.range(0, map.size).map(map.rowAt) ++
-            Iterator.single(row.copy()) ++ buildIter
-          val fallback = ParallelHashJoinExec.joinPartition(
-            rebuilt, probeIter, left.output, right.output, leftKeys, rightKeys,
-            joinType, condition, output, thresholdBytes, probePreserving,
-            longMetric("numOutputRows"), longMetric("buildRows"),
-            longMetric("buildChunks"), longMetric("buildTime"))
-          return new GraftCodegenBuild(null, fallback)
-        } else if (!warned) {
-          logWarning("parallel hash join build side exceeds " +
-            s"$thresholdBytes bytes under codegen with " +
-            s"${ParallelHashJoinExec.codegenFallbackKey}=false; growing " +
-            "unbounded - re-enable the fallback or disable " +
-            s"${ParallelHashJoinExec.codegenEnabledKey} to get the spilling path")
-          warned = true
-        }
-      }
-      map.append(row)
-    }
-    longMetric("buildTime") += System.nanoTime - t0
-    longMetric("buildRows") += map.size
-    longMetric("buildChunks") += 1
-    new GraftCodegenBuild(map, null)
+      thresholdBytes: Long): GraftCodegenBuild = {
+    val map = newPartitionMap()
+    val spilled = buildPartition(buildIter, map, thresholdBytes)
+    if (spilled == null) new GraftCodegenBuild(map, null)
+    else new GraftCodegenBuild(null, joinPartition(map, spilled, probeIter, thresholdBytes))
   }
 
   /** Executor-side map of a shared build for the generated probe loop
@@ -286,19 +493,14 @@ case class ParallelHashJoinExec(
 
   private def produceCoPartitioned(ctx: CodegenContext): String = {
     val thisPlan = ctx.addReferenceObj("plan", this)
-    val spillThreshold = conf.getConfString(
-      ParallelHashJoinExec.spillThresholdKey,
-      ParallelHashJoinExec.spillThresholdDefault).toLong
     val streamedInput = ctx.addMutableState("scala.collection.Iterator",
       "graftStreamedInput", v => s"$v = inputs[0];", forceInline = true)
     val buildInput = ctx.addMutableState("scala.collection.Iterator",
       "graftBuildInput", v => s"$v = inputs[1];", forceInline = true)
-    val fallbackEnabled = conf.getConfString(
-      ParallelHashJoinExec.codegenFallbackKey, "true").toBoolean
     val buildResTerm = ctx.addMutableState("graft.plans.GraftCodegenBuild",
       "graftBuildRes",
       v => s"$v = $thisPlan.buildOrFallbackForCodegen($buildInput, " +
-        s"$streamedInput, ${spillThreshold}L, $fallbackEnabled);",
+        s"$streamedInput, ${spillThreshold}L);",
       forceInline = true)
     val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftBuildMap",
       v => s"$v = $buildResTerm.map();", forceInline = true)
@@ -628,18 +830,6 @@ object ParallelHashJoinExec {
   val spillThresholdKey = "spark.graft.parallelHashJoin.buildSpillThreshold"
   val spillThresholdDefault: String = (256L * 1024 * 1024).toString
 
-  /** Gate for the whole-stage-codegen inner-join path (`false` falls
-    * back to the interpreted, spill-capable doExecute). */
-  val codegenEnabledKey = "spark.graft.parallelHashJoin.codegenEnabled"
-
-  /** Runtime spill fallback under codegen (default on): a partition
-    * whose build side overruns the byte budget downgrades to the
-    * interpreted chunked grace join mid-task while every other
-    * partition keeps the fused path. `false` restores the static
-    * routing where an explicitly configured budget disables fusion
-    * (see [[ParallelHashJoinExec.supportCodegen]]). */
-  val codegenFallbackKey = "spark.graft.parallelHashJoin.codegenFallback"
-
   /** An empty build map over `keys`, which read rows of `buildOutput`:
     * the compact open-addressing tables of the reference's version10
     * shape, picked by key type — `GraftLongMap` for one integral key
@@ -668,435 +858,6 @@ object ParallelHashJoinExec {
     case Inner | RightOuter => true
     case LeftSemi | LeftAnti => probePreserving
     case _ => false
-  }
-
-  /** One partition's build-then-probe, mirroring the reference's
-    * `execute_streaming_join` (`parallel_hash_join_executor.rs:101-121`):
-    * fully consume the build side into a hash map, then stream the probe
-    * side, then run the unmatched-rows finalizer. Above the byte budget
-    * the same contract runs chunk-by-chunk (see class doc). With a
-    * `sharedMap` the build is already done: the probe side streams
-    * against it, and nothing writes to it. */
-  // noinspection ScalaStyle
-  private[plans] def joinPartition(
-      buildIter: Iterator[InternalRow],
-      probeIter: Iterator[InternalRow],
-      buildOutput: Seq[Attribute],
-      probeOutput: Seq[Attribute],
-      buildKeys: Seq[Expression],
-      probeKeys: Seq[Expression],
-      joinType: JoinType,
-      condition: Option[Expression],
-      outAttrs: Seq[Attribute],
-      spillThresholdBytes: Long,
-      probePreserving: Boolean,
-      numOutputRows: SQLMetric,
-      buildRowsMetric: SQLMetric,
-      buildChunksMetric: SQLMetric,
-      buildTimeMetric: SQLMetric,
-      sharedMap: GraftBuildMap = null): Iterator[InternalRow] = {
-
-    // Normalize float/double keys (-0.0 → 0.0, canonical NaN) exactly as
-    // Spark's NormalizeFloatingNumbers does for native joins — our map
-    // compares raw UnsafeRow bytes, so un-normalized ±0.0 would fail to
-    // match where df.join matches it.
-    val normBuildKeys = buildKeys.map(
-      org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey)
-    val normProbeKeys = probeKeys.map(
-      org.apache.spark.sql.classic.GraftSqlBridge.normalizeFloatingKey)
-    val probeKeyProj = UnsafeProjection.create(normProbeKeys, probeOutput)
-    // Null-padding makes the padded side's columns nullable even when the
-    // child schema says otherwise — the output projection MUST bind
-    // against nullability-adjusted attributes, or codegen elides the
-    // null check and reads 0 from the all-null pad row.
-    val buildOutForRead = joinType match {
-      case RightOuter | FullOuter => buildOutput.map(_.withNullability(true))
-      case _ => buildOutput
-    }
-    val probeOutForRead = joinType match {
-      case LeftOuter | FullOuter => probeOutput.map(_.withNullability(true))
-      case _ => probeOutput
-    }
-    val joinedOutput = buildOutForRead ++ probeOutForRead
-    val resultProj: UnsafeProjection = joinType match {
-      case LeftSemi | LeftAnti if probePreserving =>
-        UnsafeProjection.create(outAttrs, probeOutput)
-      case LeftSemi | LeftAnti => UnsafeProjection.create(outAttrs, buildOutput)
-      case _ => UnsafeProjection.create(outAttrs, joinedOutput)
-    }
-    val boundCondition: InternalRow => Boolean = condition match {
-      case Some(c) =>
-        val pred = Predicate.create(c, joinedOutput)
-        // partition-aware init so nondeterministic conditions (rand())
-        // draw independent streams per partition, as native joins do
-        pred.initialize(Option(org.apache.spark.TaskContext.get())
-          .map(_.partitionId()).getOrElse(0))
-        pred.eval _
-      case None => (_: InternalRow) => true
-    }
-
-    val chain: GraftBuildMap =
-      if (sharedMap != null) sharedMap else newBuildMap(normBuildKeys, buildOutput)
-    val trackBuildMatches = joinType match {
-      case LeftSemi | LeftAnti if probePreserving => false
-      case LeftOuter | FullOuter | LeftSemi | LeftAnti => true
-      case _ => false
-    }
-    val nullBuildRow = new GenericInternalRow(buildOutput.length)
-    val nullProbeRow = new GenericInternalRow(probeOutput.length)
-    val joined = new JoinedRow
-
-    // --- build phase: one pass, rows buffered, non-null keys indexed,
-    // bytes tracked against the spill budget ---
-    val toUnsafeBuild = UnsafeProjection.create(buildOutput.map(_.dataType).toArray)
-    def asUnsafe(r: InternalRow, proj: UnsafeProjection): UnsafeRow = r match {
-      case u: UnsafeRow => u
-      case other => proj(other)
-    }
-    val buildStart = System.nanoTime
-    var buildBytes = 0L
-    var buildStore: GraftSpillableRowBuffer = null
-    while (buildIter.hasNext && buildStore == null) {
-      val row = buildIter.next()
-      buildBytes += (row match {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case _ => 16L + 8L * buildOutput.length
-      })
-      if (buildBytes > spillThresholdBytes) {
-        // over budget: migrate what's buffered into a spill-capable store
-        // and keep consuming there — the chunked path takes over below
-        buildStore = new GraftSpillableRowBuffer()
-        var i = 0
-        while (i < chain.size) {
-          buildStore.add(asUnsafe(chain.rowAt(i), toUnsafeBuild))
-          i += 1
-        }
-        chain.clear()
-        buildStore.add(asUnsafe(row, toUnsafeBuild))
-      } else {
-        chain.append(row)
-      }
-    }
-    if (buildStore != null) {
-      while (buildIter.hasNext) buildStore.add(asUnsafe(buildIter.next(), toUnsafeBuild))
-      buildRowsMetric += buildStore.length
-    } else if (sharedMap == null) {
-      buildRowsMetric += chain.size
-    }
-    if (sharedMap == null) buildTimeMetric += System.nanoTime - buildStart
-
-    /** Unmatched/matched build-row emitters shared by both paths; the
-      * bitset covers exactly the rows currently resident in `chain`. */
-    def buildFinisher(matched: java.util.BitSet): Iterator[InternalRow] = joinType match {
-      case LeftSemi | LeftAnti if probePreserving => Iterator.empty
-      case LeftOuter | FullOuter =>
-        Iterator.range(0, chain.size).filter(i => !matched.get(i)).map { i =>
-          numOutputRows += 1
-          resultProj(joined(chain.rowAt(i), nullProbeRow))
-        }
-      case LeftSemi =>
-        Iterator.range(0, chain.size).filter(matched.get).map { i =>
-          numOutputRows += 1
-          resultProj(chain.rowAt(i))
-        }
-      case LeftAnti =>
-        Iterator.range(0, chain.size).filter(i => !matched.get(i)).map { i =>
-          numOutputRows += 1
-          resultProj(chain.rowAt(i))
-        }
-      case _ => Iterator.empty
-    }
-
-    if (buildStore == null) {
-      // ===== fast path: whole build side resident in one build map =====
-      if (sharedMap == null) buildChunksMetric += 1
-      val matched = if (trackBuildMatches) new java.util.BitSet(chain.size) else null
-
-      // --- probe phase: streamed ---
-      // Inner: fully lazy, zero-copy (projection rows are consumed before
-      // the next element is produced — standard SparkPlan iterator
-      // contract). Semi/anti: allocation-free marking pass, no output.
-      // Outer paths buffer per-probe-row matches (they must know whether
-      // any match survived the condition before padding), so they copy.
-      val probePhase: Iterator[InternalRow] = joinType match {
-        case Inner | LeftOuter =>
-          // fully lazy, zero-copy; LeftOuter additionally marks matched
-          // build rows for the finalizer (unmatched PROBE rows are never
-          // emitted for these types, so no per-probe buffering is needed)
-          val markMatches = joinType == LeftOuter
-          new Iterator[InternalRow] {
-            private var probeRow: InternalRow = _
-            private var cursor: Int = -1
-            private var pending = false
-
-            private def advance(): Boolean = {
-              while (true) {
-                while (cursor != -1) {
-                  val idx = cursor
-                  cursor = chain.next(idx)
-                  joined(chain.rowAt(idx), probeRow)
-                  if (boundCondition(joined)) {
-                    if (markMatches) matched.set(idx)
-                    return true
-                  }
-                }
-                if (!probeIter.hasNext) return false
-                probeRow = probeIter.next()
-                cursor = chain.headFor(probeKeyProj(probeRow))
-              }
-              false
-            }
-
-            override def hasNext: Boolean = pending || { pending = advance(); pending }
-            override def next(): InternalRow = {
-              if (!hasNext) throw new NoSuchElementException
-              pending = false
-              numOutputRows += 1
-              resultProj(joined)
-            }
-          }
-        case LeftSemi | LeftAnti if probePreserving =>
-          // probe-preserving semi/anti (reference right_semi.rs /
-          // right_anti.rs): stream probe rows, emit on first surviving
-          // match (semi) / on none (anti) — no bitset, no finalizer
-          val emitOnMatch = joinType == LeftSemi
-          new Iterator[InternalRow] {
-            private var pendingRow: InternalRow = _
-            private def advance(): InternalRow = {
-              while (probeIter.hasNext) {
-                val probeRow = probeIter.next()
-                var cursor = chain.headFor(probeKeyProj(probeRow))
-                var found = false
-                while (cursor != -1 && !found) {
-                  joined(chain.rowAt(cursor), probeRow)
-                  if (boundCondition(joined)) found = true
-                  cursor = chain.next(cursor)
-                }
-                if (found == emitOnMatch) return probeRow
-              }
-              null
-            }
-            override def hasNext: Boolean =
-              pendingRow != null || { pendingRow = advance(); pendingRow != null }
-            override def next(): InternalRow = {
-              if (!hasNext) throw new NoSuchElementException
-              val r = pendingRow
-              pendingRow = null
-              numOutputRows += 1
-              resultProj(r)
-            }
-          }
-        case LeftSemi | LeftAnti =>
-          // marking pass only; emits nothing (finalizer emits build rows)
-          new Iterator[InternalRow] {
-            override def hasNext: Boolean = {
-              while (probeIter.hasNext) {
-                val probeRow = probeIter.next()
-                var cursor = chain.headFor(probeKeyProj(probeRow))
-                while (cursor != -1) {
-                  joined(chain.rowAt(cursor), probeRow)
-                  if (boundCondition(joined)) matched.set(cursor)
-                  cursor = chain.next(cursor)
-                }
-              }
-              false
-            }
-            override def next(): InternalRow = throw new NoSuchElementException
-          }
-        case _ => // RightOuter, FullOuter: must know "any match?" per probe
-          // row before padding, hence the per-row buffer + copies
-          probeIter.flatMap { probeRow =>
-            var cursor = chain.headFor(probeKeyProj(probeRow))
-            var anyMatch = false
-            val out = new mutable.ArrayBuffer[InternalRow](4)
-            while (cursor != -1) {
-              joined(chain.rowAt(cursor), probeRow)
-              if (boundCondition(joined)) {
-                anyMatch = true
-                if (matched != null) matched.set(cursor)
-                numOutputRows += 1
-                out += resultProj(joined).copy()
-              }
-              cursor = chain.next(cursor)
-            }
-            if (!anyMatch) {
-              numOutputRows += 1
-              out += resultProj(joined(nullBuildRow, probeRow)).copy()
-            }
-            out
-          }
-      }
-
-      // --- finalizer: unmatched build rows (runs once probe is drained),
-      // the per-partition analog of the reference's last-owner finalizer ---
-      probePhase ++ buildFinisher(matched)
-    } else {
-      // ===== chunked fallback ("grace" hash join) =====
-      // Build side exceeds the byte budget: process it one chunk at a
-      // time, re-scanning the (spill-buffered) probe side per chunk.
-      // Build-row match state is chunk-local (chunks are disjoint);
-      // probe-row match state spans chunks, so RightOuter/FullOuter
-      // padding runs in one global pass at the end.
-      val toUnsafeProbe = UnsafeProjection.create(probeOutput.map(_.dataType).toArray)
-      val probeStore = new GraftSpillableRowBuffer()
-      while (probeIter.hasNext) probeStore.add(asUnsafe(probeIter.next(), toUnsafeProbe))
-
-      val probeMatched = joinType match {
-        case RightOuter | FullOuter => new java.util.BitSet(probeStore.length)
-        case LeftSemi | LeftAnti if probePreserving =>
-          new java.util.BitSet(probeStore.length)
-        case _ => null
-      }
-      val buildStoreIter = buildStore.iterator
-      var chunkMatched: java.util.BitSet = null
-
-      def loadChunk(): Boolean = {
-        if (!buildStoreIter.hasNext) return false
-        chain.clear()
-        var chunkBytes = 0L
-        while (buildStoreIter.hasNext && chunkBytes < spillThresholdBytes) {
-          val r = buildStoreIter.next()
-          chunkBytes += r.getSizeInBytes
-          chain.append(r)
-        }
-        chunkMatched = if (trackBuildMatches) new java.util.BitSet(chain.size) else null
-        buildChunksMetric += 1
-        true
-      }
-
-      def probeChunk(): Iterator[InternalRow] = joinType match {
-        case LeftSemi | LeftAnti if probePreserving =>
-          // mark probe rows with a surviving match; the global pass
-          // emits them by bit (semi: set, anti: unset)
-          new Iterator[InternalRow] {
-            private val pIter = probeStore.iterator
-            private var pIdx = -1
-            override def hasNext: Boolean = {
-              while (pIter.hasNext) {
-                val probeRow = pIter.next()
-                pIdx += 1
-                if (!probeMatched.get(pIdx)) {
-                  var cursor = chain.headFor(probeKeyProj(probeRow))
-                  var found = false
-                  while (cursor != -1 && !found) {
-                    joined(chain.rowAt(cursor), probeRow)
-                    if (boundCondition(joined)) found = true
-                    cursor = chain.next(cursor)
-                  }
-                  if (found) probeMatched.set(pIdx)
-                }
-              }
-              false
-            }
-            override def next(): InternalRow = throw new NoSuchElementException
-          }
-        case LeftSemi | LeftAnti =>
-          // marking pass only, as in the fast path
-          new Iterator[InternalRow] {
-            private val pIter = probeStore.iterator
-            override def hasNext: Boolean = {
-              while (pIter.hasNext) {
-                val probeRow = pIter.next()
-                var cursor = chain.headFor(probeKeyProj(probeRow))
-                while (cursor != -1) {
-                  joined(chain.rowAt(cursor), probeRow)
-                  if (boundCondition(joined)) chunkMatched.set(cursor)
-                  cursor = chain.next(cursor)
-                }
-              }
-              false
-            }
-            override def next(): InternalRow = throw new NoSuchElementException
-          }
-        case _ =>
-          // Inner/LeftOuter/RightOuter/FullOuter all emit matches lazily;
-          // probe padding is deferred to the global pass, so unlike the
-          // fast path RightOuter/FullOuter need no per-row buffering here.
-          val markBuild = trackBuildMatches
-          new Iterator[InternalRow] {
-            private val pIter = probeStore.iterator
-            private var pIdx = -1
-            private var probeRow: InternalRow = _
-            private var cursor: Int = -1
-            private var pending = false
-
-            private def advance(): Boolean = {
-              while (true) {
-                while (cursor != -1) {
-                  val idx = cursor
-                  cursor = chain.next(idx)
-                  joined(chain.rowAt(idx), probeRow)
-                  if (boundCondition(joined)) {
-                    if (markBuild) chunkMatched.set(idx)
-                    if (probeMatched != null) probeMatched.set(pIdx)
-                    return true
-                  }
-                }
-                if (!pIter.hasNext) return false
-                probeRow = pIter.next()
-                pIdx += 1
-                cursor = chain.headFor(probeKeyProj(probeRow))
-              }
-              false
-            }
-
-            override def hasNext: Boolean = pending || { pending = advance(); pending }
-            override def next(): InternalRow = {
-              if (!hasNext) throw new NoSuchElementException
-              pending = false
-              numOutputRows += 1
-              resultProj(joined)
-            }
-          }
-      }
-
-      def globalFinisher(): Iterator[InternalRow] = joinType match {
-        case LeftSemi | LeftAnti if probePreserving =>
-          val emitOnMatch = joinType == LeftSemi
-          val pIter = probeStore.iterator
-          var pIdx = -1
-          pIter.filter { _ =>
-            pIdx += 1; probeMatched.get(pIdx) == emitOnMatch
-          }.map { probeRow =>
-            numOutputRows += 1
-            resultProj(probeRow)
-          }
-        case RightOuter | FullOuter =>
-          val pIter = probeStore.iterator
-          var pIdx = -1
-          pIter.filter { _ => pIdx += 1; !probeMatched.get(pIdx) }.map { probeRow =>
-            numOutputRows += 1
-            resultProj(joined(nullBuildRow, probeRow))
-          }
-        case _ => Iterator.empty
-      }
-
-      new Iterator[InternalRow] {
-        private var cur: Iterator[InternalRow] = Iterator.empty
-        private var globalDone = false
-
-        @annotation.tailrec
-        override def hasNext: Boolean =
-          cur.hasNext || {
-            if (globalDone) false
-            else if (loadChunk()) {
-              // chunkFinisher is evaluated lazily, after the probe pass
-              // has populated chunkMatched (Iterator.++ is by-name)
-              cur = probeChunk() ++ buildFinisher(chunkMatched)
-              hasNext
-            } else {
-              globalDone = true
-              cur = globalFinisher()
-              cur.hasNext
-            }
-          }
-
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          cur.next()
-        }
-      }
-    }
   }
 }
 

@@ -15,22 +15,16 @@ import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
   * Spark's built-in strategies (the rule's guard conditions are enforced
   * at node construction instead).
   *
-  * `spark.graft.parallelHashJoin.impl` is the analog of the reference's
-  * `JoinReplacement` version knob (`/root/reference/src/parse_sql.rs:12-24`):
-  *   - `chain` (default): our interpreted chain-map exec
-  *   - `codegen`: Spark's whole-stage-codegen shuffled-hash exec with a
-  *     left build side — the "control" implementation, semantically
-  *     identical, for A/B runs exactly as the reference's None/versionN
-  *     configurations. */
+  * The reference picks among its join versions with a knob
+  * (`JoinReplacement`, `/root/reference/src/parse_sql.rs:12-24`); those
+  * versions share one semantics (SURVEY §0), so every node plans to the
+  * one [[ParallelHashJoinExec]] route. */
 object ParallelHashJoinStrategy extends SparkStrategy {
-  import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide}
-  import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
   import org.apache.spark.sql.internal.SQLConf
 
-  val implConfKey = "spark.graft.parallelHashJoin.impl"
-
-  /** Build-side selection on the transparent path
-    * (`spark.graft.parallelHashJoin.sideSelect`, default true).
+  /** The transparent path's node for an extracted equi-join of `j`, and
+    * whether its output needs a Project back to `j.output`'s column
+    * order.
     *
     * The reference's rule always builds LEFT (DataFusion convention,
     * where the optimizer has already put the small side left); Spark
@@ -47,19 +41,13 @@ object ParallelHashJoinStrategy extends SparkStrategy {
     *  - `Inner` stays inner and `LeftOuter` becomes `RightOuter`; a
     *    Project restores the join's column order.
     * Swapped joins are the shared-build types, so a small swapped build
-    * side is broadcast rather than shuffled (see [[planJoin]]). Applied
+    * side is broadcast rather than shuffled (see [[sharesBuild]]). Applied
     * only on the TRANSPARENT path — the explicit API keeps the
     * reference's fixed build-left. */
-  val sideSelectConfKey = "spark.graft.parallelHashJoin.sideSelect"
-
-  /** The transparent path's node for an extracted equi-join of `j`, with
-    * the build side chosen as above, and whether its output needs a
-    * Project back to `j.output`'s column order. */
   private[plans] def transparentJoin(j: Join, leftKeys: Seq[Expression],
-      rightKeys: Seq[Expression], joinType: JoinType, condition: Option[Expression],
-      conf: SQLConf): (ParallelHashJoin, Boolean) = {
-    val rightSmaller = conf.getConfString(sideSelectConfKey, "true").toBoolean &&
-      j.right.stats.sizeInBytes * 3 <= j.left.stats.sizeInBytes
+      rightKeys: Seq[Expression], joinType: JoinType,
+      condition: Option[Expression]): (ParallelHashJoin, Boolean) = {
+    val rightSmaller = j.right.stats.sizeInBytes * 3 <= j.left.stats.sizeInBytes
     def swapped(jt: JoinType, probePreserving: Boolean) =
       ParallelHashJoin(j.right, j.left, rightKeys, leftKeys, jt, condition, probePreserving)
     joinType match {
@@ -69,14 +57,6 @@ object ParallelHashJoinStrategy extends SparkStrategy {
       case LeftOuter if rightSmaller => (swapped(RightOuter, probePreserving = false), true)
       case _ => (ParallelHashJoin(j.left, j.right, leftKeys, rightKeys, joinType, condition), false)
     }
-  }
-
-  /** Spark's supported build-side combos (HashJoin rejects e.g.
-    * semi/anti with a left build): prefer BuildLeft for reference
-    * fidelity, fall back to BuildRight where required. */
-  private def buildSideFor(jt: JoinType): BuildSide = jt match {
-    case Inner | RightOuter | FullOuter => BuildLeft
-    case _ => BuildRight // LeftOuter, LeftSemi, LeftAnti
   }
 
   /** Shared build (see [[ParallelHashJoinExec]]) for the join types that
@@ -94,26 +74,10 @@ object ParallelHashJoinStrategy extends SparkStrategy {
       bound > 0 && build.stats.sizeInBytes <= bound
   }
 
-  /** The `impl` knob dispatch shared by the explicit-node and the
-    * transparent (auto) paths. */
   private def planJoin(j: ParallelHashJoin): Seq[SparkPlan] =
-    SQLConf.get.getConfString(implConfKey, "chain") match {
-      case "codegen" if j.probePreserving =>
-        // control impl for probe-preserving semi/anti: Spark's own
-        // LeftSemi/LeftAnti with children swapped (probe becomes the
-        // preserved left side, build becomes the BuildRight hash side)
-        ShuffledHashJoinExec(j.rightKeys, j.leftKeys, j.joinType,
-          BuildRight, j.condition,
-          planLater(j.right), planLater(j.left)) :: Nil
-      case "codegen" =>
-        ShuffledHashJoinExec(j.leftKeys, j.rightKeys, j.joinType,
-          buildSideFor(j.joinType), j.condition,
-          planLater(j.left), planLater(j.right)) :: Nil
-      case _ =>
-        ParallelHashJoinExec(j.leftKeys, j.rightKeys, j.joinType, j.condition,
-          planLater(j.left), planLater(j.right), j.probePreserving,
-          sharesBuild(j.joinType, j.probePreserving, j.left)) :: Nil
-    }
+    ParallelHashJoinExec(j.leftKeys, j.rightKeys, j.joinType, j.condition,
+      planLater(j.left), planLater(j.right), j.probePreserving,
+      sharesBuild(j.joinType, j.probePreserving, j.left)) :: Nil
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: ParallelHashJoin => planJoin(j)
@@ -123,7 +87,7 @@ object ParallelHashJoinStrategy extends SparkStrategy {
       val required = AutoParallelJoin.mode(SQLConf.get) == AutoParallelJoin.Required
       AutoParallelJoin.extract(j, ignoreBroadcast = required, SQLConf.get) match {
         case Some((lk, rk, jt, cond)) =>
-          val (node, reorder) = transparentJoin(j, lk, rk, jt, cond, SQLConf.get)
+          val (node, reorder) = transparentJoin(j, lk, rk, jt, cond)
           planJoin(node).map(p => if (reorder) ProjectExec(j.output, p) else p)
         case None => Nil
       }

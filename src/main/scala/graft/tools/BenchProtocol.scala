@@ -478,7 +478,7 @@ object BenchProtocol {
     * bounded tail-capture needs to adjudicate a round, nothing that
     * can grow with the query count. */
   private val CompactFields = Seq(
-    "metric", "value", "unit", "provenance", "cpus", "adjudicable",
+    "metric", "value", "unit", "provenance", "cpus", "host_cpus", "adjudicable",
     "adjudicable_live", "canary_sec", "canary_shuffle_sec",
     "variance_trimmed", "refusal_reason", "sf")
 

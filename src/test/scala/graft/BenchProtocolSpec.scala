@@ -354,6 +354,7 @@ class BenchProtocolSpec extends AnyFunSuite {
     val samples = (1 to 200).map(i => s""""q$i":[1.1,1.2,1.3,1.2,1.25]""").mkString(",")
     val full =
       s"""{"metric":"total","value":33.103,"unit":"sec","provenance":"live",""" +
+        s""""cpus":"32","host_cpus":8,""" +
         s""""adjudicable":true,"adjudicable_live":true,"canary_sec":2.150,""" +
         s""""canary_shuffle_sec":1.820,"variance_trimmed":0.234,""" +
         s""""queries":{$queries},"samples":{$samples},"sf":"/root/testdata/sf0.1"}"""
@@ -367,6 +368,9 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(node.get("compact").asBoolean())
     assert(node.get("value").asDouble() == 33.103)
     assert(node.get("provenance").asText() == "live")
+    // the requested core count the standing slot keys on, and the host's
+    assert(node.get("cpus").asText() == "32")
+    assert(node.get("host_cpus").asInt() == 8)
     assert(node.get("adjudicable_live").asBoolean())
     assert(node.get("canary_sec").asDouble() == 2.150)
     assert(node.get("variance_trimmed").asDouble() == 0.234)

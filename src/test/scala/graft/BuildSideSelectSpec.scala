@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{AutoParallelJoin, ParallelHashJoinApi, ParallelHashJoinExec, ParallelHashJoinStrategy}
+import graft.plans.{AutoParallelJoin, ParallelHashJoinApi, ParallelHashJoinExec}
 
 /** Pins the conditional build-side selection on the transparent path
   * (round-10 verdict #6): an auto-converted `LeftSemi`/`LeftAnti` whose
@@ -15,9 +15,8 @@ import graft.plans.{AutoParallelJoin, ParallelHashJoinApi, ParallelHashJoinExec,
   * kernel with swapped children (build = small right side), an `Inner`
   * or `LeftOuter` one as inner / right outer with swapped children under
   * a column-restoring Project; all produce results identical to the
-  * stock planner, and revert to the faithful build-left shape when
-  * `sideSelect=false` — while the EXPLICIT API keeps the reference's
-  * fixed build-left regardless. */
+  * stock planner. Near-equal sides keep the faithful build-left shape,
+  * and the EXPLICIT API keeps the reference's fixed build-left. */
 class BuildSideSelectSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -117,15 +116,7 @@ class BuildSideSelectSpec extends AnyFunSuite {
     }
   }
 
-  test("sideSelect=false keeps the faithful build-left shape; near-equal sides never swap") {
-    withConf(AutoParallelJoin.autoConfKey -> "required",
-        ParallelHashJoinStrategy.sideSelectConfKey -> "false") {
-      val exec = phjOf(fact.join(dim, col("k") === col("d_k"), "left_semi"))
-      assert(!exec.probePreserving, "sideSelect=false must keep build-left")
-      assert(exec.left.output.map(_.name) == Seq("k", "v"))
-      val inner = phjOf(fact.join(dim, col("k") === col("d_k")))
-      assert(inner.left.output.map(_.name) == Seq("k", "v"), "sideSelect=false builds inner left")
-    }
+  test("near-equal sides never swap: the build stays left") {
     withConf(AutoParallelJoin.autoConfKey -> "required") {
       // same-size sides: under the 3x stats threshold — no swap
       val a = spark.range(0, 1000, 1, 2).select(col("id").as("k"))
@@ -135,7 +126,7 @@ class BuildSideSelectSpec extends AnyFunSuite {
     }
   }
 
-  test("the explicit API stays reference-faithful (build-left) regardless of sideSelect") {
+  test("the explicit API stays reference-faithful (build-left)") {
     val df = ParallelHashJoinApi.parallelHashJoin(
       fact, dim, Seq("k"), Seq("d_k"), "left_semi")
     val exec = phjOf(df)

@@ -59,13 +59,13 @@ class JoinPropertiesSpec extends AnyFunSuite {
 
   test("chunked spill path equals built-in join on arbitrary tables, all types") {
     // a few-byte budget forces the grace path (multiple chunks per
-    // partition) even on these tiny tables; codegen off because the
-    // chunked fallback lives on the interpreted doExecute
+    // partition) even on these tiny tables; whole-stage codegen off so
+    // the join runs from the interpreted doExecute
     val saved = Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey,
-      graft.plans.ParallelHashJoinExec.codegenEnabledKey)
+      "spark.sql.codegen.wholeStage")
       .map(k => k -> spark.conf.getOption(k))
     spark.conf.set(graft.plans.ParallelHashJoinExec.spillThresholdKey, "64")
-    spark.conf.set(graft.plans.ParallelHashJoinExec.codegenEnabledKey, "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       import org.apache.spark.sql.functions.col
       for (seed <- 200L to 208L) {
@@ -145,10 +145,10 @@ class JoinPropertiesSpec extends AnyFunSuite {
     val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
       "left_semi", "left_anti", "right_semi", "right_anti")
     val saved = Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey,
-      graft.plans.ParallelHashJoinExec.codegenEnabledKey)
+      "spark.sql.codegen.wholeStage")
       .map(k => k -> spark.conf.getOption(k))
     spark.conf.set(graft.plans.ParallelHashJoinExec.spillThresholdKey, "64")
-    spark.conf.set(graft.plans.ParallelHashJoinExec.codegenEnabledKey, "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       import org.apache.spark.sql.functions.col
       // the key type picks the map layout: GraftLongMap for the integral
@@ -233,8 +233,11 @@ class JoinPropertiesSpec extends AnyFunSuite {
     val formulations = Seq(
       // codegen errors must fail here, not fall back to interpreted
       "shared, codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
-      "shared, interpreted" -> Seq(graft.plans.ParallelHashJoinExec.codegenEnabledKey -> "false"),
-      "co-partitioned" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+      "shared, interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+      "co-partitioned" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      // the one-chunk interpreted kernel of the co-partitioned build
+      "co-partitioned, interpreted" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.codegen.wholeStage" -> "false"))
     for ((name, lRows, rRows) <- fixtures) {
       val l = localDf(lRows, "lk", "lv")
       val r = localDf(rRows, "rk", "rv")

@@ -193,15 +193,15 @@ class JoinStrategyMatrixSpec extends AnyFunSuite {
     val expected = collected(part.join(li,
       col("p_partkey") === col("l_partkey") && col("p_size") > 25))
     assert(collected(dc) == expected)
-    // knob off → interpreted path, same results, exec not fused
-    withConf(ParallelHashJoinExec.codegenEnabledKey -> "false") {
+    // whole-stage codegen off → interpreted path, same results, exec not fused
+    withConf("spark.sql.codegen.wholeStage" -> "false") {
       val di = ParallelHashJoinApi.parallelHashJoin(
         part, li, Seq("p_partkey"), Seq("l_partkey"), "inner")
       assert(collected(di) == golden("inner"))
       val fused = finalPlan(di).collect {
         case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
       }.exists(_.collectFirst { case p: ParallelHashJoinExec => p }.isDefined)
-      assert(!fused, "knob off must keep the exec out of codegen stages")
+      assert(!fused, "wholeStage=false must keep the exec out of codegen stages")
     }
   }
 
@@ -227,18 +227,6 @@ class JoinStrategyMatrixSpec extends AnyFunSuite {
         val expected = collected(part.join(li,
           col("p_partkey") === col("l_partkey") && col("p_size") > 25, jt))
         assert(collected(dc) == expected, s"residual results for $jt")
-      }
-    }
-  }
-
-  test("codegen impl knob plans Spark's shuffled-hash exec with same results") {
-    withConf(graft.plans.ParallelHashJoinStrategy.implConfKey -> "codegen") {
-      for (jt <- joinTypes) {
-        val d = ParallelHashJoinApi.parallelHashJoin(
-          part, li, Seq("p_partkey"), Seq("l_partkey"), jt)
-        assert(collected(d) == golden(jt), s"results for $jt")
-        assert(finalPlan(d).exists(_.isInstanceOf[ShuffledHashJoinExec]),
-          s"expected ShuffledHashJoinExec (codegen impl) for $jt")
       }
     }
   }

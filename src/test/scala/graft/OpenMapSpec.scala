@@ -48,7 +48,7 @@ class OpenMapSpec extends AnyFunSuite {
 
   /** The probe loops and build formulations a join can run through. */
   private val paths = Seq(
-    "interpreted" -> Seq(ParallelHashJoinExec.codegenEnabledKey -> "false"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
     // codegen errors must fail here, not fall back to interpreted
     "codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
     "codegen, co-partitioned" -> Seq("spark.sql.codegen.fallback" -> "false",

@@ -80,10 +80,10 @@ class SpillFallbackSpec extends AnyFunSuite {
 
   test("forced-low spill threshold matches built-in results for all join types") {
     // AQE off → deterministic 4 shuffle partitions, so the chunk metric
-    // is comparable against the partition count; codegen off because the
-    // chunked spill path lives on the interpreted doExecute
+    // is comparable against the partition count; whole-stage codegen off
+    // so the join runs from the interpreted doExecute
     withConf(ParallelHashJoinExec.spillThresholdKey -> "512",
-      ParallelHashJoinExec.codegenEnabledKey -> "false",
+      "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.adaptive.enabled" -> "false") {
       for (jt <- joinTypes) {
         val d = ParallelHashJoinApi.parallelHashJoin(
@@ -152,23 +152,13 @@ class SpillFallbackSpec extends AnyFunSuite {
       col("p_partkey") === col("l_partkey") && col("p_size") > col("l_orderkey") % 50,
       "full_outer"))
     withConf(ParallelHashJoinExec.spillThresholdKey -> "4096") {
-      // default codegenFallback=true: fusion survives an explicit budget
-      // (overruns downgrade per-partition at runtime)
+      // fusion survives an explicit budget (overruns downgrade
+      // per-partition at runtime)
       val d = ParallelHashJoinApi.parallelHashJoin(
         part, li, Seq("p_partkey"), Seq("l_partkey"), "full_outer",
         Some(col("p_size") > col("l_orderkey") % 50))
       assert(collected(d) == expected)
       assert(fused(d), "runtime fallback keeps the exec fused")
-    }
-    withConf(ParallelHashJoinExec.spillThresholdKey -> "4096",
-      ParallelHashJoinExec.codegenFallbackKey -> "false") {
-      // legacy static routing: an explicit budget disables fusion outright
-      val d = ParallelHashJoinApi.parallelHashJoin(
-        part, li, Seq("p_partkey"), Seq("l_partkey"), "full_outer",
-        Some(col("p_size") > col("l_orderkey") % 50))
-      assert(collected(d) == expected)
-      assert(!fused(d),
-        "codegenFallback=false + explicit spill threshold must disable fusion")
     }
   }
 
@@ -177,7 +167,7 @@ class SpillFallbackSpec extends AnyFunSuite {
     // partition): a small build side would otherwise be shared, one chunk
     withConf("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      ParallelHashJoinExec.codegenEnabledKey -> "false") {
+      "spark.sql.codegen.wholeStage" -> "false") {
       val d = ParallelHashJoinApi.parallelHashJoin(
         part, li, Seq("p_partkey"), Seq("l_partkey"), "inner")
       assert(collected(d) == golden("inner"))
