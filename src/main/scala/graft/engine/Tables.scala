@@ -1,5 +1,9 @@
 package graft.engine
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,6 +17,13 @@ import org.apache.spark.sql.types._
   * at 100 TB these would be multi-file partitioned datasets and the same
   * code holds (Spark plans one task per row-group/split; filters and
   * column pruning are pushed to the parquet reader).
+  *
+  * Read contract: every read goes through [[parquetSchema]]. The first
+  * read of a path infers its schema (Spark runs a one-task job over the
+  * footer); a repeat read reuses that schema and launches no job; a
+  * rewritten file, or a changed parquet setting of the session, infers
+  * again. Only the schema is kept, never a frame or a plan, so every
+  * read still gets fresh attribute ids and a self-join resolves.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -36,8 +47,52 @@ object Tables {
       // UTC session. Fail loudly rather than silently overriding a
       // caller's deliberate non-UTC session for everything after us.
       requireUtcSession(spark)
-      normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      normalizeEventTs(readParquet(spark, s"$dir/$name.parquet"))
+    } else readParquet(spark, s"$dir/$name.parquet")
+  }
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** A path's schema, the data files it was inferred from (name, length,
+    * modification time) and the session's parquet settings at the time. */
+  private final case class SchemaEntry(
+      files: Seq[(String, Long, Long)], settings: Seq[(String, String)], schema: StructType)
+
+  /** One entry per qualified path: a mismatch replaces it, so the map
+    * holds one small schema per distinct path the JVM has read. */
+  private val schemas = new ConcurrentHashMap[String, SchemaEntry]()
+
+  /** The schema Spark infers for a parquet file or directory, inferred
+    * once per (data files, parquet settings) and reused after that. Every
+    * set session conf whose name contains `parquet` counts as a setting,
+    * which covers `binaryAsString`, `inferTimestampNTZ` and the
+    * `nanosAsLong` that [[t]] sets for events. A missing path is left to
+    * Spark, which raises its usual error. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val files = try Some(leafFiles(fs, p)) catch { case _: FileNotFoundException => None }
+    val settings = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+    val hit = Option(schemas.get(key))
+      .filter(e => files.contains(e.files) && e.settings == settings)
+    hit.map(_.schema).getOrElse {
+      val schema = spark.read.parquet(path).schema
+      files.foreach(f => schemas.put(key, SchemaEntry(f, settings, schema)))
+      schema
+    }
+  }
+
+  /** A file's own status, or every file under a directory. */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
   }
 
   /** Normalize an events frame so `ts` is epoch-nanos LongType no matter

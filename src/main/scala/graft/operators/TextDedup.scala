@@ -209,6 +209,9 @@ object TextDedup {
               |                greatest(__m[i], __m[j]) AS b))))""".stripMargin))
             .as("__p"))
           .select(col("__p.a").as("__a"), col("__p.b").as("__bId"))
+          // a repeated id in one bucket would pair with itself; the
+          // classic join's strict `<` never emits (x, x)
+          .filter(col("__a") < col("__bId"))
         val overKeys = sets.filter(col("__m").isNull).select(col("__b"), col("__bk"))
         if (overKeys.isEmpty) small
         else {

@@ -360,6 +360,8 @@ object TextQueries {
               |                greatest(__m[i], __m[j]) AS b))))""".stripMargin))
             .as("__p"))
           .select(col("__p.a").as("a_id"), col("__p.b").as("b_id"))
+          // no (x, x) self-pairs, as the classic join's strict `<`
+          .filter(col("a_id") < col("b_id"))
         val overKeys = sets.filter(col("__m").isNull)
           .select(col("band"), col("he"), col("ho"))
         if (overKeys.isEmpty) small

@@ -22,8 +22,8 @@ object EventsStreaming {
     * this call, no matter how the parquet file encoded it
     * (TIMESTAMP(NANOS)-as-int64 vs TIMESTAMP(MICROS) — the testdata has
     * drifted between the two across generations). The file source needs
-    * an explicit schema, so we probe the footer once with a batch read
-    * (schema-only, zero data scanned) and then apply the identical
+    * an explicit schema, so we take the file's schema from
+    * [[Tables.parquetSchema]] (no data scanned) and then apply the identical
     * [[Tables.normalizeEventTs]] projection on the stream — one choke
     * point, two execution modes. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
@@ -33,7 +33,7 @@ object EventsStreaming {
     // caller's non-UTC session for everything that runs afterwards.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.requireUtcSession(spark)
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     Tables.normalizeEventTs(
       spark.readStream
         .schema(fileSchema)
@@ -132,7 +132,7 @@ object EventsStreaming {
       Tables.requireUtcSession(spark)
       Tables.normalizeEventTs(
         spark.readStream
-          .schema(spark.read.parquet(dir).schema)
+          .schema(Tables.parquetSchema(spark, dir))
           .option("maxFilesPerTrigger", n)
           .parquet(dir))
     }

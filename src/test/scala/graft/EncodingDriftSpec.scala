@@ -89,6 +89,29 @@ class EncodingDriftSpec extends AnyFunSuite {
       s"hour buckets outside the fixture's epoch window (1970-drift signature): ${hours.toSeq}")
   }
 
+  test("events stay normalized after a non-events read filled the schema cache") {
+    // a non-events table and a plain schema read of each fixture file,
+    // with nanosAsLong unset, fill the cache under other parquet
+    // settings; the events reads after them must still normalize ts and
+    // give the same e1 answer
+    val longDir = writeFixture("nanos_as_long")
+    val usDir = writeFixture("micros_ntz")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      spark.range(3).write.parquet(s"$longDir/other.parquet")
+      Tables.t(spark, longDir, "other").schema
+      Seq(longDir, usDir).foreach(d => Tables.parquetSchema(spark, s"$d/events.parquet"))
+      Seq(longDir, usDir).foreach { d =>
+        assert(Tables.t(spark, d, "events").schema("ts").dataType == LongType,
+          s"$d: ts not int64 after Tables.t")
+      }
+      assert(canon(CoreQueries.e1Hourly.fn(spark, longDir)) ==
+        canon(CoreQueries.e1Hourly.fn(spark, usDir)))
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("timestamp-encoded ts under a non-UTC session fails loudly, not silently skewed") {
     val usDir = writeFixture("micros_ntz")
     val prevTz = spark.conf.get("spark.sql.session.timeZone")

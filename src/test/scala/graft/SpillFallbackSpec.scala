@@ -29,7 +29,11 @@ class SpillFallbackSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def part = t(spark, dir, "part").select(col("p_partkey"), col("p_size"))
+  private def allParts = t(spark, dir, "part").select(col("p_partkey"), col("p_size"))
+  // a third of the parts are left out of the build, so right and full
+  // outer joins must pad unmatched lineitem (probe) rows, across chunks
+  // under spill
+  private def part = allParts.filter(col("p_partkey") % 3 =!= 0)
   private def li = t(spark, dir, "lineitem")
     .filter(col("l_quantity") >= 40.0)
     .select(col("l_partkey"), col("l_orderkey"))
@@ -148,14 +152,16 @@ class SpillFallbackSpec extends AnyFunSuite {
   }
 
   test("residual condition correct under spill fallback") {
-    val expected = collected(part.join(li,
+    // every part: at this budget the whole table spills into several
+    // chunks, whose last one pads the rows the condition rejected
+    val expected = collected(allParts.join(li,
       col("p_partkey") === col("l_partkey") && col("p_size") > col("l_orderkey") % 50,
       "full_outer"))
     withConf(ParallelHashJoinExec.spillThresholdKey -> "4096") {
       // fusion survives an explicit budget (overruns downgrade
       // per-partition at runtime)
       val d = ParallelHashJoinApi.parallelHashJoin(
-        part, li, Seq("p_partkey"), Seq("l_partkey"), "full_outer",
+        allParts, li, Seq("p_partkey"), Seq("l_partkey"), "full_outer",
         Some(col("p_size") > col("l_orderkey") % 50))
       assert(collected(d) == expected)
       assert(fused(d), "runtime fallback keeps the exec fused")

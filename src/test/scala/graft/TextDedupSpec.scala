@@ -239,6 +239,25 @@ class TextDedupSpec extends AnyFunSuite {
       fast, "string-id join path must find the same pairs")
   }
 
+  test("minhashPairs() on duplicate ids with identical text: expansion == join, no self-pairs") {
+    import spark.implicits._
+    // every id appears twice with the same text, so each bucket holds
+    // the id twice; the expansion must not pair an id with itself
+    val texts = (0 until 12).map { i =>
+      (i.toLong, (0 until 30).map(w => s"c${i % 3}_$w").mkString(" "))
+    }
+    val df = (texts ++ texts).toDF("id", "text")
+    def run(): Set[(Long, Long, Double)] =
+      TextDedup.minhashPairs(df, "id", "text", threshold = 0.3).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val expanded = run()
+    spark.conf.set("spark.graft.lsh.expand", "false")
+    val viaJoin = try run() finally spark.conf.unset("spark.graft.lsh.expand")
+    assert(expanded.nonEmpty, "fixture must produce candidate pairs")
+    assert(expanded.forall { case (a, b, _) => a < b }, s"self or unordered pairs: $expanded")
+    assert(expanded == viaJoin, "expand=false (classic join) must match the expansion")
+  }
+
   test("components() resolves planted clusters to min-id with canonical flags") {
     import spark.implicits._
     // planted graph: a 5-node chain (10-11-12-13-14), a 3-node star
