@@ -6,61 +6,21 @@ import org.apache.spark.sql.functions._
 
 /** Reusable corpus-deduplication APIs over arbitrary (id, text)
   * columns — the library surface behind the fixed demo queries
-  * (`t1_dedup_exact`, `t6_minhash_lsh`): a pipeline user points these
-  * at their own tables instead of the testdata schema.
+  * (`t1_dedup_exact`, `t6_minhash_lsh`, `t19_neardup_components`,
+  * `t26_incremental_dedup`): a pipeline user points these at their own
+  * tables instead of the testdata schema.
   *
   * Scale posture matches the query implementations: exact dedup is a
   * hash shuffle on a 64-bit content fingerprint; MinHash-LSH generates
   * candidate pairs only inside equal band buckets (banded signatures →
-  * subquadratic), then verifies on full-signature agreement. Nothing
-  * ever materializes on the driver.
+  * subquadratic), then verifies on full-signature agreement. The
+  * candidate stage is [[BandedPairs]], the same operator the demo
+  * queries run, so [[minhashPairs]] picks its route by the same size
+  * check (one count job over the signatures for Long ids) and
+  * [[incrementalDedup]] uses its cross-pair join. Nothing ever
+  * materializes on the driver.
   */
 object TextDedup {
-
-  /** Per-bucket member cap for the one-shuffle LSH/SimHash candidate
-    * expansion (conf `spark.graft.lsh.bucketCap`, default 4096): a band
-    * bucket with ≤ cap members has its candidate pairs expanded IN
-    * PLACE from one capped collect (≤ 16·cap bytes of aggregation
-    * buffer per key); a bucket past the cap falls back to the classic
-    * bucket self-join for exactly those keys — NEVER dropped, so the
-    * cap is a memory bound, not a semantic filter (unlike
-    * coOccurrence's maxGroupSize, where over-cap groups are dropped by
-    * declared semantics). 4096 bounds the degenerate single-task
-    * expansion at C(4096,2) ≈ 8.4M in-place rows — the same order as
-    * what one SMJ task would stream for that bucket anyway. */
-  private[graft] def lshBucketCap(spark: org.apache.spark.sql.SparkSession): Int = {
-    val key = "spark.graft.lsh.bucketCap"
-    spark.conf.getOption(key) match {
-      case None => 4096
-      case Some(v) =>
-        val n = try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be a positive integer, got '$v'")
-        }
-        if (n <= 0) throw new IllegalArgumentException(
-          s"$key must be a positive integer, got '$v'")
-        n
-    }
-  }
-
-  /** Formulation switch for the minhash-LSH candidate stage (conf
-    * `spark.graft.lsh.expand`, default true): true = one-shuffle capped
-    * collect + in-place pair expansion; false = the classic bucket
-    * self-join. Both compute the identical candidate set — the switch
-    * exists so the two formulations can be A/B-measured (and so a
-    * deployment that knows its buckets are degenerate can pin the
-    * join). Only applies where band keys are wide hashes (minhash);
-    * [[simhashPairs]] always joins — see the keyspace note there. */
-  private[graft] def lshExpand(spark: org.apache.spark.sql.SparkSession): Boolean = {
-    val key = "spark.graft.lsh.expand"
-    spark.conf.getOption(key) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false") =>
-        v.toBoolean
-      case Some(v) => throw new IllegalArgumentException(
-        s"$key must be true or false, got '$v'")
-    }
-  }
 
   /** Engine-portable 60-bit hash: first 15 hex chars of md5, as BIGINT —
     * the same construction TextQueries uses so API results are
@@ -137,19 +97,14 @@ object TextDedup {
         (1 until k).map(i => min(affine(i)).as(s"__h$i")): _*)
   }
 
-  /** (__id, __b, __bk) band keys over an [[affineSignatures]] frame —
-    * ONE band-hash formulation shared by [[minhashPairs]] and
-    * [[incrementalDedup]] so bucketing can never diverge between the
+  /** One `__bk` band-hash struct per band of an [[affineSignatures]]
+    * frame, for [[BandedPairs.bandKeys]] — shared by [[minhashPairs]]
+    * and [[incrementalDedup]] so bucketing can never diverge between the
     * pairwise and incremental paths. */
-  private def bandKeys(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+  private def bandHashes(k: Int, bands: Int): Seq[Column] = {
     val r = k / bands
-    val bandCols = (0 until bands).map { b =>
-      struct((b * r until (b + 1) * r).map(i => col(s"__h$i")): _*).as(s"__band$b")
-    }
-    sig.select(col("__id") +: bandCols: _*)
-      .select(col("__id"), posexplode(array(
-        (0 until bands).map(b => xxhash64(lit(b), col(s"__band$b"))): _*))
-        .as(Seq("__b", "__bk")))
+    (0 until bands).map(b => struct(xxhash64(lit(b),
+      struct((b * r until (b + 1) * r).map(i => col(s"__h$i")): _*)).as("__bk")))
   }
 
   /** MinHash-LSH near-duplicate candidate pairs: (idA, idB, estJaccard)
@@ -160,6 +115,8 @@ object TextDedup {
     * keys the candidate join. With k=16, bands=4 (r=4 rows per band),
     * the S-curve crosses ~0.7 — pairs at Jaccard 0.5 are found with ~4
     * band probes while the shuffle never carries a cross product.
+    * Candidates come from [[BandedPairs.selfPairs]]; every route it
+    * takes returns the same pairs.
     *
     * The affine maps act on the hash's two integer bit-halves
     * (hi = h >> 30, lo = h & (2^30−1)) with multipliers < 2^31, so every
@@ -177,72 +134,12 @@ object TextDedup {
       threshold: Double = 0.5,
       maxShingles: Int = 1000): DataFrame = {
     require(k % bands == 0, "bands must divide k")
-    val spark = df.sparkSession
     val sig = affineSignatures(df, idCol, textCol, k, shingleSize, maxShingles)
-
-    // banded blocking: candidates share at least one full band. Long
-    // ids take the one-shuffle capped-collect expansion (r22, guide
-    // §2.3/§2.4 — same recipe and rationale as TextQueries.lshPairs:
-    // band keys are 64-bit hashes, so buckets are true near-dup
-    // clusters at any scale; over-cap buckets keep the exact self-join
-    // so the cap is a memory bound, never a candidate filter; the
-    // collect is checkpoint-materialized so its two consumers never
-    // recompute it). Other id types keep the classic join — identical
-    // candidates either way, as does `spark.graft.lsh.expand=false`.
-    val bandKv = bandKeys(sig, k, bands)
-    val isLongId =
-      df.schema(df.schema.fieldIndex(idCol)).dataType ==
-        org.apache.spark.sql.types.LongType
-    val candRaw =
-      if (isLongId && lshExpand(spark)) {
-        val cap = lshBucketCap(spark)
-        val sets = Checkpoints.cut(
-          bandKv.groupBy("__b", "__bk")
-            .agg(graft.functions.CappedLongCollectList
-              .cappedCollectList(col("__id"), cap)(spark).as("__m")),
-          eager = true)
-        val small = sets.filter(col("__m").isNotNull && size(col("__m")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(sequence(0, size(__m) - 2),
-              |  i -> transform(sequence(i + 1, size(__m) - 1),
-              |    j -> struct(least(__m[i], __m[j]) AS a,
-              |                greatest(__m[i], __m[j]) AS b))))""".stripMargin))
-            .as("__p"))
-          .select(col("__p.a").as("__a"), col("__p.b").as("__bId"))
-          // a repeated id in one bucket would pair with itself; the
-          // classic join's strict `<` never emits (x, x)
-          .filter(col("__a") < col("__bId"))
-        val overKeys = sets.filter(col("__m").isNull).select(col("__b"), col("__bk"))
-        if (overKeys.isEmpty) small
-        else {
-          val bb = bandKv.join(broadcast(overKeys), Seq("__b", "__bk"), "left_semi")
-          val l = bb.select(col("__b"), col("__bk"), col("__id").as("__a"))
-          val r = bb.select(col("__b").as("__b2"), col("__bk").as("__bk2"),
-            col("__id").as("__bId"))
-          small.unionByName(
-            l.join(r, col("__b") === col("__b2") &&
-                col("__bk") === col("__bk2") && col("__a") < col("__bId"))
-              .select(col("__a"), col("__bId")))
-        }
-      } else {
-        val lhs = bandKv.select(col("__b"), col("__bk"), col("__id").as("__a"))
-        val rhs = bandKv.select(col("__b").as("__b2"), col("__bk").as("__bk2"),
-          col("__id").as("__bId"))
-        lhs.join(rhs,
-            col("__b") === col("__b2") && col("__bk") === col("__bk2") &&
-              col("__a") < col("__bId"))
-          .select(col("__a"), col("__bId"))
-      }
-    val cand = candRaw.distinct()
-
-    // verify on full-signature agreement
-    val sa = sig.select(col("__id").as("__a") +: (0 until k).map(i => col(s"__h$i").as(s"__x$i")): _*)
-    val sb = sig.select(col("__id").as("__bId") +: (0 until k).map(i => col(s"__h$i").as(s"__y$i")): _*)
-    val agree = (0 until k).map(i =>
-      when(col(s"__x$i") === col(s"__y$i"), 1).otherwise(0)).reduce(_ + _)
-    cand.join(sa, "__a").join(sb, "__bId")
+    // banded blocking: candidates share at least one full band
+    val cand = BandedPairs.selfPairs(sig, "__id", "__b", bandHashes(k, bands), "__a", "__bId")
+    BandedPairs.agreement(cand, sig, sig, "__id", (0 until k).map(i => s"__h$i"), "__a", "__bId")
       .select(col("__a").as("idA"), col("__bId").as("idB"),
-        (agree.cast("double") / k).as("estJaccard"))
+        (col("agree").cast("double") / k).as("estJaccard"))
       .filter(col("estJaccard") >= threshold)
   }
 
@@ -285,21 +182,13 @@ object TextDedup {
 
     val bSig = affineSignatures(batch, idCol, textCol, k, shingleSize, maxShingles)
     val cSig = affineSignatures(corpus, idCol, textCol, k, shingleSize, maxShingles)
-    val cand = bandKeys(bSig, k, bands)
-      .select(col("__b"), col("__bk"), col("__id").as("__bid"))
-      .join(bandKeys(cSig, k, bands)
-          .select(col("__b").as("__b2"), col("__bk").as("__bk2"),
-            col("__id").as("__cid")),
-        col("__b") === col("__b2") && col("__bk") === col("__bk2"))
-      .select(col("__bid"), col("__cid")).distinct()
-    val sa = bSig.select(col("__id").as("__bid") +:
-      (0 until k).map(i => col(s"__h$i").as(s"__x$i")): _*)
-    val sb = cSig.select(col("__id").as("__cid") +:
-      (0 until k).map(i => col(s"__h$i").as(s"__y$i")): _*)
-    val agree = (0 until k).map(i =>
-      when(col(s"__x$i") === col(s"__y$i"), 1).otherwise(0)).reduce(_ + _)
-    val nearDup = cand.join(sa, "__bid").join(sb, "__cid")
-      .filter(agree.cast("double") / k >= threshold)
+    val cand = BandedPairs.crossPairs(
+      BandedPairs.bandKeys(bSig, "__id", "__b", bandHashes(k, bands)),
+      BandedPairs.bandKeys(cSig, "__id", "__b", bandHashes(k, bands)),
+      "__id", "__bid", "__cid")
+    val nearDup = BandedPairs.agreement(cand, bSig, cSig, "__id",
+        (0 until k).map(i => s"__h$i"), "__bid", "__cid")
+      .filter(col("agree").cast("double") / k >= threshold)
       .select(col("__bid")).distinct()
 
     batch.select(col(idCol).as("__bid"))
@@ -526,28 +415,11 @@ object TextDedup {
       idCol: String,
       textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val (sig, preCut) = simhashPairsInterior(df, idCol, textCol, maxHamming)
-    val pairs = Checkpoints.cut(preCut, eager = true)
-    sig.unpersist(blocking = false)
-    pairs
-  }
-
-  /** The pre-checkpoint candidate plan of [[simhashPairs]] plus its
-    * persisted signature table — split out so plan-audit tooling can
-    * explain the interior (the checkpoint hides it from a top-level
-    * explain); callers other than [[simhashPairs]] must unpersist the
-    * returned signature table themselves. */
-  private[graft] def simhashPairsInterior(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int): (DataFrame, DataFrame) = {
     val B = 60
     val bands = maxHamming + 1
     require(maxHamming >= 0 && B % bands == 0,
       s"maxHamming + 1 must divide $B, got $maxHamming")
     val w = B / bands
-    implicit val spark: org.apache.spark.sql.SparkSession = df.sparkSession
     val sig = simhash(df, idCol, textCol).persist()
     // band key bit-packed into ONE long — (band index << 32) | band
     // value — so the candidate shuffle keys on a single primitive
@@ -558,7 +430,7 @@ object TextDedup {
       .select(col(idCol).as("__id"), col("simhash").as("__s"),
         expr(s"(__b << 32) | ((simhash >> (__b * $w)) & ${(1L << w) - 1})").as("__k"))
     // DELIBERATELY a bucket self-join, not the capped-collect expansion
-    // the minhash family uses (r22, measured): a simhash band value is
+    // of [[BandedPairs]] (r22, measured): a simhash band value is
     // only `w` = 15 bits wide, so the whole keyspace is bands·2^w ≈ 131k
     // buckets — average bucket size grows linearly with the corpus and
     // saturates ANY fixed collect cap once N ≳ cap·2^w, at which point
@@ -578,8 +450,9 @@ object TextDedup {
     // the distinct dedups cross-band multiplicity exactly as before
     // (hamming is functionally determined by the pair, so carrying it
     // through the distinct is free)
-    (sig, candidatePairs
-      .filter(col("hamming") <= maxHamming)
-      .distinct())
+    val pairs = Checkpoints.cut(
+      candidatePairs.filter(col("hamming") <= maxHamming).distinct(), eager = true)
+    sig.unpersist(blocking = false)
+    pairs
   }
 }

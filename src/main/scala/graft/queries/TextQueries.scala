@@ -289,10 +289,6 @@ object TextQueries {
       |  FROM sig sa JOIN sig sb ON sa.doc_id < sb.doc_id AND ($lshOracleBands)
       |  WHERE ${Num.oraR4(s"($lshOracleAgree) / ${lshK}.0")} >= 0.5)""".stripMargin
 
-  /** MinHash+LSH near-dup pairs (unordered): signature build, one
-    * posexplode band pass, bucket-join candidates, full-signature
-    * verification. Shared by t6 (pair listing) and t19 (connected
-    * components over these pairs as edges). */
   /** (doc_id, h0..h{k-1}) affine-minhash signatures over the md5-derived
     * 60-bit shingle hashes — the Spark twin of the `sig` CTE in
     * [[lshSigCtes]]. */
@@ -309,94 +305,26 @@ object TextQueries {
     hh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
   }
 
+  /** t6's four band keys: (band, he, ho) = band index and its two
+    * signature minima. */
+  private def lshBands: Seq[org.apache.spark.sql.Column] = (0 until 4).map(b =>
+    struct(col(s"h${2 * b}").as("he"), col(s"h${2 * b + 1}").as("ho")))
+
+  private def lshHashCols: Seq[String] = (0 until lshK).map(i => s"h$i")
+
+  /** MinHash+LSH near-dup pairs (unordered): signature build, then
+    * [[graft.operators.BandedPairs]] candidates and full-signature
+    * verification. Shared by t6 (pair listing) and t19 (connected
+    * components over these pairs as edges). */
   private[graft] def lshPairs(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val sig = lshSignatures(s, dir).persist()
-    // one posexplode pass → (doc_id, band, h_even, h_odd)
-    val bandArr = array((0 until 4).map(b =>
-      struct(col(s"h${2 * b}").as("he"), col(s"h${2 * b + 1}").as("ho"))): _*)
-    val bands = sig.select(col("doc_id"), posexplode(bandArr).as(Seq("band", "bh")))
-      .select(col("doc_id"), col("band"), col("bh.he"), col("bh.ho"))
-    // candidate stage: above the shared broadcast cap, ONE shuffle on
-    // the band key replaces the bucket self-join (r22, guide §2.3/§2.4
-    // — the coOccurrence recipe). A minhash band key is a pair of
-    // 61-bit hash minima, so buckets are true near-dup clusters and
-    // stay small at ANY corpus size (unlike simhash's 15-bit band
-    // values — see TextDedup.simhashPairs); the capped collect gathers
-    // each bucket's doc ids and the pairs expand in place, so the
-    // banded table is exchanged once instead of twice and the at-scale
-    // sort-merge sorts disappear. Buckets past the cap (degenerate
-    // identical-doc clusters) keep the EXACT self-join for exactly
-    // those keys — the cap bounds aggregation memory, it never drops
-    // candidates. The collect output is checkpoint-materialized (the
-    // t25 precedent: in-query lineage cut, GC-bounded block leak
-    // accepted) so its two consumers — the expansion and the over-cap
-    // key probe — never recompute the aggregation.
-    //
-    // SIZE-GATED like every conditional plan choice here (the t19
-    // closing join / Graph.broadcastMaxRows pattern): below the cap the
-    // planner broadcasts the self-join from the cached signature's
-    // stats — measured 0.85 s vs 1.37 s for the expansion at sf0.1 — so
-    // small corpora keep the join; past the cap the join would
-    // sort-merge and the expansion wins the saved exchange + sorts.
-    // The count is one job over the already-persisted signature table.
-    // `spark.graft.lsh.expand=false` pins the classic join everywhere
-    // for A/B measurement.
-    val candRaw =
-      if (graft.operators.TextDedup.lshExpand(s) &&
-          sig.count() > graft.operators.Graph.broadcastMaxRows(s)) {
-        val cap = graft.operators.TextDedup.lshBucketCap(s)
-        val sets = graft.operators.Checkpoints.cut(
-          bands.groupBy("band", "he", "ho")
-            .agg(graft.functions.CappedLongCollectList
-              .cappedCollectList(col("doc_id"), cap)(s).as("__m")),
-          eager = true)
-        val small = sets.filter(col("__m").isNotNull && size(col("__m")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(sequence(0, size(__m) - 2),
-              |  i -> transform(sequence(i + 1, size(__m) - 1),
-              |    j -> struct(least(__m[i], __m[j]) AS a,
-              |                greatest(__m[i], __m[j]) AS b))))""".stripMargin))
-            .as("__p"))
-          .select(col("__p.a").as("a_id"), col("__p.b").as("b_id"))
-          // no (x, x) self-pairs, as the classic join's strict `<`
-          .filter(col("a_id") < col("b_id"))
-        val overKeys = sets.filter(col("__m").isNull)
-          .select(col("band"), col("he"), col("ho"))
-        if (overKeys.isEmpty) small
-        else {
-          val bb = bands.join(broadcast(overKeys),
-            Seq("band", "he", "ho"), "left_semi")
-          val l = bb.select(col("band"), col("he"), col("ho"),
-            col("doc_id").as("a_id"))
-          val r = bb.select(col("band").as("band2"), col("he").as("he2"),
-            col("ho").as("ho2"), col("doc_id").as("b_id"))
-          small.unionByName(
-            l.join(r, col("band") === col("band2") &&
-                col("he") === col("he2") && col("ho") === col("ho2") &&
-                col("a_id") < col("b_id"))
-              .select("a_id", "b_id"))
-        }
-      } else {
-        val l = bands.select(col("band"), col("he"), col("ho"),
-          col("doc_id").as("a_id"))
-        val r = bands.select(col("band").as("band2"), col("he").as("he2"),
-          col("ho").as("ho2"), col("doc_id").as("b_id"))
-        l.join(r, col("band") === col("band2") &&
-            col("he") === col("he2") && col("ho") === col("ho2") &&
-            col("a_id") < col("b_id"))
-          .select("a_id", "b_id")
-      }
-    val cand = candRaw.distinct()
-    // verify candidates by full-signature agreement (estimated jaccard)
-    val sa = sig.select(col("doc_id").as("a_id") +: (0 until lshK).map(i => col(s"h$i").as(s"a$i")): _*)
-    val sb = sig.select(col("doc_id").as("b_id") +: (0 until lshK).map(i => col(s"h$i").as(s"b$i")): _*)
-    val agree = (0 until lshK).map(i =>
-      when(col(s"a$i") === col(s"b$i"), 1).otherwise(0)).reduce(_ + _)
-    cand.join(sa, "a_id").join(sb, "b_id")
+    val cand = graft.operators.BandedPairs.selfPairs(
+      sig, "doc_id", "band", lshBands, "a_id", "b_id")
+    graft.operators.BandedPairs.agreement(cand, sig, sig, "doc_id", lshHashCols, "a_id", "b_id")
       .select(col("a_id"), col("b_id"),
-        Num.r4(agree.cast(DoubleType) / lshK).as("est_jaccard"))
+        Num.r4(col("agree").cast(DoubleType) / lshK).as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
   }
 
@@ -1032,7 +960,7 @@ object TextQueries {
     // scan+explode instead of two.
     //
     // LIFETIME (r21 advice, applies to every construction-time cut in
-    // this file — here, t26's ch, lshPairs' bucket sets): the returned
+    // this file — here, t26's ch, BandedPairs' bucket sets): the returned
     // frame still references the truncated-lineage snapshot, so the
     // query fn cannot Checkpoints.free it; the blocks outlive the
     // runner's clearCache() and are reclaimed by RDD GC + the
@@ -1193,26 +1121,11 @@ object TextQueries {
         Seq("chash"), "left_semi")
       .select("doc_id")
     val sig = lshSignatures(s, dir).persist()
-    val bandArr = array((0 until 4).map(b =>
-      struct(col(s"h${2 * b}").as("he"), col(s"h${2 * b + 1}").as("ho"))): _*)
-    val bands = sig.select(col("doc_id"), posexplode(bandArr).as(Seq("band", "bh")))
-      .select(col("doc_id"), col("band"), col("bh.he"), col("bh.ho"))
-    val cand = bands.filter(isBatch)
-      .select(col("band"), col("he"), col("ho"), col("doc_id").as("a_id"))
-      .join(bands.filter(col("doc_id") % 7 =!= 4)
-        .select(col("band").as("band2"), col("he").as("he2"),
-          col("ho").as("ho2"), col("doc_id").as("b_id")),
-        col("band") === col("band2") && col("he") === col("he2") &&
-          col("ho") === col("ho2"))
-      .select("a_id", "b_id").distinct()
-    val sa = sig.select(col("doc_id").as("a_id") +:
-      (0 until lshK).map(i => col(s"h$i").as(s"a$i")): _*)
-    val sb = sig.select(col("doc_id").as("b_id") +:
-      (0 until lshK).map(i => col(s"h$i").as(s"b$i")): _*)
-    val agree = (0 until lshK).map(i =>
-      when(col(s"a$i") === col(s"b$i"), 1).otherwise(0)).reduce(_ + _)
-    val nd = cand.join(sa, "a_id").join(sb, "b_id")
-      .filter(agree >= lshK / 2)
+    val keys = graft.operators.BandedPairs.bandKeys(sig, "doc_id", "band", lshBands)
+    val cand = graft.operators.BandedPairs.crossPairs(
+      keys.filter(isBatch), keys.filter(col("doc_id") % 7 =!= 4), "doc_id", "a_id", "b_id")
+    val nd = graft.operators.BandedPairs.agreement(cand, sig, sig, "doc_id", lshHashCols, "a_id", "b_id")
+      .filter(col("agree") >= lshK / 2)
       .select(col("a_id").as("doc_id")).distinct()
     docs.filter(isBatch).select("doc_id")
       .join(ex.withColumn("__ex", lit(1)), Seq("doc_id"), "left")

@@ -61,6 +61,22 @@ class TextDedupSpec extends AnyFunSuite {
     assert(st2 == Map(200L -> "keep", 201L -> "keep"), s"got $st2")
   }
 
+  test("incrementalDedup() on an empty batch or an empty corpus") {
+    import spark.implicits._
+    val corpusDf = (0 until 5).map { i =>
+      (i.toLong, (0 until 30).map(w => s"c${i}_$w").mkString(" "))
+    }.toDF("id", "text")
+    val empty = Seq.empty[(Long, String)].toDF("id", "text")
+    val noBatch = TextDedup.incrementalDedup(corpusDf, empty, "id", "text").collect()
+    assert(noBatch.isEmpty, s"an empty batch has no status rows: ${noBatch.toSeq}")
+    // with nothing to match, every batch row survives — including an
+    // exact copy of what would have been a corpus doc
+    val batch = corpusDf.union(Seq((9L, "fresh words only here for this doc")).toDF("id", "text"))
+    val noCorpus = TextDedup.incrementalDedup(empty, batch, "id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(noCorpus == Seq(0L, 1L, 2L, 3L, 4L, 9L).map(_ -> "keep").toMap, s"got $noCorpus")
+  }
+
   test("substringSpanDedup strips cross-doc duplicated spans, keeps unique remainder") {
     import spark.implicits._
     val boiler = (0 until 8).map(i => s"B$i").mkString(" ") // 8 shared tokens
@@ -205,38 +221,60 @@ class TextDedupSpec extends AnyFunSuite {
       "simhashPairs() must leave no entries in the CacheManager")
   }
 
+  /** Runs `body` with each `spark.graft.*` setting in `conf`, unsetting
+    * them afterwards. */
+  private def withConf[T](conf: (String, String)*)(body: => T): T = {
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  private type Pairs = Set[(Long, Long, Double)]
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Pairs =
+    TextDedup.minhashPairs(df, "id", "text", threshold = 0.3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
   test("minhashPairs() is formulation-invariant: join == expansion == cap-1 fallback") {
     import spark.implicits._
-    // the r22 one-shuffle expansion routes ≤-cap buckets through the
-    // capped collect and over-cap buckets through the classic
-    // self-join. Three arms must agree: the default expansion, the
-    // pinned join (spark.graft.lsh.expand=false), and cap=1 — which
-    // sends EVERY multi-member bucket down the fallback, proving the
+    // the size check picks the route: at the default broadcastMaxRows
+    // these corpora take the bucket join; broadcastMaxRows=0 sends them
+    // down the capped-collect expansion, and cap=1 on top of that sends
+    // EVERY multi-member bucket down the over-cap self-join, proving the
     // memory cap is never a semantic filter.
+    def arms(df: org.apache.spark.sql.DataFrame, cap: String): (Pairs, Pairs, Pairs) = {
+      val viaJoin = pairSet(df)
+      val viaExpansion = withConf("spark.graft.graph.broadcastMaxRows" -> "0")(pairSet(df))
+      val viaFallback = withConf("spark.graft.graph.broadcastMaxRows" -> "0",
+        "spark.graft.lsh.bucketCap" -> cap)(pairSet(df))
+      (viaJoin, viaExpansion, viaFallback)
+    }
     val base = (0 until 24).map { i =>
       val words = (0 until 40).map(w => s"w${i % 6}_$w")
       (i.toLong, words.updated(i % 11, s"PERTURB${i / 6}").mkString(" "))
     }
     val df = base.toDF("id", "text")
-    def run(): Set[(Long, Long, Double)] =
-      TextDedup.minhashPairs(df, "id", "text", threshold = 0.3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fast = run()
+    val (viaJoin, fast, viaFallback) = arms(df, "1")
     assert(fast.nonEmpty, "fixture must produce at least one candidate pair")
-    spark.conf.set("spark.graft.lsh.expand", "false")
-    val viaJoin = try run() finally spark.conf.unset("spark.graft.lsh.expand")
-    assert(fast == viaJoin, "expand=false (classic join) must match the expansion")
-    spark.conf.set("spark.graft.lsh.bucketCap", "1")
-    val viaFallback = try run() finally
-      spark.conf.unset("spark.graft.lsh.bucketCap")
+    assert(fast == viaJoin, "the classic join must match the expansion")
     assert(fast == viaFallback, "cap=1 (all-fallback) must match the default path")
     // a STRING-id frame keeps the join formulation and still works
     val sdf = base.map { case (i, t) => (s"d%02d".format(i), t) }.toDF("id", "text")
-    val viaString = TextDedup.minhashPairs(sdf, "id", "text", threshold = 0.3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    val viaString = withConf("spark.graft.graph.broadcastMaxRows" -> "0") {
+      TextDedup.minhashPairs(sdf, "id", "text", threshold = 0.3)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    }
     assert(viaString.map { case (a, b, j) =>
       (a.drop(1).toLong, b.drop(1).toLong, j) } ==
       fast, "string-id join path must find the same pairs")
+    // an empty frame: no pairs on any arm
+    val (e1, e2, e3) = arms(Seq.empty[(Long, String)].toDF("id", "text"), "1")
+    assert(e1.isEmpty && e2.isEmpty && e3.isEmpty, s"empty input paired: $e1 $e2 $e3")
+    // one giant bucket: twelve identical texts share every band key, so
+    // with cap 2 every bucket is over the cap
+    val same = (0 until 30).map(w => s"g_$w").mkString(" ")
+    val (g1, g2, g3) = arms((0 until 12).map(i => (i.toLong, same)).toDF("id", "text"), "2")
+    assert(g1.size == 66 && g1.forall(_._3 == 1.0), s"all C(12,2) pairs at 1.0 expected: $g1")
+    assert(g2 == g1 && g3 == g1, "giant bucket: expansion and cap-2 fallback must match the join")
   }
 
   test("minhashPairs() on duplicate ids with identical text: expansion == join, no self-pairs") {
@@ -247,15 +285,11 @@ class TextDedupSpec extends AnyFunSuite {
       (i.toLong, (0 until 30).map(w => s"c${i % 3}_$w").mkString(" "))
     }
     val df = (texts ++ texts).toDF("id", "text")
-    def run(): Set[(Long, Long, Double)] =
-      TextDedup.minhashPairs(df, "id", "text", threshold = 0.3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val expanded = run()
-    spark.conf.set("spark.graft.lsh.expand", "false")
-    val viaJoin = try run() finally spark.conf.unset("spark.graft.lsh.expand")
+    val expanded = withConf("spark.graft.graph.broadcastMaxRows" -> "0")(pairSet(df))
+    val viaJoin = pairSet(df)
     assert(expanded.nonEmpty, "fixture must produce candidate pairs")
     assert(expanded.forall { case (a, b, _) => a < b }, s"self or unordered pairs: $expanded")
-    assert(expanded == viaJoin, "expand=false (classic join) must match the expansion")
+    assert(expanded == viaJoin, "the classic join must match the expansion")
   }
 
   test("components() resolves planted clusters to min-id with canonical flags") {

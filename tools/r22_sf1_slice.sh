@@ -3,9 +3,11 @@
 # medians for the round-broadcast (r21) and capped-set/expansion (r22)
 # changes, against the code's own kept "before" paths.
 #   Arm A  — defaults: every size-gated optimization engaged as shipped.
-#   Arm B  — broadcastMaxRows=0 + lsh.expand=false: the pre-optimization
-#            shuffle shapes (graph round broadcasts off, LSH bucket
-#            self-join pinned) — the "before" arm.
+#   Arm B  — broadcastMaxRows=0: the graph round broadcasts off — the
+#            "before" arm for the r21 change. Above the cap the LSH
+#            candidate stage now takes the capped-collect expansion too
+#            (the route is picked by the size check alone), so the
+#            bucket self-join "before" of r22 can no longer be selected.
 #   Arm C  — broadcastMaxRows=0 alone: at-scale shape WITH the r22
 #            one-shuffle LSH expansion engaged (the gate counts docs >
 #            cap) — C vs B isolates the expansion at a scale where the
@@ -25,7 +27,7 @@ SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 SPARK_GRAFT_CPUS=32 \
 
 SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_OUT=$OUT/heavy_sf1_r22_before.json \
-  SPARK_GRAFT_EXTRA_CONF="spark.graft.graph.broadcastMaxRows=0;spark.graft.lsh.expand=false" \
+  SPARK_GRAFT_EXTRA_CONF="spark.graft.graph.broadcastMaxRows=0" \
   sbt -batch "runMain graft.Bench $HEAVY_B" || exit 1
 
 SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 SPARK_GRAFT_CPUS=32 \
