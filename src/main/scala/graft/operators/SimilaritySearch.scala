@@ -198,60 +198,71 @@ object SimilaritySearch {
 
   // ================= Product quantization (PQ / ADC) =================
 
+  /** The rotation a PQ index applies to every vector before the
+    * subspace split (Ge et al., "Optimized Product Quantization",
+    * CVPR'13). Each form has one exact `apply`; empty input stays
+    * empty (the degenerate-row convention).
+    *   - [[PqRotation.None]]: the identity. A float corpus widens to
+    *     double exactly, with no fixed-point snap, so the raw tier's
+    *     codes are those of the v20 oracle.
+    *   - [[PqRotation.Hadamard]]: Walsh–Hadamard × an md5-parity ±1
+    *     diagonal, in exact integer arithmetic ([[rotateFpD]]).
+    *   - [[PqRotation.Trained]]: the OPQ-NP rotation `r` learned by
+    *     Procrustes updates, applied in its 2^24-grid form `rq`
+    *     ([[matVecFpQ]]), which the trained oracles inline as a
+    *     literal CTE.
+    * Rotations are orthogonal, so ⟨Rx, Rq⟩ = ⟨x, q⟩: norms, offsets
+    * and the exact rerank stay in the original space. */
+  sealed trait PqRotation extends Serializable {
+    def apply(v: Array[Double]): Array[Double]
+  }
+  object PqRotation {
+    case object None extends PqRotation {
+      def apply(v: Array[Double]): Array[Double] = v
+    }
+    final case class Hadamard(signs: Array[Int]) extends PqRotation {
+      def apply(v: Array[Double]): Array[Double] = rotateFpD(v, signs)
+    }
+    final case class Trained(r: Array[Array[Double]], rq: Array[Array[Long]])
+        extends PqRotation {
+      def apply(v: Array[Double]): Array[Double] = matVecFpQ(rq, v)
+    }
+  }
+
   /** A trained product-quantization index (Jégou et al., "Product
-    * Quantization for Nearest Neighbor Search", TPAMI 2011): the vector
-    * space splits into `m` contiguous subspaces of `dsub` components,
-    * each with its own `ksub`-codeword codebook (k-means run in the
-    * subspace), and every corpus vector is stored as m code ids
-    * bit-packed into `pq_code` plus its float norm. The packing is
-    * NON-SPANNING words of ⌊63/bits⌋ codes each ([[pqPerWord]]): any
-    * config with m × bits ≤ 63 packs into one word and `pq_code` is a
-    * plain BIGINT (bit-identical to the historical one-long layout —
-    * the v20–v26 oracle-gated plans are untouched); wider configs —
-    * the literature-default ksub=256 ⇒ 8 bits × m=8 = 64 bits among
-    * them — carry `pq_code` as ARRAY<BIGINT> ([[pqNumWords]] words)
-    * through the same build/serve/persist/stream surface. At the
-    * m=8 / ksub=16 defaults on 64-dim vectors that is 4 bits × 8 = one
-    * 32-bit code — (id, pq_code, nrm) ≈ 24 B/row against 256 B of
-    * float32 and ~65 B of the SQ8 projection: the compression tier
-    * BELOW scalar quantization, which is what billion-vector serving
-    * fleets keep resident in RAM. `codebook(s)(c)` is the dsub-dim
-    * codeword — m × ksub × dsub doubles of driver state (~8 KB at the
-    * defaults, the k-means driver footprint), inlined into the scoring
-    * expression as literals at serve time. `ksub` is the TRAINED
-    * codebook size (≤ the requested size when the corpus yields fewer
-    * seeds); `bits` is the packing width fixed from the REQUESTED size
-    * so layouts are stable across retrains. `corpus` keeps
-    * (idCol, vecCol) for the exact-rerank float fetch.
+    * Quantization for Nearest Neighbor Search", TPAMI 2011): the
+    * (rotated) vector space splits into `m` contiguous subspaces of
+    * `dsub` components, each with its own codebook of `ksub` codewords
+    * (`codebook(s)(c)`), and every corpus vector is stored as its m
+    * nearest code ids bit-packed into `pq_code` plus its float norm.
     *
-    * Measured (`results/pq_sf1_r17.json`, sf1, 17k corpus, 30 queries):
-    * at rest the 32-bit config is 293 KB vs SQ8's 1.33 MB vs 4.47 MB
-    * float (15.3× / 4.5×). Recall@10 vs exact is the ksub × overFetch
-    * dial: 0.19 → 0.34 → 0.45 at overFetch=4 for ksub 16/64/128
-    * (0.59 at 128×8), where SQ8 reads 1.0 — honest context: this
-    * synthetic corpus is near-isotropic (top-10 neighbors sit in a
-    * ~0.04-cosine sliver under a 0.48 top-1), the adversarial case
-    * for sub-byte codes. The earlier defense "production corpora are
-    * clustered, which rescues PQ" is now MEASURED and was wrong for
-    * raw codes (`results/pq_clustered_r18.json`, 64 planted clusters
-    * at mean top-1 cos 0.876): raw-PQ recall@10 is FLAT at ~0.17
-    * across ksub 16 → 64 → 128 — 8× more codewords buy NOTHING,
-    * because they are all spent re-describing the cluster structure
-    * while the within-cluster top-10 sits in a ~0.02-cosine sliver
-    * (contrast the isotropic corpus, where the same dial climbs
-    * 0.19 → 0.45). What recovers recall is RESIDUAL encoding
-    * ([[ivfResidualPqBuild]], v23): 0.27 / 0.34 / 0.43 / 0.48 across
-    * ksub 16/64/128/256 on that fixture
-    * (`results/pq_clustered_r19.json` — the 256 point is the
-    * FAISS-default 8-bit dial the r19 wide word packing unlocked;
-    * raw PQ reads 0.23 there), +0.03–0.08 even on the isotropic
-    * one, with the nprobe=8/64 probe losing nothing. Use PQ
-    * as the RAM-resident coarse tier when even SQ8 bytes don't fit —
-    * residual-encoded when an IVF exists — and keep SQ8 when its bytes
-    * fit. Per-query wall at this scale is driver-dominated (~0.2 s all
-    * arms) — the byte reduction is the scale story, as with the
-    * persisted SQ8 projection (q8cold). */
+    * `coarse`, when present, is the IVF coarse quantizer (centroid,
+    * norm) the index encodes RESIDUALS against (Jégou §IV.A): the
+    * codebook then describes r = x − centroid(cluster(x)), `encoded`
+    * carries each row's `cluster`, and serving adds the per-cluster
+    * ⟨query, centroid⟩ term back. `rotation` applies to the vector
+    * (direct) or to the residual (IVF) before the split.
+    *
+    * The packing is NON-SPANNING words of ⌊63/bits⌋ codes
+    * ([[pqPerWord]]): a config with m × bits ≤ 63 packs into one word
+    * and `pq_code` is a plain BIGINT (the v20–v26 oracle layout);
+    * wider configs — ksub=256 ⇒ 8 bits × m=8 among them — carry
+    * `pq_code` as ARRAY<BIGINT> ([[pqNumWords]] words). `ksub` is the
+    * TRAINED codebook size (≤ the requested one when the corpus yields
+    * fewer seeds); `bits` is fixed from the REQUESTED size, so layouts
+    * are stable across retrains. `corpus` keeps (idCol, vecCol) for the
+    * exact float rerank.
+    *
+    * Measured (`results/pq_sf1_r17.json`, sf1, 17k corpus): at rest the
+    * 32-bit config is 293 KB vs SQ8's 1.33 MB vs 4.47 MB float. On the
+    * near-isotropic synthetic corpus recall@10 climbs 0.19 → 0.45 at
+    * overFetch=4 for ksub 16 → 128; on a planted-cluster corpus
+    * (`results/pq_clustered_r19.json`) raw codes stay flat at ~0.17
+    * while residual codes read 0.27 / 0.34 / 0.43 / 0.48 across ksub
+    * 16/64/128/256 — use the residual form when an IVF exists. */
   final case class PqIndex(
+      rotation: PqRotation,
+      coarse: Option[Array[(Array[Double], Double)]],
       m: Int,
       ksub: Int,
       dsub: Int,
@@ -260,17 +271,27 @@ object SimilaritySearch {
       encoded: DataFrame,
       corpus: DataFrame,
       idCol: String,
-      vecCol: String)
+      vecCol: String) {
+    /** The persisted tree's `kind`: `pq`, `rot-pq`, `opq-pq`,
+      * `residual-pq`, `rot-residual-pq` or `opq-residual-pq`. */
+    def kind: String = {
+      val r = rotation match {
+        case PqRotation.None => ""
+        case _: PqRotation.Hadamard => "rot-"
+        case _: PqRotation.Trained => "opq-"
+      }
+      r + (if (coarse.isDefined) "residual-pq" else "pq")
+    }
+  }
 
-  /** Nearest PQ codeword in subspace `s` by the FIXED-POINT squared-L2
+  private val pqKinds = Seq("pq", "rot-pq", "opq-pq",
+    "residual-pq", "rot-residual-pq", "opq-residual-pq")
+
+  /** Nearest codeword in subspace `s` by the FIXED-POINT squared-L2
     * distance — per-term `floor((x−c)²·2^24 + 0.5)` summed as longs, so
     * the metric is exact integer arithmetic (order-free, and replayed
-    * verbatim by the v20 oracle's SQL); ties break to the lower code
-    * id, the same convention as [[nearestCentroid]]. Takes the vector
-    * as doubles so the raw tier (float corpus components, converted
-    * once per row — `toFloat.toDouble` is exact, so results are
-    * bit-identical to per-access conversion) and the RESIDUAL tier
-    * (v − centroid differences, natively double) share one metric. */
+    * verbatim by the oracles' SQL); ties break to the lower code id,
+    * the convention of [[nearestCentroid]]. */
   private def pqNearestCode(
       cb: Array[Array[Array[Double]]], v: Array[Double], s: Int, dsub: Int): Int = {
     val sub = cb(s)
@@ -290,7 +311,7 @@ object SimilaritySearch {
     best
   }
 
-  /** One exact float→double widening per row (see [[pqNearestCode]]). */
+  /** One exact float→double widening per row. */
   private def toDoubles(v: Array[Float]): Array[Double] = {
     val d = new Array[Double](v.length)
     var i = 0
@@ -300,21 +321,16 @@ object SimilaritySearch {
 
   /** Codes-per-word of the NON-SPANNING `pq_code` packing: each 64-bit
     * word carries ⌊63/bits⌋ whole code fields (the sign bit stays
-    * clear, as in the original one-long layout), and no code straddles
-    * a word boundary — so word 0 of any config that fits one word is
-    * BIT-IDENTICAL to the historical single-long `pq_code`. */
+    * clear), and no code straddles a word boundary — so word 0 of any
+    * config that fits one word is the historical single-long code. */
   private[graft] def pqPerWord(bits: Int): Int = math.max(1, 63 / bits)
 
-  /** Words needed to pack `m` codes of `bits` bits each — 1 for every
-    * config with m × bits ≤ 63 (the historical single-long layout,
-    * kept as a plain BIGINT column), 2+ for the literature-default
-    * wide configs (ksub=256 ⇒ 8 bits × m=8 = 2 words). */
+  /** Words needed to pack `m` codes of `bits` bits each. */
   private[graft] def pqNumWords(m: Int, bits: Int): Int =
     (m + pqPerWord(bits) - 1) / pqPerWord(bits)
 
-  /** Unpack a row's m code fields from its packed words into `codes` —
-    * the ONE decode definition every kernel shares (word = s / perWord,
-    * shift = (s mod perWord) × bits; inverse of the encode loops). */
+  /** Unpack a row's m code fields from its packed words into `codes`
+    * (word = s / perWord, shift = (s mod perWord) × bits). */
   private def unpackPqCodes(
       words: Array[Long], codes: Array[Int],
       m: Int, bits: Int, perWord: Int): Unit = {
@@ -326,10 +342,8 @@ object SimilaritySearch {
     }
   }
 
-  /** Encode one row's m nearest-code fields into packed words — the
-    * ONE encode definition [[pqBuild]]/[[pqEncode]]/[[ivfResidualPqBuild]]
-    * share (inverse of [[unpackPqCodes]]); word 0 of a single-word
-    * config is bit-identical to the historical one-long `pq_code`. */
+  /** Encode one (rotated) vector's m nearest codes into packed words —
+    * the inverse of [[unpackPqCodes]], shared by build and ingest. */
   private def encodePqWords(
       cb: Array[Array[Array[Double]]], vd: Array[Double],
       m: Int, dsub: Int, bits: Int, perWord: Int, nWords: Int): Array[Long] = {
@@ -345,12 +359,8 @@ object SimilaritySearch {
   /** Rank of probed cluster `cl` within query `q`'s probe set — the
     * popcount of mask bits BELOW `cl` in the query's ⌈k/64⌉-word probe
     * bitmask (base = q × words). [[probeClusters]] returns clusters in
-    * ASCENDING index order, so this rank IS the cluster's slot in the
-    * query's (q, probe-slot) offset layout — the layout that shrinks
-    * the residual batch arms' offset table from nQ × k to nQ × nprobe
-    * (r18 verdict #4: at the old contract's edge the k-entry-per-query
-    * table was ~10⁹ driver flops and an 8·nQ·k-byte broadcast of
-    * mostly-unread zeros). Caller guarantees cl's own bit is set. */
+    * ascending order, so this rank IS the cluster's slot in the
+    * (q, probe-slot) offset layout. Caller guarantees cl's bit is set. */
   private def probeSlot(mk: Array[Long], base: Int, cl: Int): Int = {
     var rank = 0
     val word = cl / 64
@@ -360,14 +370,11 @@ object SimilaritySearch {
   }
 
   /** mapPartitions over an encoded (id, pq_code, nrm) scan with
-    * LAYOUT-AWARE deserialization (advice r19): a single-word index
-    * reads the plain BIGINT column and the kernel sees ONE scratch
-    * word reused across the partition's rows — no per-row Array[Long]
-    * allocation or array() wrap on the hot flat-kernel scans, the tier
-    * the bench slots are most sensitive to — while a wide index
+    * layout-aware deserialization: a single-word index reads the plain
+    * BIGINT column into ONE scratch word reused across the partition's
+    * rows (no per-row array on the hot flat-kernel scans); a wide index
     * carries its words array natively. The kernel must not retain
-    * `words` across rows (every caller decodes immediately into its
-    * own codes scratch via [[unpackPqCodes]]). */
+    * `words` across rows. */
   private def scanEncoded3[O: org.apache.spark.sql.Encoder](
       encoded: DataFrame, idCol: String, nW: Int)(
       kernel: Iterator[(Long, Array[Long], Double)] => Iterator[O]): Dataset[O] = {
@@ -382,7 +389,7 @@ object SimilaritySearch {
     else cols.as[(Long, Array[Long], Double)].mapPartitions(kernel)
   }
 
-  /** [[scanEncoded3]] for the residual tiers' (id, pq_code, nrm,
+  /** [[scanEncoded3]] for the residual form's (id, pq_code, nrm,
     * cluster) scans. */
   private def scanEncoded4[O: org.apache.spark.sql.Encoder](
       encoded: DataFrame, idCol: String, nW: Int)(
@@ -399,9 +406,9 @@ object SimilaritySearch {
     else cols.as[(Long, Array[Long], Double, Int)].mapPartitions(kernel)
   }
 
-  /** Loud layout guard for the persisted-tree loaders: the encoded
-    * parquet's `pq_code` type must agree with the meta's (m, bits) —
-    * a mixed or hand-edited tree fails here, not as garbage scores. */
+  /** Loud layout guard for the loader: the encoded parquet's `pq_code`
+    * type must agree with the meta's (m, bits) — a mixed or hand-edited
+    * tree fails here, not as garbage scores. */
   private def requirePqCodeType(
       df: DataFrame, m: Int, bits: Int, where: String): Unit = {
     val nW = pqNumWords(m, bits)
@@ -418,600 +425,21 @@ object SimilaritySearch {
         "— the tree's encoded parquet does not match its meta.json")
   }
 
-  /** Train a PQ codebook over (idCol, vecCol) and encode the corpus.
-    *
-    * Build shape mirrors [[ivfBuild]] exactly — deterministic
-    * hash-stride seeding (one filter over ~2·ksub candidate rows, never
-    * a corpus sort; each seed vector contributes its s-th subvector to
-    * subspace s's codebook), `lloydIters` rounds of per-subspace Lloyd
-    * where every per-code mean is an ORDER-FREE exact fixed-point
-    * component sum (scale 2^24 — integer addition commutes, so partial
-    * aggregation is bit-deterministic in any merge order and no task
-    * ever holds a whole code's members), empty codes keep their
-    * codeword, then one encode pass packing each vector's m nearest
-    * codes into `pq_code`. All m subspaces train in the SAME corpus
-    * passes (the flatMap emits one (subspace, code) key per subspace),
-    * so the build costs the same number of scans as single-space
-    * k-means. `portableSeeds` swaps the stride hash to the md5-derived
-    * 60-bit hash both engines compute identically, making the whole
-    * build + encode + serve SQL-replayable — how `v20_pq_adc_topk`
-    * rides the hash-exact oracle gate. */
-  def pqBuild(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int = 8,
-      ksub: Int = 16,
-      lloydIters: Int = 2,
-      portableSeeds: Boolean = false): PqIndex = {
-    require(m >= 1 && ksub >= 2 && lloydIters >= 0,
-      s"bad m=$m / ksub=$ksub / lloydIters=$lloydIters")
-    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(ksub - 1))
-    // the non-spanning word packing handles any width; 16 bits (ksub
-    // 65536) is where per-subspace codebooks stop being "product"
-    // quantization in any meaningful sense — refuse beyond it loudly
-    require(bits <= 16, s"ksub=$ksub needs $bits-bit codes — beyond the " +
-      "16-bit sanity cap (a codebook that large is not a PQ tier)")
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val vecs = corpus.select(col(idCol), col(vecCol)).as[(Long, Array[Float])]
-      .persist()
-    // a validation failure below must not leak the build cache (the
-    // success path unpersists before returning) — a tuning loop probing
-    // bad m values would otherwise pin one block per failed attempt
-    def failing[A](body: => A): A =
-      try body
-      catch { case t: Throwable => vecs.unpersist(blocking = false); throw t }
-    val (n, dim, dsub) = failing {
-      val n = vecs.count()
-      require(n > 0, "pqBuild: empty corpus")
-      val dim = vecs.head()._2.length
-      require(dim > 0, "pqBuild: zero-dimensional vectors")
-      require(dim % m == 0, s"m=$m must divide dim=$dim")
-      (n, dim, dim / m)
-    }
-
-    val strideMod = math.max(1L, n / (2L * ksub))
-    val seedHash =
-      if (portableSeeds) TextDedup.mdHash(col(idCol).cast("string"))
-      else xxhash64(col(idCol))
-    val seeds = failing {
-      val s = corpus.select(col(idCol), col(vecCol))
-        .filter(pmod(seedHash, lit(strideMod)) === 0)
-        .orderBy(seedHash, col(idCol))
-        .limit(ksub)
-        .as[(Long, Array[Float])]
-        .collect()
-      require(s.nonEmpty, "pqBuild: stride seeding found no rows")
-      s
-    }
-    val kEff = seeds.length
-    var cb: Array[Array[Array[Double]]] = Array.tabulate(m, kEff, dsub) {
-      (s, c, i) => seeds(c)._2(s * dsub + i).toDouble
-    }
-
-    val FP = 1L << 24
-    val mLoc = m; val ksubLoc = ksub; val dsubLoc = dsub
-    for (_ <- 0 until lloydIters) {
-      val bc = sp.sparkContext.broadcast(cb)
-      val means = vecs
-        .flatMap { case (_, v) =>
-          val vd = toDoubles(v)
-          (0 until mLoc).iterator.map { s =>
-            val fp = new Array[Long](dsubLoc)
-            var i = 0
-            while (i < dsubLoc) {
-              fp(i) = math.round(vd(s * dsubLoc + i) * FP); i += 1
-            }
-            (s * ksubLoc + pqNearestCode(bc.value, vd, s, dsubLoc), fp, 1L)
-          }
-        }
-        .groupByKey(_._1)
-        .reduceGroups { (x: (Int, Array[Long], Long), y: (Int, Array[Long], Long)) =>
-          val acc = new Array[Long](x._2.length)
-          var i = 0
-          while (i < acc.length) { acc(i) = x._2(i) + y._2(i); i += 1 }
-          (x._1, acc, x._3 + y._3)
-        }
-        .map { case (key, (_, fp, cnt)) => (key, fp.map(_.toDouble / FP / cnt)) }
-        .collect()
-        .toMap
-      // the per-iteration codebook broadcast is dead once the means are
-      // collected — destroy it eagerly, or a tuning sweep building many
-      // indexes in one JVM accumulates leaked broadcast blocks (advice
-      // r17; the FINAL encode broadcast below must stay alive — the
-      // lazy `encoded` frame references it)
-      bc.destroy()
-      cb = Array.tabulate(m, kEff, dsub) { (s, c, i) =>
-        means.get(s * ksub + c) match {
-          case Some(mean) => mean(i)
-          case None => cb(s)(c)(i) // empty code keeps its codeword
-        }
-      }
-    }
-
-    val bcF = sp.sparkContext.broadcast(cb)
-    val bitsLoc = bits
-    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
-    val encoded = (if (nW == 1) {
-      vecs.map { case (id, v) =>
-        val vd = toDoubles(v)
-        val packed =
-          encodePqWords(bcF.value, vd, mLoc, dsubLoc, bitsLoc, perW, 1)(0)
-        var ss = 0.0; var i = 0
-        while (i < vd.length) { ss += vd(i) * vd(i); i += 1 }
-        (id, packed, math.sqrt(ss))
-      }.toDF(idCol, "pq_code", "nrm")
-    } else {
-      vecs.map { case (id, v) =>
-        val vd = toDoubles(v)
-        val words = encodePqWords(bcF.value, vd, mLoc, dsubLoc, bitsLoc, perW, nW)
-        var ss = 0.0; var i = 0
-        while (i < vd.length) { ss += vd(i) * vd(i); i += 1 }
-        (id, words, math.sqrt(ss))
-      }.toDF(idCol, "pq_code", "nrm")
-    })
-    vecs.unpersist(blocking = false)
-    PqIndex(m, kEff, dsub, bits, cb, encoded,
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
+  /** The rotated forms need a power-of-4 dimension: the exact
+    * 2^24·√dim rescale of [[rotateFpD]] (and the HD start of OPQ) needs
+    * √dim a power of two. Loud at build, and at load, where a meta.json
+    * implying another dimension is corrupt. */
+  private def requirePowerOf4Dim(dim: Int, where: String): Unit = {
+    val rt = math.sqrt(dim.toDouble).toLong
+    require(rt * rt == dim && java.lang.Long.bitCount(rt) == 1,
+      s"$where: dimension $dim is not a power-of-4 — the rotated forms " +
+        "need √dim a power of two for the exact fixed-point rescale")
   }
 
-  /** ANN top-k served from a [[PqIndex]] by asymmetric distance
-    * computation (ADC): the query builds ONE integer lookup table of
-    * fixed-point ⟨query-subvector, codeword⟩ partial dots (m × ksub
-    * longs, per-term `floor(q·c·2^24 + 0.5)` — computed on the driver,
-    * inlined into the scoring expression as an array literal), and the
-    * coarse pass over the whole corpus is m table lookups + integer
-    * adds per row via an `aggregate` HOF over the packed code — fully
-    * codegen'd, reading only (id, pq_code, nrm) ≈ 24 B/row. Integer
-    * LUT + integer sums make the coarse ranking bit-exact across
-    * engines and aggregation orders — the property the v20 oracle gate
-    * rides. The `topK × overFetch` ADC survivors fetch their floats by
-    * id for the exact rerank (r4-rounded cosine, id tie-break), so
-    * quantization error costs recall only past the overFetch margin,
-    * never the precision of returned scores. Degenerate (zero-norm)
-    * corpus rows score NULL and sort last, the shared drop policy of
-    * [[coarseCos]]. Compose with IVF via `filter` when even a 4-byte
-    * full scan is too much: serve the probe union's clusters only. */
-  def pqTopK(
-      index: PqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame =
-    pqServe(index, query, topK, overFetch, index.encoded.filter(filter))
-
-  /** The ADC scan + exact rerank shared by [[pqTopK]] (full-corpus
-    * scan) and [[ivfPqTopK]] (probed-clusters scan): builds the
-    * per-query integer LUT on the driver, scores `scan` (a subset of
-    * `index.encoded`) with the codegen'd lookup-sum expression, cuts to
-    * topK × overFetch on the rounded approx cosine (id tie-break), and
-    * reranks the survivors on their floats. */
-  private def pqServe(
-      index: PqIndex,
-      query: Array[Float],
-      topK: Int,
-      overFetch: Int,
-      scan: DataFrame): DataFrame =
-    pqServeCore(index.m, index.ksub, index.dsub, index.bits, index.codebook,
-      index.idCol, index.vecCol, index.corpus, query, topK, overFetch, scan,
-      fpOffset = None)
-
-
-  /** The field-level form of [[pqServe]], shared with the RESIDUAL
-    * tier ([[ivfResidualPqTopK]]): `fpOffset`, when present, is a
-    * BIGINT column added to every row's LUT sum BEFORE the fixed-point
-    * rescale — the residual tier's per-(query, cluster)
-    * ⟨query, centroid⟩ term. With `fpOffset = None` the generated plan
-    * is exactly the raw tier's (the v20/v21 oracle-gated expression). */
-  private def pqServeCore(
-      m: Int, ksub: Int, dsub: Int, bits: Int,
-      codebook: Array[Array[Array[Double]]],
-      idCol: String, vecCol: String, corpus: DataFrame,
-      query: Array[Float],
-      topK: Int,
-      overFetch: Int,
-      scan: DataFrame,
-      fpOffset: Option[Column],
-      // the ROTATED tier scores against the transformed query (its LUT
-      // is built over HD-rotated doubles) while norms stay the ORIGINAL
-      // vectors' — it supplies both here; None = derive from `query`
-      // (the raw/residual tiers, byte-for-byte the historical path)
-      lutQn: Option[(Array[Long], Double)] = None): DataFrame = {
-    implicit val sp: SparkSession = scan.sparkSession
-    require(topK >= 1 && overFetch >= 1, "topK and overFetch must be >= 1")
-    require(query.length == m * dsub,
-      s"query dim ${query.length} != index dim ${m * dsub}")
-    // the LUT is inlined below as a SQL array literal (m × ksub BIGINTs
-    // in the generated expression text) — ksub is unbounded up to the
-    // m·bits ≤ 63 packing limit, so a large trained codebook would
-    // otherwise emit a pathologically large expression per query; the
-    // batch arm guards its LUT capacity the same way (advice r17)
-    require(m * ksub <= 65536,
-      s"pqServe inlines the LUT as a literal: m=$m × ksub=$ksub " +
-        s"= ${m * ksub} entries exceeds the 65536 cap — use " +
-        "pqTopKBatch (broadcast LUT) for codebooks this large")
-    val FP = 1L << 24
-    // ONE definition of the fixed-point LUT arithmetic for all three
-    // serve forms ([[pqBatchLutRow]] — review r18: a second copy here
-    // could silently drift from the batch arms the spec pins against
-    // this path); qn stays normF's convention (NaN queries NULL every
-    // row and the NaN filter drops them — same empty answer either way)
-    val (lut, qn) = lutQn.getOrElse(
-      (pqBatchLutRow(codebook, query, m, ksub, dsub)._2, normF(query)))
-    val lutArr = lut.mkString("array(", "L, ", "L)")
-    val mask = (1L << bits) - 1
-    // single-word layout keeps the historical expression verbatim (the
-    // v20/v21/v23 oracle-gated plan); the wide layout indexes the words
-    // array with the same non-spanning decode the kernels use
-    val codeField = {
-      val perW = pqPerWord(bits)
-      if (pqNumWords(m, bits) == 1) s"shiftright(pq_code, s * $bits)"
-      else s"shiftright(element_at(pq_code, CAST(s div $perW AS INT) + 1), " +
-        s"CAST((s % $perW) * $bits AS INT))"
-    }
-    val adcSum = expr(
-      s"aggregate(sequence(0, ${m - 1}), CAST(0 AS BIGINT), " +
-        s"(a, s) -> a + element_at($lutArr, " +
-        s"CAST(s * $ksub + ($codeField & $mask) + 1 AS INT)))")
-    val adc = fpOffset.map(_ + adcSum).getOrElse(adcSum)
-    val coarse = scan
-      .select(col(idCol),
-        when(col("nrm") =!= 0.0 && lit(qn) =!= 0.0,
-          r4(adc.cast("double") / lit(FP.toDouble) / (col("nrm") * lit(qn))))
-          .as("approx_cos"))
-      // NULL scores (zero-norm corpus row, or a degenerate query which
-      // NULLs EVERY row) are dropped, not padded into the cut — a
-      // degenerate query returns empty, matching ivfTopK's convention.
-      // NaN scores (a NaN-poisoned query or corpus vector) are dropped
-      // too: NaN is NOT null in Spark and sorts FIRST under desc, so
-      // without this a poisoned vector would fill the cut with
-      // arbitrary ids (review) — the batch arm's heapOffer refuses the
-      // same NaNs, keeping the two forms result-identical
-      .filter(col("approx_cos").isNotNull && !isnan(col("approx_cos")))
-      .orderBy(col("approx_cos").desc, col(idCol))
-      .limit(topK * overFetch)
-    val q = sp.range(1).select(typedLit(query).as("__qe"))
-      .select(col("__qe"), VectorFunctions.norm(col("__qe")).as("__qn"))
-    coarse
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        r4(VectorFunctions.dot(col(vecCol), col("__qe")) /
-          (VectorFunctions.norm(col(vecCol)) * col("__qn"))).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(topK)
-  }
-
-  /** Encode NEW vectors against an EXISTING codebook — the
-    * between-retrains ingest path of a PQ deployment, mirroring
-    * [[ivfAssign]]: one broadcast of the (m × ksub × dsub)-double
-    * codebook, one map over the batch (cost ∝ batch; the corpus is
-    * never touched), codes by the SAME fixed-point integer metric as
-    * [[pqBuild]]'s own encode — a batch row identical to a corpus row
-    * gets the identical pq_code. The codebook is re-trained by a
-    * periodic [[pqBuild]] when drift accumulates, exactly like the IVF
-    * coarse quantizer. Returns (idCol, pq_code, nrm) — the
-    * [[PqIndex.encoded]] row shape. Degenerate (empty/NULL) vectors
-    * encode to code 0s with nrm 0 — nrm 0 rows never score
-    * (the serve paths' shared drop policy). Mixed dimensions are loud. */
-  def pqEncode(index: PqIndex, batch: DataFrame): DataFrame = {
-    val sp = batch.sparkSession
-    import sp.implicits._
-    val dim = index.m * index.dsub
-    val bc = sp.sparkContext.broadcast(index.codebook)
-    val mLoc = index.m; val dsubLoc = index.dsub; val bitsLoc = index.bits
-    val perW = pqPerWord(index.bits); val nW = pqNumWords(index.m, index.bits)
-    val src = batch.select(col(index.idCol).cast("long"), col(index.vecCol))
-      .as[(Long, Array[Float])]
-    // both layout branches call the SAME hoisted encode (a local helper
-    // here would drag this frame — and its DataFrames — into the task)
-    if (nW == 1)
-      src.map { case (id, v0) =>
-        val (w, nrm) =
-          encodeBatchRow(bc.value, v0, dim, mLoc, dsubLoc, bitsLoc, perW, 1)
-        (id, w(0), nrm)
-      }.toDF(index.idCol, "pq_code", "nrm")
-    else
-      src.map { case (id, v0) =>
-        val (w, nrm) =
-          encodeBatchRow(bc.value, v0, dim, mLoc, dsubLoc, bitsLoc, perW, nW)
-        (id, w, nrm)
-      }.toDF(index.idCol, "pq_code", "nrm")
-  }
-
-  /** [[pqEncode]]'s per-row body, hoisted to object level so the map
-    * closures capture only primitives + the codebook broadcast:
-    * mixed-dimension rows are loud, degenerate (empty/NULL) rows encode
-    * to all-zero words with nrm 0 (never scored by any serve path). */
-  private def encodeBatchRow(
-      cb: Array[Array[Array[Double]]], v0: Array[Float], dim: Int,
-      m: Int, dsub: Int, bits: Int, perW: Int, nW: Int): (Array[Long], Double) = {
-    val v = if (v0 == null) Array.empty[Float] else v0
-    if (v.nonEmpty && v.length != dim)
-      throw new IllegalArgumentException(
-        s"mixed-dimension batch vs index: index dimension $dim vs " +
-          s"batch vector of ${v.length} components")
-    val words =
-      if (v.isEmpty) new Array[Long](nW)
-      else encodePqWords(cb, toDoubles(v), m, dsub, bits, perW, nW)
-    var ss = 0.0; var i = 0
-    while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-    (words, math.sqrt(ss))
-  }
-
-  /** The growing-index fold, mirroring [[ivfAppend]]:
-    * [[pqEncode]]-shaped placement of `batch` into `index.encoded`
-    * (and its floats into the rerank corpus), returning an index whose
-    * new rows serve queries immediately through every arm. The
-    * codebook is unchanged by design — re-coding the world is
-    * [[pqBuild]]'s periodic job. */
-  def pqAppend(index: PqIndex, batch: DataFrame): PqIndex = {
-    val placed = pqEncode(index, batch)
-    index.copy(
-      encoded = index.encoded.unionByName(placed),
-      corpus = index.corpus.unionByName(
-        batch.select(col(index.idCol), col(index.vecCol))))
-  }
-
-  /** [[pqEncode]] for a ROTATED index — the batch rotates through the
-    * index's own HD transform before the nearest-code pass, so an
-    * ingest row identical to a corpus row gets the identical pq_code.
-    * This wrapper is the SAFE ingest path: calling raw [[pqEncode]]
-    * against a rotated tier's inner codebook would code UNROTATED
-    * vectors against rotated codewords — silent garbage the kind
-    * guards exist to prevent at the persistence boundary. Stored nrm
-    * stays the ORIGINAL vector's (the serve convention). */
-  def rotPqEncode(index: RotatedPqIndex, batch: DataFrame): DataFrame =
-    rotatedPqEncodeImpl(index.pq, batch, index.signs, Array.empty, "rotPqEncode")
-
-  /** The growing-index fold at the ROTATED tier — [[pqAppend]]'s
-    * contract over [[rotPqEncode]]. */
-  def rotPqAppend(index: RotatedPqIndex, batch: DataFrame): RotatedPqIndex =
-    index.copy(pq = index.pq.copy(
-      encoded = index.pq.encoded.unionByName(rotPqEncode(index, batch)),
-      corpus = index.pq.corpus.unionByName(
-        batch.select(col(index.pq.idCol), col(index.pq.vecCol)))))
-
-  /** [[pqEncode]] for a TRAINED-OPQ index — the batch rotates through
-    * the index's exact quantized R ([[matVecFpQ]], the form the build
-    * encoded with). */
-  def opqPqEncode(index: OpqPqIndex, batch: DataFrame): DataFrame =
-    rotatedPqEncodeImpl(index.pq, batch, Array.empty, index.rq, "opqPqEncode")
-
-  /** The growing-index fold at the TRAINED-OPQ tier. */
-  def opqPqAppend(index: OpqPqIndex, batch: DataFrame): OpqPqIndex =
-    index.copy(pq = index.pq.copy(
-      encoded = index.pq.encoded.unionByName(opqPqEncode(index, batch)),
-      corpus = index.pq.corpus.unionByName(
-        batch.select(col(index.pq.idCol), col(index.pq.vecCol)))))
-
-  private def rotatedPqEncodeImpl(
-      pq: PqIndex, batch: DataFrame,
-      signs: Array[Int], rq: Array[Array[Long]], opName: String): DataFrame = {
-    val sp = batch.sparkSession
-    import sp.implicits._
-    val dim = pq.m * pq.dsub
-    val bc = sp.sparkContext.broadcast(pq.codebook)
-    val bcSg = sp.sparkContext.broadcast(signs)
-    val bcRq = sp.sparkContext.broadcast(rq)
-    val mLoc = pq.m; val dsubLoc = pq.dsub; val bitsLoc = pq.bits
-    val perW = pqPerWord(pq.bits); val nW = pqNumWords(pq.m, pq.bits)
-    val src = batch.select(col(pq.idCol).cast("long"), col(pq.vecCol))
-      .as[(Long, Array[Float])]
-    if (nW == 1)
-      src.map { case (id, v0) =>
-        val (w, nrm) = encodeRotatedBatchRow(bc.value, v0, dim, mLoc, dsubLoc,
-          bitsLoc, perW, 1, bcSg.value, bcRq.value)
-        (id, w(0), nrm)
-      }.toDF(pq.idCol, "pq_code", "nrm")
-    else
-      src.map { case (id, v0) =>
-        val (w, nrm) = encodeRotatedBatchRow(bc.value, v0, dim, mLoc, dsubLoc,
-          bitsLoc, perW, nW, bcSg.value, bcRq.value)
-        (id, w, nrm)
-      }.toDF(pq.idCol, "pq_code", "nrm")
-  }
-
-  /** [[encodeBatchRow]] with the batch vector rotated first (HD when
-    * `signs` is non-empty, trained quantized R when `rq` is) — the
-    * nearest-code pass runs over the rotated doubles, the stored norm
-    * stays the ORIGINAL vector's. Degenerate rows encode to zero words
-    * with nrm 0; mixed dimensions are loud (from the rotation). */
-  private def encodeRotatedBatchRow(
-      cb: Array[Array[Array[Double]]], v0: Array[Float], dim: Int,
-      m: Int, dsub: Int, bits: Int, perW: Int, nW: Int,
-      signs: Array[Int], rq: Array[Array[Long]]): (Array[Long], Double) = {
-    val v = if (v0 == null) Array.empty[Float] else v0
-    if (v.nonEmpty && v.length != dim)
-      throw new IllegalArgumentException(
-        s"mixed-dimension batch vs index: index dimension $dim vs " +
-          s"batch vector of ${v.length} components")
-    val y =
-      if (v.isEmpty) Array.empty[Double]
-      else if (rq.nonEmpty) matVecFpQ(rq, toDoubles(v))
-      else rotateFp(v, signs)
-    val words =
-      if (y.isEmpty) new Array[Long](nW)
-      else encodePqWords(cb, y, m, dsub, bits, perW, nW)
-    var ss = 0.0; var i = 0
-    while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-    (words, math.sqrt(ss))
-  }
-
-  /** Incremental (delta-vs-corpus) dedup screened through the PQ
-    * tier — the [[incrementalNearDup]] (v12) analog when the standing
-    * corpus's RAM-resident representation is its PQ codes: each ingest
-    * batch row is ADC-screened against `index.encoded` (~24 B/row, the
-    * compression tier's whole point — the int8 projection v12 scans is
-    * ~2.7× larger, the floats ~10×) and only admitted (batch, corpus)
-    * pairs touch floats for the exact verify. Same margin-admission
-    * rule and same (idCol, n_dups, best_sim, status) contract as v12,
-    * with ONE honest semantic difference: PQ reconstruction error is
-    * orders of magnitude larger than int8's ~0.005 cosine, so `margin`
-    * here is a real RECALL dial (a true dup whose ADC estimate falls
-    * below threshold − margin is not seen) rather than v12's
-    * 10×-headroom formality — size it from the corpus's measured ADC
-    * error (the `results/pq_sf1_r17.json` recall curves) and note the
-    * verify stage still never admits a false positive. Cost shape:
-    * LUT construction ∝ batch (distributed, [[collectBatchLuts]]),
-    * one code scan of the standing index per batch (never a float
-    * corpus × batch product), exact verify ∝ admitted pairs. The
-    * coarse pass is the v22 flat-LUT kernel with threshold admission
-    * in place of heaps — unpack each row's m codes ONCE, one integer
-    * add per (row, batch vector). Compose with IVF row pruning by
-    * passing a cluster-restricted `index.encoded` via [[PqIndex.copy]]
-    * when even the code scan is too much. */
-  def pqIncrementalNearDup(
-      index: PqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      corpusSizeHint: Long = -1L): DataFrame =
-    pqIncrementalImpl(index, batch, threshold, margin, corpusSizeHint,
-      signs = Array.empty, opName = "pqIncrementalNearDup")
-
-  /** Incremental dedup at the ROTATED tier — [[pqIncrementalNearDup]]'s
-    * screen verbatim with each ingest row's LUT built over its
-    * HD-rotated vector (norms original; the ADC estimate still
-    * approximates the true cosine because the rotation is orthogonal,
-    * so `margin` keeps exactly the raw tier's semantics); the exact
-    * verify never admits a false positive, rotation or not. */
-  def rotPqIncrementalNearDup(
-      index: RotatedPqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      corpusSizeHint: Long = -1L): DataFrame =
-    pqIncrementalImpl(index.pq, batch, threshold, margin, corpusSizeHint,
-      signs = index.signs, opName = "rotPqIncrementalNearDup")
-
-  /** Incremental dedup at the TRAINED-OPQ tier (v38) —
-    * [[pqIncrementalNearDup]]'s screen verbatim with each ingest
-    * row's LUT built over its [[matVecFpQ]]-rotated vector (norms
-    * original; `margin` keeps the raw tier's semantics because the
-    * rotation is orthogonal up to the 2^24 quantization the margin
-    * already prices); the exact verify never admits a false positive,
-    * rotation or not. */
-  def opqPqIncrementalNearDup(
-      index: OpqPqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      corpusSizeHint: Long = -1L): DataFrame =
-    pqIncrementalImpl(index.pq, batch, threshold, margin, corpusSizeHint,
-      signs = Array.empty, opName = "opqPqIncrementalNearDup",
-      rq = index.rq)
-
-  private def pqIncrementalImpl(
-      index: PqIndex,
-      batch: DataFrame,
-      threshold: Double,
-      margin: Double,
-      corpusSizeHint: Long,
-      signs: Array[Int],
-      opName: String,
-      rq: Array[Array[Long]] = Array.empty): DataFrame = {
-    implicit val sp: SparkSession = index.encoded.sparkSession
-    import sp.implicits._
-    require(margin >= 0.0,
-      s"margin must be >= 0, got $margin — a negative margin would raise the " +
-        "coarse bound ABOVE the threshold and silently drop true dups")
-    val FP = 1L << 24
-    val mLoc = index.m; val ksubLoc = index.ksub; val bitsLoc = index.bits
-    val stride = mLoc * ksubLoc
-    val bound = threshold - margin
-    val (_, qids, qns, luts) = collectBatchLuts(
-      index.codebook, index.m, index.ksub, index.dsub,
-      batch, index.idCol, index.vecCol, opName,
-      keepVectors = false, // the exact verify re-reads the batch frame
-      signs = signs, rq = rq)
-    val bc = sp.sparkContext.broadcast((qids, qns, luts))
-    registerServingCleanup(() => bc.destroy(), Some(bc))
-    val perW = pqPerWord(index.bits)
-    val admitted = scanEncoded3[(Long, Long)](
-        index.encoded, index.idCol, pqNumWords(index.m, index.bits)) { it =>
-        val (ids, ns, lt) = bc.value
-        val codes = new Array[Int](mLoc)
-        it.flatMap { case (cid, words, nrm) =>
-          if (nrm == 0.0 || ids.length == 0) Iterator.empty
-          else {
-            unpackPqCodes(words, codes, mLoc, bitsLoc, perW)
-            val hits = Array.newBuilder[(Long, Long)]
-            var q = 0
-            while (q < ids.length) {
-              val qn = ns(q)
-              if (qn != 0.0) {
-                var adc = 0L
-                val base = q * stride
-                var s2 = 0
-                while (s2 < mLoc) {
-                  adc += lt(base + s2 * ksubLoc + codes(s2)); s2 += 1
-                }
-                val ac =
-                  math.floor(adc.toDouble / FP / (nrm * qn) * 10000 + 0.5) / 10000.0
-                if (!ac.isNaN && ac >= bound) hits += ((ids(q), cid))
-              }
-              q += 1
-            }
-            hits.result().iterator
-          }
-        }
-      }
-      .toDF("__bid", "__cid")
-    statusAdmitted(admitted, index.corpus, batch, index.idCol, index.vecCol,
-      threshold, corpusSizeHint)
-  }
-
-  /** Per-query norm + integer ADC LUT of one batch vector — the exact
-    * arithmetic of the (pre-r18) driver loop, factored so the
-    * distributed and driver LUT arms cannot drift: NaN-poisoned norms
-    * degrade to 0 (the query answers nothing, matching heapOffer's
-    * NaN refusal), and short/empty vectors zero-fill their LUT tail
-    * (qn = 0 makes the content irrelevant — kept only so the layout
-    * stays rectangular). */
-  private def pqBatchLutRow(
-      codebook: Array[Array[Array[Double]]],
-      v: Array[Float], m: Int, ksub: Int, dsub: Int): (Double, Array[Long]) =
-    // one exact float→double widening (see [[pqNearestCode]]) — the
-    // double core is shared with the ROTATED tier, whose query vectors
-    // are natively double (integer-sum HD transforms)
-    pqBatchLutRowD(codebook, toDoubles(v), m, ksub, dsub)
-
-  /** [[pqBatchLutRow]]'s double-vector core. */
-  private def pqBatchLutRowD(
-      codebook: Array[Array[Array[Double]]],
-      v: Array[Double], m: Int, ksub: Int, dsub: Int): (Double, Array[Long]) = {
-    val FP = 1L << 24
-    var ss = 0.0
-    var i = 0
-    while (i < v.length) { ss += v(i) * v(i); i += 1 }
-    val qn = { val n = math.sqrt(ss); if (n.isNaN) 0.0 else n }
-    val lut = new Array[Long](m * ksub)
-    var s = 0
-    while (s < m) {
-      var c = 0
-      while (c < ksub) {
-        var acc = 0L
-        var i2 = 0
-        while (i2 < dsub && s * dsub + i2 < v.length) {
-          acc += math.floor(v(s * dsub + i2) *
-            codebook(s)(c)(i2) * FP + 0.5).toLong
-          i2 += 1
-        }
-        lut(s * ksub + c) = acc
-        c += 1
-      }
-      s += 1
-    }
-    (qn, lut)
-  }
-
-  /** The deterministic ±1 diagonal D of the HD rotation ([[rotPqBuild]]):
-    * the sign of dimension i derives from the parity of the 60-bit
-    * md5 hash of "rot:i" — the hash both engines compute identically
+  /** The deterministic ±1 diagonal D of the Hadamard rotation: the sign
+    * of dimension i is the parity of the 60-bit md5 hash of "rot:i"
     * (TextDedup.mdHash's recipe), so the rotation is stable across
-    * engines, machines and re-runs, and SQL-replayable. */
+    * engines and re-runs, and SQL-replayable. */
   private[graft] def rotationSigns(dim: Int): Array[Int] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(dim) { i =>
@@ -1023,28 +451,13 @@ object SimilaritySearch {
   }
 
   /** Apply the HD rotation (Walsh–Hadamard × the [[rotationSigns]]
-    * diagonal — the "random rotation" baseline of Ge et al.'s OPQ,
-    * CVPR'13 §4, and the FAISS RandomRotationMatrix fallback) to one
-    * vector, in ORDER-FREE exact arithmetic: inputs snap to the 2^24
-    * fixed-point grid (floor(x·2^24 + 0.5), the build's shared
-    * convention), the transform is a signed INTEGER sum — commutative,
-    * so bit-deterministic in any order — and the result divides by
-    * 2^24·√dim (both powers of two for the required power-of-4 dim),
-    * making every output double EXACT and engine-portable. Empty/NULL
-    * vectors rotate to empty (the degenerate-row convention). O(dim²)
-    * per vector; at encode/serve time that is ~4k integer adds for
-    * dim=64 — noise next to the k-means passes. */
-  private[graft] def rotateFp(v: Array[Float], signs: Array[Int]): Array[Double] =
-    if (v == null || v.isEmpty) Array.empty[Double]
-    else rotateFpD(toDoubles(v), signs) // exact float→double widening
-
-  /** [[rotateFp]]'s double-vector core — the RESIDUAL tier's form (its
-    * inputs r = x − centroid are natively double). */
+    * diagonal) in ORDER-FREE exact arithmetic: inputs snap to the 2^24
+    * fixed-point grid, the transform is a signed integer sum, and the
+    * result divides by 2^24·√dim (both powers of two for a power-of-4
+    * dim), so every output double is exact and engine-portable.
+    * Empty/NULL vectors rotate to empty; mixed dimensions are loud. */
   private[graft] def rotateFpD(v: Array[Double], signs: Array[Int]): Array[Double] = {
     if (v == null || v.isEmpty) return Array.empty[Double]
-    // loud, not truncating: a longer row would silently rotate a prefix
-    // (wrong vector under its full-row norm), a shorter one would die
-    // as a bare AIOOBE on an executor (advice r19)
     if (v.length != signs.length)
       throw new IllegalArgumentException(
         s"mixed-dimension vector vs rotation: rotation dimension " +
@@ -1075,27 +488,17 @@ object SimilaritySearch {
     out
   }
 
-  /** Snap a trained rotation to the 2^24 fixed-point grid — the step
-    * that makes a TRAINED R engine-portable the way the HD rotation
-    * always was: the quantized matrix is pure integers, so applying it
-    * ([[matVecFpQ]]) is an order-free exact integer sum on both
-    * engines, and the matrix itself can ride into the composed DuckDB
-    * oracle as a literal CTE (the r19 verdict's literal-R recipe —
-    * the SVD trains in Spark, everything downstream of R replays).
-    * Entries of an orthogonal R are in [−1, 1], so each quantized
-    * entry fits 25 bits and the dim-term mat-vec sums stay far under
-    * the int64 range at any realistic dimension. */
+  /** Snap a trained rotation to the 2^24 fixed-point grid: the
+    * quantized matrix is pure integers, so applying it
+    * ([[matVecFpQ]]) is an order-free exact sum on both engines, and
+    * the oracle can inline it as a literal CTE. */
   private[graft] def quantizeRotation(r: Array[Array[Double]]): Array[Array[Long]] =
     r.map(_.map(x => math.floor(x * (1L << 24) + 0.5).toLong))
 
   /** y = (Rq · fp(x)) / 2^48 — [[rotateFpD]]'s exact-arithmetic recipe
-    * for a TRAINED (quantized, [[quantizeRotation]]) rotation: the
-    * input snaps to the 2^24 grid, the mat-vec is an order-free exact
-    * integer sum (rv ≤ 2^24, x_fp ≤ ~2^26 ⇒ dim-term sums ≪ 2^63),
-    * and the result divides by 2^24 twice (both powers of two), so
-    * every output double is one IEEE rounding of an exact int64 —
-    * bit-identical in Spark and DuckDB. Empty/NULL vectors rotate to
-    * empty (the degenerate-row convention); mixed dimensions are loud. */
+    * for a quantized trained rotation: every output double is one IEEE
+    * rounding of an exact int64, bit-identical in Spark and DuckDB.
+    * Empty/NULL vectors rotate to empty; mixed dimensions are loud. */
   private[graft] def matVecFpQ(rq: Array[Array[Long]], v: Array[Double]): Array[Double] = {
     if (v == null || v.isEmpty) return Array.empty[Double]
     if (v.length != rq.length)
@@ -1120,293 +523,9 @@ object SimilaritySearch {
     out
   }
 
-  /** A trained ROTATED-PQ index (v29): [[pq]]'s codebook and codes live
-    * in the HD-rotated space, `pq.encoded`'s norms and `pq.corpus` stay
-    * the ORIGINAL vectors (rotation is orthogonal, so true cosines are
-    * unchanged and the exact rerank needs no inverse). */
-  final case class RotatedPqIndex(signs: Array[Int], pq: PqIndex)
-
-  /** Train PQ over the HD-ROTATED corpus — the OPQ family's
-    * decorrelation step (Ge et al., CVPR'13: a rotation applied before
-    * the subspace split spreads correlated structure across subspaces
-    * so the product codebooks spend their bits evenly; the HD form is
-    * the paper's random-rotation baseline, deterministic here so the
-    * build stays SQL-replayable — the r18 verdict's task #2, taken at
-    * the replayable rung; the TRAINED rotation is the next one). Build
-    * shape mirrors [[pqBuild]] exactly — same stride seeding on the
-    * same id hash, same fixed-point Lloyd, same packed-word encode —
-    * over y = HDx instead of x; stored norms are the ORIGINAL vectors'
-    * (⟨Hx, Hq⟩ = ⟨x, q⟩, so the ADC estimate divided by the true norms
-    * still approximates the true cosine). Requires a power-of-4
-    * dimension (√dim must be a power of two for the exact rescale). */
-  def rotPqBuild(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int = 8,
-      ksub: Int = 16,
-      lloydIters: Int = 2,
-      portableSeeds: Boolean = false): RotatedPqIndex = {
-    require(m >= 1 && ksub >= 2 && lloydIters >= 0,
-      s"bad m=$m / ksub=$ksub / lloydIters=$lloydIters")
-    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(ksub - 1))
-    require(bits <= 16, s"ksub=$ksub needs $bits-bit codes — beyond the " +
-      "16-bit sanity cap (a codebook that large is not a PQ tier)")
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val dim0 = corpus.select(col(vecCol)).as[Array[Float]].head().length
-    require(dim0 > 0, "rotPqBuild: zero-dimensional vectors")
-    val rt = math.sqrt(dim0.toDouble).toLong
-    require(rt * rt == dim0 && java.lang.Long.bitCount(rt) == 1,
-      s"rotPqBuild needs a power-of-4 dimension (√dim a power of two " +
-        s"for the exact fixed-point rescale), got dim=$dim0")
-    require(dim0 % m == 0, s"m=$m must divide dim=$dim0")
-    val signs = rotationSigns(dim0)
-    val bcS = sp.sparkContext.broadcast(signs)
-    // (id, y = HDx, original norm) — the rotated training frame; empty
-    // rows keep empty y and norm 0 (never trained, never scored)
-    val rotated = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .map { case (id, v0) =>
-        val v = if (v0 == null) Array.empty[Float] else v0
-        var ss = 0.0; var i = 0
-        while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, rotateFp(v, bcS.value), math.sqrt(ss))
-      }
-    RotatedPqIndex(signs, pqBuildOverRotated(rotated,
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
-      dim0, m, ksub, bits, lloydIters, portableSeeds, "rotPqBuild"))
-  }
-
-  /** Seeding + fixed-point Lloyd + packed encode over an already-
-    * ROTATED double corpus frame — the shared build core of the
-    * rotated tiers: [[rotPqBuild]] (HD rotation) and [[opqPqBuild]]
-    * (trained rotation, applied through the same exact fixed-point
-    * arithmetic), so both serve — and SQL-replay — through identical
-    * machinery. `rotated` rows are (id, y, ORIGINAL norm); degenerate
-    * rows carry empty y and never seed, train, or score. The helper
-    * owns the frame's persist lifecycle. */
-  private def pqBuildOverRotated(
-      rotated0: Dataset[(Long, Array[Double], Double)],
-      corpusSel: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim0: Int,
-      m: Int,
-      ksub: Int,
-      bits: Int,
-      lloydIters: Int,
-      portableSeeds: Boolean,
-      opName: String): PqIndex = {
-    val sp = rotated0.sparkSession
-    import sp.implicits._
-    val dsub = dim0 / m
-    val rotated = rotated0.persist()
-    def failing[A](body: => A): A =
-      try body
-      catch { case t: Throwable => rotated.unpersist(blocking = false); throw t }
-    val n = failing {
-      val n = rotated.count()
-      require(n > 0, s"$opName: empty corpus")
-      n
-    }
-    val strideMod = math.max(1L, n / (2L * ksub))
-    val rdf = rotated.toDF(idCol, "__y", "nrm")
-    val seedHash =
-      if (portableSeeds) TextDedup.mdHash(col(idCol).cast("string"))
-      else xxhash64(col(idCol))
-    val seeds = failing {
-      val s = rdf
-        .filter(size(col("__y")) === dim0) // degenerate rows never seed
-        .filter(pmod(seedHash, lit(strideMod)) === 0)
-        .orderBy(seedHash, col(idCol))
-        .limit(ksub)
-        .select(col(idCol), col("__y"))
-        .as[(Long, Array[Double])]
-        .collect()
-      require(s.nonEmpty, s"$opName: stride seeding found no rows")
-      s
-    }
-    val kEff = seeds.length
-    var cb: Array[Array[Array[Double]]] = failing {
-      Array.tabulate(m, kEff, dsub) { (s, c, i) => seeds(c)._2(s * dsub + i) }
-    }
-
-    val FP = 1L << 24
-    val mLoc = m; val ksubLoc = ksub; val dsubLoc = dsub
-    for (_ <- 0 until lloydIters) {
-      val bc = sp.sparkContext.broadcast(cb)
-      val means = failing {
-        rotated
-          .flatMap { case (_, y, _) =>
-            if (y.isEmpty) Iterator.empty
-            else (0 until mLoc).iterator.map { s =>
-              val fp = new Array[Long](dsubLoc)
-              var i = 0
-              while (i < dsubLoc) {
-                fp(i) = math.round(y(s * dsubLoc + i) * FP); i += 1
-              }
-              (s * ksubLoc + pqNearestCode(bc.value, y, s, dsubLoc), fp, 1L)
-            }
-          }
-          .groupByKey(_._1)
-          .reduceGroups { (x: (Int, Array[Long], Long), y: (Int, Array[Long], Long)) =>
-            val acc = new Array[Long](x._2.length)
-            var i = 0
-            while (i < acc.length) { acc(i) = x._2(i) + y._2(i); i += 1 }
-            (x._1, acc, x._3 + y._3)
-          }
-          .map { case (key, (_, fp, cnt)) => (key, fp.map(_.toDouble / FP / cnt)) }
-          .collect()
-          .toMap
-      }
-      bc.destroy() // dead once collected (the advice-r17 rule)
-      cb = Array.tabulate(m, kEff, dsub) { (s, c, i) =>
-        means.get(s * ksub + c) match {
-          case Some(mean) => mean(i)
-          case None => cb(s)(c)(i) // empty code keeps its codeword
-        }
-      }
-    }
-
-    val bcF = sp.sparkContext.broadcast(cb)
-    val bitsLoc = bits
-    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
-    val encoded = (if (nW == 1) {
-      rotated.map { case (id, y, nrm) =>
-        val packed =
-          if (y.isEmpty) 0L
-          else encodePqWords(bcF.value, y, mLoc, dsubLoc, bitsLoc, perW, 1)(0)
-        (id, packed, if (y.isEmpty) 0.0 else nrm)
-      }.toDF(idCol, "pq_code", "nrm")
-    } else {
-      rotated.map { case (id, y, nrm) =>
-        val cw =
-          if (y.isEmpty) new Array[Long](nW)
-          else encodePqWords(bcF.value, y, mLoc, dsubLoc, bitsLoc, perW, nW)
-        (id, cw, if (y.isEmpty) 0.0 else nrm)
-      }.toDF(idCol, "pq_code", "nrm")
-    })
-    rotated.unpersist(blocking = false)
-    PqIndex(m, kEff, dsub, bits, cb, encoded, corpusSel, idCol, vecCol)
-  }
-
-  /** ANN top-k served from a [[RotatedPqIndex]]: the QUERY rotates
-    * through the same HD transform, its integer ADC LUT is built over
-    * the rotated doubles, and the coarse scan + exact rerank are
-    * [[pqServeCore]] verbatim — the approx score divides the rotated
-    * integer dot by the ORIGINAL norms (orthogonality keeps true
-    * cosines unchanged), and the rerank touches only original floats,
-    * so returned scores are exact regardless of the rotation. */
-  def rotPqTopK(
-      index: RotatedPqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame = {
-    val pq = index.pq
-    require(query.length == pq.m * pq.dsub,
-      s"query dim ${query.length} != index dim ${pq.m * pq.dsub}")
-    val qRot = rotateFp(query, index.signs)
-    val lut = pqBatchLutRowD(pq.codebook, qRot, pq.m, pq.ksub, pq.dsub)._2
-    pqServeCore(pq.m, pq.ksub, pq.dsub, pq.bits, pq.codebook,
-      pq.idCol, pq.vecCol, pq.corpus, query, topK, overFetch,
-      pq.encoded.filter(filter), fpOffset = None,
-      lutQn = Some((lut, normF(query))))
-  }
-
-  /** Persist a [[RotatedPqIndex]] under the shared versioned layout —
-    * [[pqSave]]'s exact tree with `kind: "rot-pq"`, so the raw and
-    * residual loaders refuse it loudly (rotated codes served against
-    * un-rotated queries would be silent garbage). The ±1 diagonal is
-    * NOT persisted: [[rotationSigns]] is a pure deterministic function
-    * of the dimension, so the loader re-derives it — one fewer file to
-    * corrupt. */
-  def rotPqSave(index: RotatedPqIndex, dir: String): Unit = {
-    val pq = index.pq
-    val sp = pq.encoded.sparkSession
-    import sp.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val versions = listVersions(fs, dir)
-    val next = versions.map(_ + 1).maxOption.getOrElse(1)
-    val prevLive: Option[Int] = liveVersion(fs, dir)
-    val vdir = s"$dir/v$next"
-    val cbRows = for {
-      s <- 0 until pq.m
-      c <- 0 until pq.ksub
-    } yield (s, c, pq.codebook(s)(c).toSeq)
-    sp.createDataset(cbRows).toDF("s", "c", "codeword")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebook")
-    pq.encoded.write.mode("overwrite").parquet(s"$vdir/encoded")
-    val meta =
-      s"""{"kind":"rot-pq","idCol":"${jsonStr(pq.idCol)}","vecCol":"${jsonStr(pq.vecCol)}","m":${pq.m},"ksub":${pq.ksub},"dsub":${pq.dsub},"bits":${pq.bits}}"""
-    writeSmallFile(fs, s"$vdir/meta.json", meta) // version-complete marker
-    commitVersionAndGc(fs, dir, next, prevLive, versions, "rotPqSave")
-  }
-
-  /** Load an index [[rotPqSave]] wrote, re-binding the exact rerank to
-    * `corpus` and re-deriving the rotation diagonal from the dimension.
-    * Refuses raw/residual trees loudly; serving is bit-identical. */
-  def rotPqLoad(
-      spark: SparkSession, rootDir: String, corpus: DataFrame): RotatedPqIndex = {
-    val dir = ivfCurrentPath(spark, rootDir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val meta = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      om.readTree(in)
-    } finally in.close()
-    require(meta.has("kind") && meta.get("kind").asText() == "rot-pq",
-      s"$dir/meta.json is not a rotated-PQ index — use pqLoad/residualPqLoad " +
-        "(serving rotated codes against un-rotated queries would be garbage)")
-    val idCol = meta.get("idCol").asText()
-    val vecCol = meta.get("vecCol").asText()
-    val m = meta.get("m").asInt()
-    val ksub = meta.get("ksub").asInt()
-    val dsub = meta.get("dsub").asInt()
-    val bits = meta.get("bits").asInt()
-    import spark.implicits._
-    val cb = Array.ofDim[Array[Double]](m, ksub)
-    spark.read.parquet(s"$dir/codebook")
-      .select(col("s").cast("int"), col("c").cast("int"), col("codeword"))
-      .as[(Int, Int, Array[Double])]
-      .collect()
-      .foreach { case (s, c, w) =>
-        require(s >= 0 && s < m && c >= 0 && c < ksub,
-          s"codebook row ($s, $c) outside m=$m × ksub=$ksub")
-        cb(s)(c) = w
-      }
-    require(cb.forall(_.forall(_ != null)),
-      s"codebook parquet is missing codewords (m=$m × ksub=$ksub)")
-    val encoded = spark.read.parquet(s"$dir/encoded")
-      .select(col(idCol), col("pq_code"), col("nrm"))
-    requirePqCodeType(encoded, m, bits, "rotPqLoad")
-    requirePowerOf4Dim(m * dsub, "rotPqLoad")
-    RotatedPqIndex(rotationSigns(m * dsub),
-      PqIndex(m, ksub, dsub, bits, cb.map(_.map(_.clone())), encoded,
-        corpus.select(col(idCol), col(vecCol)), idCol, vecCol))
-  }
-
-  /** A TRAINED-OPQ index (v35): [[r]] is the learned orthogonal
-    * rotation (row-major, y = R x), [[rq]] its 2^24 fixed-point
-    * quantization ([[quantizeRotation]]) — the form the final encode
-    * and every serve ACTUALLY apply ([[matVecFpQ]]), making the whole
-    * post-SVD chain exact-integer and therefore oracle-replayable with
-    * R inlined as a literal CTE (the r19 verdict's recipe). [[pq]]'s
-    * codebook and codes live in the rotated space, `pq.corpus` is the
-    * ORIGINAL float table (the exact rerank never needs the inverse —
-    * R is orthogonal, true cosines unchanged). Unlike the HD tiers, R
-    * is DATA-DEPENDENT, so persistence carries it: [[opqPqSave]] /
-    * [[opqPqLoad]] round-trip the rotation doubles bit-exactly next to
-    * the codes (kind "opq-pq", mutually guarded against every other
-    * tree kind). */
-  final case class OpqPqIndex(
-      r: Array[Array[Double]], rq: Array[Array[Long]], pq: PqIndex)
-
-  /** y = R x, one fixed-order double dot per output component. */
-  private def matVec(r: Array[Array[Double]], x: Array[Float]): Array[Double] = {
+  /** y = R x, one fixed-order double dot per output component (OPQ's
+    * training-time rotation of the direct form). */
+  private def matVec(r: Array[Array[Double]], x: Array[Double]): Array[Double] = {
     val n = r.length
     val out = new Array[Double](n)
     var j = 0
@@ -1414,7 +533,7 @@ object SimilaritySearch {
       val row = r(j)
       var acc = 0.0
       var i = 0
-      while (i < n) { acc += row(i) * x(i).toDouble; i += 1 }
+      while (i < n) { acc += row(i) * x(i); i += 1 }
       out(j) = acc
       j += 1
     }
@@ -1425,9 +544,8 @@ object SimilaritySearch {
     * given M = Σᵢ xᵢ ŷᵢᵀ, the orthogonal R maximizing tr(R M) is
     * V Uᵀ for M = U Σ Vᵀ. SVD by deterministic cyclic one-sided
     * Jacobi (fixed sweep order, relative threshold) — pure driver
-    * arithmetic, bit-reproducible across runs, no library dependency.
-    * Loud on rank deficiency (a degenerate corpus has no defined
-    * rotation; callers should fall back to the HD tier). */
+    * arithmetic, bit-reproducible, no library dependency. Loud on rank
+    * deficiency (a degenerate corpus has no defined rotation). */
   private[graft] def procrustesRotation(
       m0: Array[Array[Double]]): Array[Array[Double]] = {
     val n = m0.length
@@ -1476,7 +594,7 @@ object SimilaritySearch {
       val s = math.sqrt(nn)
       require(s > 1e-12,
         "procrustesRotation: rank-deficient x·ŷ correlation — the corpus is " +
-          "degenerate along some direction; use the HD rotation tier instead")
+          "degenerate along some direction; use the Hadamard rotation instead")
       i = 0
       while (i < n) { u(i)(j) = a(i)(j) / s; i += 1 }
       j += 1
@@ -1488,459 +606,800 @@ object SimilaritySearch {
     }
   }
 
-  /** Train OPQ-NP (Ge et al., CVPR'13, Algorithm 1 — the TRAINED
-    * orthogonal rotation, the recall rung above the deterministic HD
-    * baseline): alternate (a) PQ codebook training over y = R x with
-    * (b) the Procrustes update R ← V Uᵀ of M = Σ xᵢ ŷᵢᵀ (ŷ = the
-    * codeword reconstruction), starting from the HD rotation. M
-    * accumulates as ORDER-FREE fixed-point integer sums (bit-
-    * deterministic in any partition order), the SVD is the
-    * deterministic Jacobi above, and each training-iteration codebook
-    * reuses [[pqBuild]] verbatim over the rotated (float) corpus — so
-    * the whole build is reproducible run-to-run. The FINAL build
-    * quantizes R to the 2^24 grid and re-rotates in exact integer
-    * arithmetic through the rotated tiers' shared core, so everything
-    * DOWNSTREAM of the SVD — rotation, codebook, encode, LUT, scan,
-    * rerank — is hash-exact oracle-replayable with R inlined as a
-    * literal CTE (the r19 verdict's recipe; only the SVD itself stays
-    * on spec pins: orthogonality, bit-determinism). Serving:
-    * [[opqPqTopK]] — rotated LUT, original norms, original-float
-    * rerank, exactly the [[rotPqTopK]] recipe with R in place of HD. */
-  def opqPqBuild(
+  /** A build's working row: (id, x, norm of the ORIGINAL vector,
+    * cluster), x the vector (direct) or its residual (IVF) as doubles —
+    * empty for a degenerate row, which never seeds, trains or scores. */
+  private type PqRow = (Long, Array[Double], Double, Int)
+
+  /** Train a PQ index over (idCol, vecCol) and encode the corpus.
+    *
+    * `rotation` picks the [[PqRotation]]: "none" (v20), "hadamard"
+    * (v29) or "opq" (v35; `opqIters` alternations of codebook training
+    * and Procrustes update, started from the Hadamard rotation). The
+    * rotated forms need a power-of-4 dimension. Build shape: hash-stride
+    * seeding (one filter over ~2·ksub candidate rows, never a corpus
+    * sort), `lloydIters` rounds of per-subspace Lloyd whose means are
+    * ORDER-FREE exact fixed-point sums (bit-deterministic in any merge
+    * order; all m subspaces train in the same corpus passes), empty
+    * codes keeping their codeword, then one encode pass. `portableSeeds`
+    * swaps the stride hash to the md5-derived hash both engines compute,
+    * making build + encode + serve SQL-replayable — how v20 rides the
+    * hash-exact oracle gate. NULL and empty vectors are skipped by
+    * seeding and training and encode to zero codes with nrm 0; the
+    * dimension comes from the first non-empty vector, and a vector of
+    * another dimension is loud. */
+  def pqBuild(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       m: Int = 8,
       ksub: Int = 16,
       lloydIters: Int = 2,
-      opqIters: Int = 3,
-      portableSeeds: Boolean = false): OpqPqIndex = {
-    require(opqIters >= 1, s"opqIters must be >= 1, got $opqIters")
+      portableSeeds: Boolean = false,
+      rotation: String = "none",
+      opqIters: Int = 3): PqIndex = {
     val sp = corpus.sparkSession
     import sp.implicits._
+    val dim = corpus.select(col(vecCol)).filter(size(col(vecCol)) > 0)
+      .as[Array[Float]].head(1).headOption.map(_.length)
+      .getOrElse(throw new IllegalArgumentException(
+        "pqBuild: empty corpus (no non-empty vectors)"))
     val src = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].persist()
-    def failing[A](body: => A): A =
-      try body
-      catch { case t: Throwable => src.unpersist(blocking = false); throw t }
-    val dim = failing {
-      require(src.count() > 0, "opqPqBuild: empty corpus")
-      src.head()._2.length
+      .as[(Long, Array[Float])]
+      .map { case (id, v0) => directRow(id, v0, dim) }
+    buildIndex(src, None, corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
+      dim, m, ksub, lloydIters, portableSeeds, rotation, opqIters)
+  }
+
+  /** [[pqBuild]] over an [[IvfIndex]]: the codebook trains on the
+    * RESIDUALS r = x − centroid(cluster(x)) (Jégou §IV.A — the codewords
+    * spend their precision on the within-cluster geometry instead of
+    * re-describing the coarse structure), rotated by `rotation` before
+    * the split (the FAISS `OPQ,IVF,PQ` chain for "hadamard"/"opq").
+    * Every fixed-point decision is the expression the v23/v30/v36
+    * oracles replay over `ve[i] − comp`. Rows in cluster −1 (degenerate
+    * vectors) encode to zero codes with nrm 0. The coarse quantizer is
+    * unchanged: re-training it means a new [[ivfBuild]] and a new
+    * residual build. */
+  def residualPqBuild(
+      ivf: IvfIndex,
+      m: Int = 8,
+      ksub: Int = 16,
+      lloydIters: Int = 2,
+      portableSeeds: Boolean = false,
+      rotation: String = "none",
+      opqIters: Int = 3): PqIndex = {
+    require(ivf.centroids.nonEmpty, "residualPqBuild: index has no centroids")
+    val sp = ivf.assigned.sparkSession
+    import sp.implicits._
+    val dim = ivf.centroids(0)._1.length
+    val bcC = sp.sparkContext.broadcast(ivf.centroids)
+    val src = ivf.assigned
+      .select(col(ivf.idCol).cast("long"), col(ivf.vecCol), col("cluster").cast("int"))
+      .as[(Long, Array[Float], Int)]
+      .map { case (id, v0, cl) => residualRow(id, v0, cl, bcC.value) }
+    buildIndex(src, Some(ivf.centroids),
+      ivf.assigned.select(col(ivf.idCol), col(ivf.vecCol)), ivf.idCol, ivf.vecCol,
+      dim, m, ksub, lloydIters, portableSeeds, rotation, opqIters)
+  }
+
+  private def requireDim(n: Int, dim: Int): Unit =
+    if (n != 0 && n != dim)
+      throw new IllegalArgumentException(
+        s"mixed-dimension vectors: index dimension $dim vs a vector of $n components")
+
+  private def directRow(id: Long, v0: Array[Float], dim: Int): PqRow = {
+    val v = if (v0 == null) Array.empty[Float] else v0
+    requireDim(v.length, dim)
+    (id, toDoubles(v), normF(v), 0)
+  }
+
+  private def residualRow(
+      id: Long, v0: Array[Float], cl: Int,
+      cents: Array[(Array[Double], Double)]): PqRow = {
+    val v = if (v0 == null) Array.empty[Float] else v0
+    if (cl < 0 || v.isEmpty) (id, Array.empty[Double], 0.0, cl)
+    else {
+      val cent = cents(cl)._1
+      requireDim(v.length, cent.length)
+      val r = new Array[Double](v.length)
+      var j = 0
+      while (j < v.length) { r(j) = v(j).toDouble - cent(j); j += 1 }
+      (id, r, normF(v), cl)
     }
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val rt = math.sqrt(dim.toDouble).toLong
-    require(rt * rt == dim && java.lang.Long.bitCount(rt) == 1,
-      s"opqPqBuild needs a power-of-4 dimension (the HD init), got dim=$dim")
+  }
+
+  private def buildIndex(
+      src: Dataset[PqRow],
+      coarse: Option[Array[(Array[Double], Double)]],
+      corpusSel: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dim: Int,
+      m: Int,
+      ksub: Int,
+      lloydIters: Int,
+      portableSeeds: Boolean,
+      rotation: String,
+      opqIters: Int): PqIndex = {
+    require(m >= 1 && ksub >= 2 && lloydIters >= 0,
+      s"bad m=$m / ksub=$ksub / lloydIters=$lloydIters")
     val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(ksub - 1))
+    // 16 bits (ksub 65536) is where per-subspace codebooks stop being
+    // "product" quantization in any meaningful sense
     require(bits <= 16, s"ksub=$ksub needs $bits-bit codes — beyond the " +
       "16-bit sanity cap (a codebook that large is not a PQ tier)")
+    require(dim % m == 0, s"m=$m must divide dim=$dim")
+    require(Seq("none", "hadamard", "opq").contains(rotation),
+      s"rotation must be none, hadamard or opq, got '$rotation'")
+    if (rotation != "none") requirePowerOf4Dim(dim, s"pqBuild($rotation)")
+    val sp = src.sparkSession
+    import sp.implicits._
+    // OPQ reads the source once per alternation: cache it for the build
+    val cached = if (rotation == "opq") src.persist() else src
+    try {
+      val rot: PqRotation = rotation match {
+        case "none" => PqRotation.None
+        case "hadamard" => PqRotation.Hadamard(rotationSigns(dim))
+        case _ => trainOpq(cached, coarse.isDefined, idCol, dim, m, ksub,
+          lloydIters, opqIters, portableSeeds)
+      }
+      // must stay alive: the returned index's lazy encoded frame reads it
+      val bcRot = sp.sparkContext.broadcast(rot)
+      val y = cached.map { case (id, x, nrm, cl) => (id, bcRot.value(x), nrm, cl) }
+      val (cb, encoded) = trainAndEncode(y, idCol, dim, m, ksub, bits, lloydIters,
+        portableSeeds, coarse.isDefined)
+      PqIndex(rot, coarse, m, cb(0).length, dim / m, bits, cb, encoded, corpusSel,
+        idCol, vecCol)
+    } finally if (rotation == "opq") cached.unpersist(blocking = false)
+  }
+
+  /** Seeding + fixed-point Lloyd over a (rotated) build frame, then
+    * the encoded frame: (idCol, pq_code, nrm[, cluster]). Owns `y0`'s
+    * persist lifecycle. */
+  private def trainAndEncode(
+      y0: Dataset[PqRow],
+      idCol: String,
+      dim: Int,
+      m: Int,
+      ksub: Int,
+      bits: Int,
+      lloydIters: Int,
+      portableSeeds: Boolean,
+      withCluster: Boolean): (Array[Array[Array[Double]]], DataFrame) = {
+    val sp = y0.sparkSession
+    import sp.implicits._
+    val y = y0.persist()
+    val cb =
+      try lloyd(y, idCol, dim, m, ksub, lloydIters, portableSeeds)
+      catch { case t: Throwable => y.unpersist(blocking = false); throw t }
+    val bcF = sp.sparkContext.broadcast(cb)
+    val dsub = dim / m
+    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
+    val enc = encodedFrame(y.map { case (id, yy, nrm, cl) =>
+      if (yy.isEmpty) (id, new Array[Long](nW), 0.0, cl)
+      else (id, encodePqWords(bcF.value, yy, m, dsub, bits, perW, nW), nrm, cl)
+    }, idCol, nW, withCluster)
+    y.unpersist(blocking = false)
+    (cb, enc)
+  }
+
+  /** (id, words, nrm, cluster) rows as [[PqIndex.encoded]]: `pq_code`
+    * is a plain BIGINT for a one-word layout, else the words array;
+    * `cluster` only on the IVF form. */
+  private def encodedFrame(
+      rows: Dataset[(Long, Array[Long], Double, Int)],
+      idCol: String, nW: Int, withCluster: Boolean): DataFrame =
+    rows.select(Seq(col("_1").as(idCol),
+      (if (nW == 1) col("_2")(0) else col("_2")).as("pq_code"),
+      col("_3").as("nrm")) ++ (if (withCluster) Seq(col("_4").as("cluster")) else Nil): _*)
+
+  /** The codebook of a persisted build frame: deterministic hash-stride
+    * seeds, then `lloydIters` rounds of order-free fixed-point means. */
+  private def lloyd(
+      y: Dataset[PqRow],
+      idCol: String,
+      dim: Int,
+      m: Int,
+      ksub: Int,
+      lloydIters: Int,
+      portableSeeds: Boolean): Array[Array[Array[Double]]] = {
+    val sp = y.sparkSession
+    import sp.implicits._
+    val n = y.count()
+    require(n > 0, "pqBuild: empty corpus")
+    val strideMod = math.max(1L, n / (2L * ksub))
+    val seedHash =
+      if (portableSeeds) TextDedup.mdHash(col(idCol).cast("string"))
+      else xxhash64(col(idCol))
+    val seeds = y.toDF(idCol, "__y", "nrm", "cluster")
+      .filter(size(col("__y")) === dim)
+      .filter(pmod(seedHash, lit(strideMod)) === 0)
+      .orderBy(seedHash, col(idCol))
+      .limit(ksub)
+      .select(col(idCol), col("__y"))
+      .as[(Long, Array[Double])]
+      .collect()
+    require(seeds.nonEmpty, "pqBuild: stride seeding found no rows")
+    val kEff = seeds.length
+    val dsub = dim / m
+    var cb: Array[Array[Array[Double]]] =
+      Array.tabulate(m, kEff, dsub) { (s, c, i) => seeds(c)._2(s * dsub + i) }
+    val FP = 1L << 24
+    for (_ <- 0 until lloydIters) {
+      val bc = sp.sparkContext.broadcast(cb)
+      val means = y
+        .flatMap { case (_, yy, _, _) =>
+          if (yy.isEmpty) Iterator.empty
+          else (0 until m).iterator.map { s =>
+            val fp = new Array[Long](dsub)
+            var i = 0
+            while (i < dsub) { fp(i) = math.round(yy(s * dsub + i) * FP); i += 1 }
+            (s * ksub + pqNearestCode(bc.value, yy, s, dsub), fp, 1L)
+          }
+        }
+        .groupByKey(_._1)
+        .reduceGroups { (a: (Int, Array[Long], Long), b: (Int, Array[Long], Long)) =>
+          val acc = new Array[Long](a._2.length)
+          var i = 0
+          while (i < acc.length) { acc(i) = a._2(i) + b._2(i); i += 1 }
+          (a._1, acc, a._3 + b._3)
+        }
+        .map { case (key, (_, fp, cnt)) => (key, fp.map(_.toDouble / FP / cnt)) }
+        .collect()
+        .toMap
+      // dead once the means are collected — destroy eagerly, or a
+      // tuning sweep building many indexes leaks broadcast blocks
+      bc.destroy()
+      cb = Array.tabulate(m, kEff, dsub) { (s, c, i) =>
+        means.get(s * ksub + c) match {
+          case Some(mean) => mean(i)
+          case None => cb(s)(c)(i) // empty code keeps its codeword
+        }
+      }
+    }
+    cb
+  }
+
+  /** OPQ-NP (Ge et al., CVPR'13, Algorithm 1): alternate codebook
+    * training over y = R x with the Procrustes update R ← V Uᵀ of
+    * M = Σ xᵢ ŷᵢᵀ (ŷ the codeword reconstruction), from the Hadamard
+    * rotation. M accumulates as ORDER-FREE fixed-point integer sums and
+    * the SVD is the deterministic Jacobi above, so the rotation is
+    * bit-reproducible. The direct form trains on float-rounded R x and
+    * correlates against the unrounded product; the residual form
+    * applies the quantized R throughout. Only the SVD stays off the
+    * oracle: the final build applies the quantized R exactly, which the
+    * trained oracles inline. `src` must be persisted by the caller. */
+  private def trainOpq(
+      src: Dataset[PqRow],
+      residual: Boolean,
+      idCol: String,
+      dim: Int,
+      m: Int,
+      ksub: Int,
+      lloydIters: Int,
+      opqIters: Int,
+      portableSeeds: Boolean): PqRotation.Trained = {
+    require(opqIters >= 1, s"opqIters must be >= 1, got $opqIters")
+    val sp = src.sparkSession
+    import sp.implicits._
     val dsub = dim / m
     val signs = rotationSigns(dim)
     val root = math.sqrt(dim.toDouble)
-    // HD init: R0(j)(i) = D(i)·(−1)^popcount(i∧j)/√dim
+    // HD start: R0(j)(i) = D(i)·(−1)^popcount(i∧j)/√dim
     var r: Array[Array[Double]] = Array.tabulate(dim, dim) { (j, i) =>
       val h = if ((java.lang.Long.bitCount((i & j).toLong) & 1) == 0) 1.0 else -1.0
       h * signs(i) / root
     }
     val FP = 1L << 24
-    var it = 0
-    while (it < opqIters - 1) {
-      val bcR = sp.sparkContext.broadcast(r)
-      // rotated float corpus — the TRAINING codebook's input; only R's
-      // VALUE leaves this loop (the final build below re-rotates in
-      // exact fixed-point arithmetic, which is what the oracle replays)
-      val dimLoc0 = dim
-      val rotDf = src.map { case (id, x) =>
-        if (x == null || x.isEmpty) (id, Array.empty[Float])
-        else {
-          if (x.length != dimLoc0)
-            throw new IllegalArgumentException(
-              s"mixed-dimension corpus in opqPqBuild: index dimension " +
-                s"$dimLoc0 vs vector of ${x.length} components")
-          (id, matVec(bcR.value, x).map(_.toFloat))
-        }
-      }.toDF(idCol, "__y")
-      val idx = failing { pqBuild(rotDf, idCol, "__y", m, ksub, lloydIters,
-        portableSeeds) }
-      // M = Σ x ŷᵀ in fixed-point (order-free; exact integer adds)
-      val bcCb = sp.sparkContext.broadcast(idx.codebook)
-      val mLoc2 = m; val dsubLoc2 = dsub; val dimLoc = dim
-      val mFp = failing {
-        src.mapPartitions { rows =>
-          val acc = new Array[Long](dimLoc * dimLoc)
-          val cb = bcCb.value
-          val rr = bcR.value
-          rows.foreach { case (_, x) =>
-            if (x != null && x.nonEmpty) {
-              if (x.length != dimLoc)
-                throw new IllegalArgumentException(
-                  s"mixed-dimension corpus in opqPqBuild: index dimension " +
-                    s"$dimLoc vs vector of ${x.length} components")
-              val y = matVec(rr, x)
-              val yhat = new Array[Double](dimLoc)
-              var s = 0
-              while (s < mLoc2) {
-                val cw = cb(s)(pqNearestCode(cb, y, s, dsubLoc2))
-                var i = 0
-                while (i < dsubLoc2) { yhat(s * dsubLoc2 + i) = cw(i); i += 1 }
-                s += 1
+    for (_ <- 0 until opqIters - 1) {
+      val bcR = sp.sparkContext.broadcast((r, quantizeRotation(r)))
+      def rotate(x: Array[Double], exact: Boolean): Array[Double] =
+        if (x.isEmpty) x
+        else if (residual) matVecFpQ(bcR.value._2, x)
+        else if (exact) matVec(bcR.value._1, x)
+        else matVec(bcR.value._1, x).map(_.toFloat.toDouble)
+      val yIt = src.map { case (id, x, nrm, cl) => (id, rotate(x, false), nrm, cl) }
+        .persist()
+      val cb = try lloyd(yIt, idCol, dim, m, ksub, lloydIters, portableSeeds)
+               finally yIt.unpersist(blocking = false)
+      val bcCb = sp.sparkContext.broadcast(cb)
+      val mFp = src.mapPartitions { rows =>
+        val acc = new Array[Long](dim * dim)
+        val cw = bcCb.value
+        rows.foreach { case (_, x, _, _) =>
+          if (x.nonEmpty) {
+            val yv = rotate(x, true)
+            val yhat = new Array[Double](dim)
+            var s = 0
+            while (s < m) {
+              val c = cw(s)(pqNearestCode(cw, yv, s, dsub))
+              var i = 0
+              while (i < dsub) { yhat(s * dsub + i) = c(i); i += 1 }
+              s += 1
+            }
+            var a = 0
+            while (a < dim) {
+              var b = 0
+              while (b < dim) {
+                acc(a * dim + b) += math.round(x(a) * yhat(b) * FP)
+                b += 1
               }
-              var a = 0
-              while (a < dimLoc) {
-                val xa = x(a).toDouble
-                var b = 0
-                while (b < dimLoc) {
-                  acc(a * dimLoc + b) +=
-                    math.round(xa * yhat(b) * FP)
-                  b += 1
-                }
-                a += 1
-              }
+              a += 1
             }
           }
-          Iterator.single(acc)
-        }.reduce { (l, rgt) =>
-          val out = new Array[Long](l.length)
-          var i = 0
-          while (i < l.length) { out(i) = l(i) + rgt(i); i += 1 }
-          out
         }
+        Iterator.single(acc)
+      }.reduce { (l, rgt) =>
+        val out = new Array[Long](l.length)
+        var i = 0
+        while (i < l.length) { out(i) = l(i) + rgt(i); i += 1 }
+        out
       }
-      bcCb.destroy()
-      val mMat = Array.tabulate(dim, dim) { (a, b) =>
-        mFp(a * dim + b).toDouble / FP
-      }
-      r = failing { procrustesRotation(mMat) }
-      // safe to reclaim: this iteration's index (whose lazy encoded
-      // frame references bcR) is training-only and about to be dropped
-      bcR.destroy()
-      it += 1
+      bcCb.destroy(); bcR.destroy()
+      r = procrustesRotation(Array.tabulate(dim, dim)((a, b) => mFp(a * dim + b).toDouble / FP))
     }
-    // FINAL build: quantize R to the 2^24 grid and rotate in EXACT
-    // integer arithmetic ([[matVecFpQ]] — the form every serve applies
-    // and the oracle replays as a literal-R CTE), over doubles, through
-    // the rotated tiers' shared core: v29's oracle-gated machinery with
-    // the trained R in place of HD. This broadcast must stay alive —
-    // the returned index's encoded frame evaluates through it.
-    val rq = quantizeRotation(r)
-    val bcRq = sp.sparkContext.broadcast(rq)
-    val rotated = src.map { case (id, v0) =>
-      val v = if (v0 == null) Array.empty[Float] else v0
-      var ss = 0.0; var i = 0
-      while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-      (id, matVecFpQ(bcRq.value, toDoubles(v)), math.sqrt(ss))
-    }
-    val pqIdx = failing { pqBuildOverRotated(rotated,
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
-      dim, m, ksub, bits, lloydIters, portableSeeds, "opqPqBuild") }
-    src.unpersist(blocking = false)
-    OpqPqIndex(r, rq, pqIdx)
+    PqRotation.Trained(r, quantizeRotation(r))
   }
 
-  /** ANN top-k from an [[OpqPqIndex]] — [[rotPqTopK]]'s recipe with the
-    * TRAINED R: the query rotates through the same exact fixed-point
-    * [[matVecFpQ]] the encode used, its LUT is built over the rotated
-    * doubles, norms and the exact rerank stay original-float
-    * (orthogonality keeps true cosines unchanged). */
-  def opqPqTopK(
-      index: OpqPqIndex,
+  /** Encode NEW vectors against an index's EXISTING codebook — the
+    * between-retrains ingest path, mirroring [[ivfAssign]]: one
+    * broadcast of the codebook, one map over the batch, codes by the
+    * build's own rotation and integer metric, so a batch row identical
+    * to a corpus row gets the identical code (and, on the IVF form, the
+    * identical cluster: rows assign to their nearest centroid, ties to
+    * the lower cluster). Returns [[PqIndex.encoded]]'s row shape.
+    * Degenerate (empty/NULL) vectors encode to zero codes with nrm 0
+    * (cluster −1 on the IVF form) and never score; mixed dimensions are
+    * loud. */
+  def pqEncode(index: PqIndex, batch: DataFrame): DataFrame = {
+    val sp = batch.sparkSession
+    import sp.implicits._
+    val bc = sp.sparkContext.broadcast((index.codebook, index.rotation,
+      index.coarse.getOrElse(Array.empty[(Array[Double], Double)])))
+    val dim = index.m * index.dsub
+    val m = index.m; val dsub = index.dsub; val bits = index.bits
+    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
+    val src = batch.select(col(index.idCol).cast("long"), col(index.vecCol))
+      .as[(Long, Array[Float])]
+    encodedFrame(src.map { case (id, v) =>
+      val (cb, rot, cents) = bc.value
+      val (w, nrm, cl) = encodeBatchRow(cb, rot, cents, v, dim, m, dsub, bits, perW, nW)
+      (id, w, nrm, cl)
+    }, index.idCol, nW, index.coarse.isDefined)
+  }
+
+  /** [[pqEncode]]'s per-row body, at object level so the map closures
+    * capture only the broadcast and primitives. */
+  private def encodeBatchRow(
+      cb: Array[Array[Array[Double]]], rot: PqRotation,
+      cents: Array[(Array[Double], Double)], v0: Array[Float], dim: Int,
+      m: Int, dsub: Int, bits: Int, perW: Int, nW: Int): (Array[Long], Double, Int) = {
+    val v = if (v0 == null) Array.empty[Float] else v0
+    if (cents.isEmpty) {
+      requireDim(v.length, dim)
+      val words = if (v.isEmpty) new Array[Long](nW)
+                  else encodePqWords(cb, rot(toDoubles(v)), m, dsub, bits, perW, nW)
+      (words, normF(v), 0)
+    } else {
+      checkAssignDim(cents, v)
+      val cl = if (v.isEmpty) -1 else nearestCentroid(cents, v)
+      if (cl < 0) (new Array[Long](nW), 0.0, -1)
+      else {
+        val (_, r, nrm, _) = residualRow(0L, v, cl, cents)
+        (encodePqWords(cb, rot(r), m, dsub, bits, perW, nW), nrm, cl)
+      }
+    }
+  }
+
+  /** The growing-index fold, mirroring [[ivfAppend]]: `batch` encoded
+    * by [[pqEncode]] joins `index.encoded` (and its floats the rerank
+    * corpus), so the new rows serve immediately through every arm. The
+    * codebook (and any coarse quantizer) is unchanged by design —
+    * re-coding the world is [[pqBuild]]'s periodic job. */
+  def pqAppend(index: PqIndex, batch: DataFrame): PqIndex =
+    index.copy(
+      encoded = index.encoded.unionByName(pqEncode(index, batch)),
+      corpus = index.corpus.unionByName(
+        batch.select(col(index.idCol), col(index.vecCol))))
+
+  /** Per-query norm + integer ADC LUT: per-term
+    * `floor(y·c·2^24 + 0.5)` over the ROTATED query y against every
+    * codeword, while the norm stays the ORIGINAL vector's (NaN degrades
+    * to 0, so a NaN-poisoned query answers nothing, matching
+    * [[heapOffer]]'s NaN refusal). A short or empty y zero-fills its
+    * LUT (qn = 0 then makes the content irrelevant). */
+  private def lutRow(
+      codebook: Array[Array[Array[Double]]], rot: PqRotation,
+      v: Array[Float], m: Int, ksub: Int, dsub: Int): (Double, Array[Long]) = {
+    val FP = 1L << 24
+    val y = rot(toDoubles(v))
+    val qn = { val n = normF(v); if (n.isNaN) 0.0 else n }
+    val lut = new Array[Long](m * ksub)
+    var s = 0
+    while (s < m) {
+      var c = 0
+      while (c < ksub) {
+        var acc = 0L
+        var i = 0
+        while (i < dsub && s * dsub + i < y.length) {
+          acc += math.floor(y(s * dsub + i) * codebook(s)(c)(i) * FP + 0.5).toLong
+          i += 1
+        }
+        lut(s * ksub + c) = acc
+        c += 1
+      }
+      s += 1
+    }
+    (qn, lut)
+  }
+
+  /** Fixed-point ⟨v, centroid(c)⟩ — the term residual encoding drops,
+    * added back at serve time (same per-term convention as the LUT). */
+  private def centroidOffset(v: Array[Float], cent: Array[Double]): Long = {
+    val FP = 1L << 24
+    var acc = 0L
+    var i = 0
+    while (i < cent.length) {
+      acc += math.floor(v(i).toDouble * cent(i) * FP + 0.5).toLong
+      i += 1
+    }
+    acc
+  }
+
+  /** ANN top-k from a [[PqIndex]] by asymmetric distance computation
+    * (ADC): the driver builds ONE integer LUT of fixed-point
+    * ⟨rotated-query-subvector, codeword⟩ partial dots (m × ksub longs,
+    * inlined into the scoring expression as an array literal), and the
+    * coarse pass over the codes is m table lookups + integer adds per
+    * row via a codegen'd `aggregate` HOF, reading only (id, pq_code,
+    * nrm[, cluster]). On the IVF form the pass reads only the `nprobe`
+    * nearest clusters (a DIRECT `cluster IN (…)` filter — partition
+    * pruning on a [[pqSave]]d tree) and each row adds its cluster's
+    * ⟨q, centroid⟩ offset. Integer LUT + integer sums make the coarse
+    * ranking bit-exact across engines (the oracle gates ride this).
+    * The `topK × overFetch` survivors fetch their floats by id for the
+    * exact rerank (r4-rounded cosine, id tie-break), so quantization
+    * costs recall only past the overFetch margin, never the precision
+    * of returned scores. Degenerate (zero-norm) rows and queries score
+    * NULL and are dropped — a degenerate query returns empty. */
+  def pqTopK(
+      index: PqIndex,
       query: Array[Float],
       topK: Int = 10,
       overFetch: Int = 4,
+      filter: Column = lit(true),
+      nprobe: Int = 4): DataFrame = index.coarse match {
+    case Some(cents) =>
+      require(nprobe >= 1, "nprobe must be >= 1")
+      require(query.length == index.m * index.dsub,
+        s"query dim ${query.length} != index dim ${index.m * index.dsub}")
+      // offsets for the PROBED clusters only, inlined as an
+      // nprobe-branch CASE on the row's cluster; a degenerate query
+      // probes nothing, so the 0 literal only keeps the plan typed
+      val probed = probeClusters(cents, query, nprobe)
+      val offExpr =
+        if (probed.isEmpty) lit(0L)
+        else expr("CASE cluster " + probed.map { c =>
+            s"WHEN $c THEN ${centroidOffset(query, cents(c)._1)}L"
+          }.mkString(" ") + " ELSE CAST(0 AS BIGINT) END")
+      adcServe(index, query, topK, overFetch,
+        index.encoded.filter(filter).filter(col("cluster").isin(probed: _*)),
+        Some(offExpr))
+    case _ => adcServe(index, query, topK, overFetch, index.encoded.filter(filter), None)
+  }
+
+  /** IVF-PQ over a DIRECT index — the FAISS `IVF<k>,PQ<m>` composition
+    * v21 replays: the IVF probe keeps ~nprobe/k of the corpus through a
+    * left-semi join from the IVF assignment, and the kept rows go
+    * through [[pqTopK]]'s ADC scan and exact rerank. Probe selection is
+    * [[probeClusters]] (identical to [[ivfTopK]] and the oracle). */
+  def ivfPqTopK(
+      ivf: IvfIndex,
+      index: PqIndex,
+      query: Array[Float],
+      topK: Int = 10,
+      nprobe: Int = 4,
+      overFetch: Int = 4,
       filter: Column = lit(true)): DataFrame = {
-    val pq = index.pq
-    require(query.length == pq.m * pq.dsub,
-      s"query dim ${query.length} != index dim ${pq.m * pq.dsub}")
-    val qRot = matVecFpQ(index.rq, toDoubles(query))
-    val lut = pqBatchLutRowD(pq.codebook, qRot, pq.m, pq.ksub, pq.dsub)._2
-    pqServeCore(pq.m, pq.ksub, pq.dsub, pq.bits, pq.codebook,
-      pq.idCol, pq.vecCol, pq.corpus, query, topK, overFetch,
-      pq.encoded.filter(filter), fpOffset = None,
-      lutQn = Some((lut, normF(query))))
+    require(ivf.idCol == index.idCol,
+      s"indexes disagree on the id column: ${ivf.idCol} vs ${index.idCol}")
+    require(index.coarse.isEmpty,
+      "ivfPqTopK composes an IVF probe with a DIRECT index; a residual index probes itself")
+    val probedIds = ivf.assigned
+      .filter(col("cluster").isin(probeClusters(ivf.centroids, query, nprobe): _*))
+      .select(col(ivf.idCol))
+    adcServe(index, query, topK, overFetch,
+      index.encoded.filter(filter).join(probedIds, Seq(index.idCol), "left_semi"), None)
   }
 
-  /** [[pqBatchLutRow]] plus the shared NULL-degrade + loud
-    * mixed-dimension policy — object-level (not a local def) so the
-    * distributed arm's closure stays serializable. */
-  private def batchLutRowChecked(
-      cb: Array[Array[Array[Double]]], dim: Int, m: Int, ksub: Int, dsub: Int,
-      keepVectors: Boolean, signs: Array[Int], rq: Array[Array[Long]],
-      qid: Long, v0: Array[Float]): (Long, Array[Float], Double, Array[Long]) = {
-    // a NULL vector (nullable streaming source) degrades like the
-    // empty vector: qn stays 0, the query answers nothing — one bad
-    // row must not kill a serving stream
-    val v = if (v0 == null) Array.empty[Float] else v0
-    if (v.nonEmpty && v.length != dim)
-      throw new IllegalArgumentException(
-        s"mixed-dimension batch vs index: index dimension $dim vs " +
-          s"batch vector of ${v.length} components")
-    // rotated tiers (non-empty `signs` = HD, non-empty `rq` = the
-    // trained quantized rotation): the LUT is built over the rotated
-    // query, the norm stays the ORIGINAL vector's (the ⟨q,c⟩ + ⟨Rq,Rr⟩
-    // serve convention) — NaN degrade as the raw path
-    val (qn, lut) =
-      if (signs.isEmpty && rq.isEmpty) pqBatchLutRow(cb, v, m, ksub, dsub)
-      else {
-        val rot = if (rq.nonEmpty) matVecFpQ(rq, toDoubles(v))
-                  else rotateFp(v, signs)
-        val lutR = pqBatchLutRowD(cb, rot, m, ksub, dsub)._2
-        var ss = 0.0; var i = 0
-        while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-        val n = math.sqrt(ss)
-        (if (n.isNaN) 0.0 else n, lutR)
-      }
-    // callers that never touch the floats again (the incremental-dedup
-    // screen — its exact verify re-reads the batch FRAME) drop them
-    // HERE, before the executors→driver collect moves the bytes
-    // (review r18: at the 1M-row cap a dim-768 batch is ~3 GB of
-    // floats hauled for nothing)
-    (qid, if (keepVectors) v else Array.empty[Float], qn, lut)
+  /** The ADC scan of `scan` (a subset of `index.encoded`) + exact
+    * rerank. `offset`, when present, is a BIGINT column added to every
+    * row's LUT sum before the fixed-point rescale; without it the plan
+    * is exactly the v20/v21 oracle-gated expression. */
+  private def adcServe(
+      index: PqIndex,
+      query: Array[Float],
+      topK: Int,
+      overFetch: Int,
+      scan: DataFrame,
+      offset: Option[Column]): DataFrame = {
+    implicit val sp: SparkSession = scan.sparkSession
+    val m = index.m; val ksub = index.ksub; val bits = index.bits
+    require(topK >= 1 && overFetch >= 1, "topK and overFetch must be >= 1")
+    require(query.length == m * index.dsub,
+      s"query dim ${query.length} != index dim ${m * index.dsub}")
+    // the LUT is inlined as a SQL array literal: bound the expression
+    // text; the batch arm broadcasts its LUTs instead
+    require(m * ksub <= 65536,
+      s"pqTopK inlines the LUT as a literal: m=$m × ksub=$ksub " +
+        s"= ${m * ksub} entries exceeds the 65536 cap — use " +
+        "pqTopKBatch (broadcast LUT) for codebooks this large")
+    val FP = 1L << 24
+    val lut = lutRow(index.codebook, index.rotation, query, m, ksub, index.dsub)._2
+    val lutArr = lut.mkString("array(", "L, ", "L)")
+    val mask = (1L << bits) - 1
+    // the single-word layout keeps the historical expression verbatim;
+    // the wide layout indexes the words array with the kernels' decode
+    val codeField = {
+      val perW = pqPerWord(bits)
+      if (pqNumWords(m, bits) == 1) s"shiftright(pq_code, s * $bits)"
+      else s"shiftright(element_at(pq_code, CAST(s div $perW AS INT) + 1), " +
+        s"CAST((s % $perW) * $bits AS INT))"
+    }
+    val adcSum = expr(
+      s"aggregate(sequence(0, ${m - 1}), CAST(0 AS BIGINT), " +
+        s"(a, s) -> a + element_at($lutArr, " +
+        s"CAST(s * $ksub + ($codeField & $mask) + 1 AS INT)))")
+    val adc = offset.map(_ + adcSum).getOrElse(adcSum)
+    // normF, not lutRow's NaN-degraded norm: a NaN query scores NaN on
+    // every row, and the filter below drops them all
+    val qNorm = normF(query)
+    val coarse = scan
+      .select(col(index.idCol),
+        when(col("nrm") =!= 0.0 && lit(qNorm) =!= 0.0,
+          r4(adc.cast("double") / lit(FP.toDouble) / (col("nrm") * lit(qNorm))))
+          .as("approx_cos"))
+      // NULL scores (zero-norm row or query) and NaN scores (a
+      // NaN-poisoned vector — NaN sorts FIRST under desc) are dropped,
+      // keeping this form result-identical to the batch kernel's
+      .filter(col("approx_cos").isNotNull && !isnan(col("approx_cos")))
+      .orderBy(col("approx_cos").desc, col(index.idCol))
+      .limit(topK * overFetch)
+    val q = sp.range(1).select(typedLit(query).as("__qe"))
+      .select(col("__qe"), VectorFunctions.norm(col("__qe")).as("__qn"))
+    coarse
+      .join(index.corpus.select(col(index.idCol), col(index.vecCol)), Seq(index.idCol))
+      .crossJoin(broadcast(q))
+      .select(col(index.idCol),
+        r4(VectorFunctions.dot(col(index.vecCol), col("__qe")) /
+          (VectorFunctions.norm(col(index.vecCol)) * col("__qn"))).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col(index.idCol))
+      .limit(topK)
   }
 
-  /** Collect a query/ingest batch with its per-query integer ADC LUTs —
-    * the driver-mediated broadcast contract shared by [[pqTopKBatch]]
-    * and [[pqIncrementalNearDup]]. LUT construction runs as a
-    * DISTRIBUTED map over the batch frame by default (r17 verdict #5):
-    * one broadcast of the m × ksub × dsub codebook, m × ksub × dsub
-    * flops per query on the executors, and the driver collects the
-    * SAME bytes it would have collected anyway (the float vectors ride
-    * along for the exact-rerank frame) plus the packed LUT longs —
-    * zero driver flops. `spark.graft.pq.batchLut = driver` keeps the
-    * pre-r18 driver loop as the A/B baseline. Measured honestly at a
-    * 10k-query batch (`results/pq_sf1_r18.json`): distributed 4.57 s
-    * vs driver 4.12 s — at the oracle dials (m·ksub·dsub = 1k flops
-    * per query) the driver loop is NOT a bottleneck and the extra
-    * Spark stage costs ~0.45 s; the distributed default is the
-    * COORDINATOR-OFFLOAD shape (at the 1M-query cap, or large m·ksub,
-    * the single-threaded driver loop serializes what executors
-    * parallelize — and the overhead amortizes), not a local win.
-    * Both arms call [[pqBatchLutRow]], so they are bit-identical by
-    * construction.
-    * Degenerate (empty, zero, NaN-poisoned, NULL) vectors keep qn = 0
-    * and are skipped by every scan row. Mixed dimensions are loud
-    * (from the executor in the distributed arm, as [[pqEncode]]).
-    * Both caps are validated against the COLLECTED length (the count()
-    * is a separate evaluation of a possibly-nondeterministic source). */
-  private def collectBatchLuts(
-      codebook: Array[Array[Array[Double]]],
-      m: Int, ksub: Int, dsub: Int,
+  /** A query/ingest batch as the batch kernels read it, broadcast once:
+    * per query its id, original norm (0 = answers nothing), m × ksub
+    * LUT entries at `luts(q × m·ksub)`, and on the IVF form its probed
+    * clusters' ⟨q, centroid⟩ offsets in (q, probe-slot) layout plus a
+    * ⌈k/64⌉-word probe bitmask (`words` per query). */
+  private final case class PqBatch(
+      ids: Array[Long], qns: Array[Double], luts: Array[Long],
+      offs: Array[Long], masks: Array[Long], words: Int, nprobe: Int)
+
+  /** Collect a query/ingest batch into a [[PqBatch]]. The LUTs are built
+    * in a DISTRIBUTED map over the frame (one codebook broadcast; the
+    * driver collects the packed longs, plus the floats when
+    * `keepVectors` — the batch rerank and the IVF probe need them).
+    * Degenerate (empty, zero, NaN, NULL) vectors keep qn = 0 and probe
+    * nothing. Mixed dimensions are loud, from the executor (callers see
+    * the IllegalArgumentException wrapped in a SparkException). Every
+    * cap is checked against the COLLECTED length. */
+  private def collectBatch(
+      index: PqIndex,
       frame: DataFrame,
       idColName: String,
       vecColName: String,
+      nprobe: Int,
       opName: String,
-      keepVectors: Boolean = true,
-      signs: Array[Int] = Array.empty, // non-empty = HD-rotated LUTs
-      rq: Array[Array[Long]] = Array.empty) // non-empty = trained-R LUTs
-      : (Array[(Long, Array[Float])], Array[Long], Array[Double], Array[Long]) = {
+      keepVectors: Boolean): (Array[(Long, Array[Float])], PqBatch) = {
     val sp = frame.sparkSession
     import sp.implicits._
+    val m = index.m; val ksub = index.ksub; val dsub = index.dsub
     val dim = m * dsub
     val stride = m * ksub
     val nPre = frame.select(col(idColName)).count()
     require(nPre <= maxExactRows,
       s"$opName got $nPre batch rows — the broadcast batch side is " +
         s"capped at $maxExactRows; chunk the batch")
-    val mode = sp.conf.getOption("spark.graft.pq.batchLut").getOrElse("distributed")
-    require(mode == "distributed" || mode == "driver",
-      s"spark.graft.pq.batchLut must be distributed or driver, got '$mode'")
-    val src = frame.select(col(idColName).cast("long"), col(vecColName))
+    val keep = keepVectors || index.coarse.isDefined
+    val rot = index.rotation
+    val bcCb = sp.sparkContext.broadcast(index.codebook)
+    val collected = frame.select(col(idColName).cast("long"), col(vecColName))
       .as[(Long, Array[Float])]
-    val mLoc = m; val ksubLoc = ksub; val dsubLoc = dsub
-    val dimLoc = dim
-    val keepLoc = keepVectors
-    val signsLoc = signs
-    val rqLoc = rq
-    val collected: Array[(Long, Array[Float], Double, Array[Long])] =
-      if (mode == "driver")
-        src.collect().map { case (q, v) =>
-          batchLutRowChecked(codebook, dimLoc, mLoc, ksubLoc, dsubLoc, keepLoc,
-            signsLoc, rqLoc, q, v)
-        }
-      else {
-        val bcCb = sp.sparkContext.broadcast(codebook)
-        // the closure captures ONLY the broadcast handle + primitive
-        // dims — a local helper def here captured the enclosing frame
-        // (whose DataFrames are not serializable)
-        val out = src.map { case (q, v) =>
-          batchLutRowChecked(bcCb.value, dimLoc, mLoc, ksubLoc, dsubLoc, keepLoc,
-            signsLoc, rqLoc, q, v)
-        }.collect()
-        bcCb.destroy() // dead once collected (the advice-r17 rule)
-        out
-      }
+      .map { case (q, v0) =>
+        // a NULL vector (nullable streaming source) degrades like the
+        // empty one: one bad row must not kill a serving stream
+        val v = if (v0 == null) Array.empty[Float] else v0
+        if (v.nonEmpty && v.length != dim)
+          throw new IllegalArgumentException(
+            s"mixed-dimension batch vs index: index dimension $dim vs " +
+              s"batch vector of ${v.length} components")
+        val (qn, lut) = lutRow(bcCb.value, rot, v, m, ksub, dsub)
+        (q, if (keep) v else Array.empty[Float], qn, lut)
+      }.collect()
+    bcCb.destroy()
     val nQ = collected.length
     require(nQ <= maxExactRows && nQ.toLong * stride <= Int.MaxValue,
       s"$opName collected $nQ batch rows × $stride LUT entries — over the " +
         s"broadcast cap ($maxExactRows rows, ${Int.MaxValue} LUT longs); " +
         "chunk the batch")
-    val qids = new Array[Long](nQ)
-    val qns = new Array[Double](nQ)
+    val qns = collected.map(_._3)
     val luts = new Array[Long](nQ * stride)
-    var j = 0
-    while (j < nQ) {
-      qids(j) = collected(j)._1
-      qns(j) = collected(j)._3
+    collected.indices.foreach { j =>
       System.arraycopy(collected(j)._4, 0, luts, j * stride, stride)
-      j += 1
     }
-    (collected.map(t => (t._1, t._2)), qids, qns, luts)
+    val cents = index.coarse.getOrElse(Array.empty[(Array[Double], Double)])
+    val words = (cents.length + 63) / 64
+    require(nQ.toLong * nprobe <= Int.MaxValue && nQ.toLong * words <= Int.MaxValue,
+      s"$opName: $nQ queries × $nprobe offsets (or × $words mask words) " +
+        "exceeds the broadcast layout; chunk the batch")
+    val offs = new Array[Long](if (cents.isEmpty) 0 else nQ * nprobe)
+    val masks = new Array[Long](nQ * words)
+    if (cents.nonEmpty) collected.indices.foreach { j =>
+      if (qns(j) != 0.0)
+        probeClusters(cents, collected(j)._2, nprobe).zipWithIndex.foreach {
+          case (cl, slot) =>
+            masks(j * words + cl / 64) |= 1L << (cl % 64)
+            offs(j * nprobe + slot) = centroidOffset(collected(j)._2, cents(cl)._1)
+        }
+    }
+    (collected.map(t => (t._1, t._2)),
+      PqBatch(collected.map(_._1), qns, luts, offs, masks, words, nprobe))
   }
 
-  /** BATCHED ANN top-k through a [[PqIndex]] — the serving-throughput
-    * form of [[pqTopK]]: a whole DataFrame of query vectors resolves in
-    * ONE distributed pass. Each query's integer ADC LUT is computed in
-    * a distributed map over the query frame (broadcast codebook —
-    * m × ksub × dsub flops per query, never a driver loop) and rides
-    * the broadcast query row into the scan; the coarse pass is then
-    * corpus × queries pairs at m table lookups + integer adds each,
-    * over the ~24 B/row encoded frame. PQ-flat scans the WHOLE corpus
-    * per query BY DESIGN — it is the bandwidth-floor tier; compose
-    * with the IVF probe ([[ivfPqTopK]]'s restriction) when row pruning
-    * is wanted too. The per-query coarse cut (topK × overFetch,
-    * rounded-approx order, id tiebreak) flows through the
-    * [[partialTopK]] heap combiner exactly like the IVF batch arms;
-    * survivors fetch their floats by id for the exact rerank. Returns
-    * (queryIdCol, idCol, cos_sim, rank), rank 1..topK per query. NULL
-    * coarse scores drop — a degenerate query produces no rows, the
-    * batch counterpart of [[pqTopK]]'s empty answer. Batches beyond
-    * [[maxExactRows]] queries are refused loudly (the broadcast
-    * contract all batch serving arms share — chunk above it).
-    *
-    * ==The coarse pass is a FLAT LUT SCAN, not a join== — the r13
-    * KernelShapeBench lesson applied a third time: a first revision
-    * scored corpus × queries through a broadcast crossJoin and the
-    * codegen'd `aggregate` HOF, and measured 8.5 ms/query at sf1
-    * (per-join-row overhead, not arithmetic — the same shape that
-    * cost the IVF-SQ8 arm 51 s vs 12.6 s at sf10). This form
-    * broadcasts the per-query LUTs as ONE flat long array, streams
-    * each encoded partition through a tight unpack-lookup-add loop
-    * with bounded per-query heaps (the [[partialTopK]] combiner fused
-    * into the scan), and emits only ≤ partitions × queries × cut
-    * rows. Result-identical to the join form by construction (same
-    * integer adc, same r4 rounding, same heap order) — pinned by the
-    * batch==per-query spec and the v22 oracle gate, and measured
-    * 15× faster (8.5 → 0.57 ms/query, `results/pq_sf1_r17.json`;
-    * streaming 1k-row micro-batches 10.7 → 1.19 s, parity with the
-    * IVF arms, `results/pq_stream_sf1_r17.json`). At sf10
-    * (`results/pq_sf10_r17.json`, 171k corpus, 28,571 queries): 2.11
-    * ms/query with NO row pruning — 4.2× the full exact float scan on
-    * the same fixture (249.7 s, the v16 artifact) from bytes +
-    * integer math alone; at rest 2.6 MB vs 12.7 MB SQ8 vs 44 MB
-    * float. Compose with IVF when row pruning is wanted too.
-    * Per-partition heap state is queries × topK × overFetch entries —
-    * the documented cost of the driver-mediated batch contract.
-    *
-    * Error surface (advice r18): the per-query LUTs are computed in a
-    * DISTRIBUTED map ([[collectBatchLuts]]), so a mixed-dimension query
-    * batch fails on an EXECUTOR — callers see the
-    * IllegalArgumentException wrapped in a SparkException (match on the
-    * message chain, not the exception class). */
+  /** What a batch scan does with each scored (query, row) pair. */
+  private abstract class AdcSink[O] {
+    def offer(q: Int, nid: Long, score: Double): Unit
+    /** Output due once a row's pairs are offered. */
+    def afterRow(): Iterator[O]
+    /** Output due at the end of the partition. */
+    def finish(): Iterator[O]
+  }
+
+  /** Bounded per-query heaps of the `keep` best rows (the
+    * [[partialTopK]] combiner fused into the scan). */
+  private final class HeapSink(ids: Array[Long], keep: Int)
+      extends AdcSink[(Long, Long, Double)] {
+    private val heaps = Array.fill(ids.length)(
+      scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapWorst))
+    def offer(q: Int, nid: Long, score: Double): Unit =
+      heapOffer(heaps(q), score, nid, keep)
+    def afterRow(): Iterator[(Long, Long, Double)] = Iterator.empty
+    def finish(): Iterator[(Long, Long, Double)] =
+      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
+        h.iterator.map { case (sc, nid) => (ids(q), nid, sc) }
+      }
+  }
+
+  /** Threshold admission: every (batch row, corpus row) pair whose
+    * approximate cosine reaches `bound`, emitted row by row. */
+  private final class AdmitSink(ids: Array[Long], bound: Double)
+      extends AdcSink[(Long, Long)] {
+    private val hits = Array.newBuilder[(Long, Long)]
+    private var n = 0
+    def offer(q: Int, nid: Long, score: Double): Unit =
+      if (!score.isNaN && score >= bound) { hits += ((ids(q), nid)); n += 1 }
+    def afterRow(): Iterator[(Long, Long)] =
+      if (n == 0) Iterator.empty
+      else { n = 0; val out = hits.result(); hits.clear(); out.iterator }
+    def finish(): Iterator[(Long, Long)] = Iterator.empty
+  }
+
+  /** The batch ADC kernel: ONE pass over `index.encoded` scoring every
+    * live row against every batch query — unpack the row's m codes
+    * once, then m LUT adds per (row, query), rounded exactly like the
+    * expression form (so batch == per-query, pinned by the specs and
+    * the v22/v25 oracles). The IVF form scores a row only against
+    * queries whose probe mask holds its cluster (row pruning without a
+    * join) and adds the (query, cluster) offset first. This is a FLAT
+    * scan, not a join: the broadcast-crossJoin form measured 8.5 vs
+    * 0.57 ms/query at sf1 (`results/pq_sf1_r17.json`). */
+  private def adcScan[O: org.apache.spark.sql.Encoder](
+      index: PqIndex, bc: org.apache.spark.broadcast.Broadcast[PqBatch])(
+      sink: PqBatch => AdcSink[O]): Dataset[O] = {
+    val m = index.m; val ksub = index.ksub; val bits = index.bits
+    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
+    val stride = m * ksub
+    if (index.coarse.isEmpty)
+      scanEncoded3[O](index.encoded, index.idCol, nW) { it =>
+        val b = bc.value
+        val out = sink(b)
+        val codes = new Array[Int](m)
+        it.flatMap { case (nid, words, nrm) =>
+          if (nrm != 0.0) {
+            unpackPqCodes(words, codes, m, bits, perW)
+            var q = 0
+            while (q < b.ids.length) {
+              val qn = b.qns(q)
+              if (qn != 0.0)
+                out.offer(q, nid, adcCos(lutSum(b.luts, q * stride, codes, m, ksub), nrm, qn))
+              q += 1
+            }
+          }
+          out.afterRow()
+        } ++ out.finish()
+      }
+    else
+      scanEncoded4[O](index.encoded, index.idCol, nW) { it =>
+        val b = bc.value
+        val out = sink(b)
+        val codes = new Array[Int](m)
+        it.flatMap { case (nid, words, nrm, cl) =>
+          if (nrm != 0.0 && cl >= 0) {
+            var unpacked = false
+            var q = 0
+            while (q < b.ids.length) {
+              val qn = b.qns(q)
+              if (qn != 0.0 &&
+                  (b.masks(q * b.words + cl / 64) & (1L << (cl % 64))) != 0L) {
+                if (!unpacked) { unpackPqCodes(words, codes, m, bits, perW); unpacked = true }
+                val off = b.offs(q * b.nprobe + probeSlot(b.masks, q * b.words, cl))
+                out.offer(q, nid, adcCos(off + lutSum(b.luts, q * stride, codes, m, ksub), nrm, qn))
+              }
+              q += 1
+            }
+          }
+          out.afterRow()
+        } ++ out.finish()
+      }
+  }
+
+  private def lutSum(
+      lt: Array[Long], base: Int, codes: Array[Int], m: Int, ksub: Int): Long = {
+    var adc = 0L
+    var s = 0
+    while (s < m) { adc += lt(base + s * ksub + codes(s)); s += 1 }
+    adc
+  }
+
+  /** The r4-rounded approximate cosine of an integer ADC dot. */
+  private def adcCos(adc: Long, nrm: Double, qn: Double): Double =
+    math.floor(adc.toDouble / (1L << 24) / (nrm * qn) * 10000 + 0.5) / 10000.0
+
+  /** BATCHED ANN top-k — the serving-throughput form of [[pqTopK]]: a
+    * whole frame of query vectors resolves in ONE pass over the codes
+    * ([[adcScan]] with bounded per-query heaps), then the per-query cut
+    * (topK × overFetch, approx order, id tie-break) fetches its floats
+    * by id for the exact rerank. Returns (queryIdCol, idCol, cos_sim,
+    * rank), rank 1..topK per query; a degenerate query produces no
+    * rows. Batches beyond [[maxExactRows]] queries are refused (chunk
+    * with [[pqTopKBatchChunked]]). At sf10 (`results/pq_sf10_r17.json`,
+    * 171k corpus, 28,571 queries) the direct form read 2.11 ms/query
+    * with no row pruning. */
   def pqTopKBatch(
       index: PqIndex,
       queries: DataFrame,
       queryIdCol: String,
       queryVecCol: String,
       topK: Int = 10,
-      overFetch: Int = 4): DataFrame =
-    pqTopKBatchImpl(index, queries, queryIdCol, queryVecCol, topK, overFetch,
-      signs = Array.empty, opName = "pqTopKBatch")
-
-  /** Batched serving for the ROTATED tier — [[pqTopKBatch]]'s kernel
-    * verbatim with every per-query LUT built over the HD-rotated query
-    * (distributed, inside [[collectBatchLuts]]) and norms kept
-    * original; the kernel itself never changes (it only consumes
-    * LUTs). Chunked form: [[rotPqTopKBatchChunked]]. */
-  def rotPqTopKBatch(
-      index: RotatedPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      overFetch: Int = 4): DataFrame =
-    pqTopKBatchImpl(index.pq, queries, queryIdCol, queryVecCol, topK,
-      overFetch, signs = index.signs, opName = "rotPqTopKBatch")
-
-  /** Batched serving for the TRAINED-OPQ tier (v37) —
-    * [[pqTopKBatch]]'s kernel verbatim with every per-query LUT built
-    * over the [[matVecFpQ]]-rotated query (distributed, inside
-    * [[collectBatchLuts]]) and norms kept original; the kernel itself
-    * never changes (it only consumes LUTs) — exactly how
-    * [[rotPqTopKBatch]] closes the HD tier's throughput arm, one
-    * rotation rung up. */
-  def opqPqTopKBatch(
-      index: OpqPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      overFetch: Int = 4): DataFrame =
-    pqTopKBatchImpl(index.pq, queries, queryIdCol, queryVecCol, topK,
-      overFetch, signs = Array.empty, opName = "opqPqTopKBatch",
-      rq = index.rq)
-
-  private def pqTopKBatchImpl(
-      index: PqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int,
-      overFetch: Int,
-      signs: Array[Int],
-      opName: String,
-      rq: Array[Array[Long]] = Array.empty): DataFrame = {
+      overFetch: Int = 4,
+      nprobe: Int = 4): DataFrame = {
     implicit val sp: SparkSession = index.encoded.sparkSession
     import sp.implicits._
-    require(topK >= 1 && overFetch >= 1, "topK and overFetch must be >= 1")
-    requireDistinctIdCols(opName, queryIdCol, index.idCol)
-    val FP = 1L << 24
-    val mLoc = index.m; val ksubLoc = index.ksub; val bitsLoc = index.bits
-    val stride = mLoc * ksubLoc
-    val (qRows, qids, qns, luts) =
-      collectBatchLuts(index.codebook, index.m, index.ksub, index.dsub,
-        queries, queryIdCol, queryVecCol, opName, signs = signs, rq = rq)
-    val bc = sp.sparkContext.broadcast((qids, qns, luts))
-    // registered like the quantized arm's PackedBatch broadcast: under
-    // withServingResources the caller's release() destroys it after
-    // the batch's answers are materialized; otherwise the process-wide
-    // queue owns it (review: the LUT table is ~nQ × stride longs —
-    // unreclaimed, a long-running pqServeStream would accumulate one
-    // per micro-batch)
+    require(topK >= 1 && overFetch >= 1 && nprobe >= 1,
+      "topK, overFetch and nprobe must be >= 1")
+    requireDistinctIdCols("pqTopKBatch", queryIdCol, index.idCol)
+    val (qRows, b) = collectBatch(index, queries, queryIdCol, queryVecCol, nprobe,
+      "pqTopKBatch", keepVectors = true)
+    val bc = sp.sparkContext.broadcast(b)
+    // freed by the caller's withServingResources release, else by the
+    // process-wide queue — a long-running stream would otherwise keep
+    // one LUT table per micro-batch
     registerServingCleanup(() => bc.destroy(), Some(bc))
     val keep = topK * overFetch
-    val perW = pqPerWord(index.bits)
-    // the flat scan: unpack each row's m codes ONCE, then one LUT add
-    // per (query, subspace); bounded per-query heaps keep the cut
-    val cand = scanEncoded3[(Long, Long, Double)](
-        index.encoded, index.idCol, pqNumWords(index.m, index.bits)) { it =>
-        val (ids, ns, lt) = bc.value
-        val heaps = Array.fill(ids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapWorst))
-        val codes = new Array[Int](mLoc)
-        it.foreach { case (nid, words, nrm) =>
-          if (nrm != 0.0) {
-            unpackPqCodes(words, codes, mLoc, bitsLoc, perW)
-            var q = 0
-            while (q < ids.length) {
-              val qn = ns(q)
-              if (qn != 0.0) {
-                var adc = 0L
-                val base = q * stride
-                var s2 = 0
-                while (s2 < mLoc) {
-                  adc += lt(base + s2 * ksubLoc + codes(s2)); s2 += 1
-                }
-                heapOffer(heaps(q),
-                  math.floor(adc.toDouble / FP / (nrm * qn) * 10000 + 0.5) / 10000.0,
-                  nid, keep)
-              }
-              q += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qj) =>
-          h.iterator.map { case (sc, nid) => (ids(qj), nid, sc) }
-        }
-      }
+    val cand = adcScan(index, bc)(bb => new HeapSink(bb.ids, keep))
       .toDF("__qid", "__nid", "__score")
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__qid")).orderBy(col("__score").desc, col("__nid"))
@@ -1948,8 +1407,8 @@ object SimilaritySearch {
       .withColumn("__crank", row_number().over(win))
       .filter(col("__crank") <= keep)
       .select("__qid", "__nid")
-    val qf = sp.createDataset(qRows.toSeq.zipWithIndex.map { case ((qid, v), i) =>
-        (qid, v, qns(i))
+    val qf = sp.createDataset(qRows.toSeq.zip(b.qns).map { case ((qid, v), qn) =>
+        (qid, v, qn)
       }).toDF("__qid", "__qv", "__qn")
     val rr = cut
       .join(index.corpus.select(col(index.idCol).cast("long").as("__nid"),
@@ -1966,19 +1425,79 @@ object SimilaritySearch {
         col("__score").as("cos_sim"), col("rank").cast("long").as("rank"))
   }
 
-  /** Persist a [[PqIndex]] — codebook + encoded codes — under the SAME
-    * crash-consistent versioned layout as [[ivfSave]] (shared
-    * [[listVersions]]/[[liveVersion]] resolution, meta.json written
-    * last as the completeness marker, single-tiny-file CURRENT commit,
-    * GC keyed to the previously-LIVE version): `dir/v<N>/{codebook,
-    * encoded, meta.json}`. Codebook doubles round-trip bit-exactly
-    * through parquet, so a loaded index serves bit-identically. The
-    * float corpus is deliberately NOT persisted: PQ codes are an index
-    * OVER a corpus the caller already stores (persisting 24 B/row
-    * codes next to a 256 B/row float copy would defeat the tier's
-    * point) — [[pqLoad]] takes the corpus frame and re-binds the
-    * rerank to it. Same writer/reader contract as [[ivfSave]]: one
-    * writer per dir; a reader is safe through one refresh cycle. */
+  /** [[pqTopKBatch]] over hash-disjoint query chunks
+    * ([[chunkedUnion]]), so no serving micro-batch is refused for size.
+    * The chunk budget is derated by every per-query broadcast layout —
+    * the LUT stride, the nprobe offsets and the ⌈k/64⌉ mask words — so
+    * a chunk never trips the inner op's Int-capacity guard. */
+  def pqTopKBatchChunked(
+      index: PqIndex,
+      queries: DataFrame,
+      queryIdCol: String,
+      queryVecCol: String,
+      topK: Int = 10,
+      overFetch: Int = 4,
+      nprobe: Int = 4,
+      chunkTarget: Long = maxExactRows / 2): DataFrame = {
+    val k = index.coarse.map(_.length).getOrElse(0)
+    val lutCap = Int.MaxValue.toLong / (index.m * index.ksub)
+    val offCap = Int.MaxValue.toLong / math.max(1, nprobe)
+    val maskCap = Int.MaxValue.toLong / math.max(1, (k + 63) / 64)
+    chunkedUnion(queries, queryIdCol,
+      math.max(1L, Seq(chunkTarget, lutCap, offCap, maskCap).min)) { chunk =>
+      pqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK, overFetch, nprobe)
+    }
+  }
+
+  /** Incremental (delta-vs-corpus) dedup screened through the codes —
+    * the [[incrementalNearDup]] (v12) analog when the standing corpus's
+    * RAM-resident form is PQ: each ingest row is ADC-screened against
+    * `index.encoded` ([[adcScan]] with threshold admission; on the IVF
+    * form only against its `nprobe` nearest clusters), and only
+    * admitted pairs touch floats for the exact verify. Same contract as
+    * v12: (idCol, n_dups, best_sim, status). `margin` is a real RECALL
+    * dial here (a true dup whose ADC estimate falls below threshold −
+    * margin is not seen; so is, on the IVF form, a dup outside the
+    * probe), but the verify never admits a false positive. */
+  def pqIncrementalNearDup(
+      index: PqIndex,
+      batch: DataFrame,
+      threshold: Double = 0.45,
+      margin: Double = 0.2,
+      nprobe: Int = 4,
+      corpusSizeHint: Long = -1L): DataFrame = {
+    implicit val sp: SparkSession = index.encoded.sparkSession
+    import sp.implicits._
+    require(margin >= 0.0,
+      s"margin must be >= 0, got $margin — a negative margin would raise the " +
+        "coarse bound ABOVE the threshold and silently drop true dups")
+    require(nprobe >= 1, "nprobe must be >= 1")
+    // the exact verify re-reads the batch frame, so only the IVF probe
+    // keeps the floats
+    val (_, b) = collectBatch(index, batch, index.idCol, index.vecCol, nprobe,
+      "pqIncrementalNearDup", keepVectors = false)
+    val bc = sp.sparkContext.broadcast(b)
+    registerServingCleanup(() => bc.destroy(), Some(bc))
+    val bound = threshold - margin
+    val admitted = adcScan(index, bc)(bb => new AdmitSink(bb.ids, bound))
+      .toDF("__bid", "__cid")
+    statusAdmitted(admitted, index.corpus, batch, index.idCol, index.vecCol,
+      threshold, corpusSizeHint)
+  }
+
+  /** Persist a [[PqIndex]] under the SAME crash-consistent versioned
+    * layout as [[ivfSave]] (meta.json written last as the completeness
+    * marker, single-tiny-file CURRENT commit, GC keyed to the
+    * previously-LIVE version): `dir/v<N>/{codebook, [centroids],
+    * [rotation], encoded, meta.json}`. `meta.kind` is [[PqIndex.kind]].
+    * The IVF form's codes are partitioned by `cluster`, so a probe's
+    * `cluster IN (…)` filter lists only nprobe directories. The
+    * Hadamard diagonal is not stored (a pure function of the
+    * dimension); a trained rotation is, as doubles. Doubles round-trip
+    * bit-exactly, so a loaded index serves bit-identically. The float
+    * corpus is NOT persisted — [[pqLoad]] re-binds the rerank to the
+    * caller's table. One writer per dir; a reader is safe through one
+    * refresh cycle. */
   def pqSave(index: PqIndex, dir: String): Unit = {
     val sp = index.encoded.sparkSession
     import sp.implicits._
@@ -1994,282 +1513,62 @@ object SimilaritySearch {
     } yield (s, c, index.codebook(s)(c).toSeq)
     sp.createDataset(cbRows).toDF("s", "c", "codeword")
       .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebook")
-    index.encoded.write.mode("overwrite").parquet(s"$vdir/encoded")
+    index.coarse.foreach { cents =>
+      sp.createDataset(cents.zipWithIndex.map { case ((comp, nrm), c) =>
+          (c, comp.toSeq, nrm)
+        }.toSeq).toDF("c", "comp", "nrm")
+        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
+    }
+    index.rotation match {
+      case PqRotation.Trained(r, _) =>
+        sp.createDataset(r.zipWithIndex.map { case (row, j) => (j, row.toSeq) }.toSeq)
+          .toDF("j", "rw")
+          .coalesce(1).write.mode("overwrite").parquet(s"$vdir/rotation")
+      case _ =>
+    }
+    val codes = index.encoded.write.mode("overwrite")
+    (if (index.coarse.isDefined) codes.partitionBy("cluster") else codes)
+      .parquet(s"$vdir/encoded")
+    val k = index.coarse.map(c => s""","k":${c.length}""").getOrElse("")
     val meta =
-      s"""{"kind":"pq","idCol":"${jsonStr(index.idCol)}","vecCol":"${jsonStr(index.vecCol)}","m":${index.m},"ksub":${index.ksub},"dsub":${index.dsub},"bits":${index.bits}}"""
+      s"""{"kind":"${index.kind}","idCol":"${jsonStr(index.idCol)}","vecCol":"${jsonStr(index.vecCol)}","m":${index.m},"ksub":${index.ksub},"dsub":${index.dsub},"bits":${index.bits}$k}"""
     writeSmallFile(fs, s"$vdir/meta.json", meta) // version-complete marker
     commitVersionAndGc(fs, dir, next, prevLive, versions, "pqSave")
   }
 
   /** Load an index [[pqSave]] wrote, re-binding the exact rerank to
-    * `corpus` (the caller's float table — must carry the saved id and
-    * vector columns). Resolves the live version through
-    * [[ivfCurrentPath]] (one resolution definition for every index
-    * kind this file persists). Serving from the loaded index is
-    * bit-identical to the in-memory one: the codebook and the integer
-    * codes both round-trip exactly. */
-  def pqLoad(spark: SparkSession, rootDir: String, corpus: DataFrame): PqIndex = {
+    * `corpus` (the caller's float table, carrying the saved id and
+    * vector columns). The tree's `kind` decides the rotation and coarse
+    * layer; a legacy tree without one loads as `pq`. `kind`, when
+    * given, is the only kind the caller accepts — a serving stream pins
+    * the kind of its first load, so a refresh that swaps in codes under
+    * another rotation or coarse layer is refused, not served. */
+  def pqLoad(
+      spark: SparkSession, rootDir: String, corpus: DataFrame,
+      kind: Option[String] = None): PqIndex = {
+    import spark.implicits._
     val dir = ivfCurrentPath(spark, rootDir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
-    val meta = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      om.readTree(in)
-    } finally in.close()
+    val meta = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    finally in.close()
     require(meta.has("m") && meta.has("ksub"),
       s"$dir/meta.json is not a PQ index (missing m/ksub — an IVF tree?)")
-    // a RESIDUAL tree must never load through the raw path: its codes
-    // are meaningless without the per-cluster offsets, and this loader
-    // would silently drop the cluster column and serve wrong scores.
-    // Legacy (pre-r18) trees carry no kind and are raw by construction.
-    require(!meta.has("kind") || meta.get("kind").asText() == "pq",
-      s"$dir is a '${meta.get("kind").asText()}' index — use residualPqLoad " +
-        "(raw pqLoad would serve residual codes without their centroid offsets)")
-    val idCol = meta.get("idCol").asText()
-    val vecCol = meta.get("vecCol").asText()
-    val m = meta.get("m").asInt()
-    val ksub = meta.get("ksub").asInt()
-    val dsub = meta.get("dsub").asInt()
-    val bits = meta.get("bits").asInt()
-    import spark.implicits._
-    val cb = Array.ofDim[Array[Double]](m, ksub)
-    spark.read.parquet(s"$dir/codebook")
-      .select(col("s").cast("int"), col("c").cast("int"), col("codeword"))
-      .as[(Int, Int, Array[Double])]
-      .collect()
-      .foreach { case (s, c, w) =>
-        require(s >= 0 && s < m && c >= 0 && c < ksub,
-          s"codebook row ($s, $c) outside m=$m × ksub=$ksub")
-        cb(s)(c) = w
-      }
-    require(cb.forall(_.forall(_ != null)),
-      s"codebook parquet is missing codewords (m=$m × ksub=$ksub)")
-    val encoded = spark.read.parquet(s"$dir/encoded")
-      .select(col(idCol), col("pq_code"), col("nrm"))
-    requirePqCodeType(encoded, m, bits, "pqLoad")
-    PqIndex(m, ksub, dsub, bits, cb.map(_.map(_.clone())), encoded,
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-  }
-
-  /** Persist a [[ResidualPqIndex]] — codebook + centroids + encoded
-    * codes — under the SAME crash-consistent versioned layout as
-    * [[pqSave]]/[[ivfSave]]: `dir/v<N>/{codebook, centroids, encoded,
-    * meta.json}`, meta written last as the completeness marker,
-    * `kind: "residual-pq"` so the raw loader refuses the tree loudly
-    * instead of serving residual codes without their offsets. The
-    * coarse CENTROIDS persist alongside (k rows — the residuals are
-    * meaningless against any other quantizer); the float corpus stays
-    * external, as in [[pqSave]]. Doubles round-trip bit-exactly, so a
-    * loaded index serves bit-identically — spec'd. */
-  def residualPqSave(index: ResidualPqIndex, dir: String): Unit =
-    residualPqSaveImpl(index, dir, kind = "residual-pq", op = "residualPqSave")
-
-  /** Persist a TRAINED-OPQ index (v35) — [[pqSave]]'s exact tree with
-    * `kind: "opq-pq"` plus one extra parquet, `rotation(j, rw)`: the
-    * trained R's rows as doubles (bit-exact parquet round-trip; the
-    * quantized serving form re-derives on load via
-    * [[quantizeRotation]], which is deterministic, so a loaded index
-    * serves bit-identically). Every other loader refuses the tree
-    * loudly — trained-rotated codes served without THIS R would be
-    * silent garbage, the same argument as the HD tiers' kind guards. */
-  def opqPqSave(index: OpqPqIndex, dir: String): Unit = {
-    val pq = index.pq
-    val sp = pq.encoded.sparkSession
-    import sp.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val versions = listVersions(fs, dir)
-    val next = versions.map(_ + 1).maxOption.getOrElse(1)
-    val prevLive: Option[Int] = liveVersion(fs, dir)
-    val vdir = s"$dir/v$next"
-    val cbRows = for {
-      s <- 0 until pq.m
-      c <- 0 until pq.ksub
-    } yield (s, c, pq.codebook(s)(c).toSeq)
-    sp.createDataset(cbRows).toDF("s", "c", "codeword")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebook")
-    writeRotation(sp, index.r, s"$vdir/rotation")
-    pq.encoded.write.mode("overwrite").parquet(s"$vdir/encoded")
-    val meta =
-      s"""{"kind":"opq-pq","idCol":"${jsonStr(pq.idCol)}","vecCol":"${jsonStr(pq.vecCol)}","m":${pq.m},"ksub":${pq.ksub},"dsub":${pq.dsub},"bits":${pq.bits}}"""
-    writeSmallFile(fs, s"$vdir/meta.json", meta) // version-complete marker
-    commitVersionAndGc(fs, dir, next, prevLive, versions, "opqPqSave")
-  }
-
-  /** Load an index [[opqPqSave]] wrote, re-binding the exact rerank to
-    * `corpus`. Refuses every other kind loudly; serving is
-    * bit-identical (codebook, codes and the rotation doubles all
-    * round-trip exactly, and the quantized serving form is a
-    * deterministic function of the rotation). */
-  def opqPqLoad(
-      spark: SparkSession, rootDir: String, corpus: DataFrame): OpqPqIndex = {
-    val dir = ivfCurrentPath(spark, rootDir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val meta = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      om.readTree(in)
-    } finally in.close()
-    require(meta.has("kind") && meta.get("kind").asText() == "opq-pq",
-      s"$dir/meta.json is not a trained-OPQ index — use pqLoad/rotPqLoad/" +
-        "residualPqLoad (serving trained-rotated codes without their R " +
-        "would be garbage)")
-    val idCol = meta.get("idCol").asText()
-    val vecCol = meta.get("vecCol").asText()
-    val m = meta.get("m").asInt()
-    val ksub = meta.get("ksub").asInt()
-    val dsub = meta.get("dsub").asInt()
-    val bits = meta.get("bits").asInt()
-    import spark.implicits._
-    val cb = Array.ofDim[Array[Double]](m, ksub)
-    spark.read.parquet(s"$dir/codebook")
-      .select(col("s").cast("int"), col("c").cast("int"), col("codeword"))
-      .as[(Int, Int, Array[Double])]
-      .collect()
-      .foreach { case (s, c, w) =>
-        require(s >= 0 && s < m && c >= 0 && c < ksub,
-          s"codebook row ($s, $c) outside m=$m × ksub=$ksub")
-        cb(s)(c) = w
-      }
-    require(cb.forall(_.forall(_ != null)),
-      s"codebook parquet is missing codewords (m=$m × ksub=$ksub)")
-    val r = readRotation(spark, s"$dir/rotation", m * dsub, "opqPqLoad")
-    val encoded = spark.read.parquet(s"$dir/encoded")
-      .select(col(idCol), col("pq_code"), col("nrm"))
-    requirePqCodeType(encoded, m, bits, "opqPqLoad")
-    OpqPqIndex(r, quantizeRotation(r),
-      PqIndex(m, ksub, dsub, bits, cb.map(_.map(_.clone())), encoded,
-        corpus.select(col(idCol), col(vecCol)), idCol, vecCol))
-  }
-
-  /** Persist a TRAINED-OPQ residual index (v36) — [[residualPqSave]]'s
-    * exact tree (cluster-partitioned codes and all) with `kind:
-    * "opq-residual-pq"` plus the `rotation` parquet; mutual kind
-    * guards with the plain and HD-rotated residual trees. */
-  def opqResidualPqSave(index: OpqResidualPqIndex, dir: String): Unit =
-    residualPqSaveImpl(index.rpq, dir, kind = "opq-residual-pq",
-      op = "opqResidualPqSave", rotation = Some(index.r))
-
-  /** Load an index [[opqResidualPqSave]] wrote; kind-guarded, serving
-    * bit-identical (the quantized serving form re-derives from the
-    * round-tripped rotation doubles). */
-  def opqResidualPqLoad(
-      spark: SparkSession, rootDir: String, corpus: DataFrame): OpqResidualPqIndex = {
-    val rpq = residualPqLoadImpl(spark, rootDir, corpus,
-      kind = "opq-residual-pq", op = "opqResidualPqLoad")
-    val dir = ivfCurrentPath(spark, rootDir)
-    val r = readRotation(spark, s"$dir/rotation", rpq.m * rpq.dsub,
-      "opqResidualPqLoad")
-    OpqResidualPqIndex(r, quantizeRotation(r), rpq)
-  }
-
-  /** The trained rotation's parquet form: one row per output
-    * dimension, (j, rw: ARRAY<DOUBLE>) — doubles round-trip bit-exact
-    * through parquet, so [[quantizeRotation]] of the loaded matrix is
-    * the identical serving matrix. */
-  private def writeRotation(
-      sp: SparkSession, r: Array[Array[Double]], path: String): Unit = {
-    import sp.implicits._
-    sp.createDataset(r.zipWithIndex.map { case (row, j) => (j, row.toSeq) }.toSeq)
-      .toDF("j", "rw")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  private def readRotation(
-      spark: SparkSession, path: String, dim: Int, op: String): Array[Array[Double]] = {
-    import spark.implicits._
-    val out = new Array[Array[Double]](dim)
-    spark.read.parquet(path)
-      .select(col("j").cast("int"), col("rw"))
-      .as[(Int, Array[Double])]
-      .collect()
-      .foreach { case (j, row) =>
-        require(j >= 0 && j < dim && row.length == dim,
-          s"$op: rotation row $j/${row.length} outside dim=$dim — the " +
-            "tree's rotation parquet does not match its meta.json")
-        out(j) = row
-      }
-    require(out.forall(_ != null), s"$op: rotation parquet is missing rows (dim=$dim)")
-    out
-  }
-
-  private def residualPqSaveImpl(
-      index: ResidualPqIndex, dir: String, kind: String, op: String,
-      rotation: Option[Array[Array[Double]]] = None): Unit = {
-    val sp = index.encoded.sparkSession
-    import sp.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val versions = listVersions(fs, dir)
-    val next = versions.map(_ + 1).maxOption.getOrElse(1)
-    val prevLive: Option[Int] = liveVersion(fs, dir)
-    val vdir = s"$dir/v$next"
-    val cbRows = for {
-      s <- 0 until index.m
-      c <- 0 until index.ksub
-    } yield (s, c, index.codebook(s)(c).toSeq)
-    sp.createDataset(cbRows).toDF("s", "c", "codeword")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebook")
-    val centRows = index.centroids.zipWithIndex.map { case ((comp, nrm), c) =>
-      (c, comp.toSeq, nrm)
-    }.toSeq
-    sp.createDataset(centRows).toDF("c", "comp", "nrm")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
-    // the trained tiers ride one extra parquet (before meta — the
-    // completeness marker must cover it)
-    rotation.foreach(r => writeRotation(sp, r, s"$vdir/rotation"))
-    // cluster-partitioned like ivfSave's assigned/quantized trees: the
-    // serve path's probe is a DIRECT `cluster IN (…)` filter, so a
-    // loaded tree answers an nprobe-of-k query by LISTING nprobe
-    // directories — the partition-pruning claim v23's scaladoc makes,
-    // now true of the persisted layout too (r18 verdict #1, plan-pinned)
-    index.encoded.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$vdir/encoded")
-    val meta =
-      s"""{"kind":"$kind","idCol":"${jsonStr(index.idCol)}","vecCol":"${jsonStr(index.vecCol)}","m":${index.m},"ksub":${index.ksub},"dsub":${index.dsub},"bits":${index.bits},"k":${index.centroids.length}}"""
-    writeSmallFile(fs, s"$vdir/meta.json", meta) // version-complete marker
-    commitVersionAndGc(fs, dir, next, prevLive, versions, op)
-  }
-
-  /** Load an index [[residualPqSave]] wrote, re-binding the exact
-    * rerank to `corpus`. Refuses raw-PQ and IVF trees loudly (the
-    * `kind` marker); serving from the loaded index is bit-identical —
-    * codebook, centroids and codes all round-trip exactly. */
-  def residualPqLoad(
-      spark: SparkSession, rootDir: String, corpus: DataFrame): ResidualPqIndex =
-    residualPqLoadImpl(spark, rootDir, corpus,
-      kind = "residual-pq", op = "residualPqLoad")
-
-  private def residualPqLoadImpl(
-      spark: SparkSession, rootDir: String, corpus: DataFrame,
-      kind: String, op: String): ResidualPqIndex = {
-    val dir = ivfCurrentPath(spark, rootDir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val meta = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      om.readTree(in)
-    } finally in.close()
-    val kindName = kind match {
-      case "residual-pq" => "residual-PQ"
-      case "rot-residual-pq" => "rotated-residual-PQ"
-      case _ => "trained-OPQ residual"
+    val treeKind = if (meta.has("kind")) meta.get("kind").asText() else "pq"
+    require(pqKinds.contains(treeKind), s"$dir is an unknown PQ kind '$treeKind'")
+    kind.foreach { k =>
+      require(k == treeKind,
+        s"$dir is a '$treeKind' index, not the '$k' index this reader serves — " +
+          "codes under another rotation or coarse layer are mutually garbage")
     }
-    require(meta.has("kind") && meta.get("kind").asText() == kind,
-      s"$dir/meta.json is not a $kindName index ($op reads kind '$kind' only; " +
-        s"got '${if (meta.has("kind")) meta.get("kind").asText() else "<none>"}')" +
-        " — residual codes under different rotations are mutually garbage")
     val idCol = meta.get("idCol").asText()
     val vecCol = meta.get("vecCol").asText()
     val m = meta.get("m").asInt()
     val ksub = meta.get("ksub").asInt()
     val dsub = meta.get("dsub").asInt()
     val bits = meta.get("bits").asInt()
-    val k = meta.get("k").asInt()
-    import spark.implicits._
+    val dim = m * dsub
     val cb = Array.ofDim[Array[Double]](m, ksub)
     spark.read.parquet(s"$dir/codebook")
       .select(col("s").cast("int"), col("c").cast("int"), col("codeword"))
@@ -2282,892 +1581,45 @@ object SimilaritySearch {
       }
     require(cb.forall(_.forall(_ != null)),
       s"codebook parquet is missing codewords (m=$m × ksub=$ksub)")
-    val cents = new Array[(Array[Double], Double)](k)
-    spark.read.parquet(s"$dir/centroids")
-      .select(col("c").cast("int"), col("comp"), col("nrm"))
-      .as[(Int, Array[Double], Double)]
-      .collect()
-      .foreach { case (c, comp, nrm) =>
-        require(c >= 0 && c < k, s"centroid row $c outside k=$k")
-        cents(c) = (comp, nrm)
-      }
-    require(cents.forall(_ != null),
-      s"centroids parquet is missing rows (k=$k)")
-    val encoded = spark.read.parquet(s"$dir/encoded")
-      .select(col(idCol), col("pq_code"), col("nrm"), col("cluster"))
-    requirePqCodeType(encoded, m, bits, op)
-    ResidualPqIndex(m, ksub, dsub, bits, cb.map(_.map(_.clone())), cents,
-      encoded, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-  }
-
-  /** Persist a [[RotatedResidualPqIndex]] — [[residualPqSave]]'s exact
-    * tree (cluster-partitioned codes and all) with `kind:
-    * "rot-residual-pq"`, so every other loader refuses it loudly; the
-    * rotation diagonal re-derives from the dimension on load. */
-  def rotResidualPqSave(index: RotatedResidualPqIndex, dir: String): Unit =
-    residualPqSaveImpl(index.rpq, dir, kind = "rot-residual-pq",
-      op = "rotResidualPqSave")
-
-  /** Load an index [[rotResidualPqSave]] wrote; kind-guarded, serving
-    * bit-identical (codebook, centroids, codes all round-trip exactly;
-    * the diagonal is a pure function of the dimension). */
-  def rotResidualPqLoad(
-      spark: SparkSession, rootDir: String, corpus: DataFrame): RotatedResidualPqIndex = {
-    val rpq = residualPqLoadImpl(spark, rootDir, corpus,
-      kind = "rot-residual-pq", op = "rotResidualPqLoad")
-    requirePowerOf4Dim(rpq.m * rpq.dsub, "rotResidualPqLoad")
-    RotatedResidualPqIndex(rotationSigns(rpq.m * rpq.dsub), rpq)
-  }
-
-  /** The rotated loaders' √dim guard (advice r19): the BUILDERS enforce
-    * a power-of-4 dimension (the exact 2^24·√dim rescale needs √dim a
-    * power of two), so a meta.json whose m × dsub is not one is
-    * corrupted or hand-edited — fail loudly like [[requirePqCodeType]],
-    * never serve a silently non-exact rescale. */
-  private def requirePowerOf4Dim(dim: Int, where: String): Unit = {
-    val rt = math.sqrt(dim.toDouble).toLong
-    require(rt * rt == dim && java.lang.Long.bitCount(rt) == 1,
-      s"$where: meta.json implies dimension $dim, but the rotated tiers " +
-        "require a power-of-4 dimension (√dim a power of two for the " +
-        "exact fixed-point rescale) — the tree's meta is corrupt")
-  }
-
-  /** IVF-PQ — the two pruning axes composed the way billion-vector
-    * systems (the FAISS `IVF<k>,PQ<m>` default) serve: the IVF probe
-    * keeps ~nprobe/k of the corpus, and the kept rows are
-    * ranked by the PQ integer ADC scan (m table lookups per row over
-    * ~24 B/row) before the exact float rerank of the topK × overFetch
-    * survivors. Against the float brute force that is the product of
-    * both reductions — (nprobe/k) of the rows × ~1/10 of the bytes —
-    * which is why this composition is the standard RAM-resident
-    * billion-vector shape. Probe selection reuses [[probeClusters]]
-    * (strict argmax, ties to the lower cluster — identical to
-    * [[ivfTopK]] and the oracle's replay). Here the probed restriction
-    * is a left-semi join from the IVF assignment; a deployment stores
-    * `encoded` cluster-partitioned (the [[ivfSave]] layout) so the
-    * same restriction is file-listing partition pruning instead.
-    * Degenerate queries probe nothing and return empty, matching
-    * [[ivfTopK]]'s convention. */
-  def ivfPqTopK(
-      ivf: IvfIndex,
-      pq: PqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame = {
-    require(ivf.idCol == pq.idCol,
-      s"indexes disagree on the id column: ${ivf.idCol} vs ${pq.idCol}")
-    val probed = probeClusters(ivf.centroids, query, nprobe)
-    val probedIds = ivf.assigned
-      .filter(col("cluster").isin(probed: _*))
-      .select(col(ivf.idCol))
-    val scan = pq.encoded.filter(filter)
-      .join(probedIds, Seq(pq.idCol), "left_semi")
-    pqServe(pq, query, topK, overFetch, scan)
-  }
-
-  /** A RESIDUAL-encoded IVF-PQ index (Jégou et al. 2011 §IV.A — the
-    * recall-recovering composition the raw [[ivfPqTopK]] scaladoc
-    * cites): the PQ codebook is trained on r = x − centroid(cluster(x))
-    * instead of x itself, so the ksub codewords per subspace spend
-    * their precision on the WITHIN-cluster geometry (‖r‖ ≪ ‖x‖ on a
-    * clustered corpus) instead of re-describing the coarse structure
-    * the IVF quantizer already captured. `encoded` is
-    * (idCol, pq_code, nrm, cluster) — the raw shape plus the row's IVF
-    * cluster, because serving must add back the ⟨query, centroid⟩ term
-    * the residual dropped; `nrm` stays the TRUE float norm of x (the
-    * cosine denominator is exact either way). `centroids` is the IVF
-    * coarse quantizer the residuals were taken against — serving MUST
-    * use the same one, so the index carries it. */
-  final case class ResidualPqIndex(
-      m: Int,
-      ksub: Int,
-      dsub: Int,
-      bits: Int,
-      codebook: Array[Array[Array[Double]]],
-      centroids: Array[(Array[Double], Double)],
-      encoded: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String)
-
-  /** Train a residual PQ codebook over an [[IvfIndex]]'s assignment and
-    * encode the corpus — [[pqBuild]]'s exact recipe (hash-stride
-    * seeding, fixed-point per-subspace Lloyd with order-free integer
-    * component sums, empty codes keeping their codeword, one final
-    * encode pass) applied to the RESIDUALS r = x − centroid(cluster(x))
-    * instead of the raw vectors. Residual components are natively
-    * double (float x minus double centroid), which is why
-    * [[pqNearestCode]] takes doubles; every fixed-point decision
-    * (`round(r·2^24)` Lloyd sums, `floor((r−c)²·2^24+0.5)` assignment)
-    * is the same expression the v23 oracle replays in SQL over
-    * `ve[i] − comp`. Degenerate rows (cluster −1 / empty vector)
-    * contribute nothing to training and encode to code 0s with nrm 0 —
-    * never served, the shared drop policy. The coarse quantizer is
-    * UNCHANGED by this build: residuals are always against
-    * `ivf.centroids`, and re-training the coarse tier means a new
-    * [[ivfBuild]] followed by a new residual build. */
-  def ivfResidualPqBuild(
-      ivf: IvfIndex,
-      m: Int = 8,
-      ksub: Int = 16,
-      lloydIters: Int = 2,
-      portableSeeds: Boolean = false): ResidualPqIndex =
-    residualPqBuildImpl(ivf, m, ksub, lloydIters, portableSeeds, signs = None)
-
-  /** A trained ROTATED-RESIDUAL index (v30) — the FAISS `OPQ,IVF,PQ`
-    * production chain's shape: [[rpq]]'s codebook and codes live in the
-    * HD-rotated RESIDUAL space; serving decomposes ⟨q, x⟩ =
-    * ⟨q, centroid⟩ + ⟨Hq, Hr⟩, so the per-cluster offsets stay in the
-    * original space and only the LUT rotates. MUST be served through
-    * [[rotResidualPqTopK]] — the plain residual serve against these
-    * codes would be garbage (kind-guarded in persistence). */
-  final case class RotatedResidualPqIndex(signs: Array[Int], rpq: ResidualPqIndex)
-
-  /** [[ivfResidualPqBuild]] with the HD rotation ([[rotateFp]]) applied
-    * to every residual before the subspace split — the OPQ
-    * decorrelation step composed onto the residual tier (Ge et al.
-    * CVPR'13 + Jégou §IV.A; FAISS's `OPQ…,IVF…,PQ…` chain with the
-    * deterministic rotation that keeps the build SQL-replayable).
-    * Training, encode, packing, and the serve tail are the residual
-    * tier's own machinery verbatim (one shared impl). Requires a
-    * power-of-4 dimension (exact fixed-point rescale). */
-  def ivfRotResidualPqBuild(
-      ivf: IvfIndex,
-      m: Int = 8,
-      ksub: Int = 16,
-      lloydIters: Int = 2,
-      portableSeeds: Boolean = false): RotatedResidualPqIndex = {
-    require(ivf.centroids.nonEmpty, "ivfRotResidualPqBuild: no centroids")
-    val dim = ivf.centroids(0)._1.length
-    val rt = math.sqrt(dim.toDouble).toLong
-    require(rt * rt == dim && java.lang.Long.bitCount(rt) == 1,
-      s"ivfRotResidualPqBuild needs a power-of-4 dimension (√dim a power " +
-        s"of two for the exact fixed-point rescale), got dim=$dim")
-    val signs = rotationSigns(dim)
-    RotatedResidualPqIndex(signs,
-      residualPqBuildImpl(ivf, m, ksub, lloydIters, portableSeeds, Some(signs)))
-  }
-
-  private def residualPqBuildImpl(
-      ivf: IvfIndex,
-      m: Int,
-      ksub: Int,
-      lloydIters: Int,
-      portableSeeds: Boolean,
-      signs: Option[Array[Int]],
-      rotQ: Option[Array[Array[Long]]] = None): ResidualPqIndex = {
-    require(signs.isEmpty || rotQ.isEmpty,
-      "residualPqBuildImpl: HD signs and a trained rotation are exclusive")
-    require(m >= 1 && ksub >= 2 && lloydIters >= 0,
-      s"bad m=$m / ksub=$ksub / lloydIters=$lloydIters")
-    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(ksub - 1))
-    require(bits <= 16, s"ksub=$ksub needs $bits-bit codes — beyond the " +
-      "16-bit sanity cap (a codebook that large is not a PQ tier)")
-    require(ivf.centroids.nonEmpty, "ivfResidualPqBuild: index has no centroids")
-    val dim = ivf.centroids(0)._1.length
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    val sp = ivf.assigned.sparkSession
-    import sp.implicits._
-    val bcC = sp.sparkContext.broadcast(ivf.centroids)
-    val bcSg = sp.sparkContext.broadcast(signs.getOrElse(Array.empty[Int]))
-    val bcRq = sp.sparkContext.broadcast(rotQ.getOrElse(Array.empty[Array[Long]]))
-    // (id, residual, cluster, true-norm) — the residual is double-
-    // precision by construction (rotated here when `signs` [HD] or
-    // `rotQ` [trained, exact fixed-point] is set: everything downstream
-    // trains on Rr unchanged); the true norm rides along so encode
-    // never touches the floats again
-    val resid = ivf.assigned
-      .select(col(ivf.idCol).cast("long"), col(ivf.vecCol),
-        col("cluster").cast("int"))
-      .as[(Long, Array[Float], Int)]
-      .map { case (id, v0, cl) =>
-        val v = if (v0 == null) Array.empty[Float] else v0
-        var ss = 0.0; var i = 0
-        while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-        val r =
-          if (cl < 0 || v.isEmpty) Array.empty[Double]
-          else {
-            val cent = bcC.value(cl)._1
-            val rr = new Array[Double](v.length)
-            var j = 0
-            while (j < v.length) { rr(j) = v(j).toDouble - cent(j); j += 1 }
-            if (bcRq.value.nonEmpty) matVecFpQ(bcRq.value, rr)
-            else if (bcSg.value.isEmpty) rr
-            else rotateFpD(rr, bcSg.value)
-          }
-        (id, r, cl, math.sqrt(ss))
-      }
-      .persist()
-    def failing[A](body: => A): A =
-      try body
-      catch { case t: Throwable => resid.unpersist(blocking = false); throw t }
-
-    val n = failing {
-      val n = resid.count()
-      require(n > 0, "ivfResidualPqBuild: empty corpus")
-      n
-    }
-    val strideMod = math.max(1L, n / (2L * ksub))
-    val rdf = resid.toDF(ivf.idCol, "__res", "cluster", "nrm")
-    val seedHash =
-      if (portableSeeds) TextDedup.mdHash(col(ivf.idCol).cast("string"))
-      else xxhash64(col(ivf.idCol))
-    val seeds = failing {
-      val s = rdf
-        // degenerate rows (cluster −1 / empty vector → empty residual)
-        // must not seed a codebook — indexing their empty residual
-        // below would crash the build; the scaladoc's "contribute
-        // nothing to training" covers seeding too (review r18)
-        .filter(size(col("__res")) === dim)
-        .filter(pmod(seedHash, lit(strideMod)) === 0)
-        .orderBy(seedHash, col(ivf.idCol))
-        .limit(ksub)
-        .select(col(ivf.idCol), col("__res"))
-        .as[(Long, Array[Double])]
+    val coarse = if (!treeKind.endsWith("residual-pq")) Option.empty else {
+      val k = meta.get("k").asInt()
+      val cents = new Array[(Array[Double], Double)](k)
+      spark.read.parquet(s"$dir/centroids")
+        .select(col("c").cast("int"), col("comp"), col("nrm"))
+        .as[(Int, Array[Double], Double)]
         .collect()
-      require(s.nonEmpty, "ivfResidualPqBuild: stride seeding found no rows")
-      s
+        .foreach { case (c, comp, nrm) =>
+          require(c >= 0 && c < k, s"centroid row $c outside k=$k")
+          cents(c) = (comp, nrm)
+        }
+      require(cents.forall(_ != null), s"centroids parquet is missing rows (k=$k)")
+      Some(cents)
     }
-    val kEff = seeds.length
-    var cb: Array[Array[Array[Double]]] = failing {
-      Array.tabulate(m, kEff, dsub) { (s, c, i) => seeds(c)._2(s * dsub + i) }
-    }
-
-    val FP = 1L << 24
-    val mLoc = m; val ksubLoc = ksub; val dsubLoc = dsub
-    for (_ <- 0 until lloydIters) {
-      val bc = sp.sparkContext.broadcast(cb)
-      val means = failing {
-        resid
-          .flatMap { case (_, r, _, _) =>
-            if (r.isEmpty) Iterator.empty
-            else (0 until mLoc).iterator.map { s =>
-              val fp = new Array[Long](dsubLoc)
-              var i = 0
-              while (i < dsubLoc) {
-                fp(i) = math.round(r(s * dsubLoc + i) * FP); i += 1
-              }
-              (s * ksubLoc + pqNearestCode(bc.value, r, s, dsubLoc), fp, 1L)
-            }
-          }
-          .groupByKey(_._1)
-          .reduceGroups { (x: (Int, Array[Long], Long), y: (Int, Array[Long], Long)) =>
-            val acc = new Array[Long](x._2.length)
-            var i = 0
-            while (i < acc.length) { acc(i) = x._2(i) + y._2(i); i += 1 }
-            (x._1, acc, x._3 + y._3)
-          }
-          .map { case (key, (_, fp, cnt)) => (key, fp.map(_.toDouble / FP / cnt)) }
+    val rotation =
+      if (treeKind.startsWith("rot-")) {
+        requirePowerOf4Dim(dim, s"pqLoad: $dir/meta.json")
+        PqRotation.Hadamard(rotationSigns(dim))
+      } else if (treeKind.startsWith("opq-")) {
+        val r = new Array[Array[Double]](dim)
+        spark.read.parquet(s"$dir/rotation")
+          .select(col("j").cast("int"), col("rw"))
+          .as[(Int, Array[Double])]
           .collect()
-          .toMap
-      }
-      bc.destroy() // dead once collected (advice r17, as in pqBuild)
-      cb = Array.tabulate(m, kEff, dsub) { (s, c, i) =>
-        means.get(s * ksub + c) match {
-          case Some(mean) => mean(i)
-          case None => cb(s)(c)(i) // empty code keeps its codeword
-        }
-      }
-    }
-
-    val bcF = sp.sparkContext.broadcast(cb)
-    val bitsLoc = bits
-    val perW = pqPerWord(bits); val nW = pqNumWords(m, bits)
-    // degenerate rows (cluster −1, from an empty/NaN vector) store
-    // nrm 0 alongside their zero codes, so EITHER half of a consumer's
-    // (nrm != 0 && cl >= 0) guard excludes them — the stored norm is
-    // not load-bearing for rows no serve path may score (advice r18)
-    val encoded = (if (nW == 1) {
-      resid.map { case (id, r, cl, nrm) =>
-        val packed =
-          if (r.isEmpty) 0L
-          else encodePqWords(bcF.value, r, mLoc, dsubLoc, bitsLoc, perW, 1)(0)
-        (id, packed, if (cl < 0) 0.0 else nrm, cl)
-      }.toDF(ivf.idCol, "pq_code", "nrm", "cluster")
-    } else {
-      resid.map { case (id, r, cl, nrm) =>
-        val cw =
-          if (r.isEmpty) new Array[Long](nW)
-          else encodePqWords(bcF.value, r, mLoc, dsubLoc, bitsLoc, perW, nW)
-        (id, cw, if (cl < 0) 0.0 else nrm, cl)
-      }.toDF(ivf.idCol, "pq_code", "nrm", "cluster")
-    })
-    resid.unpersist(blocking = false)
-    ResidualPqIndex(m, kEff, dsub, bits, cb, ivf.centroids, encoded,
-      ivf.assigned.select(col(ivf.idCol), col(ivf.vecCol)),
-      ivf.idCol, ivf.vecCol)
-  }
-
-  /** Serve ANN top-k from a [[ResidualPqIndex]] — IVF probe + residual
-    * ADC: the probe keeps the `nprobe` closest clusters' rows (a DIRECT
-    * `cluster IN (...)` filter on the encoded frame — the encoded rows
-    * carry their cluster, so at scale with a cluster-partitioned layout
-    * this is file-listing partition pruning, no join at all, one better
-    * than [[ivfPqTopK]]'s left-semi restriction), and each kept row's
-    * approximate dot is
-    *   ⟨q, centroid(cluster)⟩ + Σ_s LUT[s, code_s]
-    * — the first term a per-cluster integer offset computed once on the
-    * driver (k fixed-point dots, inlined as a k-entry array literal
-    * indexed by the row's cluster), the second the same per-query LUT
-    * sum as the raw tier, both exact integer arithmetic so the coarse
-    * ranking stays bit-exact across engines (the v23 oracle gate).
-    * Everything downstream — rounded approx-cos cut at topK ×
-    * overFetch, NULL/NaN drop policy, exact float rerank — is
-    * [[pqServeCore]], shared verbatim with v20/v21. Degenerate queries
-    * probe nothing and return empty, matching [[ivfTopK]]. */
-  def ivfResidualPqTopK(
-      index: ResidualPqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame =
-    residualServeCore(index, query, topK, nprobe, overFetch, filter,
-      lutQn = None)
-
-  /** ANN top-k from a [[RotatedResidualPqIndex]] (v30): the probe and
-    * the per-cluster ⟨q, centroid⟩ offsets stay in the ORIGINAL space
-    * (the coarse quantizer never rotated), the ADC LUT is built over
-    * the HD-ROTATED query against the rotated-residual codebook
-    * (⟨q, x⟩ = ⟨q, c⟩ + ⟨Hq, Hr⟩ — orthogonality makes the
-    * decomposition exact), and the rerank touches only original
-    * floats. Serve tail is [[ivfResidualPqTopK]]'s verbatim. */
-  def rotResidualPqTopK(
-      index: RotatedResidualPqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame = {
-    val rpq = index.rpq
-    require(query.length == rpq.m * rpq.dsub,
-      s"query dim ${query.length} != index dim ${rpq.m * rpq.dsub}")
-    val qRot = rotateFp(query, index.signs)
-    val lut = pqBatchLutRowD(rpq.codebook, qRot, rpq.m, rpq.ksub, rpq.dsub)._2
-    residualServeCore(rpq, query, topK, nprobe, overFetch, filter,
-      lutQn = Some((lut, normF(query))))
-  }
-
-  /** A TRAINED-OPQ residual index (v36) — the FAISS `OPQ,IVF,PQ`
-    * production chain with the LEARNED rotation, i.e.
-    * [[RotatedResidualPqIndex]] one rung up: [[rq]] (the 2^24-grid
-    * quantization of the trained [[r]], [[quantizeRotation]]) is the
-    * form the encode ACTUALLY applied to every residual, so the whole
-    * post-SVD chain — rotation, codebook, encode, LUT, offsets, scan,
-    * rerank — replays in the composed oracle with R inlined as a
-    * literal CTE. Probes and per-cluster ⟨q, centroid⟩ offsets stay in
-    * the ORIGINAL space (the coarse quantizer never rotates); only the
-    * LUT rotates. MUST be served through [[opqResidualPqTopK]]. R is
-    * DATA-DEPENDENT, so persistence carries it — [[opqResidualPqSave]] /
-    * [[opqResidualPqLoad]] (kind "opq-residual-pq", mutually guarded). */
-  final case class OpqResidualPqIndex(
-      r: Array[Array[Double]], rq: Array[Array[Long]], rpq: ResidualPqIndex)
-
-  /** Train OPQ-NP over the RESIDUAL tier (r19 verdict #2 — the regime
-    * the clustered fixture showed rotation actually pays in: rotation
-    * cannot fix coarse cluster structure, so the trained R belongs ON
-    * the residuals, where rot-residual read +0.12 recall anisotropic):
-    * alternate (a) a residual PQ codebook over y = R(x − centroid)
-    * with (b) the Procrustes update R ← V Uᵀ of M = Σ rᵢ ŷᵢᵀ, starting
-    * from the HD rotation. Every iteration applies R in the EXACT
-    * quantized form ([[matVecFpQ]]) and trains through
-    * [[residualPqBuildImpl]]'s own machinery (the v23/v30 build), so
-    * the final index is bit-deterministic and — downstream of the
-    * SVD — hash-exact oracle-replayable. The M-step accumulates
-    * order-free fixed-point integer sums over a residual frame
-    * computed once; the coarse quantizer is UNCHANGED throughout
-    * (residuals are always against `ivf.centroids`). */
-  def opqResidualPqBuild(
-      ivf: IvfIndex,
-      m: Int = 8,
-      ksub: Int = 16,
-      lloydIters: Int = 2,
-      opqIters: Int = 3,
-      portableSeeds: Boolean = false): OpqResidualPqIndex = {
-    require(opqIters >= 1, s"opqIters must be >= 1, got $opqIters")
-    require(ivf.centroids.nonEmpty, "opqResidualPqBuild: index has no centroids")
-    val dim = ivf.centroids(0)._1.length
-    val rt = math.sqrt(dim.toDouble).toLong
-    require(rt * rt == dim && java.lang.Long.bitCount(rt) == 1,
-      s"opqResidualPqBuild needs a power-of-4 dimension (the HD init), got dim=$dim")
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    val sp = ivf.assigned.sparkSession
-    import sp.implicits._
-    val signs = rotationSigns(dim)
-    val root = math.sqrt(dim.toDouble)
-    // HD init, as [[opqPqBuild]]: R0(j)(i) = D(i)·(−1)^popcount(i∧j)/√dim
-    var r: Array[Array[Double]] = Array.tabulate(dim, dim) { (j, i) =>
-      val h = if ((java.lang.Long.bitCount((i & j).toLong) & 1) == 0) 1.0 else -1.0
-      h * signs(i) / root
-    }
-    var rq = quantizeRotation(r)
-    val FP = 1L << 24
-    // the training-only residual frame for the M-step (the final build
-    // derives its own inside residualPqBuildImpl); degenerate rows
-    // (cluster −1 / empty vector) carry empty residuals and contribute
-    // nothing, mixed dimensions are loud (the v(j) − cent(j) indexing
-    // would otherwise truncate or crash bare)
-    val bcC = sp.sparkContext.broadcast(ivf.centroids)
-    val resid = ivf.assigned
-      .select(col(ivf.idCol).cast("long"), col(ivf.vecCol),
-        col("cluster").cast("int"))
-      .as[(Long, Array[Float], Int)]
-      .map { case (_, v0, cl) =>
-        val v = if (v0 == null) Array.empty[Float] else v0
-        if (cl < 0 || v.isEmpty) Array.empty[Double]
-        else {
-          val cent = bcC.value(cl)._1
-          if (v.length != cent.length)
-            throw new IllegalArgumentException(
-              s"mixed-dimension corpus in opqResidualPqBuild: index " +
-                s"dimension ${cent.length} vs vector of ${v.length} components")
-          val rr = new Array[Double](v.length)
-          var j = 0
-          while (j < v.length) { rr(j) = v(j).toDouble - cent(j); j += 1 }
-          rr
-        }
-      }
-      .persist()
-    def failing[A](body: => A): A =
-      try body
-      catch { case t: Throwable => resid.unpersist(blocking = false); throw t }
-    var it = 0
-    while (it < opqIters - 1) {
-      // this iteration's residual codebook under the CURRENT rotation —
-      // training-only (its lazy encode frame is never evaluated)
-      val cbIt = failing { residualPqBuildImpl(ivf, m, ksub, lloydIters,
-        portableSeeds, signs = None, rotQ = Some(rq)).codebook }
-      // M = Σ r ŷᵀ in fixed-point (order-free; exact integer adds) —
-      // r original-space residual, ŷ the rotated-space reconstruction
-      val bcRq = sp.sparkContext.broadcast(rq)
-      val bcCb = sp.sparkContext.broadcast(cbIt)
-      val mLoc2 = m; val dsubLoc2 = dsub; val dimLoc = dim
-      val mFp = failing {
-        resid.mapPartitions { rows =>
-          val acc = new Array[Long](dimLoc * dimLoc)
-          val cb = bcCb.value
-          val rrq = bcRq.value
-          rows.foreach { x =>
-            if (x.nonEmpty) {
-              val y = matVecFpQ(rrq, x)
-              val yhat = new Array[Double](dimLoc)
-              var s = 0
-              while (s < mLoc2) {
-                val cw = cb(s)(pqNearestCode(cb, y, s, dsubLoc2))
-                var i = 0
-                while (i < dsubLoc2) { yhat(s * dsubLoc2 + i) = cw(i); i += 1 }
-                s += 1
-              }
-              var a = 0
-              while (a < dimLoc) {
-                val xa = x(a)
-                var b = 0
-                while (b < dimLoc) {
-                  acc(a * dimLoc + b) += math.round(xa * yhat(b) * FP)
-                  b += 1
-                }
-                a += 1
-              }
-            }
+          .foreach { case (j, row) =>
+            require(j >= 0 && j < dim && row.length == dim,
+              s"pqLoad: rotation row $j/${row.length} outside dim=$dim — the " +
+                "tree's rotation parquet does not match its meta.json")
+            r(j) = row
           }
-          Iterator.single(acc)
-        }.reduce { (l, rgt) =>
-          val out = new Array[Long](l.length)
-          var i = 0
-          while (i < l.length) { out(i) = l(i) + rgt(i); i += 1 }
-          out
-        }
-      }
-      bcCb.destroy(); bcRq.destroy()
-      val mMat = Array.tabulate(dim, dim) { (a, b) =>
-        mFp(a * dim + b).toDouble / FP
-      }
-      r = failing { procrustesRotation(mMat) }
-      rq = quantizeRotation(r)
-      it += 1
-    }
-    resid.unpersist(blocking = false)
-    // FINAL build under the trained, quantized R — the v23/v30 build
-    // machinery verbatim, whose encode frame the oracle replays
-    OpqResidualPqIndex(r, rq, residualPqBuildImpl(ivf, m, ksub, lloydIters,
-      portableSeeds, signs = None, rotQ = Some(rq)))
-  }
-
-  /** ANN top-k from an [[OpqResidualPqIndex]] (v36) —
-    * [[rotResidualPqTopK]]'s recipe with the TRAINED R: the probe and
-    * the per-cluster ⟨q, centroid⟩ offsets stay in the ORIGINAL space,
-    * the ADC LUT is built over the [[matVecFpQ]]-rotated query against
-    * the rotated-residual codebook (⟨q, x⟩ = ⟨q, c⟩ + ⟨Rq, Rr⟩ —
-    * orthogonality makes the decomposition exact up to the 2^24
-    * quantization, which the exact float rerank absorbs), and the
-    * serve tail is [[ivfResidualPqTopK]]'s verbatim. */
-  def opqResidualPqTopK(
-      index: OpqResidualPqIndex,
-      query: Array[Float],
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      filter: Column = lit(true)): DataFrame = {
-    val rpq = index.rpq
-    require(query.length == rpq.m * rpq.dsub,
-      s"query dim ${query.length} != index dim ${rpq.m * rpq.dsub}")
-    val qRot = matVecFpQ(index.rq, toDoubles(query))
-    val lut = pqBatchLutRowD(rpq.codebook, qRot, rpq.m, rpq.ksub, rpq.dsub)._2
-    residualServeCore(rpq, query, topK, nprobe, overFetch, filter,
-      lutQn = Some((lut, normF(query))))
-  }
-
-  /** Encode NEW vectors against an EXISTING residual index — the
-    * between-retrains ingest path of the `IVF,PQ` production chain
-    * ([[pqEncode]]'s contract one tier up): each batch row assigns to
-    * its nearest coarse centroid (the build's own [[nearestCentroid]]
-    * argmax, ties to the lower cluster), its RESIDUAL r = x − centroid
-    * encodes against the standing codebook, and the row lands with its
-    * cluster — so a batch row identical to a corpus row gets the
-    * identical (pq_code, nrm, cluster). Degenerate rows place in
-    * cluster −1 with zero codes and nrm 0 (never probed, never
-    * scored); mixed dimensions are loud. Returns the
-    * [[ResidualPqIndex.encoded]] row shape. */
-  def ivfResidualPqEncode(index: ResidualPqIndex, batch: DataFrame): DataFrame =
-    residualPqEncodeImpl(index, batch, Array.empty, Array.empty,
-      "ivfResidualPqEncode")
-
-  /** The growing-index fold at the residual tier — [[pqAppend]]'s
-    * contract over [[ivfResidualPqEncode]]: appended rows serve
-    * queries immediately through every arm (their cluster is in the
-    * probe space, their floats in the rerank corpus). The coarse
-    * quantizer and codebook are unchanged by design — re-training is
-    * [[ivfBuild]] + [[ivfResidualPqBuild]]'s periodic job. */
-  def ivfResidualPqAppend(
-      index: ResidualPqIndex, batch: DataFrame): ResidualPqIndex =
-    index.copy(
-      encoded = index.encoded.unionByName(ivfResidualPqEncode(index, batch)),
-      corpus = index.corpus.unionByName(
-        batch.select(col(index.idCol), col(index.vecCol))))
-
-  /** [[ivfResidualPqEncode]] at the HD-ROTATED residual tier: the
-    * residual rotates through the index's transform before the
-    * nearest-code pass (offsets/norms stay original-space — the serve
-    * decomposition). The SAFE ingest path for rotated codes. */
-  def rotResidualPqEncode(
-      index: RotatedResidualPqIndex, batch: DataFrame): DataFrame =
-    residualPqEncodeImpl(index.rpq, batch, index.signs, Array.empty,
-      "rotResidualPqEncode")
-
-  /** The growing-index fold at the HD-rotated residual tier. */
-  def rotResidualPqAppend(
-      index: RotatedResidualPqIndex, batch: DataFrame): RotatedResidualPqIndex =
-    index.copy(rpq = index.rpq.copy(
-      encoded = index.rpq.encoded.unionByName(rotResidualPqEncode(index, batch)),
-      corpus = index.rpq.corpus.unionByName(
-        batch.select(col(index.rpq.idCol), col(index.rpq.vecCol)))))
-
-  /** [[ivfResidualPqEncode]] at the TRAINED-OPQ residual tier: the
-    * residual rotates through the index's exact quantized R. */
-  def opqResidualPqEncode(
-      index: OpqResidualPqIndex, batch: DataFrame): DataFrame =
-    residualPqEncodeImpl(index.rpq, batch, Array.empty, index.rq,
-      "opqResidualPqEncode")
-
-  /** The growing-index fold at the trained residual tier. */
-  def opqResidualPqAppend(
-      index: OpqResidualPqIndex, batch: DataFrame): OpqResidualPqIndex =
-    index.copy(rpq = index.rpq.copy(
-      encoded = index.rpq.encoded.unionByName(opqResidualPqEncode(index, batch)),
-      corpus = index.rpq.corpus.unionByName(
-        batch.select(col(index.rpq.idCol), col(index.rpq.vecCol)))))
-
-  private def residualPqEncodeImpl(
-      index: ResidualPqIndex, batch: DataFrame,
-      signs: Array[Int], rq: Array[Array[Long]], opName: String): DataFrame = {
-    val sp = batch.sparkSession
-    import sp.implicits._
-    val bcC = sp.sparkContext.broadcast(index.centroids)
-    val bcCb = sp.sparkContext.broadcast(index.codebook)
-    val bcSg = sp.sparkContext.broadcast(signs)
-    val bcRq = sp.sparkContext.broadcast(rq)
-    val mLoc = index.m; val dsubLoc = index.dsub; val bitsLoc = index.bits
-    val perW = pqPerWord(index.bits); val nW = pqNumWords(index.m, index.bits)
-    val src = batch.select(col(index.idCol).cast("long"), col(index.vecCol))
-      .as[(Long, Array[Float])]
-    if (nW == 1)
-      src.map { case (id, v0) =>
-        val (w, nrm, cl) = encodeResidualBatchRow(bcC.value, bcCb.value, v0,
-          mLoc, dsubLoc, bitsLoc, perW, 1, bcSg.value, bcRq.value)
-        (id, w(0), nrm, cl)
-      }.toDF(index.idCol, "pq_code", "nrm", "cluster")
-    else
-      src.map { case (id, v0) =>
-        val (w, nrm, cl) = encodeResidualBatchRow(bcC.value, bcCb.value, v0,
-          mLoc, dsubLoc, bitsLoc, perW, nW, bcSg.value, bcRq.value)
-        (id, w, nrm, cl)
-      }.toDF(index.idCol, "pq_code", "nrm", "cluster")
-  }
-
-  /** Per-row body of the residual ingest encodes, hoisted to object
-    * level (the serializable-closure rule): assign → residual →
-    * (rotate) → nearest-code pack; degenerate rows → (zero words, 0,
-    * −1), mixed dimensions loud via [[checkAssignDim]]. */
-  private def encodeResidualBatchRow(
-      cents: Array[(Array[Double], Double)],
-      cb: Array[Array[Array[Double]]], v0: Array[Float],
-      m: Int, dsub: Int, bits: Int, perW: Int, nW: Int,
-      signs: Array[Int], rq: Array[Array[Long]]): (Array[Long], Double, Int) = {
-    val v = if (v0 == null) Array.empty[Float] else v0
-    checkAssignDim(cents, v)
-    val cl = if (v.isEmpty) -1 else nearestCentroid(cents, v)
-    if (cl < 0) (new Array[Long](nW), 0.0, -1)
-    else {
-      val cent = cents(cl)._1
-      val rr = new Array[Double](v.length)
-      var j = 0
-      while (j < v.length) { rr(j) = v(j).toDouble - cent(j); j += 1 }
-      val y =
-        if (rq.nonEmpty) matVecFpQ(rq, rr)
-        else if (signs.nonEmpty) rotateFpD(rr, signs)
-        else rr
-      var ss = 0.0; var i = 0
-      while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
-      (encodePqWords(cb, y, m, dsub, bits, perW, nW), math.sqrt(ss), cl)
-    }
-  }
-
-  private def residualServeCore(
-      index: ResidualPqIndex,
-      query: Array[Float],
-      topK: Int,
-      nprobe: Int,
-      overFetch: Int,
-      filter: Column,
-      lutQn: Option[(Array[Long], Double)]): DataFrame = {
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val FP = 1L << 24
-    val dim = index.m * index.dsub
-    require(query.length == dim,
-      s"query dim ${query.length} != index dim $dim")
-    // per-cluster fixed-point ⟨query, centroid⟩ — the term the residual
-    // encoding dropped, added back at serve time; same per-term
-    // floor(q·c·2^24 + 0.5) convention as the LUT so the total stays an
-    // exact integer. Computed for the PROBED clusters only (review r18:
-    // the scan below keeps only those, so a k-entry table was k·dim
-    // wasted driver flops and a k-entry literal — the former 65536 cap
-    // existed solely to bound that waste) and inlined as an
-    // nprobe-branch CASE on the row's cluster.
-    val probed = probeClusters(index.centroids, query, nprobe)
-    val offOf: Map[Int, Long] = probed.map { c =>
-      val cent = index.centroids(c)._1
-      var acc = 0L
-      var i = 0
-      while (i < dim) {
-        acc += math.floor(query(i).toDouble * cent(i) * FP + 0.5).toLong
-        i += 1
-      }
-      c -> acc
-    }.toMap
-    val scan = index.encoded.filter(filter)
-      .filter(col("cluster").isin(probed: _*))
-    // a degenerate query probes nothing — the scan is empty, the offset
-    // is never evaluated (the 0 literal just keeps the plan well-typed)
-    val offExpr =
-      if (probed.isEmpty) lit(0L)
-      else expr("CASE cluster " +
-        probed.map(c => s"WHEN $c THEN ${offOf(c)}L").mkString(" ") +
-        " ELSE CAST(0 AS BIGINT) END")
-    pqServeCore(index.m, index.ksub, index.dsub, index.bits, index.codebook,
-      index.idCol, index.vecCol, index.corpus, query, topK, overFetch, scan,
-      fpOffset = Some(offExpr), lutQn = lutQn)
-  }
-
-  /** BATCHED residual IVF-PQ top-k — v23's serving-throughput form,
-    * closing the residual tier's serving matrix the way v22 closed the
-    * raw tier's: a whole query frame resolves in ONE pass over the
-    * residual-encoded codes. Per query the driver-mediated broadcast
-    * carries three flat arrays — the ADC LUT ([[collectBatchLuts]],
-    * distributed construction), the `nprobe` fixed-point ⟨q, centroid⟩
-    * offsets of its PROBED clusters in (q, probe-slot) layout (the
-    * kernel recovers a cluster's slot from the mask via [[probeSlot]];
-    * r18 verdict #4 — the former all-k table was k/nprobe larger and
-    * mostly unread zeros), and a ⌈k/64⌉-word probe bitmask of its
-    * `nprobe` closest clusters (the [[maskWord]] layout of the
-    * IVF-SQ8 arm) — and the
-    * scan is the v22 flat kernel with two residual deltas: a row
-    * scores only against queries whose mask contains its cluster (row
-    * pruning without any join), and its integer adot adds the
-    * per-(query, cluster) offset before the shared rounding. Bounded
-    * per-query heaps, window cut, exact float rerank — the v22 tail
-    * verbatim. Degenerate queries probe nothing (empty mask → no
-    * rows). Returns (queryIdCol, idCol, cos_sim, rank). */
-  def ivfResidualPqTopKBatch(
-      index: ResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4): DataFrame =
-    residualBatchImpl(index, queries, queryIdCol, queryVecCol, topK, nprobe,
-      overFetch, signs = Array.empty, opName = "ivfResidualPqTopKBatch")
-
-  /** Batched serving for the ROTATED-RESIDUAL tier (v30's throughput
-    * form): [[ivfResidualPqTopKBatch]]'s kernel verbatim — probes and
-    * per-(query, probed-cluster) offsets stay in the ORIGINAL space,
-    * only each query's LUT rotates (built distributed over Hq inside
-    * [[collectBatchLuts]]). Chunked form:
-    * [[rotResidualPqTopKBatchChunked]]. */
-  def rotResidualPqTopKBatch(
-      index: RotatedResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4): DataFrame =
-    residualBatchImpl(index.rpq, queries, queryIdCol, queryVecCol, topK,
-      nprobe, overFetch, signs = index.signs, opName = "rotResidualPqTopKBatch")
-
-  /** Batched serving for the TRAINED-OPQ residual tier (v39) —
-    * [[ivfResidualPqTopKBatch]]'s kernel verbatim: probes and
-    * per-(query, probed-cluster) offsets stay in the ORIGINAL space,
-    * only each query's LUT rotates (built distributed over Rq inside
-    * [[collectBatchLuts]], the exact quantized form the codes were
-    * trained in). */
-  def opqResidualPqTopKBatch(
-      index: OpqResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4): DataFrame =
-    residualBatchImpl(index.rpq, queries, queryIdCol, queryVecCol, topK,
-      nprobe, overFetch, signs = Array.empty,
-      opName = "opqResidualPqTopKBatch", rq = index.rq)
-
-  private def residualBatchImpl(
-      index: ResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int,
-      nprobe: Int,
-      overFetch: Int,
-      signs: Array[Int],
-      opName: String,
-      rq: Array[Array[Long]] = Array.empty): DataFrame = {
-    implicit val sp: SparkSession = index.encoded.sparkSession
-    import sp.implicits._
-    require(topK >= 1 && overFetch >= 1 && nprobe >= 1,
-      "topK, overFetch and nprobe must be >= 1")
-    requireDistinctIdCols(opName, queryIdCol, index.idCol)
-    val FP = 1L << 24
-    val k = index.centroids.length
-    val dim = index.m * index.dsub
-    val mLoc = index.m; val ksubLoc = index.ksub; val bitsLoc = index.bits
-    val stride = mLoc * ksubLoc
-    val words = (k + 63) / 64
-    val (qRows, qids, qns, luts) =
-      collectBatchLuts(index.codebook, index.m, index.ksub, index.dsub,
-        queries, queryIdCol, queryVecCol, opName, signs = signs, rq = rq)
-    val nQ = qids.length
-    require(nQ.toLong * nprobe <= Int.MaxValue && nQ.toLong * words <= Int.MaxValue,
-      s"$opName: $nQ queries × $nprobe offsets (or × $words " +
-        "mask words) exceeds the broadcast layout; chunk the batch")
-    // per-query PROBED-ONLY centroid offsets in (q, probe-slot) layout
-    // + probe masks — nprobe·dim flops per query on the driver, and an
-    // 8·nQ·nprobe-byte table instead of the former all-k layout (r18
-    // verdict #4: k/nprobe smaller on both axes; the kernel recovers a
-    // cluster's slot from the mask via [[probeSlot]]). probeClusters
-    // returns ascending cluster indices, so slot order == mask-rank.
-    val offs = new Array[Long](nQ * nprobe)
-    val masks = new Array[Long](nQ * words)
-    var j = 0
-    while (j < nQ) {
-      val v = qRows(j)._2
-      if (qns(j) != 0.0) {
-        probeClusters(index.centroids, v, nprobe).zipWithIndex.foreach {
-          case (cl, slot) =>
-            masks(j * words + cl / 64) |= 1L << (cl % 64)
-            val cent = index.centroids(cl)._1
-            var acc = 0L
-            var i = 0
-            while (i < dim) {
-              acc += math.floor(v(i).toDouble * cent(i) * FP + 0.5).toLong
-              i += 1
-            }
-            offs(j * nprobe + slot) = acc
-        }
-      }
-      j += 1
-    }
-    val bc = sp.sparkContext.broadcast((qids, qns, luts, offs, masks))
-    registerServingCleanup(() => bc.destroy(), Some(bc))
-    val keep = topK * overFetch
-    val perW = pqPerWord(index.bits)
-    val nprobeLoc = nprobe; val wordsLoc = words
-    val cand = scanEncoded4[(Long, Long, Double)](
-        index.encoded, index.idCol, pqNumWords(index.m, index.bits)) { it =>
-        val (ids, ns, lt, of, mk) = bc.value
-        val heaps = Array.fill(ids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapWorst))
-        val codes = new Array[Int](mLoc)
-        it.foreach { case (nid, cw, nrm, cl) =>
-          if (nrm != 0.0 && cl >= 0) {
-            var unpacked = false
-            var q = 0
-            while (q < ids.length) {
-              val qn = ns(q)
-              if (qn != 0.0 &&
-                  (mk(q * wordsLoc + cl / 64) & (1L << (cl % 64))) != 0L) {
-                if (!unpacked) {
-                  unpackPqCodes(cw, codes, mLoc, bitsLoc, perW)
-                  unpacked = true
-                }
-                var adc =
-                  of(q * nprobeLoc + probeSlot(mk, q * wordsLoc, cl))
-                val base = q * stride
-                var s2 = 0
-                while (s2 < mLoc) {
-                  adc += lt(base + s2 * ksubLoc + codes(s2)); s2 += 1
-                }
-                heapOffer(heaps(q),
-                  math.floor(adc.toDouble / FP / (nrm * qn) * 10000 + 0.5) / 10000.0,
-                  nid, keep)
-              }
-              q += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qj) =>
-          h.iterator.map { case (sc, nid) => (ids(qj), nid, sc) }
-        }
-      }
-      .toDF("__qid", "__nid", "__score")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("__score").desc, col("__nid"))
-    val cut = cand
-      .withColumn("__crank", row_number().over(win))
-      .filter(col("__crank") <= keep)
-      .select("__qid", "__nid")
-    val qf = sp.createDataset(qRows.toSeq.zipWithIndex.map { case ((qid, v), i) =>
-        (qid, v, qns(i))
-      }).toDF("__qid", "__qv", "__qn")
-    val rr = cut
-      .join(index.corpus.select(col(index.idCol).cast("long").as("__nid"),
-        col(index.vecCol).as("__cv")), Seq("__nid"))
-      .join(broadcast(qf), Seq("__qid"))
-      .select(col("__qid"), col("__nid"),
-        r4(VectorFunctions.dot(col("__cv"), col("__qv")) /
-          (VectorFunctions.norm(col("__cv")) * col("__qn"))).as("__score"))
-      .as[(Long, Long, Double)]
-    partialTopK(rr, topK)
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= topK)
-      .select(col("__qid").as(queryIdCol), col("__nid").as(index.idCol),
-        col("__score").as("cos_sim"), col("rank").cast("long").as("rank"))
+        require(r.forall(_ != null), s"pqLoad: rotation parquet is missing rows (dim=$dim)")
+        PqRotation.Trained(r, quantizeRotation(r))
+      } else PqRotation.None
+    val encoded = spark.read.parquet(s"$dir/encoded")
+      .select((Seq(col(idCol), col("pq_code"), col("nrm")) ++
+        coarse.map(_ => col("cluster"))): _*)
+    requirePqCodeType(encoded, m, bits, "pqLoad")
+    PqIndex(rotation, coarse, m, ksub, dsub, bits, cb.map(_.map(_.clone())), encoded,
+      corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
   }
 
   /** Random-hyperplane LSH signature: bit p of the result is the sign
@@ -3176,7 +1628,7 @@ object SimilaritySearch {
     * across engines, machines, and re-runs, so bucketing is stable on
     * re-ingest (and SQL-replayable, which is how `v2_ann_lsh` stays on
     * the hash-exact oracle gate). */
-  def lshSignature(vecCol: String, bits: Int = 8): Column = {
+  private def lshSignature(vecCol: String, bits: Int = 8): Column = {
     require(bits >= 1 && bits <= 62, s"bits must be in [1,62], got $bits")
     (0 until bits).map { p =>
       val proj = expr(
@@ -4539,292 +2991,6 @@ object SimilaritySearch {
     * to avoid; an UNCACHED expensive query source would instead pay
     * its full recompute per chunk, which is why the guidance says
     * cache first. */
-  /** [[ivfTopKBatchChunked]]'s shape for the PQ tier — the same
-    * deterministic hash chunking and exact-union argument, wrapping
-    * [[pqTopKBatch]], so no serving micro-batch is refused for size.
-    * The chunk target is additionally derated by the index's LUT
-    * stride so a chunk can never trip the inner op's Int-capacity
-    * guard (review: a large-ksub index shrinks the per-chunk query
-    * budget — maxExactRows/2 queries × a 2^16-codeword LUT would
-    * overflow one long array). */
-  def pqTopKBatchChunked(
-      index: PqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val lutCap = Int.MaxValue.toLong / (index.m * index.ksub)
-    chunkedUnion(queries, queryIdCol, math.max(1L, math.min(chunkTarget, lutCap))) { chunk =>
-      pqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK, overFetch)
-    }
-  }
-
-  /** [[pqTopKBatchChunked]] for the TRAINED-OPQ tier — same derates. */
-  def opqPqTopKBatchChunked(
-      index: OpqPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val lutCap = Int.MaxValue.toLong / (index.pq.m * index.pq.ksub)
-    chunkedUnion(queries, queryIdCol, math.max(1L, math.min(chunkTarget, lutCap))) { chunk =>
-      opqPqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK, overFetch)
-    }
-  }
-
-  /** [[pqTopKBatchChunked]] for the ROTATED tier — same derates. */
-  def rotPqTopKBatchChunked(
-      index: RotatedPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val lutCap = Int.MaxValue.toLong / (index.pq.m * index.pq.ksub)
-    chunkedUnion(queries, queryIdCol, math.max(1L, math.min(chunkTarget, lutCap))) { chunk =>
-      rotPqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK, overFetch)
-    }
-  }
-
-  /** [[ivfResidualPqTopKBatchChunked]] for the ROTATED-RESIDUAL tier —
-    * same derates (LUT stride, nprobe offsets, ⌈k/64⌉ mask words). */
-  def rotResidualPqTopKBatchChunked(
-      index: RotatedResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val rpq = index.rpq
-    val lutCap = Int.MaxValue.toLong / (rpq.m * rpq.ksub)
-    val offCap = Int.MaxValue.toLong / math.max(1, nprobe)
-    val maskCap =
-      Int.MaxValue.toLong / math.max(1, (rpq.centroids.length + 63) / 64)
-    chunkedUnion(queries, queryIdCol,
-      math.max(1L, Seq(chunkTarget, lutCap, offCap, maskCap).min)) { chunk =>
-      rotResidualPqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK,
-        nprobe, overFetch)
-    }
-  }
-
-  /** [[ivfResidualPqTopKBatchChunked]] for the TRAINED-OPQ residual
-    * tier — same derates (LUT stride, nprobe offsets, mask words). */
-  def opqResidualPqTopKBatchChunked(
-      index: OpqResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val rpq = index.rpq
-    val lutCap = Int.MaxValue.toLong / (rpq.m * rpq.ksub)
-    val offCap = Int.MaxValue.toLong / math.max(1, nprobe)
-    val maskCap =
-      Int.MaxValue.toLong / math.max(1, (rpq.centroids.length + 63) / 64)
-    chunkedUnion(queries, queryIdCol,
-      math.max(1L, Seq(chunkTarget, lutCap, offCap, maskCap).min)) { chunk =>
-      opqResidualPqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK,
-        nprobe, overFetch)
-    }
-  }
-
-  /** Probe-pruned incremental dedup at the RESIDUAL-PQ tier — the
-    * [[ivfIncrementalNearDup]] (v14) analog when the standing corpus's
-    * RAM-resident form is residual codes: each ingest batch vector is
-    * ADC-screened ONLY against the codes in its `nprobe` nearest
-    * clusters (the 100 TB ingest shape — per-batch cost is
-    * ~nprobe/k of one ~24 B/row code scan, and against a
-    * [[residualPqSave]]d cluster layout the probe union is partition
-    * pruning), with the same margin-admission rule, exact float
-    * verify, and (idCol, n_dups, best_sim, status) contract as
-    * [[pqIncrementalNearDup]]. TWO recall dials stack here, both
-    * documented: the probe (a corpus dup outside the batch vector's
-    * probed clusters is not seen — v14's trade) and the PQ margin
-    * (an ADC estimate below threshold − margin is not admitted);
-    * the verify stage still never admits a false positive. The scan
-    * is the v25 kernel with threshold admission in place of heaps:
-    * per-query LUT + probed-cluster offsets + ⌈k/64⌉-word probe
-    * bitmask on one broadcast, one integer add per (row, subspace)
-    * for queries probing the row's cluster. */
-  def residualPqIncrementalNearDup(
-      index: ResidualPqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      nprobe: Int = 4,
-      corpusSizeHint: Long = -1L): DataFrame =
-    residualIncrementalImpl(index, batch, threshold, margin, nprobe,
-      corpusSizeHint, signs = Array.empty,
-      opName = "residualPqIncrementalNearDup")
-
-  /** Probe-pruned incremental dedup at the ROTATED-RESIDUAL tier —
-    * [[residualPqIncrementalNearDup]]'s screen verbatim: probes and
-    * offsets in the ORIGINAL space, each ingest row's LUT over its
-    * HD-rotated vector, margin semantics unchanged (orthogonality),
-    * exact verify never admits a false positive. */
-  def rotResidualPqIncrementalNearDup(
-      index: RotatedResidualPqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      nprobe: Int = 4,
-      corpusSizeHint: Long = -1L): DataFrame =
-    residualIncrementalImpl(index.rpq, batch, threshold, margin, nprobe,
-      corpusSizeHint, signs = index.signs,
-      opName = "rotResidualPqIncrementalNearDup")
-
-  /** Probe-pruned incremental dedup at the TRAINED-OPQ residual tier
-    * (v40) — [[residualPqIncrementalNearDup]]'s screen with the
-    * trained rotation on the LUT side only (probes, offsets, norms,
-    * exact verify all original-space): the full `OPQ,IVF,PQ` ingest
-    * shape with the LEARNED R. */
-  def opqResidualPqIncrementalNearDup(
-      index: OpqResidualPqIndex,
-      batch: DataFrame,
-      threshold: Double = 0.45,
-      margin: Double = 0.2,
-      nprobe: Int = 4,
-      corpusSizeHint: Long = -1L): DataFrame =
-    residualIncrementalImpl(index.rpq, batch, threshold, margin, nprobe,
-      corpusSizeHint, signs = Array.empty,
-      opName = "opqResidualPqIncrementalNearDup", rq = index.rq)
-
-  private def residualIncrementalImpl(
-      index: ResidualPqIndex,
-      batch: DataFrame,
-      threshold: Double,
-      margin: Double,
-      nprobe: Int,
-      corpusSizeHint: Long,
-      signs: Array[Int],
-      opName: String,
-      rq: Array[Array[Long]] = Array.empty): DataFrame = {
-    implicit val sp: SparkSession = index.encoded.sparkSession
-    import sp.implicits._
-    require(margin >= 0.0,
-      s"margin must be >= 0, got $margin — a negative margin would raise the " +
-        "coarse bound ABOVE the threshold and silently drop true dups")
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val FP = 1L << 24
-    val k = index.centroids.length
-    val dim = index.m * index.dsub
-    val mLoc = index.m; val ksubLoc = index.ksub; val bitsLoc = index.bits
-    val stride = mLoc * ksubLoc
-    val words = (k + 63) / 64
-    val bound = threshold - margin
-    // floats kept: the probe sets + offsets need them (the exact
-    // verify still re-reads the batch FRAME, as in pqIncrementalNearDup)
-    val (qRows, qids, qns, luts) = collectBatchLuts(
-      index.codebook, index.m, index.ksub, index.dsub,
-      batch, index.idCol, index.vecCol, opName, signs = signs, rq = rq)
-    val nQ = qids.length
-    require(nQ.toLong * nprobe <= Int.MaxValue && nQ.toLong * words <= Int.MaxValue,
-      s"$opName: $nQ batch rows × $nprobe offsets (or " +
-        s"× $words mask words) exceeds the broadcast layout; chunk the batch")
-    // probed-only offsets in the (q, probe-slot) layout shared with
-    // ivfResidualPqTopKBatch — this arm already FILLED probed-only
-    // (the v26 pattern the batch arm adopted), but its table was still
-    // nQ × k of mostly zeros; now it is nQ × nprobe (r18 verdict #4)
-    val offs = new Array[Long](nQ * nprobe)
-    val masks = new Array[Long](nQ * words)
-    var j = 0
-    while (j < nQ) {
-      val v = qRows(j)._2
-      if (qns(j) != 0.0) {
-        probeClusters(index.centroids, v, nprobe).zipWithIndex.foreach {
-          case (cl, slot) =>
-            masks(j * words + cl / 64) |= 1L << (cl % 64)
-            val cent = index.centroids(cl)._1
-            var acc = 0L
-            var i = 0
-            while (i < dim) {
-              acc += math.floor(v(i).toDouble * cent(i) * FP + 0.5).toLong
-              i += 1
-            }
-            offs(j * nprobe + slot) = acc
-        }
-      }
-      j += 1
-    }
-    val bc = sp.sparkContext.broadcast((qids, qns, luts, offs, masks))
-    registerServingCleanup(() => bc.destroy(), Some(bc))
-    val perW = pqPerWord(index.bits)
-    val nprobeLoc = nprobe; val wordsLoc = words
-    val admitted = scanEncoded4[(Long, Long)](
-        index.encoded, index.idCol, pqNumWords(index.m, index.bits)) { it =>
-        val (ids, ns, lt, of, mk) = bc.value
-        val codes = new Array[Int](mLoc)
-        it.flatMap { case (cid, cw, nrm, cl) =>
-          if (nrm == 0.0 || cl < 0 || ids.length == 0) Iterator.empty
-          else {
-            var unpacked = false
-            val hits = Array.newBuilder[(Long, Long)]
-            var q = 0
-            while (q < ids.length) {
-              val qn = ns(q)
-              if (qn != 0.0 &&
-                  (mk(q * wordsLoc + cl / 64) & (1L << (cl % 64))) != 0L) {
-                if (!unpacked) {
-                  unpackPqCodes(cw, codes, mLoc, bitsLoc, perW)
-                  unpacked = true
-                }
-                var adc =
-                  of(q * nprobeLoc + probeSlot(mk, q * wordsLoc, cl))
-                val base = q * stride
-                var s2 = 0
-                while (s2 < mLoc) {
-                  adc += lt(base + s2 * ksubLoc + codes(s2)); s2 += 1
-                }
-                val ac =
-                  math.floor(adc.toDouble / FP / (nrm * qn) * 10000 + 0.5) / 10000.0
-                if (!ac.isNaN && ac >= bound) hits += ((ids(q), cid))
-              }
-              q += 1
-            }
-            hits.result().iterator
-          }
-        }
-      }
-      .toDF("__bid", "__cid")
-    statusAdmitted(admitted, index.corpus, batch, index.idCol, index.vecCol,
-      threshold, corpusSizeHint)
-  }
-
-  /** [[ivfTopKBatchChunked]]'s shape for the RESIDUAL tier — the chunk
-    * budget derated by EVERY per-query broadcast layout (the LUT
-    * stride, as the PQ arm; the nprobe-entry offset table; the
-    * ⌈k/64⌉-word probe mask). */
-  def ivfResidualPqTopKBatchChunked(
-      index: ResidualPqIndex,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      chunkTarget: Long = maxExactRows / 2): DataFrame = {
-    val lutCap = Int.MaxValue.toLong / (index.m * index.ksub)
-    // the offset table is (q, probe-slot) — nprobe entries per query,
-    // not k (r18 verdict #4) — and the mask ⌈k/64⌉ words per query
-    val offCap = Int.MaxValue.toLong / math.max(1, nprobe)
-    val maskCap =
-      Int.MaxValue.toLong / math.max(1, (index.centroids.length + 63) / 64)
-    chunkedUnion(queries, queryIdCol,
-      math.max(1L, Seq(chunkTarget, lutCap, offCap, maskCap).min)) { chunk =>
-      ivfResidualPqTopKBatch(index, chunk, queryIdCol, queryVecCol, topK,
-        nprobe, overFetch)
-    }
-  }
-
   private def chunkedUnion(
       queries: DataFrame, queryIdCol: String, chunkTarget: Long)(
       run: DataFrame => DataFrame): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.Tables.t
 import graft.functions.VectorFunctions
+import graft.operators.SimilaritySearch
 
 /** Similarity search over the embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exactness baseline, random-hyperplane
@@ -39,7 +40,7 @@ object SimQueries {
       |SELECT vec_id, FLOOR(dot / (SQRT(n1) * SQRT(n2)) * 10000 + 0.5)/10000 AS cos_sim
       |FROM s ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    graft.operators.SimilaritySearch.cosineTopK(
+    SimilaritySearch.cosineTopK(
       e.filter(col("vec_id") =!= 0), "vec_id", "embedding",
       e.filter(col("vec_id") === 0), "embedding", k = 10)
   }
@@ -73,7 +74,7 @@ object SimQueries {
       |SELECT vec_id, sig, FLOOR(dot / (SQRT(n1) * SQRT(n2)) * 10000 + 0.5)/10000 AS cos_sim
       |FROM sc ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    graft.operators.SimilaritySearch.lshCandidates(
+    SimilaritySearch.lshCandidates(
         e.filter(col("vec_id") =!= 0), "vec_id", "embedding",
         e.filter(col("vec_id") === 0), "embedding", bits = 8)
       .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -130,7 +131,7 @@ object SimQueries {
       |        FROM s)
       |SELECT a_id, b_id, cos_sim FROM sel WHERE cos_sim >= 0.45
       |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-    graft.operators.SimilaritySearch.cosineNearDupPairs(
+    SimilaritySearch.cosineNearDupPairs(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, numBlocks = 0)
       .select(col("idA").as("a_id"), col("idB").as("b_id"), col("cos_sim"))
@@ -169,7 +170,7 @@ object SimQueries {
       |SELECT vec_id, MIN(comp) AS comp_id,
       |  CASE WHEN MIN(comp) = vec_id THEN 1 ELSE 0 END AS is_canonical
       |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    val pairs = graft.operators.SimilaritySearch.cosineNearDupPairs(
+    val pairs = SimilaritySearch.cosineNearDupPairs(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, numBlocks = 0)
       .select(col("idA").as("a_id"), col("idB").as("b_id"))
@@ -235,7 +236,7 @@ object SimQueries {
       |SELECT vec_id, MIN(comp) AS comp_id,
       |  CASE WHEN MIN(comp) = vec_id THEN 1 ELSE 0 END AS is_canonical
       |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    val pairs = graft.operators.SimilaritySearch.bandedLshNearDupPairs(
+    val pairs = SimilaritySearch.bandedLshNearDupPairs(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, bands = 24, bitsPerBand = 6, dim = 64)
       .select(col("idA").as("a_id"), col("idB").as("b_id"))
@@ -462,9 +463,9 @@ object SimQueries {
     // `rotated` (v31): the corpus trains over the HD-rotated `sub`, the
     // batch split's LUTs read rotated per-query subvectors; norms and
     // the rerank stay original-space — the oracle of
-    // [[graft.operators.SimilaritySearch.rotPqTopKBatch]].
+    // [[graft.operators.SimilaritySearch.pqTopKBatch]] on a Hadamard index.
     // `rqLit` (v37): the SAME chain with the TRAINED rotation inlined
-    // as the literal `rfp` CTE — [[opqPqTopKBatch]]'s oracle.
+    // as the literal `rfp` CTE — the oracle of an OPQ index's batch.
     val rotHead =
       if (rqLit.nonEmpty) s"${rfpLitCte(rqLit.get, dim)},\n$rotCorpusLitCte,\n"
       else if (rotated) s"${dsignSql(dim)},\n${rotCorpusCte(dim, root)},\n"
@@ -550,10 +551,10 @@ object SimQueries {
     pqBatchOracleSql(m = 8, ksub = 16, iters = 2, topK = 3, overFetch = 4,
       dim = 64)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.pqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.pqTopKBatch(
+    SimilaritySearch.pqTopKBatch(
         idx,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -582,9 +583,9 @@ object SimQueries {
     val root = math.sqrt(dim.toDouble).toInt
     // `rotated` (v33): codes and per-row LUTs in the HD-rotated space,
     // admission norms + exact verify original — the oracle of
-    // [[graft.operators.SimilaritySearch.rotPqIncrementalNearDup]].
-    // `rqLit` (v38): the trained rotation via the literal `rfp` CTE —
-    // [[opqPqIncrementalNearDup]]'s oracle.
+    // [[graft.operators.SimilaritySearch.pqIncrementalNearDup]] on a
+    // Hadamard index. `rqLit` (v38): the trained rotation via the
+    // literal `rfp` CTE — the oracle of the same op on an OPQ index.
     val rotHead =
       if (rqLit.nonEmpty) s"${rfpLitCte(rqLit.get, dim)},\n$rotCorpusLitCte,\n"
       else if (rotated) s"${dsignSql(dim)},\n${rotCorpusCte(dim, root)},\n"
@@ -675,10 +676,10 @@ object SimQueries {
     pqIncrementalOracleSql(m = 8, ksub = 16, iters = 2,
       threshold = 0.45, margin = 0.2, dim = 64)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.pqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.pqIncrementalNearDup(
+    SimilaritySearch.pqIncrementalNearDup(
         idx, e.filter(col("vec_id") % 7 === 4),
         threshold = 0.45, margin = 0.2)
       .orderBy("vec_id")
@@ -714,12 +715,12 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.pqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
       portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.pqTopK(idx, qVec, topK = 10,
+    SimilaritySearch.pqTopK(idx, qVec, topK = 10,
       overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -741,14 +742,14 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-    val pq = graft.operators.SimilaritySearch.pqBuild(
+    val pq = SimilaritySearch.pqBuild(
       e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
       portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.ivfPqTopK(ivf, pq, qVec, topK = 10,
+    SimilaritySearch.ivfPqTopK(ivf, pq, qVec, topK = 10,
       nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -768,12 +769,12 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.pqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e, "vec_id", "embedding", m = 8, ksub = 256, lloydIters = 2,
       portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.pqTopK(idx, qVec, topK = 10,
+    SimilaritySearch.pqTopK(idx, qVec, topK = 10,
       overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -793,12 +794,12 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.pqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e, "vec_id", "embedding", m = 16, ksub = 256, lloydIters = 2,
       portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.pqTopK(idx, qVec, topK = 10,
+    SimilaritySearch.pqTopK(idx, qVec, topK = 10,
       overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -817,13 +818,13 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-    val rpq = graft.operators.SimilaritySearch.ivfResidualPqBuild(
+    val rpq = SimilaritySearch.residualPqBuild(
       ivf, m = 8, ksub = 256, lloydIters = 2, portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.ivfResidualPqTopK(rpq, qVec, topK = 10,
+    SimilaritySearch.pqTopK(rpq, qVec, topK = 10,
       nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -966,12 +967,12 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.rotPqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
-      portableSeeds = true)
+      portableSeeds = true, rotation = "hadamard")
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.rotPqTopK(idx, qVec, topK = 10,
+    SimilaritySearch.pqTopK(idx, qVec, topK = 10,
       overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -987,10 +988,10 @@ object SimQueries {
     pqBatchOracleSql(m = 8, ksub = 16, iters = 2, topK = 3, overFetch = 4,
       dim = 64, rotated = true)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.rotPqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-      m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.rotPqTopKBatch(
+      m = 8, ksub = 16, lloydIters = 2, portableSeeds = true, rotation = "hadamard")
+    SimilaritySearch.pqTopKBatch(
         idx,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -1007,12 +1008,12 @@ object SimQueries {
     residualPqBatchOracleSql(k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16,
       pqIters = 2, topK = 3, overFetch = 4, dim = 64, rotated = true)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    val rrpq = graft.operators.SimilaritySearch.ivfRotResidualPqBuild(
-      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.rotResidualPqTopKBatch(
+    val rrpq = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true, rotation = "hadamard")
+    SimilaritySearch.pqTopKBatch(
         rrpq,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -1031,10 +1032,10 @@ object SimQueries {
     pqIncrementalOracleSql(m = 8, ksub = 16, iters = 2,
       threshold = 0.45, margin = 0.2, dim = 64, rotated = true)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.rotPqBuild(
+    val idx = SimilaritySearch.pqBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-      m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.rotPqIncrementalNearDup(
+      m = 8, ksub = 16, lloydIters = 2, portableSeeds = true, rotation = "hadamard")
+    SimilaritySearch.pqIncrementalNearDup(
         idx, e.filter(col("vec_id") % 7 === 4),
         threshold = 0.45, margin = 0.2)
       .orderBy("vec_id")
@@ -1051,12 +1052,12 @@ object SimQueries {
       m = 8, ksub = 16, pqIters = 2,
       threshold = 0.45, margin = 0.2, dim = 64, rotated = true)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    val rrpq = graft.operators.SimilaritySearch.ivfRotResidualPqBuild(
-      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.rotResidualPqIncrementalNearDup(
+    val rrpq = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true, rotation = "hadamard")
+    SimilaritySearch.pqIncrementalNearDup(
         rrpq, e.filter(col("vec_id") % 7 === 4),
         threshold = 0.45, margin = 0.2, nprobe = 4)
       .orderBy("vec_id")
@@ -1073,9 +1074,21 @@ object SimQueries {
   private object TrainedRotations {
     private val held =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
-    def put(name: String, rq: Array[Array[Long]]): Unit = held.put(name, rq)
+    def put(name: String, idx: SimilaritySearch.PqIndex): Unit = idx.rotation match {
+      case SimilaritySearch.PqRotation.Trained(_, rq) => held.put(name, rq)
+      case other => throw new IllegalStateException(s"$name: not a trained rotation: $other")
+    }
     def get(name: String): Option[Array[Array[Long]]] = Option(held.get(name))
   }
+
+  /** A trained-OPQ entry: rows-only until a run of `fn` has put its
+    * quantized R in [[TrainedRotations]], then gated by `oracle(R)`. */
+  private def trainedEntry(name: String, oracle: Array[Array[Long]] => String)(
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Q =
+    TrainedRotations.get(name) match {
+      case Some(rq) => Q(name, oracle(rq))(fn)
+      case None => Q.noOracle(name)(fn)
+    }
 
   /** Trained-OPQ oracle (v35): [[rotPqOracleSql]]'s replay chain with
     * the TRAINED rotation inlined as a fixed-point literal CTE in
@@ -1127,27 +1140,20 @@ object SimQueries {
     * [[opqPqOracleSql]]'s literal-R replay. Only the SVD itself stays
     * on spec pins (orthogonality, bit-determinism, covering-overFetch
     * == exact); recall is the clustered fixture's measured arm. */
-  def opqTopKEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val sp = s
-        import sp.implicits._
-        val e = t(s, dir, "embeddings")
-        val idx = graft.operators.SimilaritySearch.opqPqBuild(
-          e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
-          opqIters = 2, portableSeeds = true)
-        TrainedRotations.put("v35_opq_pq_topk", idx.rq)
-        val qVec = e.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Array[Float]].head()
-        graft.operators.SimilaritySearch.opqPqTopK(idx, qVec, topK = 10,
-          overFetch = 4, filter = col("vec_id") =!= 0)
-      }
-    TrainedRotations.get("v35_opq_pq_topk") match {
-      case Some(rq) =>
-        Q("v35_opq_pq_topk", opqPqOracleSql(rq, m = 8, ksub = 16, iters = 2,
-          topK = 10, overFetch = 4, dim = 64))(fn)
-      case None => Q.noOracle("v35_opq_pq_topk")(fn)
-    }
+  def opqTopKEntry: Q = trainedEntry("v35_opq_pq_topk", rq =>
+      opqPqOracleSql(rq, m = 8, ksub = 16, iters = 2,
+        topK = 10, overFetch = 4, dim = 64)) { (s, dir) =>
+    val sp = s
+    import sp.implicits._
+    val e = t(s, dir, "embeddings")
+    val idx = SimilaritySearch.pqBuild(
+      e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
+      opqIters = 2, portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v35_opq_pq_topk", idx)
+    val qVec = e.filter(col("vec_id") === 0)
+      .select(col("embedding")).as[Array[Float]].head()
+    SimilaritySearch.pqTopK(idx, qVec, topK = 10,
+      overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
   /** Trained-OPQ RESIDUAL oracle (v36): [[rotResidualPqOracleSql]]'s
@@ -1220,30 +1226,23 @@ object SimQueries {
     * fixture's measured arm. Gated exactly as v35: the build stores
     * its trained R in [[TrainedRotations]], and this def re-registers
     * with [[opqResidualPqOracleSql]]'s literal-R replay at dump time. */
-  def opqResidualTopKEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val sp = s
-        import sp.implicits._
-        val e = t(s, dir, "embeddings")
-        val ivf = graft.operators.SimilaritySearch.ivfBuild(
-          e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-        val idx = graft.operators.SimilaritySearch.opqResidualPqBuild(
-          ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v36_opq_residual_topk", idx.rq)
-        val qVec = e.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Array[Float]].head()
-        graft.operators.SimilaritySearch.opqResidualPqTopK(idx, qVec,
-          topK = 10, nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
-      }
-    TrainedRotations.get("v36_opq_residual_topk") match {
-      case Some(rq) =>
-        Q("v36_opq_residual_topk", opqResidualPqOracleSql(rq,
-          k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
-          topK = 10, overFetch = 4, dim = 64))(fn)
-      case None => Q.noOracle("v36_opq_residual_topk")(fn)
-    }
+  def opqResidualTopKEntry: Q = trainedEntry("v36_opq_residual_topk", rq =>
+      opqResidualPqOracleSql(rq,
+        k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
+        topK = 10, overFetch = 4, dim = 64)) { (s, dir) =>
+    val sp = s
+    import sp.implicits._
+    val e = t(s, dir, "embeddings")
+    val ivf = SimilaritySearch.ivfBuild(
+      e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
+    val idx = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v36_opq_residual_topk", idx)
+    val qVec = e.filter(col("vec_id") === 0)
+      .select(col("embedding")).as[Array[Float]].head()
+    SimilaritySearch.pqTopK(idx, qVec,
+      topK = 10, nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
   /** Batched trained-OPQ serving (v37) — the trained tier's
@@ -1255,28 +1254,21 @@ object SimQueries {
     * differs from v35's full-corpus R — each entry's holder carries
     * its own. Oracle: [[pqBatchOracleSql]] with the literal `rfp`
     * rotation — the v22/v31 chain with the trained R. */
-  def opqBatchTopKEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val e = t(s, dir, "embeddings")
-        val idx = graft.operators.SimilaritySearch.opqPqBuild(
-          e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-          m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v37_opq_batch_topk", idx.rq)
-        graft.operators.SimilaritySearch.opqPqTopKBatch(
-            idx,
-            e.filter(col("vec_id") % 7 === 4)
-              .select(col("vec_id").as("q_id"), col("embedding")),
-            "q_id", "embedding", topK = 3, overFetch = 4)
-          .orderBy("q_id", "rank")
-      }
-    TrainedRotations.get("v37_opq_batch_topk") match {
-      case Some(rq) =>
-        Q("v37_opq_batch_topk", pqBatchOracleSql(m = 8, ksub = 16, iters = 2,
-          topK = 3, overFetch = 4, dim = 64, rqLit = Some(rq)))(fn)
-      case None => Q.noOracle("v37_opq_batch_topk")(fn)
-    }
+  def opqBatchTopKEntry: Q = trainedEntry("v37_opq_batch_topk", rq =>
+      pqBatchOracleSql(m = 8, ksub = 16, iters = 2,
+        topK = 3, overFetch = 4, dim = 64, rqLit = Some(rq))) { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+    val idx = SimilaritySearch.pqBuild(
+      e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
+      m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v37_opq_batch_topk", idx)
+    SimilaritySearch.pqTopKBatch(
+        idx,
+        e.filter(col("vec_id") % 7 === 4)
+          .select(col("vec_id").as("q_id"), col("embedding")),
+        "q_id", "embedding", topK = 3, overFetch = 4)
+      .orderBy("q_id", "rank")
   }
 
   /** Trained-OPQ incremental dedup (v38) — v33's ingest screen with
@@ -1284,27 +1276,20 @@ object SimQueries {
     * row's LUT is built over its [[matVecFpQ]]-rotated vector, margin
     * admission and the exact float verify keep the v24 contract.
     * Oracle: [[pqIncrementalOracleSql]] with the literal `rfp`. */
-  def opqIncrementalDedupEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val e = t(s, dir, "embeddings")
-        val idx = graft.operators.SimilaritySearch.opqPqBuild(
-          e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-          m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v38_opq_incremental_dedup", idx.rq)
-        graft.operators.SimilaritySearch.opqPqIncrementalNearDup(
-            idx, e.filter(col("vec_id") % 7 === 4),
-            threshold = 0.45, margin = 0.2)
-          .orderBy("vec_id")
-      }
-    TrainedRotations.get("v38_opq_incremental_dedup") match {
-      case Some(rq) =>
-        Q("v38_opq_incremental_dedup", pqIncrementalOracleSql(
-          m = 8, ksub = 16, iters = 2, threshold = 0.45, margin = 0.2,
-          dim = 64, rqLit = Some(rq)))(fn)
-      case None => Q.noOracle("v38_opq_incremental_dedup")(fn)
-    }
+  def opqIncrementalDedupEntry: Q = trainedEntry("v38_opq_incremental_dedup", rq =>
+      pqIncrementalOracleSql(
+        m = 8, ksub = 16, iters = 2, threshold = 0.45, margin = 0.2,
+        dim = 64, rqLit = Some(rq))) { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+    val idx = SimilaritySearch.pqBuild(
+      e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
+      m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v38_opq_incremental_dedup", idx)
+    SimilaritySearch.pqIncrementalNearDup(
+        idx, e.filter(col("vec_id") % 7 === 4),
+        threshold = 0.45, margin = 0.2)
+      .orderBy("vec_id")
   }
 
   /** Batched trained-OPQ RESIDUAL serving (v39) — v32 one rotation
@@ -1312,31 +1297,24 @@ object SimQueries {
     * offsets + trained-R per-query LUTs in one broadcast, the v25
     * kernel verbatim. Oracle: [[residualPqBatchOracleSql]] with the
     * literal `rfp` rotating the residuals and the batch queries. */
-  def opqResidualBatchTopKEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val e = t(s, dir, "embeddings")
-        val ivf = graft.operators.SimilaritySearch.ivfBuild(
-          e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-          k = 16, lloydIters = 3, portableSeeds = true)
-        val idx = graft.operators.SimilaritySearch.opqResidualPqBuild(
-          ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v39_opq_residual_batch_topk", idx.rq)
-        graft.operators.SimilaritySearch.opqResidualPqTopKBatch(
-            idx,
-            e.filter(col("vec_id") % 7 === 4)
-              .select(col("vec_id").as("q_id"), col("embedding")),
-            "q_id", "embedding", topK = 3, nprobe = 4, overFetch = 4)
-          .orderBy("q_id", "rank")
-      }
-    TrainedRotations.get("v39_opq_residual_batch_topk") match {
-      case Some(rq) =>
-        Q("v39_opq_residual_batch_topk", residualPqBatchOracleSql(
-          k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
-          topK = 3, overFetch = 4, dim = 64, rqLit = Some(rq)))(fn)
-      case None => Q.noOracle("v39_opq_residual_batch_topk")(fn)
-    }
+  def opqResidualBatchTopKEntry: Q = trainedEntry("v39_opq_residual_batch_topk", rq =>
+      residualPqBatchOracleSql(
+        k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
+        topK = 3, overFetch = 4, dim = 64, rqLit = Some(rq))) { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+    val ivf = SimilaritySearch.ivfBuild(
+      e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
+      k = 16, lloydIters = 3, portableSeeds = true)
+    val idx = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v39_opq_residual_batch_topk", idx)
+    SimilaritySearch.pqTopKBatch(
+        idx,
+        e.filter(col("vec_id") % 7 === 4)
+          .select(col("vec_id").as("q_id"), col("embedding")),
+        "q_id", "embedding", topK = 3, nprobe = 4, overFetch = 4)
+      .orderBy("q_id", "rank")
   }
 
   /** Trained-OPQ residual incremental dedup (v40) — v34 with the
@@ -1345,29 +1323,22 @@ object SimQueries {
     * a false positive). Oracle: [[residualPqIncrementalOracleSql]]
     * with the literal `rfp`. Completes the trained tier's serving
     * matrix at parity with the HD tier (v31–v34). */
-  def opqResidualIncrementalDedupEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val e = t(s, dir, "embeddings")
-        val ivf = graft.operators.SimilaritySearch.ivfBuild(
-          e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
-          k = 16, lloydIters = 3, portableSeeds = true)
-        val idx = graft.operators.SimilaritySearch.opqResidualPqBuild(
-          ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v40_opq_residual_incremental_dedup", idx.rq)
-        graft.operators.SimilaritySearch.opqResidualPqIncrementalNearDup(
-            idx, e.filter(col("vec_id") % 7 === 4),
-            threshold = 0.45, margin = 0.2, nprobe = 4)
-          .orderBy("vec_id")
-      }
-    TrainedRotations.get("v40_opq_residual_incremental_dedup") match {
-      case Some(rq) =>
-        Q("v40_opq_residual_incremental_dedup", residualPqIncrementalOracleSql(
-          k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
-          threshold = 0.45, margin = 0.2, dim = 64, rqLit = Some(rq)))(fn)
-      case None => Q.noOracle("v40_opq_residual_incremental_dedup")(fn)
-    }
+  def opqResidualIncrementalDedupEntry: Q = trainedEntry("v40_opq_residual_incremental_dedup", rq =>
+      residualPqIncrementalOracleSql(
+        k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
+        threshold = 0.45, margin = 0.2, dim = 64, rqLit = Some(rq))) { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+    val ivf = SimilaritySearch.ivfBuild(
+      e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
+      k = 16, lloydIters = 3, portableSeeds = true)
+    val idx = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v40_opq_residual_incremental_dedup", idx)
+    SimilaritySearch.pqIncrementalNearDup(
+        idx, e.filter(col("vec_id") % 7 === 4),
+        threshold = 0.45, margin = 0.2, nprobe = 4)
+      .orderBy("vec_id")
   }
 
   /** Persisted trained-OPQ serving (v41) — v35 routed through the
@@ -1377,67 +1348,53 @@ object SimQueries {
     * codebook and the codes all survive the tree bit-exactly, and a
     * loaded index's serving decisions are indistinguishable from the
     * in-memory ones. */
-  def opqPersistedServingEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val sp = s
-        import sp.implicits._
-        val e = t(s, dir, "embeddings")
-        val idx = graft.operators.SimilaritySearch.opqPqBuild(
-          e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
-          opqIters = 2, portableSeeds = true)
-        TrainedRotations.put("v41_opq_persisted_serving", idx.rq)
-        val path = s"/tmp/graft_v41_index_${Integer.toHexString(dir.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}"
-        reapAtExit(path)
-        graft.operators.SimilaritySearch.opqPqSave(idx, path)
-        val loaded = graft.operators.SimilaritySearch.opqPqLoad(s, path, e)
-        val qVec = e.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Array[Float]].head()
-        graft.operators.SimilaritySearch.opqPqTopK(loaded, qVec, topK = 10,
-          overFetch = 4, filter = col("vec_id") =!= 0)
-      }
-    TrainedRotations.get("v41_opq_persisted_serving") match {
-      case Some(rq) =>
-        Q("v41_opq_persisted_serving", opqPqOracleSql(rq, m = 8, ksub = 16,
-          iters = 2, topK = 10, overFetch = 4, dim = 64))(fn)
-      case None => Q.noOracle("v41_opq_persisted_serving")(fn)
-    }
+  def opqPersistedServingEntry: Q = trainedEntry("v41_opq_persisted_serving", rq =>
+      opqPqOracleSql(rq, m = 8, ksub = 16,
+        iters = 2, topK = 10, overFetch = 4, dim = 64)) { (s, dir) =>
+    val sp = s
+    import sp.implicits._
+    val e = t(s, dir, "embeddings")
+    val idx = SimilaritySearch.pqBuild(
+      e, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
+      opqIters = 2, portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v41_opq_persisted_serving", idx)
+    val path = s"/tmp/graft_v41_index_${Integer.toHexString(dir.hashCode)}" +
+      s"_p${ProcessHandle.current().pid()}"
+    reapAtExit(path)
+    SimilaritySearch.pqSave(idx, path)
+    val loaded = SimilaritySearch.pqLoad(s, path, e)
+    val qVec = e.filter(col("vec_id") === 0)
+      .select(col("embedding")).as[Array[Float]].head()
+    SimilaritySearch.pqTopK(loaded, qVec, topK = 10,
+      overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
   /** Persisted trained-OPQ RESIDUAL serving (v42) — v36 through the
     * save → load → serve cycle; oracle identical to v36's, pinning the
     * residual tree's round-trip (rotation + codebook + centroids +
     * cluster-partitioned codes) on the hash gate. */
-  def opqResidualPersistedServingEntry: Q = {
-    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      { (s, dir) =>
-        val sp = s
-        import sp.implicits._
-        val e = t(s, dir, "embeddings")
-        val ivf = graft.operators.SimilaritySearch.ivfBuild(
-          e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-        val idx = graft.operators.SimilaritySearch.opqResidualPqBuild(
-          ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
-          portableSeeds = true)
-        TrainedRotations.put("v42_opq_residual_persisted_serving", idx.rq)
-        val path = s"/tmp/graft_v42_index_${Integer.toHexString(dir.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}"
-        reapAtExit(path)
-        graft.operators.SimilaritySearch.opqResidualPqSave(idx, path)
-        val loaded = graft.operators.SimilaritySearch.opqResidualPqLoad(s, path, e)
-        val qVec = e.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Array[Float]].head()
-        graft.operators.SimilaritySearch.opqResidualPqTopK(loaded, qVec,
-          topK = 10, nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
-      }
-    TrainedRotations.get("v42_opq_residual_persisted_serving") match {
-      case Some(rq) =>
-        Q("v42_opq_residual_persisted_serving", opqResidualPqOracleSql(rq,
-          k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
-          topK = 10, overFetch = 4, dim = 64))(fn)
-      case None => Q.noOracle("v42_opq_residual_persisted_serving")(fn)
-    }
+  def opqResidualPersistedServingEntry: Q = trainedEntry("v42_opq_residual_persisted_serving", rq =>
+      opqResidualPqOracleSql(rq,
+        k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16, pqIters = 2,
+        topK = 10, overFetch = 4, dim = 64)) { (s, dir) =>
+    val sp = s
+    import sp.implicits._
+    val e = t(s, dir, "embeddings")
+    val ivf = SimilaritySearch.ivfBuild(
+      e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
+    val idx = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, opqIters = 2,
+      portableSeeds = true, rotation = "opq")
+    TrainedRotations.put("v42_opq_residual_persisted_serving", idx)
+    val path = s"/tmp/graft_v42_index_${Integer.toHexString(dir.hashCode)}" +
+      s"_p${ProcessHandle.current().pid()}"
+    reapAtExit(path)
+    SimilaritySearch.pqSave(idx, path)
+    val loaded = SimilaritySearch.pqLoad(s, path, e)
+    val qVec = e.filter(col("vec_id") === 0)
+      .select(col("embedding")).as[Array[Float]].head()
+    SimilaritySearch.pqTopK(loaded, qVec,
+      topK = 10, nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
   /** Rotated-RESIDUAL IVF-PQ oracle (v30): the v23 replay with the HD
@@ -1517,13 +1474,13 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-    val rrpq = graft.operators.SimilaritySearch.ivfRotResidualPqBuild(
-      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
+    val rrpq = SimilaritySearch.residualPqBuild(
+      ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true, rotation = "hadamard")
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.rotResidualPqTopK(rrpq, qVec, topK = 10,
+    SimilaritySearch.pqTopK(rrpq, qVec, topK = 10,
       nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -1537,7 +1494,7 @@ object SimQueries {
     * residualized), a per-cluster integer offset `qoff` =
     * Σ floor(q·centroid·2^24 + 0.5), and each probed row's adot =
     * offset(cluster) + Σ LUT — exactly the integer sum
-    * [[graft.operators.SimilaritySearch.ivfResidualPqTopK]] computes —
+    * [[graft.operators.SimilaritySearch.pqTopK]] computes —
     * then the shared [[pqRerankTailSql]]. */
   private def residualPqOracleSql(
       k: Int, kIters: Int, nprobe: Int,
@@ -1618,13 +1575,13 @@ object SimQueries {
     val sp = s
     import sp.implicits._
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e, "vec_id", "embedding", k = 16, lloydIters = 3, portableSeeds = true)
-    val rpq = graft.operators.SimilaritySearch.ivfResidualPqBuild(
+    val rpq = SimilaritySearch.residualPqBuild(
       ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.ivfResidualPqTopK(rpq, qVec, topK = 10,
+    SimilaritySearch.pqTopK(rpq, qVec, topK = 10,
       nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -1637,7 +1594,7 @@ object SimQueries {
     * each probed (query, corpus-row) pair's adot = offset + LUT sum;
     * the cut and the exact rerank are v22's per-query ROW_NUMBER
     * windows — exactly [[graft.operators.SimilaritySearch
-    * .ivfResidualPqTopKBatch]]'s decisions. MATERIALIZED hints pin
+    * .pqTopKBatch]]'s decisions. MATERIALIZED hints pin
     * the IVF tail + residual-sub + penc nodes (the v23 lesson:
     * DuckDB inlines CTEs, and `sub` here re-evaluates the whole IVF
     * build at every consumer without them). */
@@ -1662,7 +1619,7 @@ object SimQueries {
     // the subspace split (`res` → `rres`), the batch LUTs read rotated
     // per-query subvectors; probes, offsets, norms, rerank all stay
     // original-space — [[graft.operators.SimilaritySearch
-    // .rotResidualPqTopKBatch]]'s exact decomposition.
+    // .pqTopKBatch]]'s exact decomposition on a rotated residual index.
     // `rqLit` (v39/v40): the SAME chain with the TRAINED rotation via
     // the literal `rfp` CTE — the opqResidual batch/incremental oracle.
     val residualSub =
@@ -1759,7 +1716,7 @@ object SimQueries {
     * adot = ⟨q, centroid⟩ offset + residual LUT sum), cut by the
     * shared margin admission and verified/statused by v24's exact
     * tail — exactly [[graft.operators.SimilaritySearch
-    * .residualPqIncrementalNearDup]]'s decisions. */
+    * .pqIncrementalNearDup]]'s decisions on a residual index. */
   private def residualPqIncrementalOracleSql(
       k: Int, kIters: Int, nprobe: Int,
       m: Int, ksub: Int, pqIters: Int,
@@ -1783,12 +1740,12 @@ object SimQueries {
       m = 8, ksub = 16, pqIters = 2,
       threshold = 0.45, margin = 0.2, dim = 64)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    val rpq = graft.operators.SimilaritySearch.ivfResidualPqBuild(
+    val rpq = SimilaritySearch.residualPqBuild(
       ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.residualPqIncrementalNearDup(
+    SimilaritySearch.pqIncrementalNearDup(
         rpq, e.filter(col("vec_id") % 7 === 4),
         threshold = 0.45, margin = 0.2, nprobe = 4)
       .orderBy("vec_id")
@@ -1808,12 +1765,12 @@ object SimQueries {
     residualPqBatchOracleSql(k = 16, kIters = 3, nprobe = 4, m = 8, ksub = 16,
       pqIters = 2, topK = 3, overFetch = 4, dim = 64)) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val ivf = graft.operators.SimilaritySearch.ivfBuild(
+    val ivf = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    val rpq = graft.operators.SimilaritySearch.ivfResidualPqBuild(
+    val rpq = SimilaritySearch.residualPqBuild(
       ivf, m = 8, ksub = 16, lloydIters = 2, portableSeeds = true)
-    graft.operators.SimilaritySearch.ivfResidualPqTopKBatch(
+    SimilaritySearch.pqTopKBatch(
         rpq,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -1903,7 +1860,7 @@ object SimQueries {
         portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.ivfTopK(idx, qVec, topK = 10,
+    SimilaritySearch.ivfTopK(idx, qVec, topK = 10,
       nprobe = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -1975,7 +1932,7 @@ object SimQueries {
       |SELECT vec_id, FLOOR(dot / (SQRT(n1) * SQRT(n2)) * 10000 + 0.5)/10000 AS cos_sim
       |FROM rr ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    graft.operators.SimilaritySearch.quantizedTopK(
+    SimilaritySearch.quantizedTopK(
       e.filter(col("vec_id") =!= 0), "vec_id", "embedding",
       e.filter(col("vec_id") === 0), "embedding", k = 10, overFetch = 4)
   }
@@ -2011,7 +1968,7 @@ object SimQueries {
       |        FROM ex)
       |SELECT a_id, b_id, cos_sim FROM sel WHERE cos_sim >= CAST(0.45 AS DOUBLE)
       |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-    graft.operators.SimilaritySearch.quantizedNearDupPairs(
+    SimilaritySearch.quantizedNearDupPairs(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, margin = 0.05, numBlocks = 0)
       .select(col("idA").as("a_id"), col("idB").as("b_id"), col("cos_sim"))
@@ -2040,7 +1997,7 @@ object SimQueries {
         portableSeeds = true)
     val qVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()
-    graft.operators.SimilaritySearch.ivfQuantizedTopK(idx, qVec, topK = 10,
+    SimilaritySearch.ivfQuantizedTopK(idx, qVec, topK = 10,
       nprobe = 4, overFetch = 4, filter = col("vec_id") =!= 0)
   }
 
@@ -2064,7 +2021,7 @@ object SimQueries {
     val idx = graft.operators.SimilaritySearch
       .ivfBuild(t(s, dir, "embeddings"), "vec_id", "embedding", k = 16,
         lloydIters = 3, portableSeeds = true)
-    graft.operators.SimilaritySearch.clusterBalancedSample(idx, perCluster = 20)
+    SimilaritySearch.clusterBalancedSample(idx, perCluster = 20)
   }
 
   /** Embedding-based corpus DEDUP, end to end — the semantic-dedup
@@ -2105,7 +2062,7 @@ object SimQueries {
       |SELECT vec_id, MIN(comp) AS comp_id,
       |  CASE WHEN MIN(comp) = vec_id THEN 1 ELSE 0 END AS is_canonical
       |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    val pairs = graft.operators.SimilaritySearch.cosineNearDupPairs(
+    val pairs = SimilaritySearch.cosineNearDupPairs(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, numBlocks = 0)
       .select(col("idA"), col("idB"))
@@ -2158,7 +2115,7 @@ object SimQueries {
       |FROM embeddings e LEFT JOIN agg a ON a.b_id = e.vec_id
       |WHERE e.vec_id % 7 = 4 ORDER BY e.vec_id""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    graft.operators.SimilaritySearch.incrementalNearDup(
+    SimilaritySearch.incrementalNearDup(
         e.filter(col("vec_id") % 7 =!= 4),
         e.filter(col("vec_id") % 7 === 4),
         "vec_id", "embedding", threshold = 0.45, margin = 0.05)
@@ -2197,7 +2154,7 @@ object SimQueries {
       |  FLOOR(sim * 10000 + 0.5) / 10000 AS cos_sim
       |FROM ba ORDER BY vec_id""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.ivfBuild(
+    val idx = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
     graft.operators.SimilaritySearch
@@ -2269,10 +2226,10 @@ object SimQueries {
       |FROM embeddings e LEFT JOIN agg a ON a.b_id = e.vec_id
       |WHERE e.vec_id % 7 = 4 ORDER BY e.vec_id""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.ivfBuild(
+    val idx = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    graft.operators.SimilaritySearch.ivfIncrementalNearDup(
+    SimilaritySearch.ivfIncrementalNearDup(
         idx, e.filter(col("vec_id") % 7 === 4), nprobe = 6,
         threshold = 0.45, margin = 0.05)
       .orderBy("vec_id")
@@ -2322,10 +2279,10 @@ object SimQueries {
       |SELECT q_id, n_id AS vec_id, cos_sim, rank FROM topk
       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.ivfBuild(
+    val idx = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    graft.operators.SimilaritySearch.ivfTopKBatch(
+    SimilaritySearch.ivfTopKBatch(
         idx,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -2401,10 +2358,10 @@ object SimQueries {
   val ivfBatchTopKQuantized: Q = Q(
     "v16_ivf_batch_topk_sq8", batchSq8Sql) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.ivfBuild(
+    val idx = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
-    graft.operators.SimilaritySearch.ivfTopKBatchQuantized(
+    SimilaritySearch.ivfTopKBatchQuantized(
         idx,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),
@@ -2435,7 +2392,7 @@ object SimQueries {
   val ivfServePersisted: Q = Q(
     "v17_ivf_persisted_serving", batchSq8Sql) { (s, dir) =>
     val e = t(s, dir, "embeddings")
-    val idx = graft.operators.SimilaritySearch.ivfBuild(
+    val idx = SimilaritySearch.ivfBuild(
       e.filter(col("vec_id") % 7 =!= 4), "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
     // per-process path: a Bench and a Verify running concurrently on
@@ -2444,9 +2401,9 @@ object SimQueries {
     val path = s"/tmp/graft_v17_index_${Integer.toHexString(dir.hashCode)}" +
       s"_p${ProcessHandle.current().pid()}"
     reapAtExit(path)
-    graft.operators.SimilaritySearch.ivfSave(idx, path)
-    val loaded = graft.operators.SimilaritySearch.ivfLoad(s, path)
-    graft.operators.SimilaritySearch.ivfTopKBatchQuantized(
+    SimilaritySearch.ivfSave(idx, path)
+    val loaded = SimilaritySearch.ivfLoad(s, path)
+    SimilaritySearch.ivfTopKBatchQuantized(
         loaded,
         e.filter(col("vec_id") % 7 === 4)
           .select(col("vec_id").as("q_id"), col("embedding")),

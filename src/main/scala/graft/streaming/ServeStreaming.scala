@@ -164,16 +164,22 @@ object ServeStreaming {
             index, batch, queryIdCol, queryVecCol, topK, nprobe))
   }
 
-  /** Streaming PQ-ADC serving — the PQ tier's streaming arm, closing
-    * ITS serving matrix (one-shot [[SimilaritySearch.pqTopK]] /
-    * batched [[SimilaritySearch.pqTopKBatch]] / persisted
-    * [[SimilaritySearch.pqLoad]] / STREAM) on the SAME
-    * [[serveStreamLoop]] recipe as [[ivfServeStream]]. A mid-stream
-    * [[SimilaritySearch.pqSave]] refresh lands on the very next
-    * micro-batch, no restart. `corpus` is the caller's float table for
-    * the exact rerank (the [[SimilaritySearch.pqLoad]] contract: codes
-    * index a corpus the caller already stores). Output schema per
-    * batch: (queryIdCol, index idCol, cos_sim, rank 1..topK). */
+  /** Streaming PQ-ADC serving — the codec's streaming arm, closing its
+    * serving matrix (one-shot [[SimilaritySearch.pqTopK]] / batched
+    * [[SimilaritySearch.pqTopKBatch]] / persisted
+    * [[SimilaritySearch.pqLoad]] / STREAM) on the same
+    * [[serveStreamLoop]] recipe as [[ivfServeStream]], for every
+    * rotation and coarse layer. A mid-stream [[SimilaritySearch.pqSave]]
+    * refresh lands on the very next micro-batch, no restart — a trained
+    * rotation and its codes live in one versioned tree, so a batch never
+    * scores new codes under an old rotation. The stream pins the `kind`
+    * of its first load: a refresh that saves another kind (say a
+    * Hadamard-rotated tree over a plain one) fails the stream loudly
+    * instead of silently changing what it serves. `corpus` is the
+    * caller's float table for the exact rerank (codes index a corpus
+    * the caller already stores); `nprobe` applies to IVF-residual
+    * indexes. Output schema per batch: (queryIdCol, index idCol,
+    * cos_sim, rank 1..topK). */
   def pqServeStream(
       stream: DataFrame,
       indexDir: String,
@@ -183,140 +189,19 @@ object ServeStreaming {
       outDir: String,
       topK: Int = 10,
       overFetch: Int = 4,
+      nprobe: Int = 4,
       cacheIndex: Boolean = true): StreamingQuery = {
     val spark = stream.sparkSession
+    var kind: Option[String] = None
     serveStreamLoop[SimilaritySearch.PqIndex](
       stream, indexDir, outDir, "pqServeStream", "pqSave", cacheIndex,
-      load = path => SimilaritySearch.pqLoad(spark, path, corpus),
+      load = { path =>
+        val index = SimilaritySearch.pqLoad(spark, path, corpus, kind)
+        kind = Some(index.kind)
+        index
+      },
       serve = (index, batch) =>
         SimilaritySearch.pqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, overFetch))
-  }
-
-  /** Streaming RESIDUAL IVF-PQ serving — completes the residual tier's
-    * serving matrix (one-shot [[SimilaritySearch.ivfResidualPqTopK]] /
-    * batched [[SimilaritySearch.ivfResidualPqTopKBatch]] / persisted
-    * [[SimilaritySearch.residualPqLoad]] / STREAM) on the same
-    * [[serveStreamLoop]] recipe: fail-fast start precondition,
-    * per-batch CURRENT re-resolution with the resolved-version cache,
-    * scoped broadcast release, idempotent per-batch overwrite. A
-    * mid-stream [[SimilaritySearch.residualPqSave]] refresh (e.g.
-    * after a coarse-quantizer re-train + residual re-encode) lands on
-    * the very next micro-batch, no restart. */
-  def residualPqServeStream(
-      stream: DataFrame,
-      indexDir: String,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      outDir: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      cacheIndex: Boolean = true): StreamingQuery = {
-    val spark = stream.sparkSession
-    serveStreamLoop[SimilaritySearch.ResidualPqIndex](
-      stream, indexDir, outDir, "residualPqServeStream", "residualPqSave",
-      cacheIndex,
-      load = path => SimilaritySearch.residualPqLoad(spark, path, corpus),
-      serve = (index, batch) =>
-        SimilaritySearch.ivfResidualPqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, nprobe, overFetch))
-  }
-
-  /** Streaming ROTATED-PQ serving (v29's streaming arm) — the same
-    * [[serveStreamLoop]] recipe over [[SimilaritySearch.rotPqLoad]] +
-    * the rotated chunked batch serve; a mid-stream
-    * [[SimilaritySearch.rotPqSave]] refresh lands on the very next
-    * micro-batch. */
-  def rotPqServeStream(
-      stream: DataFrame,
-      indexDir: String,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      outDir: String,
-      topK: Int = 10,
-      overFetch: Int = 4,
-      cacheIndex: Boolean = true): StreamingQuery = {
-    val spark = stream.sparkSession
-    serveStreamLoop[SimilaritySearch.RotatedPqIndex](
-      stream, indexDir, outDir, "rotPqServeStream", "rotPqSave", cacheIndex,
-      load = path => SimilaritySearch.rotPqLoad(spark, path, corpus),
-      serve = (index, batch) =>
-        SimilaritySearch.rotPqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, overFetch))
-  }
-
-  /** Streaming TRAINED-OPQ serving (v35's streaming arm) — the same
-    * [[serveStreamLoop]] recipe over [[SimilaritySearch.opqPqLoad]] +
-    * the trained chunked batch serve; a mid-stream
-    * [[SimilaritySearch.opqPqSave]] refresh (a re-trained R + codes)
-    * lands atomically on the very next micro-batch — the rotation and
-    * the codes live in ONE versioned tree, so a batch can never score
-    * new codes under an old R. */
-  def opqPqServeStream(
-      stream: DataFrame,
-      indexDir: String,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      outDir: String,
-      topK: Int = 10,
-      overFetch: Int = 4,
-      cacheIndex: Boolean = true): StreamingQuery = {
-    val spark = stream.sparkSession
-    serveStreamLoop[SimilaritySearch.OpqPqIndex](
-      stream, indexDir, outDir, "opqPqServeStream", "opqPqSave", cacheIndex,
-      load = path => SimilaritySearch.opqPqLoad(spark, path, corpus),
-      serve = (index, batch) =>
-        SimilaritySearch.opqPqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, overFetch))
-  }
-
-  /** Streaming TRAINED-OPQ residual serving (v36's streaming arm) —
-    * same recipe over [[SimilaritySearch.opqResidualPqLoad]]. */
-  def opqResidualPqServeStream(
-      stream: DataFrame,
-      indexDir: String,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      outDir: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      cacheIndex: Boolean = true): StreamingQuery = {
-    val spark = stream.sparkSession
-    serveStreamLoop[SimilaritySearch.OpqResidualPqIndex](
-      stream, indexDir, outDir, "opqResidualPqServeStream",
-      "opqResidualPqSave", cacheIndex,
-      load = path => SimilaritySearch.opqResidualPqLoad(spark, path, corpus),
-      serve = (index, batch) =>
-        SimilaritySearch.opqResidualPqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, nprobe, overFetch))
-  }
-
-  /** Streaming ROTATED-RESIDUAL serving (v30's streaming arm) — same
-    * recipe over [[SimilaritySearch.rotResidualPqLoad]]. */
-  def rotResidualPqServeStream(
-      stream: DataFrame,
-      indexDir: String,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      outDir: String,
-      topK: Int = 10,
-      nprobe: Int = 4,
-      overFetch: Int = 4,
-      cacheIndex: Boolean = true): StreamingQuery = {
-    val spark = stream.sparkSession
-    serveStreamLoop[SimilaritySearch.RotatedResidualPqIndex](
-      stream, indexDir, outDir, "rotResidualPqServeStream",
-      "rotResidualPqSave", cacheIndex,
-      load = path => SimilaritySearch.rotResidualPqLoad(spark, path, corpus),
-      serve = (index, batch) =>
-        SimilaritySearch.rotResidualPqTopKBatchChunked(
-          index, batch, queryIdCol, queryVecCol, topK, nprobe, overFetch))
+          index, batch, queryIdCol, queryVecCol, topK, overFetch, nprobe))
   }
 }

@@ -134,12 +134,12 @@ object PqBench {
     val ivf = SimilaritySearch.ivfBuild(corpus, "vec_id", "embedding",
       k = 16, lloydIters = 3, portableSeeds = true)
     val residJson = configs.map { case (ksub, iters) =>
-      val ridx = SimilaritySearch.ivfResidualPqBuild(ivf, m = 8, ksub = ksub,
+      val ridx = SimilaritySearch.residualPqBuild(ivf, m = 8, ksub = ksub,
         lloydIters = iters, portableSeeds = true)
       ridx.encoded.cache().count()
       val arms = Seq(1, 2, 4, 8).map { oF =>
         val (ans, sec) = timedAnswers(qv =>
-          SimilaritySearch.ivfResidualPqTopK(ridx, qv, topK = topK,
+          SimilaritySearch.pqTopK(ridx, qv, topK = topK,
             nprobe = 16, overFetch = oF))
         val r = recall(ans)
         System.err.println(
@@ -154,10 +154,7 @@ object PqBench {
 
     // the batch arm's throughput: the WHOLE query split in one
     // distributed pass at the ship config (vs the per-query driver
-    // round-trips timed above) — measured under BOTH LUT-construction
-    // arms (r17 verdict #5's A/B: distributed map vs the pre-r18
-    // driver loop; results are spec'd bit-identical, this is the
-    // wall-clock line)
+    // round-trips timed above)
     val allQueries = e.filter(col("vec_id") % 7 === 4)
       .select(col("vec_id").as("q_id"), col("embedding")).cache()
     val nBatch = allQueries.count()
@@ -176,26 +173,6 @@ object PqBench {
     val batchSec = batchMedian3(batchOnce _)
     System.err.println(
       f"[pq] batch arm: $nBatch queries in $batchSec%.2f s = ${batchSec / nBatch * 1000}%.2f ms/query")
-    // the verdict-#5 A/B at a 10k-query batch: distributed-map LUT
-    // construction (default) vs the pre-r18 driver loop, same kernel
-    // scan, spec'd bit-identical — this is the wall-clock line
-    val q10k = e.select(col("vec_id").as("q_id"), col("embedding"))
-      .orderBy("q_id").limit(10000).cache()
-    val n10k = q10k.count()
-    def batch10k(): Double = {
-      val t0 = System.nanoTime()
-      SimilaritySearch.pqTopKBatch(shipIdx, q10k, "q_id", "embedding",
-        topK = topK, overFetch = 4)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val abDistributed = batchMedian3(batch10k _)
-    spark.conf.set("spark.graft.pq.batchLut", "driver")
-    val abDriver = try batchMedian3(batch10k _)
-    finally spark.conf.unset("spark.graft.pq.batchLut")
-    System.err.println(
-      f"[pq] 10k-batch LUT A/B: distributed $abDistributed%.2f s vs driver $abDriver%.2f s")
-
     val json =
       f"""{"sf_dir":"$sfDir","n_corpus":$nCorpus,"n_queries":${queryRows.length},
          |"top_k":$topK,
@@ -205,8 +182,6 @@ object PqBench {
          |"residual_configs":${residJson.mkString("[", ",", "]")},
          |"batch":{"n_queries":$nBatch,"sec":$batchSec%.3f,
          |"sec_per_query":${batchSec / nBatch}%.5f},
-         |"batch_lut_ab_10k":{"n_queries":$n10k,
-         |"sec_distributed":$abDistributed%.3f,"sec_driver":$abDriver%.3f},
          |"bytes_at_rest":{"sq8":$sq8Bytes,"float":$floatBytes}}"""
         .stripMargin.replace("\n", "")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")

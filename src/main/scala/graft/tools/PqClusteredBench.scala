@@ -150,47 +150,47 @@ object PqClusteredBench {
           overFetch = 4))
       raw.encoded.unpersist(blocking = false)
       // v29: the HD-rotated form — the OPQ family's decorrelation step
-      val rot = SimilaritySearch.rotPqBuild(corpus, "vec_id", "embedding",
-        m = mDial, ksub = ksub, lloydIters = 2)
-      rot.pq.encoded.cache().count()
+      val rot = SimilaritySearch.pqBuild(corpus, "vec_id", "embedding",
+        m = mDial, ksub = ksub, lloydIters = 2, rotation = "hadamard")
+      rot.encoded.cache().count()
       val rotR = recall(qv =>
-        SimilaritySearch.rotPqTopK(rot, qv, topK = 10, overFetch = 4))
-      rot.pq.encoded.unpersist(blocking = false)
+        SimilaritySearch.pqTopK(rot, qv, topK = 10, overFetch = 4))
+      rot.encoded.unpersist(blocking = false)
       // v35: the TRAINED rotation (OPQ-NP) — the rung above HD
-      val opq = SimilaritySearch.opqPqBuild(corpus, "vec_id", "embedding",
-        m = mDial, ksub = ksub, lloydIters = 2, opqIters = 3)
-      opq.pq.encoded.cache().count()
+      val opq = SimilaritySearch.pqBuild(corpus, "vec_id", "embedding",
+        m = mDial, ksub = ksub, lloydIters = 2, rotation = "opq", opqIters = 3)
+      opq.encoded.cache().count()
       val opqR = recall(qv =>
-        SimilaritySearch.opqPqTopK(opq, qv, topK = 10, overFetch = 4))
-      opq.pq.encoded.unpersist(blocking = false)
-      val resid = SimilaritySearch.ivfResidualPqBuild(ivf, m = mDial,
+        SimilaritySearch.pqTopK(opq, qv, topK = 10, overFetch = 4))
+      opq.encoded.unpersist(blocking = false)
+      val resid = SimilaritySearch.residualPqBuild(ivf, m = mDial,
         ksub = ksub, lloydIters = 2)
       resid.encoded.cache().count()
       val residFullR = recall(qv =>
-        SimilaritySearch.ivfResidualPqTopK(resid, qv, topK = 10,
+        SimilaritySearch.pqTopK(resid, qv, topK = 10,
           nprobe = kClusters, overFetch = 4))
       val residPrunedR = recall(qv =>
-        SimilaritySearch.ivfResidualPqTopK(resid, qv, topK = 10, nprobe = 8,
+        SimilaritySearch.pqTopK(resid, qv, topK = 10, nprobe = 8,
           overFetch = 4))
       resid.encoded.unpersist(blocking = false)
       // v30: rotation composed ONTO residual — the OPQ,IVF,PQ chain
-      val rres = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = mDial,
-        ksub = ksub, lloydIters = 2)
-      rres.rpq.encoded.cache().count()
+      val rres = SimilaritySearch.residualPqBuild(ivf, m = mDial,
+        ksub = ksub, lloydIters = 2, rotation = "hadamard")
+      rres.encoded.cache().count()
       val rresR = recall(qv =>
-        SimilaritySearch.rotResidualPqTopK(rres, qv, topK = 10, nprobe = 8,
+        SimilaritySearch.pqTopK(rres, qv, topK = 10, nprobe = 8,
           overFetch = 4))
-      rres.rpq.encoded.unpersist(blocking = false)
+      rres.encoded.unpersist(blocking = false)
       // v36: the TRAINED rotation composed ONTO residual — the full
       // OPQ,IVF,PQ chain with the Procrustes R, at the dial where the
       // r19 fixture showed rotation actually pays (residuals)
-      val ores = SimilaritySearch.opqResidualPqBuild(ivf, m = mDial,
-        ksub = ksub, lloydIters = 2, opqIters = 3)
-      ores.rpq.encoded.cache().count()
+      val ores = SimilaritySearch.residualPqBuild(ivf, m = mDial,
+        ksub = ksub, lloydIters = 2, rotation = "opq", opqIters = 3)
+      ores.encoded.cache().count()
       val oresR = recall(qv =>
-        SimilaritySearch.opqResidualPqTopK(ores, qv, topK = 10, nprobe = 8,
+        SimilaritySearch.pqTopK(ores, qv, topK = 10, nprobe = 8,
           overFetch = 4))
-      ores.rpq.encoded.unpersist(blocking = false)
+      ores.encoded.unpersist(blocking = false)
       System.err.println(
         f"[pqc] ksub=$ksub oF=4: raw $rawR%.4f, rot $rotR%.4f, " +
           f"opq $opqR%.4f, ivfpq(np=8) $ivfpqR%.4f, " +
@@ -211,11 +211,11 @@ object PqClusteredBench {
     // pinned bit-identical to per-query serving, so its recall SHOULD
     // match rot_residual_nprobe8@64 exactly — this row proves it on
     // the fixture rather than citing the spec.
-    val rres64 = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = mDial,
-      ksub = 64, lloydIters = 2)
-    rres64.rpq.encoded.cache().count()
+    val rres64 = SimilaritySearch.residualPqBuild(ivf, m = mDial,
+      ksub = 64, lloydIters = 2, rotation = "hadamard")
+    rres64.encoded.cache().count()
     val queriesDf = queryRows.toDF("vec_id", "embedding")
-    val batchedRows = SimilaritySearch.rotResidualPqTopKBatch(rres64,
+    val batchedRows = SimilaritySearch.pqTopKBatch(rres64,
         queriesDf.withColumnRenamed("vec_id", "q_id"), "q_id", "embedding",
         topK = 10, nprobe = 8, overFetch = 4)
       .collect().groupBy(_.getLong(0))
@@ -228,10 +228,10 @@ object PqClusteredBench {
     // admits no false positives by construction, so detection rate IS
     // the screen's recall dial (margin prices the ADC error).
     val thr = 0.85
-    val screen = SimilaritySearch.rotResidualPqIncrementalNearDup(rres64,
+    val screen = SimilaritySearch.pqIncrementalNearDup(rres64,
         queriesDf, threshold = thr, margin = 0.1, nprobe = 8)
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    rres64.rpq.encoded.unpersist(blocking = false)
+    rres64.encoded.unpersist(blocking = false)
     val dupTruth = queryRows.map { case (qid, _) =>
       qid -> (exactAll(qid).head._2 >= thr)
     }.toMap

@@ -44,13 +44,12 @@ object PqStreamBench {
     val loadSecs = Seq.fill(5)(loadOnce())
     val nBatches = 5
     // r20: the TRAINED-OPQ stream arm rides the same recipe — its only
-    // delta vs the pq arm is the per-query LUT rotation (bounded by
-    // EncodeBench at ~35% of a bare encode pass) and the rotation
-    // parquet in the per-batch load
+    // delta vs the pq arm is the per-query LUT rotation and the
+    // rotation parquet in the per-batch load
     val opqIdxDir = s"$root/opq_index"
-    SimilaritySearch.opqPqSave(SimilaritySearch.opqPqBuild(
+    SimilaritySearch.pqSave(SimilaritySearch.pqBuild(
       corpus, "vec_id", "embedding", m = 8, ksub = 16, lloydIters = 2,
-      opqIters = 2, portableSeeds = true), opqIdxDir)
+      opqIters = 2, portableSeeds = true, rotation = "opq"), opqIdxDir)
     def runArm(arm: String, batchSize: Int, cacheIdx: Boolean,
         start: (org.apache.spark.sql.DataFrame, String) =>
           org.apache.spark.sql.streaming.StreamingQuery): String = {
@@ -85,7 +84,7 @@ object PqStreamBench {
           stream, idxDir, corpus, "q_id", "embedding", outDir,
           topK = 10, overFetch = 4, cacheIndex = cacheIdx))
     } :+ runArm("opq", 1000, cacheIdx = true,
-      (stream, outDir) => graft.streaming.ServeStreaming.opqPqServeStream(
+      (stream, outDir) => graft.streaming.ServeStreaming.pqServeStream(
         stream, opqIdxDir, corpus, "q_id", "embedding", outDir,
         topK = 10, overFetch = 4))
     val loadMed = BenchProtocol.median(loadSecs)

@@ -472,7 +472,7 @@ class PipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming RESIDUAL serving answers per micro-batch and picks up a residualPqSave refresh") {
+  test("streaming RESIDUAL serving answers per micro-batch and picks up a pqSave refresh") {
     import spark.implicits._
     import graft.streaming.ServeStreaming
     import graft.operators.SimilaritySearch
@@ -484,11 +484,11 @@ class PipelineSpec extends AnyFunSuite {
       v.zipWithIndex.map { case (x, i) => x + (if (i % 2 == 0) eps else -eps) }
     val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 4, lloydIters = 2)
-    val idx = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val idx = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     val root = java.nio.file.Files.createTempDirectory("graft_rpq_stream").toString
     val idxDir = s"$root/index"
-    SimilaritySearch.residualPqSave(idx, idxDir)
+    SimilaritySearch.pqSave(idx, idxDir)
     val corpus2 = corpus.union(Seq((777L, vec(777L))).toDF("id", "v"))
     val srcDir = s"$root/queries"
     Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv")
@@ -497,7 +497,7 @@ class PipelineSpec extends AnyFunSuite {
       .schema("q_id LONG, qv ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = ServeStreaming.residualPqServeStream(
+    val q = ServeStreaming.pqServeStream(
       stream, idxDir, corpus2, "q_id", "qv", s"$root/answers",
       topK = 3, nprobe = 4, overFetch = 4)
     try {
@@ -505,8 +505,8 @@ class PipelineSpec extends AnyFunSuite {
       val b0 = spark.read.parquet(s"$root/answers/batch=0")
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      val direct = SimilaritySearch.ivfResidualPqTopKBatch(
-          SimilaritySearch.residualPqLoad(spark, idxDir, corpus2),
+      val direct = SimilaritySearch.pqTopKBatch(
+          SimilaritySearch.pqLoad(spark, idxDir, corpus2),
           Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv"),
           "q_id", "qv", topK = 3, nprobe = 4, overFetch = 4)
         .orderBy("rank").collect()
@@ -515,13 +515,13 @@ class PipelineSpec extends AnyFunSuite {
         s"stream batch 0 diverged from the direct batch op:\n${b0.toSeq}\nvs\n${direct.toSeq}")
       assert(b0.head._2 == 5L, s"near-copy of 5 must rank first: ${b0.toSeq}")
       // MID-STREAM REFRESH: coarse re-train + residual re-encode over
-      // the grown corpus, residualPqSave to the SAME dir (v2). No
+      // the grown corpus, pqSave to the SAME dir (v2). No
       // restart; 777 is encoded only in v2.
       val ivf2 = SimilaritySearch.ivfBuild(corpus2, "id", "v", k = 4,
         lloydIters = 2)
-      val refreshed = SimilaritySearch.ivfResidualPqBuild(ivf2, m = 4,
+      val refreshed = SimilaritySearch.residualPqBuild(ivf2, m = 4,
         ksub = 8, lloydIters = 2)
-      SimilaritySearch.residualPqSave(refreshed, idxDir)
+      SimilaritySearch.pqSave(refreshed, idxDir)
       Seq((901L, jitter(vec(777L), 0.01f))).toDF("q_id", "qv")
         .coalesce(1).write.mode("append").parquet(srcDir)
       q.processAllAvailable()
@@ -529,7 +529,7 @@ class PipelineSpec extends AnyFunSuite {
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
       assert(b1.nonEmpty && b1.head == ((901L, 777L, 1L)),
-        s"the micro-batch after a residualPqSave refresh must serve from " +
+        s"the micro-batch after a pqSave refresh must serve from " +
           s"the NEW version (777 is encoded only in v2): ${b1.toSeq}")
     } finally q.stop()
   }
@@ -545,11 +545,11 @@ class PipelineSpec extends AnyFunSuite {
     def jitter(v: Array[Float], eps: Float): Array[Float] =
       v.zipWithIndex.map { case (x, i) => x + (if (i % 2 == 0) eps else -eps) }
     val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
-    val idx = SimilaritySearch.rotPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 2)
+    val idx = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 2, rotation = "hadamard")
     val root = java.nio.file.Files.createTempDirectory("graft_rotpq_stream").toString
     val idxDir = s"$root/index"
-    SimilaritySearch.rotPqSave(idx, idxDir)
+    SimilaritySearch.pqSave(idx, idxDir)
     val srcDir = s"$root/queries"
     Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv")
       .coalesce(1).write.mode("append").parquet(srcDir)
@@ -557,7 +557,7 @@ class PipelineSpec extends AnyFunSuite {
       .schema("q_id LONG, qv ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = ServeStreaming.rotPqServeStream(
+    val q = ServeStreaming.pqServeStream(
       stream, idxDir, corpus, "q_id", "qv", s"$root/answers",
       topK = 3, overFetch = 4)
     try {
@@ -565,8 +565,8 @@ class PipelineSpec extends AnyFunSuite {
       val b0 = spark.read.parquet(s"$root/answers/batch=0")
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      val direct = SimilaritySearch.rotPqTopKBatch(
-          SimilaritySearch.rotPqLoad(spark, idxDir, corpus),
+      val direct = SimilaritySearch.pqTopKBatch(
+          SimilaritySearch.pqLoad(spark, idxDir, corpus),
           Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv"),
           "q_id", "qv", topK = 3, overFetch = 4)
         .orderBy("rank").collect()
@@ -574,6 +574,44 @@ class PipelineSpec extends AnyFunSuite {
       assert(b0.toSeq == direct.toSeq,
         s"stream batch 0 diverged from the direct batch op:\n${b0.toSeq}\nvs\n${direct.toSeq}")
       assert(b0.head._2 == 5L, s"near-copy of 5 must rank first: ${b0.toSeq}")
+    } finally q.stop()
+  }
+
+  test("a PQ serving stream refuses a refresh of another kind") {
+    // the stream pins the kind of its first load: a plain-PQ stream
+    // whose directory gets a Hadamard-rotated tree must fail loudly,
+    // not silently switch what it serves
+    import spark.implicits._
+    import graft.streaming.ServeStreaming
+    import graft.operators.SimilaritySearch
+    def vec(seed: Long): Array[Float] = {
+      val r = new scala.util.Random(seed * 2654435761L)
+      Array.fill(16)((r.nextDouble() * 2 - 1).toFloat)
+    }
+    val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
+    val root = java.nio.file.Files.createTempDirectory("graft_pq_kind").toString
+    val idxDir = s"$root/index"
+    SimilaritySearch.pqSave(SimilaritySearch.pqBuild(corpus, "id", "v", m = 4,
+      ksub = 8, lloydIters = 1), idxDir)
+    val srcDir = s"$root/queries"
+    Seq((900L, vec(5L))).toDF("q_id", "qv").coalesce(1).write.mode("append").parquet(srcDir)
+    val stream = spark.readStream.schema("q_id LONG, qv ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val q = ServeStreaming.pqServeStream(
+      stream, idxDir, corpus, "q_id", "qv", s"$root/answers", topK = 3)
+    try {
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$root/answers/batch=0").count() == 3)
+      SimilaritySearch.pqSave(SimilaritySearch.pqBuild(corpus, "id", "v", m = 4,
+        ksub = 8, lloydIters = 1, rotation = "hadamard"), idxDir)
+      Seq((901L, vec(6L))).toDF("q_id", "qv").coalesce(1).write.mode("append").parquet(srcDir)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
+      assert(chain(e).exists(_.contains("'rot-pq' index, not the 'pq'")),
+        chain(e).mkString("\n"))
     } finally q.stop()
   }
 
@@ -589,11 +627,11 @@ class PipelineSpec extends AnyFunSuite {
       v.zipWithIndex.map { case (x, i) => x + (if (i % 2 == 0) eps else -eps) }
     val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 4, lloydIters = 2)
-    val idx = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 2)
+    val idx = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 2, rotation = "hadamard")
     val root = java.nio.file.Files.createTempDirectory("graft_rrpq_stream").toString
     val idxDir = s"$root/index"
-    SimilaritySearch.rotResidualPqSave(idx, idxDir)
+    SimilaritySearch.pqSave(idx, idxDir)
     val corpus2 = corpus.union(Seq((777L, vec(777L))).toDF("id", "v"))
     val srcDir = s"$root/queries"
     Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv")
@@ -602,7 +640,7 @@ class PipelineSpec extends AnyFunSuite {
       .schema("q_id LONG, qv ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = ServeStreaming.rotResidualPqServeStream(
+    val q = ServeStreaming.pqServeStream(
       stream, idxDir, corpus2, "q_id", "qv", s"$root/answers",
       topK = 3, nprobe = 4, overFetch = 4)
     try {
@@ -610,8 +648,8 @@ class PipelineSpec extends AnyFunSuite {
       val b0 = spark.read.parquet(s"$root/answers/batch=0")
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      val direct = SimilaritySearch.rotResidualPqTopKBatch(
-          SimilaritySearch.rotResidualPqLoad(spark, idxDir, corpus2),
+      val direct = SimilaritySearch.pqTopKBatch(
+          SimilaritySearch.pqLoad(spark, idxDir, corpus2),
           Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv"),
           "q_id", "qv", topK = 3, nprobe = 4, overFetch = 4)
         .orderBy("rank").collect()
@@ -623,9 +661,9 @@ class PipelineSpec extends AnyFunSuite {
       // 777 is encoded only in v2
       val ivf2 = SimilaritySearch.ivfBuild(corpus2, "id", "v", k = 4,
         lloydIters = 2)
-      val refreshed = SimilaritySearch.ivfRotResidualPqBuild(ivf2, m = 4,
-        ksub = 8, lloydIters = 2)
-      SimilaritySearch.rotResidualPqSave(refreshed, idxDir)
+      val refreshed = SimilaritySearch.residualPqBuild(ivf2, m = 4,
+        ksub = 8, lloydIters = 2, rotation = "hadamard")
+      SimilaritySearch.pqSave(refreshed, idxDir)
       Seq((901L, jitter(vec(777L), 0.01f))).toDF("q_id", "qv")
         .coalesce(1).write.mode("append").parquet(srcDir)
       q.processAllAvailable()
@@ -633,7 +671,7 @@ class PipelineSpec extends AnyFunSuite {
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
       assert(b1.nonEmpty && b1.head == ((901L, 777L, 1L)),
-        s"the micro-batch after a rotResidualPqSave refresh must serve from " +
+        s"the micro-batch after a pqSave refresh must serve from " +
           s"the NEW version (777 is encoded only in v2): ${b1.toSeq}")
     } finally q.stop()
   }
@@ -650,11 +688,11 @@ class PipelineSpec extends AnyFunSuite {
       v.zipWithIndex.map { case (x, i) => x + (if (i % 2 == 0) eps else -eps) }
     val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 4, lloydIters = 2)
-    val idx = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
+    val idx = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
     val root = java.nio.file.Files.createTempDirectory("graft_opqr_stream").toString
     val idxDir = s"$root/index"
-    SimilaritySearch.opqResidualPqSave(idx, idxDir)
+    SimilaritySearch.pqSave(idx, idxDir)
     val corpus2 = corpus.union(Seq((777L, vec(777L))).toDF("id", "v"))
     val srcDir = s"$root/queries"
     Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv")
@@ -663,7 +701,7 @@ class PipelineSpec extends AnyFunSuite {
       .schema("q_id LONG, qv ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = ServeStreaming.opqResidualPqServeStream(
+    val q = ServeStreaming.pqServeStream(
       stream, idxDir, corpus2, "q_id", "qv", s"$root/answers",
       topK = 3, nprobe = 4, overFetch = 4)
     try {
@@ -671,8 +709,8 @@ class PipelineSpec extends AnyFunSuite {
       val b0 = spark.read.parquet(s"$root/answers/batch=0")
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      val direct = SimilaritySearch.opqResidualPqTopKBatch(
-          SimilaritySearch.opqResidualPqLoad(spark, idxDir, corpus2),
+      val direct = SimilaritySearch.pqTopKBatch(
+          SimilaritySearch.pqLoad(spark, idxDir, corpus2),
           Seq((900L, jitter(vec(5L), 0.01f))).toDF("q_id", "qv"),
           "q_id", "qv", topK = 3, nprobe = 4, overFetch = 4)
         .orderBy("rank").collect()
@@ -685,9 +723,9 @@ class PipelineSpec extends AnyFunSuite {
       // atomically (777 is encoded only in v2, under v2's R)
       val ivf2 = SimilaritySearch.ivfBuild(corpus2, "id", "v", k = 4,
         lloydIters = 2)
-      val refreshed = SimilaritySearch.opqResidualPqBuild(ivf2, m = 4,
-        ksub = 8, lloydIters = 1, opqIters = 2)
-      SimilaritySearch.opqResidualPqSave(refreshed, idxDir)
+      val refreshed = SimilaritySearch.residualPqBuild(ivf2, m = 4,
+        ksub = 8, lloydIters = 1, opqIters = 2, rotation = "opq")
+      SimilaritySearch.pqSave(refreshed, idxDir)
       Seq((901L, jitter(vec(777L), 0.01f))).toDF("q_id", "qv")
         .coalesce(1).write.mode("append").parquet(srcDir)
       q.processAllAvailable()
@@ -695,7 +733,7 @@ class PipelineSpec extends AnyFunSuite {
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
       assert(b1.nonEmpty && b1.head == ((901L, 777L, 1L)),
-        s"the micro-batch after an opqResidualPqSave refresh must serve from " +
+        s"the micro-batch after a pqSave refresh must serve from " +
           s"the NEW version (777 is encoded only in v2): ${b1.toSeq}")
     } finally q.stop()
   }

@@ -416,7 +416,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("v23 persisted: the probe filter prunes the cluster-partitioned residual tree") {
     // v23's scaladoc sells the direct `cluster IN (…)` probe as
     // partition pruning at scale — this pins it on the PERSISTED
-    // layout (r18 verdict #3): a residualPqSave'd tree is
+    // layout (r18 verdict #3): a pqSave'd residual tree is
     // cluster-partitioned, and a loaded one-shot serve at nprobe=2
     // must list only the probed directories, never the full tree
     import org.apache.spark.sql.functions.col
@@ -427,14 +427,14 @@ class PlanQualitySpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val ivf = SimilaritySearch.ivfBuild(corpus, "vec_id", "embedding",
       k = 16, lloydIters = 2, portableSeeds = true)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 8, ksub = 16,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 8, ksub = 16,
       lloydIters = 1, portableSeeds = true)
     val path = "/tmp/graft_v23_planspec"
-    SimilaritySearch.residualPqSave(rpq, path)
-    val loaded = SimilaritySearch.residualPqLoad(spark, path, corpus)
+    SimilaritySearch.pqSave(rpq, path)
+    val loaded = SimilaritySearch.pqLoad(spark, path, corpus)
     val qv = e.filter(col("vec_id") === 4)
       .select("embedding").collect()(0).getSeq[Float](0).toArray
-    val served = SimilaritySearch.ivfResidualPqTopK(loaded, qv, topK = 5,
+    val served = SimilaritySearch.pqTopK(loaded, qv, topK = 5,
       nprobe = 2, overFetch = 4)
     assert(served.collect().nonEmpty, "the loaded serve must produce answers")
     val scans = flatten(served.queryExecution.executedPlan).collect {

@@ -28,6 +28,8 @@ class SimilaritySearchSpec extends AnyFunSuite {
   }
   private def jitter(v: Array[Float], eps: Float): Array[Float] =
     v.zipWithIndex.map { case (x, i) => x + (if (i % 2 == 0) eps else -eps) }
+  private def trained(i: SimilaritySearch.PqIndex): SimilaritySearch.PqRotation.Trained =
+    i.rotation.asInstanceOf[SimilaritySearch.PqRotation.Trained]
 
   test("cosineTopK ranks the planted near-copy first, exact and ordered") {
     import spark.implicits._
@@ -1393,51 +1395,52 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val q = vec(2718L)
     val corpus = (1L to 120L).map(i => (i, vec(i * 101 + 3))).toDF("id", "v")
-    val idx = SimilaritySearch.rotPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1)
+    val idx = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, rotation = "hadamard")
     // a covering coarse cut makes the rotated serve BIT-IDENTICAL to the
     // exact scorer — rotation changes which candidates survive the cut,
     // never the returned cosines (rerank on original floats)
-    val rot = SimilaritySearch.rotPqTopK(idx, q, topK = 10, overFetch = 12)
+    val rot = SimilaritySearch.pqTopK(idx, q, topK = 10, overFetch = 12)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = SimilaritySearch.cosineTopK(corpus, "id", "v",
         Seq(Tuple1(q)).toDF("qv"), "qv", k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(rot == exact, s"rot=$rot exact=$exact")
     // deterministic re-train, and stored norms are the ORIGINAL ones
-    val idx2 = SimilaritySearch.rotPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1)
-    assert(idx.pq.codebook.flatten.flatten.toSeq ==
-      idx2.pq.codebook.flatten.flatten.toSeq)
-    val nrm42 = idx.pq.encoded.filter(col("id") === 42L)
+    val idx2 = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, rotation = "hadamard")
+    assert(idx.codebook.flatten.flatten.toSeq ==
+      idx2.codebook.flatten.flatten.toSeq)
+    val nrm42 = idx.encoded.filter(col("id") === 42L)
       .select("nrm").collect()(0).getDouble(0)
     val trueNrm = math.sqrt(vec(42L * 101 + 3).map(x => x.toDouble * x).sum)
     assert(math.abs(nrm42 - trueNrm) < 1e-9,
       "encoded nrm must be the original vector's norm, not the rotated fp-grid one")
     // degenerate query returns empty (zero LUT + zero qn NULLs every row)
-    assert(SimilaritySearch.rotPqTopK(idx, new Array[Float](16), topK = 3)
+    assert(SimilaritySearch.pqTopK(idx, new Array[Float](16), topK = 3)
       .collect().isEmpty)
     // persistence: round-trip serves identically; foreign loaders refuse
     val dir = java.nio.file.Files.createTempDirectory("rotpq").toString
     try {
-      SimilaritySearch.rotPqSave(idx, dir)
-      val loaded = SimilaritySearch.rotPqLoad(spark, dir, corpus)
-      val a = SimilaritySearch.rotPqTopK(idx, q, topK = 5).collect().toSeq
-      val b = SimilaritySearch.rotPqTopK(loaded, q, topK = 5).collect().toSeq
+      SimilaritySearch.pqSave(idx, dir)
+      val loaded = SimilaritySearch.pqLoad(spark, dir, corpus)
+      assert(loaded.kind == "rot-pq")
+      val a = SimilaritySearch.pqTopK(idx, q, topK = 5).collect().toSeq
+      val b = SimilaritySearch.pqTopK(loaded, q, topK = 5).collect().toSeq
       assert(a == b, "loaded rotated index must serve bit-identically")
       val e1 = intercept[IllegalArgumentException] {
-        SimilaritySearch.pqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("pq"))
       }
       assert(e1.getMessage.contains("rot-pq"))
       val e2 = intercept[IllegalArgumentException] {
-        SimilaritySearch.residualPqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("residual-pq"))
       }
-      assert(e2.getMessage.contains("not a residual-PQ"))
+      assert(e2.getMessage.contains("not the 'residual-pq'"))
     } finally rmTree(dir)
     // non-power-of-4 dimension is loud (√dim must be a power of two)
     val bad = (1L to 40L).map(i => (i, Array.fill(8)(i.toFloat))).toDF("id", "v")
     val e3 = intercept[IllegalArgumentException] {
-      SimilaritySearch.rotPqBuild(bad, "id", "v", m = 4, ksub = 4)
+      SimilaritySearch.pqBuild(bad, "id", "v", m = 4, ksub = 4, rotation = "hadamard")
     }
     assert(e3.getMessage.contains("power-of-4"))
   }
@@ -1454,12 +1457,12 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val q = vec(3141L)
     val corpus = (1L to 120L).map(i => (i, vec(i * 577 + 11))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 6, lloydIters = 2)
-    val rr = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1)
+    val rr = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, rotation = "hadamard")
     // full probe + covering cut ⇒ BIT-IDENTICAL to the exact scorer:
     // the ⟨q,c⟩ + ⟨Hq,Hr⟩ decomposition only decides who survives the
     // cut; returned cosines come from the original floats
-    val got = SimilaritySearch.rotResidualPqTopK(rr, q, topK = 10,
+    val got = SimilaritySearch.pqTopK(rr, q, topK = 10,
         nprobe = 6, overFetch = 12)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = SimilaritySearch.cosineTopK(corpus, "id", "v",
@@ -1470,27 +1473,28 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // trees are mutually refused (their codes are mutually garbage)
     val dir = java.nio.file.Files.createTempDirectory("rrpq").toString
     try {
-      SimilaritySearch.rotResidualPqSave(rr, dir)
-      val loaded = SimilaritySearch.rotResidualPqLoad(spark, dir, corpus)
-      val a = SimilaritySearch.rotResidualPqTopK(rr, q, topK = 5, nprobe = 3)
+      SimilaritySearch.pqSave(rr, dir)
+      val loaded = SimilaritySearch.pqLoad(spark, dir, corpus)
+      assert(loaded.kind == "rot-residual-pq")
+      val a = SimilaritySearch.pqTopK(rr, q, topK = 5, nprobe = 3)
         .collect().toSeq
-      val b = SimilaritySearch.rotResidualPqTopK(loaded, q, topK = 5, nprobe = 3)
+      val b = SimilaritySearch.pqTopK(loaded, q, topK = 5, nprobe = 3)
         .collect().toSeq
       assert(a == b, "loaded rotated-residual index must serve bit-identically")
       val e1 = intercept[IllegalArgumentException] {
-        SimilaritySearch.residualPqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("residual-pq"))
       }
       assert(e1.getMessage.contains("rot-residual-pq"))
     } finally rmTree(dir)
     val plainDir = java.nio.file.Files.createTempDirectory("rrpq2").toString
     try {
-      val plain = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+      val plain = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
         lloydIters = 1)
-      SimilaritySearch.residualPqSave(plain, plainDir)
+      SimilaritySearch.pqSave(plain, plainDir)
       val e2 = intercept[IllegalArgumentException] {
-        SimilaritySearch.rotResidualPqLoad(spark, plainDir, corpus)
+        SimilaritySearch.pqLoad(spark, plainDir, corpus, kind = Some("rot-residual-pq"))
       }
-      assert(e2.getMessage.contains("rotated-residual-PQ"))
+      assert(e2.getMessage.contains("not the 'rot-residual-pq'"))
     } finally rmTree(plainDir)
   }
 
@@ -1498,11 +1502,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
     import spark.implicits._
     val q = vec(1234L)
     val corpus = (1L to 150L).map(i => (i, vec(i * 389 + 7))).toDF("id", "v")
-    val idx = SimilaritySearch.opqPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
+    val idx = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
     // R orthogonal: ‖R Rᵀ − I‖∞ tiny (the Procrustes update returns
     // V Uᵀ of a converged Jacobi SVD)
-    val r = idx.r
+    val r = trained(idx).r
     val n = r.length
     var worst = 0.0
     for (i <- 0 until n; j <- 0 until n) {
@@ -1514,25 +1518,25 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     assert(worst < 1e-9, s"R is not orthogonal: ‖RRᵀ−I‖∞ = $worst")
     // deterministic re-train: same R, same codebook
-    val idx2 = SimilaritySearch.opqPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    assert(idx.r.flatten.toSeq == idx2.r.flatten.toSeq,
+    val idx2 = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    assert(trained(idx).r.flatten.toSeq == trained(idx2).r.flatten.toSeq,
       "re-training must reproduce the rotation bit-for-bit")
-    assert(idx.pq.codebook.flatten.flatten.toSeq ==
-      idx2.pq.codebook.flatten.flatten.toSeq)
+    assert(idx.codebook.flatten.flatten.toSeq ==
+      idx2.codebook.flatten.flatten.toSeq)
     // covering coarse cut ⇒ exact top-k (rerank on original floats)
-    val got = SimilaritySearch.opqPqTopK(idx, q, topK = 10, overFetch = 15)
+    val got = SimilaritySearch.pqTopK(idx, q, topK = 10, overFetch = 15)
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     val exact = SimilaritySearch.cosineTopK(corpus, "id", "v",
         Seq(Tuple1(q)).toDF("qv"), "qv", k = 10)
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     assert(got == exact, s"got=$got exact=$exact")
     // degenerate query returns empty; bad geometry loud
-    assert(SimilaritySearch.opqPqTopK(idx, new Array[Float](16), topK = 3)
+    assert(SimilaritySearch.pqTopK(idx, new Array[Float](16), topK = 3)
       .collect().isEmpty)
     val bad = (1L to 40L).map(i => (i, Array.fill(8)(i.toFloat))).toDF("id", "v")
     val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.opqPqBuild(bad, "id", "v", m = 4, ksub = 4)
+      SimilaritySearch.pqBuild(bad, "id", "v", m = 4, ksub = 4, rotation = "opq")
     }
     assert(e.getMessage.contains("power-of-4"))
   }
@@ -1543,12 +1547,12 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val corpus = ((1L, jitter(q, 0.01f)) +:
       (2L to 180L).map(i => (i, vec(i * 523 + 3)))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 6, lloydIters = 2)
-    val idx = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
+    val idx = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
     // R orthogonal (Procrustes of a converged Jacobi SVD) and the
     // quantized form is its exact 2^24 snap — the matrix the encode
     // applied and the oracle inlines
-    val r = idx.r
+    val r = trained(idx).r
     val n = r.length
     var worst = 0.0
     for (i <- 0 until n; j <- 0 until n) {
@@ -1558,17 +1562,17 @@ class SimilaritySearchSpec extends AnyFunSuite {
       worst = math.max(worst, math.abs(acc - (if (i == j) 1.0 else 0.0)))
     }
     assert(worst < 1e-9, s"R is not orthogonal: ‖RRᵀ−I‖∞ = $worst")
-    assert(idx.rq.flatten.toSeq ==
+    assert(trained(idx).rq.flatten.toSeq ==
       r.flatten.map(x => math.floor(x * (1L << 24) + 0.5).toLong).toSeq)
     // deterministic re-train: same R, same codebook, same codes
-    val idx2 = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    assert(idx.r.flatten.toSeq == idx2.r.flatten.toSeq,
+    val idx2 = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    assert(trained(idx).r.flatten.toSeq == trained(idx2).r.flatten.toSeq,
       "re-training must reproduce the rotation bit-for-bit")
-    assert(idx.rpq.codebook.flatten.flatten.toSeq ==
-      idx2.rpq.codebook.flatten.flatten.toSeq)
+    assert(idx.codebook.flatten.flatten.toSeq ==
+      idx2.codebook.flatten.flatten.toSeq)
     // full probe + covering overFetch ⇒ exact top-k (original-float rerank)
-    val got = SimilaritySearch.opqResidualPqTopK(idx, q, topK = 10,
+    val got = SimilaritySearch.pqTopK(idx, q, topK = 10,
       nprobe = 6, overFetch = 18)
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     val exact = SimilaritySearch.cosineTopK(corpus, "id", "v",
@@ -1576,19 +1580,19 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     assert(got == exact, s"got=$got exact=$exact")
     // a pruned probe still retrieves the planted near-copy, exactly scored
-    val top = SimilaritySearch.opqResidualPqTopK(idx, q, topK = 5,
+    val top = SimilaritySearch.pqTopK(idx, q, topK = 5,
       nprobe = 2, overFetch = 4).collect()
     assert(top.head.getLong(0) == 1L, "planted near-copy must rank first")
     assert(top.head.getDouble(1) > 0.99)
     // degenerate query probes nothing and returns empty
-    assert(SimilaritySearch.opqResidualPqTopK(idx, new Array[Float](16),
+    assert(SimilaritySearch.pqTopK(idx, new Array[Float](16),
       topK = 3).collect().isEmpty)
     // bad geometry loud (power-of-4 init)
     val bad = (1L to 40L).map(i => (i, Array.fill(8)(vec(i).take(8)).flatten.take(8)))
       .toDF("id", "v")
     val badIvf = SimilaritySearch.ivfBuild(bad, "id", "v", k = 3, lloydIters = 1)
     val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.opqResidualPqBuild(badIvf, m = 4, ksub = 4)
+      SimilaritySearch.residualPqBuild(badIvf, m = 4, ksub = 4, rotation = "opq")
     }
     assert(e.getMessage.contains("power-of-4"))
   }
@@ -1628,7 +1632,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val corpus = ((1L, jitter(q, 0.01f)) +:
       (2L to 200L).map(i => (i, vec(i * 733 + 5)))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     // encoded carries the row's IVF cluster (the serve-time offset key)
     // and the TRUE float norm (the exact cosine denominator)
@@ -1637,7 +1641,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // full probe + corpus-covering overFetch: the residual-ADC
     // approximation can only cost recall at the cut, never returned
     // scores — the answer must be BIT-IDENTICAL to the exact scorer
-    val res = SimilaritySearch.ivfResidualPqTopK(rpq, q, topK = 10,
+    val res = SimilaritySearch.pqTopK(rpq, q, topK = 10,
       nprobe = 8, overFetch = 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = SimilaritySearch.cosineTopK(corpus, "id", "v",
@@ -1645,16 +1649,16 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(res == exact, s"res=$res exact=$exact")
     // a pruned probe still retrieves the planted near-copy, exactly scored
-    val top = SimilaritySearch.ivfResidualPqTopK(rpq, q, topK = 5,
+    val top = SimilaritySearch.pqTopK(rpq, q, topK = 5,
       nprobe = 3, overFetch = 4).collect()
     assert(top.head.getLong(0) == 1L, "planted near-copy must rank first")
     assert(top.head.getDouble(1) > 0.99)
     // degenerate query probes nothing — empty answer, ivfTopK's convention
-    assert(SimilaritySearch.ivfResidualPqTopK(rpq, Array.fill(dim)(0f),
+    assert(SimilaritySearch.pqTopK(rpq, Array.fill(dim)(0f),
       topK = 5).count() == 0)
     // mixed-dimension query is loud
     val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.ivfResidualPqTopK(rpq, Array.fill(dim + 1)(0.5f), topK = 3)
+      SimilaritySearch.pqTopK(rpq, Array.fill(dim + 1)(0.5f), topK = 3)
     }
     assert(e.getMessage.contains("query dim"))
   }
@@ -1673,7 +1677,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val corpus = rows.toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 16, lloydIters = 3)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     val raw = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
       lloydIters = 2)
@@ -1691,7 +1695,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     // nprobe = k on the residual arm: both arms then scan every row and
     // the comparison isolates the ENCODING (not the probe)
     val residRecall = recallOf(qv =>
-      SimilaritySearch.ivfResidualPqTopK(rpq, qv, topK = 10, nprobe = 16,
+      SimilaritySearch.pqTopK(rpq, qv, topK = 10, nprobe = 16,
         overFetch = 2))
     val rawRecall = recallOf(qv =>
       SimilaritySearch.pqTopK(raw, qv, topK = 10, overFetch = 2))
@@ -1734,19 +1738,19 @@ class SimilaritySearchSpec extends AnyFunSuite {
     import spark.implicits._
     val corpus = (1L to 300L).map(i => (i, vec(i * 811 + 23))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     val queryIds = Seq(901L, 902L, 903L)
     val queries = (queryIds.map(q => (q, vec(q))) :+
       (999L, new Array[Float](dim))).toDF("q_id", "qv") // one degenerate
-    val batch = SimilaritySearch.ivfResidualPqTopKBatch(rpq, queries, "q_id",
+    val batch = SimilaritySearch.pqTopKBatch(rpq, queries, "q_id",
         "qv", topK = 5, nprobe = 3, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     assert(!batch.contains(999L), "a degenerate query must produce no rows")
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.ivfResidualPqTopK(rpq, vec(q), topK = 5,
+      val solo = SimilaritySearch.pqTopK(rpq, vec(q), topK = 5,
           nprobe = 3, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
@@ -1756,7 +1760,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     // id-column collision refused, the shared batch-arm contract
     val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.ivfResidualPqTopKBatch(rpq,
+      SimilaritySearch.pqTopKBatch(rpq,
         queries.withColumnRenamed("q_id", "id"), "id", "qv", topK = 3)
     }
     assert(e.getMessage.contains("both"))
@@ -1769,16 +1773,16 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val queries = (queryIds.map(q => (q, vec(q))) :+
       (999L, new Array[Float](dim))).toDF("q_id", "qv") // one degenerate
     // v29 batch == per-query
-    val rp = SimilaritySearch.rotPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 2)
-    val rBatch = SimilaritySearch.rotPqTopKBatch(rp, queries, "q_id", "qv",
+    val rp = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 2, rotation = "hadamard")
+    val rBatch = SimilaritySearch.pqTopKBatch(rp, queries, "q_id", "qv",
         topK = 5, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     assert(!rBatch.contains(999L), "a degenerate query must produce no rows")
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.rotPqTopK(rp, vec(q), topK = 5, overFetch = 4)
+      val solo = SimilaritySearch.pqTopK(rp, vec(q), topK = 5, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
         .toSeq
@@ -1787,16 +1791,16 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     // v30 batch == per-query
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rr = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 2)
-    val rrBatch = SimilaritySearch.rotResidualPqTopKBatch(rr, queries, "q_id",
+    val rr = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 2, rotation = "hadamard")
+    val rrBatch = SimilaritySearch.pqTopKBatch(rr, queries, "q_id",
         "qv", topK = 5, nprobe = 3, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     assert(!rrBatch.contains(999L))
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.rotResidualPqTopK(rr, vec(q), topK = 5,
+      val solo = SimilaritySearch.pqTopK(rr, vec(q), topK = 5,
           nprobe = 3, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
@@ -1810,11 +1814,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val seed = vec(42L * 811 + 23)
     val batch = Seq((5042L, jitter(seed, 0.001f)),
       (5043L, vec(777L))).toDF("id", "v")
-    val st1 = SimilaritySearch.rotPqIncrementalNearDup(rp, batch,
+    val st1 = SimilaritySearch.pqIncrementalNearDup(rp, batch,
         threshold = 0.9, margin = 0.6)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(st1(5042L) == "dup", s"rotated screen missed the planted dup: $st1")
-    val st2 = SimilaritySearch.rotResidualPqIncrementalNearDup(rr, batch,
+    val st2 = SimilaritySearch.pqIncrementalNearDup(rr, batch,
         threshold = 0.9, margin = 0.6, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(st2(5042L) == "dup",
@@ -1824,14 +1828,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(rows(SimilaritySearch.rotPqTopKBatchChunked(rp, queries, "q_id",
+    assert(rows(SimilaritySearch.pqTopKBatchChunked(rp, queries, "q_id",
         "qv", topK = 5, overFetch = 4, chunkTarget = 2)) ==
-      rows(SimilaritySearch.rotPqTopKBatch(rp, queries, "q_id", "qv",
+      rows(SimilaritySearch.pqTopKBatch(rp, queries, "q_id", "qv",
         topK = 5, overFetch = 4)),
       "rotated chunked union != one-shot batch")
-    assert(rows(SimilaritySearch.rotResidualPqTopKBatchChunked(rr, queries,
+    assert(rows(SimilaritySearch.pqTopKBatchChunked(rr, queries,
         "q_id", "qv", topK = 5, nprobe = 3, overFetch = 4, chunkTarget = 2)) ==
-      rows(SimilaritySearch.rotResidualPqTopKBatch(rr, queries, "q_id", "qv",
+      rows(SimilaritySearch.pqTopKBatch(rr, queries, "q_id", "qv",
         topK = 5, nprobe = 3, overFetch = 4)),
       "rotated-residual chunked union != one-shot batch")
   }
@@ -1843,16 +1847,16 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val queries = (queryIds.map(q => (q, vec(q))) :+
       (999L, new Array[Float](dim))).toDF("q_id", "qv") // one degenerate
     // v37 batch == per-query (v35's serve, whole frame at once)
-    val op = SimilaritySearch.opqPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    val oBatch = SimilaritySearch.opqPqTopKBatch(op, queries, "q_id", "qv",
+    val op = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    val oBatch = SimilaritySearch.pqTopKBatch(op, queries, "q_id", "qv",
         topK = 5, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     assert(!oBatch.contains(999L), "a degenerate query must produce no rows")
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.opqPqTopK(op, vec(q), topK = 5, overFetch = 4)
+      val solo = SimilaritySearch.pqTopK(op, vec(q), topK = 5, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
         .toSeq
@@ -1861,16 +1865,16 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     // v39 batch == per-query (v36's serve)
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val or = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    val orBatch = SimilaritySearch.opqResidualPqTopKBatch(or, queries, "q_id",
+    val or = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    val orBatch = SimilaritySearch.pqTopKBatch(or, queries, "q_id",
         "qv", topK = 5, nprobe = 3, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     assert(!orBatch.contains(999L))
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.opqResidualPqTopK(or, vec(q), topK = 5,
+      val solo = SimilaritySearch.pqTopK(or, vec(q), topK = 5,
           nprobe = 3, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
@@ -1883,11 +1887,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val seed = vec(42L * 811 + 23)
     val batch = Seq((5042L, jitter(seed, 0.001f)),
       (5043L, vec(777L))).toDF("id", "v")
-    val st1 = SimilaritySearch.opqPqIncrementalNearDup(op, batch,
+    val st1 = SimilaritySearch.pqIncrementalNearDup(op, batch,
         threshold = 0.9, margin = 0.6)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(st1(5042L) == "dup", s"trained screen missed the planted dup: $st1")
-    val st2 = SimilaritySearch.opqResidualPqIncrementalNearDup(or, batch,
+    val st2 = SimilaritySearch.pqIncrementalNearDup(or, batch,
         threshold = 0.9, margin = 0.6, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(st2(5042L) == "dup",
@@ -1905,26 +1909,26 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val q = vec(2718L)
     val corpus = (1L to 150L).map(i => (i, vec(i * 433 + 9))).toDF("id", "v")
-    val op = SimilaritySearch.opqPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
+    val op = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
     val dir = java.nio.file.Files.createTempDirectory("opqpq").toString
     try {
-      SimilaritySearch.opqPqSave(op, dir)
-      val loaded = SimilaritySearch.opqPqLoad(spark, dir, corpus)
+      SimilaritySearch.pqSave(op, dir)
+      val loaded = SimilaritySearch.pqLoad(spark, dir, corpus)
       // the rotation round-trips bit-exactly, so the quantized serving
       // matrix is IDENTICAL — and serving is therefore bit-identical
-      assert(loaded.r.flatten.toSeq == op.r.flatten.toSeq)
-      assert(loaded.rq.flatten.toSeq == op.rq.flatten.toSeq)
-      val a = SimilaritySearch.opqPqTopK(op, q, topK = 5).collect().toSeq
-      val b = SimilaritySearch.opqPqTopK(loaded, q, topK = 5).collect().toSeq
+      assert(trained(loaded).r.flatten.toSeq == trained(op).r.flatten.toSeq)
+      assert(trained(loaded).rq.flatten.toSeq == trained(op).rq.flatten.toSeq)
+      val a = SimilaritySearch.pqTopK(op, q, topK = 5).collect().toSeq
+      val b = SimilaritySearch.pqTopK(loaded, q, topK = 5).collect().toSeq
       assert(a == b, "loaded trained-OPQ index must serve bit-identically")
       // every other loader refuses the tree loudly
       val e1 = intercept[IllegalArgumentException] {
-        SimilaritySearch.pqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("pq"))
       }
       assert(e1.getMessage.contains("opq-pq"))
       val e2 = intercept[IllegalArgumentException] {
-        SimilaritySearch.rotPqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("rot-pq"))
       }
       assert(e2.getMessage.contains("rot"))
     } finally rmTree(dir)
@@ -1934,26 +1938,26 @@ class SimilaritySearchSpec extends AnyFunSuite {
       SimilaritySearch.pqSave(SimilaritySearch.pqBuild(corpus, "id", "v",
         m = 4, ksub = 8, lloydIters = 1), plainDir)
       val e3 = intercept[IllegalArgumentException] {
-        SimilaritySearch.opqPqLoad(spark, plainDir, corpus)
+        SimilaritySearch.pqLoad(spark, plainDir, corpus, kind = Some("opq-pq"))
       }
-      assert(e3.getMessage.contains("trained-OPQ"))
+      assert(e3.getMessage.contains("not the 'opq-pq'"))
     } finally rmTree(plainDir)
     // residual pair: round-trip + mutual guards
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 6, lloydIters = 2)
-    val or = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
+    val or = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
     val rdir = java.nio.file.Files.createTempDirectory("opqrpq").toString
     try {
-      SimilaritySearch.opqResidualPqSave(or, rdir)
-      val loaded = SimilaritySearch.opqResidualPqLoad(spark, rdir, corpus)
-      assert(loaded.rq.flatten.toSeq == or.rq.flatten.toSeq)
-      val a = SimilaritySearch.opqResidualPqTopK(or, q, topK = 5, nprobe = 3)
+      SimilaritySearch.pqSave(or, rdir)
+      val loaded = SimilaritySearch.pqLoad(spark, rdir, corpus)
+      assert(trained(loaded).rq.flatten.toSeq == trained(or).rq.flatten.toSeq)
+      val a = SimilaritySearch.pqTopK(or, q, topK = 5, nprobe = 3)
         .collect().toSeq
-      val b = SimilaritySearch.opqResidualPqTopK(loaded, q, topK = 5, nprobe = 3)
+      val b = SimilaritySearch.pqTopK(loaded, q, topK = 5, nprobe = 3)
         .collect().toSeq
       assert(a == b, "loaded trained residual index must serve bit-identically")
       val e4 = intercept[IllegalArgumentException] {
-        SimilaritySearch.residualPqLoad(spark, rdir, corpus)
+        SimilaritySearch.pqLoad(spark, rdir, corpus, kind = Some("residual-pq"))
       }
       assert(e4.getMessage.contains("opq-residual-pq"))
     } finally rmTree(rdir)
@@ -1963,14 +1967,14 @@ class SimilaritySearchSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(rows(SimilaritySearch.opqPqTopKBatchChunked(op, queries, "q_id",
+    assert(rows(SimilaritySearch.pqTopKBatchChunked(op, queries, "q_id",
         "qv", topK = 5, overFetch = 4, chunkTarget = 2)) ==
-      rows(SimilaritySearch.opqPqTopKBatch(op, queries, "q_id", "qv",
+      rows(SimilaritySearch.pqTopKBatch(op, queries, "q_id", "qv",
         topK = 5, overFetch = 4)),
       "trained chunked union != one-shot batch")
-    assert(rows(SimilaritySearch.opqResidualPqTopKBatchChunked(or, queries,
+    assert(rows(SimilaritySearch.pqTopKBatchChunked(or, queries,
         "q_id", "qv", topK = 5, nprobe = 3, overFetch = 4, chunkTarget = 2)) ==
-      rows(SimilaritySearch.opqResidualPqTopKBatch(or, queries, "q_id", "qv",
+      rows(SimilaritySearch.pqTopKBatch(or, queries, "q_id", "qv",
         topK = 5, nprobe = 3, overFetch = 4)),
       "trained residual chunked union != one-shot batch")
   }
@@ -1986,62 +1990,62 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val clone7 = Seq((9100L, vec(7L * 661 + 13))).toDF("id", "v")
 
     // HD-rotated raw tier
-    val rp = SimilaritySearch.rotPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1)
-    val rpTop = SimilaritySearch.rotPqTopK(SimilaritySearch.rotPqAppend(rp, batch),
+    val rp = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, rotation = "hadamard")
+    val rpTop = SimilaritySearch.pqTopK(SimilaritySearch.pqAppend(rp, batch),
       probe, topK = 3, overFetch = 8).collect()
     assert(rpTop.head.getLong(0) == 9000L && rpTop.head.getDouble(1) > 0.999,
       s"appended near-copy must serve immediately: ${rpTop.toSeq}")
     assert(!rpTop.map(_.getLong(0)).contains(9001L))
     // a batch row identical to a corpus row gets the IDENTICAL code
-    assert(SimilaritySearch.rotPqEncode(rp, clone7)
+    assert(SimilaritySearch.pqEncode(rp, clone7)
         .select("pq_code").head().getLong(0) ==
-      rp.pq.encoded.filter(col("id") === 7L).select("pq_code").head().getLong(0),
+      rp.encoded.filter(col("id") === 7L).select("pq_code").head().getLong(0),
       "rotated ingest encode must reproduce the build's own code")
     // mixed dimensions loud, from the rotation
     val e = intercept[org.apache.spark.SparkException] {
-      SimilaritySearch.rotPqEncode(rp,
+      SimilaritySearch.pqEncode(rp,
         Seq((1L, Array.fill(dim + 4)(0.1f))).toDF("id", "v")).collect()
     }
     assert(e.getMessage.contains("mixed-dimension"))
 
     // trained-OPQ raw tier
-    val op = SimilaritySearch.opqPqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    val opTop = SimilaritySearch.opqPqTopK(SimilaritySearch.opqPqAppend(op, batch),
+    val op = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    val opTop = SimilaritySearch.pqTopK(SimilaritySearch.pqAppend(op, batch),
       probe, topK = 3, overFetch = 8).collect()
     assert(opTop.head.getLong(0) == 9000L && opTop.head.getDouble(1) > 0.999)
-    assert(SimilaritySearch.opqPqEncode(op, clone7)
+    assert(SimilaritySearch.pqEncode(op, clone7)
         .select("pq_code").head().getLong(0) ==
-      op.pq.encoded.filter(col("id") === 7L).select("pq_code").head().getLong(0))
+      op.encoded.filter(col("id") === 7L).select("pq_code").head().getLong(0))
 
     // residual trio: assign → residual → encode; cluster rides along
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 6, lloydIters = 2)
-    val rr = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rr = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 1)
-    val enc7 = SimilaritySearch.ivfResidualPqEncode(rr, clone7).head()
+    val enc7 = SimilaritySearch.pqEncode(rr, clone7).head()
     val stored7 = rr.encoded.filter(col("id") === 7L).head()
     assert(enc7.getLong(1) == stored7.getLong(1) &&
       enc7.getInt(3) == stored7.getInt(3),
       "residual ingest encode must reproduce the build's code AND cluster")
-    val rrTop = SimilaritySearch.ivfResidualPqTopK(
-      SimilaritySearch.ivfResidualPqAppend(rr, batch), probe,
+    val rrTop = SimilaritySearch.pqTopK(
+      SimilaritySearch.pqAppend(rr, batch), probe,
       topK = 3, nprobe = 6, overFetch = 8).collect()
     assert(rrTop.head.getLong(0) == 9000L && rrTop.head.getDouble(1) > 0.999)
-    val hrr = SimilaritySearch.ivfRotResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1)
-    val hrrTop = SimilaritySearch.rotResidualPqTopK(
-      SimilaritySearch.rotResidualPqAppend(hrr, batch), probe,
+    val hrr = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, rotation = "hadamard")
+    val hrrTop = SimilaritySearch.pqTopK(
+      SimilaritySearch.pqAppend(hrr, batch), probe,
       topK = 3, nprobe = 6, overFetch = 8).collect()
     assert(hrrTop.head.getLong(0) == 9000L && hrrTop.head.getDouble(1) > 0.999)
-    val orr = SimilaritySearch.opqResidualPqBuild(ivf, m = 4, ksub = 8,
-      lloydIters = 1, opqIters = 2)
-    val orrTop = SimilaritySearch.opqResidualPqTopK(
-      SimilaritySearch.opqResidualPqAppend(orr, batch), probe,
+    val orr = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
+      lloydIters = 1, opqIters = 2, rotation = "opq")
+    val orrTop = SimilaritySearch.pqTopK(
+      SimilaritySearch.pqAppend(orr, batch), probe,
       topK = 3, nprobe = 6, overFetch = 8).collect()
     assert(orrTop.head.getLong(0) == 9000L && orrTop.head.getDouble(1) > 0.999)
     // the degenerate appended row placed in cluster −1 with nrm 0
-    val deg = SimilaritySearch.ivfResidualPqEncode(rr,
+    val deg = SimilaritySearch.pqEncode(rr,
       Seq((9001L, new Array[Float](dim))).toDF("id", "v")).head()
     assert(deg.getInt(3) == -1 && deg.getDouble(2) == 0.0)
   }
@@ -2050,7 +2054,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     import spark.implicits._
     val corpus = (1L to 200L).map(i => (i, vec(i * 613 + 7))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     val batch = Seq(
       (501L, jitter(vec(17L * 613 + 7), 0.01f)), // near-copy of corpus row 17
@@ -2059,7 +2063,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     ).toDF("id", "v")
     // full probe + covering margin: the screen admits every probed
     // pair, so the status must agree with the EXACT incremental arm
-    val wide = SimilaritySearch.residualPqIncrementalNearDup(rpq, batch,
+    val wide = SimilaritySearch.pqIncrementalNearDup(rpq, batch,
         threshold = 0.95, margin = 2.0, nprobe = 8)
       .collect().map(r => (r.getLong(0),
         (r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
@@ -2072,7 +2076,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(wide(503L)._3 == "keep")
     // a pruned probe finds the planted dup (its near-copy shares the
     // cluster by construction) and its dups subset the full screen's
-    val pruned = SimilaritySearch.residualPqIncrementalNearDup(rpq, batch,
+    val pruned = SimilaritySearch.pqIncrementalNearDup(rpq, batch,
         threshold = 0.95, margin = 2.0, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(pruned(501L) == "dup", "planted dup must survive probe pruning")
@@ -2081,10 +2085,10 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(prunedDups.subsetOf(wideDups))
     // loud guards
     intercept[IllegalArgumentException] {
-      SimilaritySearch.residualPqIncrementalNearDup(rpq, batch, margin = -0.1)
+      SimilaritySearch.pqIncrementalNearDup(rpq, batch, margin = -0.1)
     }
     intercept[IllegalArgumentException] {
-      SimilaritySearch.residualPqIncrementalNearDup(rpq, batch, nprobe = 0)
+      SimilaritySearch.pqIncrementalNearDup(rpq, batch, nprobe = 0)
     }
   }
 
@@ -2092,7 +2096,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     import spark.implicits._
     val corpus = (1L to 200L).map(i => (i, vec(i * 433 + 3))).toDF("id", "v")
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 4, ksub = 8,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 4, ksub = 8,
       lloydIters = 2)
     def rmTree(path: String): Unit = {
       def rm(f: java.io.File): Unit = {
@@ -2103,39 +2107,39 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val dir = java.nio.file.Files.createTempDirectory("graft_rpq").toString
     try {
-      SimilaritySearch.residualPqSave(rpq, dir)
-      val loaded = SimilaritySearch.residualPqLoad(spark, dir, corpus)
+      SimilaritySearch.pqSave(rpq, dir)
+      val loaded = SimilaritySearch.pqLoad(spark, dir, corpus)
       // codebook + centroids round-trip bit-exactly
       assert(loaded.m == rpq.m && loaded.ksub == rpq.ksub && loaded.bits == rpq.bits)
       for (s <- 0 until rpq.m; c <- 0 until rpq.ksub)
         assert(loaded.codebook(s)(c).sameElements(rpq.codebook(s)(c)))
-      loaded.centroids.zip(rpq.centroids).foreach { case ((lc, ln), (rc, rn)) =>
+      loaded.coarse.get.zip(rpq.coarse.get).foreach { case ((lc, ln), (rc, rn)) =>
         assert(lc.sameElements(rc) && ln == rn)
       }
       // serving from the loaded tree is bit-identical
       val q = vec(777L)
-      def ans(i: SimilaritySearch.ResidualPqIndex) =
-        SimilaritySearch.ivfResidualPqTopK(i, q, topK = 5, nprobe = 3,
+      def ans(i: SimilaritySearch.PqIndex) =
+        SimilaritySearch.pqTopK(i, q, topK = 5, nprobe = 3,
           overFetch = 4)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(ans(loaded) == ans(rpq))
       // the raw loader refuses a residual tree loudly (it would
       // otherwise serve residual codes without their offsets)
       val e1 = intercept[IllegalArgumentException] {
-        SimilaritySearch.pqLoad(spark, dir, corpus)
+        SimilaritySearch.pqLoad(spark, dir, corpus, kind = Some("pq"))
       }
-      assert(e1.getMessage.contains("residualPqLoad"))
+      assert(e1.getMessage.contains("'residual-pq'"))
       // and the residual loader refuses a raw tree
       val raw = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8)
       val rawDir = java.nio.file.Files.createTempDirectory("graft_rawpq").toString
       try {
         SimilaritySearch.pqSave(raw, rawDir)
         // raw trees still load through the raw path (kind: "pq")
-        SimilaritySearch.pqLoad(spark, rawDir, corpus)
+        assert(SimilaritySearch.pqLoad(spark, rawDir, corpus, kind = Some("pq")).kind == "pq")
         val e2 = intercept[IllegalArgumentException] {
-          SimilaritySearch.residualPqLoad(spark, rawDir, corpus)
+          SimilaritySearch.pqLoad(spark, rawDir, corpus, kind = Some("residual-pq"))
         }
-        assert(e2.getMessage.contains("not a residual-PQ index"))
+        assert(e2.getMessage.contains("not the 'residual-pq'"))
       } finally rmTree(rawDir)
     } finally rmTree(dir)
   }
@@ -2179,30 +2183,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
       SimilaritySearch.pqIncrementalNearDup(idx, batch, margin = -0.1)
     }
     assert(e.getMessage.contains("margin"))
-  }
-
-  test("pq batchLut knob: distributed and driver arms are bit-identical; bad value loud") {
-    import spark.implicits._
-    val corpus = (1L to 150L).map(i => (i, vec(i * 271 + 9))).toDF("id", "v")
-    val idx = SimilaritySearch.pqBuild(corpus, "id", "v", m = 4, ksub = 8,
-      lloydIters = 2)
-    val queries = (901L to 905L).map(q => (q, vec(q))).toDF("q_id", "qv")
-    def run(): Seq[(Long, Long, Double, Long)] =
-      SimilaritySearch.pqTopKBatch(idx, queries, "q_id", "qv", topK = 5,
-          overFetch = 4)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-    val dist = run() // default = distributed
-    spark.conf.set("spark.graft.pq.batchLut", "driver")
-    val driver = try run()
-    finally spark.conf.unset("spark.graft.pq.batchLut")
-    assert(dist == driver,
-      "distributed and driver LUT construction must be bit-identical")
-    spark.conf.set("spark.graft.pq.batchLut", "nonsense")
-    val e = try intercept[IllegalArgumentException] { run() }
-    finally spark.conf.unset("spark.graft.pq.batchLut")
-    assert(e.getMessage.contains("batchLut"))
   }
 
   test("property: pqTopKBatch kernel == per-query pqServe on random geometry") {
@@ -2387,18 +2367,18 @@ class SimilaritySearchSpec extends AnyFunSuite {
     } finally rmTree(dir)
     // residual tier at the same wide dial: batch == one-shot, save/load
     val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 8, lloydIters = 2)
-    val rpq = SimilaritySearch.ivfResidualPqBuild(ivf, m = 8, ksub = 256,
+    val rpq = SimilaritySearch.residualPqBuild(ivf, m = 8, ksub = 256,
       lloydIters = 2)
     assert(rpq.encoded.schema("pq_code").dataType ==
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType, false))
-    val rBatch = SimilaritySearch.ivfResidualPqTopKBatch(rpq, queries, "q_id",
+    val rBatch = SimilaritySearch.pqTopKBatch(rpq, queries, "q_id",
         "qv", topK = 5, nprobe = 3, overFetch = 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .groupBy(_._1)
     queryIds.foreach { q =>
-      val solo = SimilaritySearch.ivfResidualPqTopK(rpq, vec(q), topK = 5,
+      val solo = SimilaritySearch.pqTopK(rpq, vec(q), topK = 5,
           nprobe = 3, overFetch = 4)
         .collect().zipWithIndex
         .map { case (r, i) => (q, r.getLong(0), r.getDouble(1), (i + 1).toLong) }
@@ -2408,11 +2388,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     val rdir = java.nio.file.Files.createTempDirectory("rpqwide").toString
     try {
-      SimilaritySearch.residualPqSave(rpq, rdir)
-      val rl = SimilaritySearch.residualPqLoad(spark, rdir, corpus)
-      val a = SimilaritySearch.ivfResidualPqTopK(rpq, vec(902L), topK = 5,
+      SimilaritySearch.pqSave(rpq, rdir)
+      val rl = SimilaritySearch.pqLoad(spark, rdir, corpus)
+      val a = SimilaritySearch.pqTopK(rpq, vec(902L), topK = 5,
         nprobe = 3).collect().toSeq
-      val b = SimilaritySearch.ivfResidualPqTopK(rl, vec(902L), topK = 5,
+      val b = SimilaritySearch.pqTopK(rl, vec(902L), topK = 5,
         nprobe = 3).collect().toSeq
       assert(a == b, "loaded wide residual index must serve bit-identically")
     } finally rmTree(rdir)
