@@ -472,7 +472,7 @@ class PipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming RESIDUAL serving answers per micro-batch and picks up a pqSave refresh") {
+  test("streaming RESIDUAL serving answers per micro-batch and picks up a residualPqSave refresh") {
     import spark.implicits._
     import graft.streaming.ServeStreaming
     import graft.operators.SimilaritySearch
