@@ -1856,7 +1856,9 @@ object SimilaritySearch {
     * associative+commutative so partial aggregation is
     * bit-deterministic in any merge order, and no task ever holds a
     * whole cluster), then one pass assigning every vector to its
-    * nearest centroid. Empty clusters keep their seed. */
+    * nearest centroid. Empty clusters keep their seed. NULL and empty
+    * vectors are skipped by seeding and Lloyd, as the PQ builds skip
+    * them, and are assigned cluster −1. */
   def ivfBuild(
       corpus: DataFrame,
       idCol: String,
@@ -1887,6 +1889,7 @@ object SimilaritySearch {
       if (portableSeeds) TextDedup.mdHash(col(idCol).cast("string"))
       else xxhash64(col(idCol))
     val seeds = corpus.select(col(idCol), col(vecCol))
+      .filter(size(col(vecCol)) > 0)
       .filter(pmod(seedHash, lit(strideMod)) === 0)
       .orderBy(seedHash, col(idCol))
       .limit(k)
@@ -1903,11 +1906,14 @@ object SimilaritySearch {
     for (_ <- 0 until lloydIters) {
       val bc = sp.sparkContext.broadcast(cents)
       val means = vecs
-        .map { case (_, v) =>
-          val fp = new Array[Long](v.length)
-          var i = 0
-          while (i < v.length) { fp(i) = math.round(v(i).toDouble * FP); i += 1 }
-          (nearestCentroid(bc.value, v), fp, 1L)
+        .flatMap { case (_, v) =>
+          if (v == null || v.isEmpty) Iterator.empty
+          else {
+            val fp = new Array[Long](v.length)
+            var i = 0
+            while (i < v.length) { fp(i) = math.round(v(i).toDouble * FP); i += 1 }
+            Iterator.single((nearestCentroid(bc.value, v), fp, 1L))
+          }
         }
         .groupByKey(_._1)
         .reduceGroups { (x: (Int, Array[Long], Long), y: (Int, Array[Long], Long)) =>
@@ -1935,7 +1941,9 @@ object SimilaritySearch {
     vecs.unpersist(blocking = false)
     val assigned = corpus.select(col(idCol), col(vecCol))
       .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, nearestCentroid(bc.value, v)) }
+      .map { case (id, v) =>
+        (id, v, if (v == null || v.isEmpty) -1 else nearestCentroid(bc.value, v))
+      }
       .toDF(idCol, vecCol, "cluster")
     IvfIndex(cents, assigned, idCol, vecCol)
   }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.physical._
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, GraftSpillableRowBuffer, SparkPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, GraftSpillableRowBuffer,
+  SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType}
 
@@ -23,9 +24,13 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   *
   *  - **Shared build** (`sharedBuild = true`), the reference's own shape.
   *    The build child requires a [[BroadcastDistribution]] through
-  *    [[SharedBuildMode]], so its rows reach every executor once; each
-  *    executor builds the map from them once, lazily and thread-safely
-  *    ([[SharedBuildMaps]]), and every probe task reads that same map.
+  *    [[SharedBuildMode]], which builds the map once, on the driver, as
+  *    Spark's `HashedRelationBroadcastMode` builds a `HashedRelation`: the
+  *    broadcast value is the map itself, shipped as a few flat arrays
+  *    ([[GraftBuildMap]]), and every probe task reads that one map. The
+  *    driver reads the map's `keyIsUnique` at codegen time; a unique build
+  *    generates a probe loop with no chain walk. Each task points its own
+  *    `UnsafeRow` at a match's record, so the tasks share no state.
   *    The probe child keeps its own partitioning, with no exchange. Only
   *    join types whose build rows are never emitted can share — inner,
   *    right outer and the probe-preserving semi/anti kernels — and only
@@ -87,11 +92,15 @@ case class ParallelHashJoinExec(
   require(!sharedBuild || ParallelHashJoinExec.canShareBuild(joinType, probePreserving),
     s"a shared build cannot serve $joinType (probePreserving=$probePreserving)")
 
-  /** A shared build is counted where its map is built — once per
-    * executor, not once per probe task. */
+  /** A shared build counts its map once per broadcast, on the driver
+    * ([[sharedBuildBroadcast]]); a co-partitioned build counts in each task.
+    * `buildKeys` is the distinct non-null keys: equal to `buildRows` when
+    * the keys are unique (a key split across spill chunks counts once per
+    * chunk). */
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "buildRows" -> SQLMetrics.createMetric(sparkContext, "build side rows"),
+    "buildKeys" -> SQLMetrics.createMetric(sparkContext, "distinct build keys"),
     "buildChunks" -> SQLMetrics.createMetric(sparkContext, "build chunks (>1 = spill fallback)"),
     "buildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "time to build hash map"))
 
@@ -145,9 +154,9 @@ case class ParallelHashJoinExec(
     // the tasks call back into this plan: make its metrics before it ships
     longMetric("numOutputRows")
     if (sharedBuild) {
-      val build = left.executeBroadcast[Array[InternalRow]]()
+      val build = sharedBuildBroadcast()
       right.execute().mapPartitions { probeIter =>
-        joinPartition(sharedBuildMap(build), null, probeIter, thresholdBytes)
+        joinPartition(build.value, null, probeIter, thresholdBytes)
       }
     } else {
       left.execute().zipPartitions(right.execute()) { (buildIter, probeIter) =>
@@ -171,28 +180,31 @@ case class ParallelHashJoinExec(
     var bytes = 0L
     var spilled: GraftSpillableRowBuffer = null
     lazy val toUnsafe = UnsafeProjection.create(left.output.map(_.dataType).toArray)
-    def spill(row: InternalRow): Unit = spilled.add(row match {
+    def unsafe(row: InternalRow): UnsafeRow = row match {
       case u: UnsafeRow => u
       case other => toUnsafe(other)
-    })
+    }
     while (buildIter.hasNext && spilled == null) {
       val row = buildIter.next()
       bytes += (row match {
         case u: UnsafeRow => u.getSizeInBytes.toLong
         case _ => genericRowBytes
       })
-      if (bytes <= thresholdBytes) map.append(row)
+      if (bytes <= thresholdBytes) map.append(unsafe(row))
       else {
         spilled = new GraftSpillableRowBuffer()
-        (0 until map.size).foreach(i => spill(map.rowAt(i)))
+        val moved = new UnsafeRow(left.output.length)
+        map.addresses.foreach(a => spilled.add(map.pointTo(moved, a)))
         map.clear()
-        spill(row)
+        spilled.add(unsafe(row))
       }
     }
-    if (spilled != null) buildIter.foreach(spill)
+    if (spilled != null) buildIter.foreach(row => spilled.add(unsafe(row)))
+    else map.finish()
     longMetric("buildTime") += System.nanoTime - start
     if (spilled == null) {
       longMetric("buildRows") += map.size
+      longMetric("buildKeys") += map.numKeys
       longMetric("buildChunks") += 1
     } else {
       longMetric("buildRows") += spilled.length
@@ -256,6 +268,8 @@ case class ParallelHashJoinExec(
       case None => (_: InternalRow) => true
     }
     val joined = new JoinedRow
+    // this task's view of the map's records, re-pointed at each one read
+    val buildRow = new UnsafeRow(buildOutput.length)
     val nullBuildRow = new GenericInternalRow(buildOutput.length)
     val nullProbeRow = new GenericInternalRow(probeOutput.length)
 
@@ -287,11 +301,11 @@ case class ParallelHashJoinExec(
       private def advance(): Boolean = {
         while (true) {
           while (cursor != -1) {
-            val idx = cursor
-            cursor = buildMap.next(idx)
-            joined(buildMap.rowAt(idx), probeRow)
+            val addr = cursor
+            cursor = buildMap.next(addr)
+            joined(buildMap.pointTo(buildRow, addr), probeRow)
             if (boundCondition(joined)) {
-              if (buildMatched != null) buildMatched.set(idx)
+              if (buildMatched != null) buildMatched.set(addr)
               found = true
               return true
             }
@@ -328,7 +342,7 @@ case class ParallelHashJoinExec(
     def anyMatch(probeRow: InternalRow): Boolean = {
       var cursor = buildMap.headFor(probeKeyProj(probeRow))
       while (cursor != -1) {
-        joined(buildMap.rowAt(cursor), probeRow)
+        joined(buildMap.pointTo(buildRow, cursor), probeRow)
         if (boundCondition(joined)) return true
         cursor = buildMap.next(cursor)
       }
@@ -364,7 +378,7 @@ case class ParallelHashJoinExec(
           var cursor = buildMap.headFor(probeKeyProj(probeRow))
           while (cursor != -1) {
             if (!buildMatched.get(cursor)) {
-              joined(buildMap.rowAt(cursor), probeRow)
+              joined(buildMap.pointTo(buildRow, cursor), probeRow)
               if (boundCondition(joined)) buildMatched.set(cursor)
             }
             cursor = buildMap.next(cursor)
@@ -381,7 +395,7 @@ case class ParallelHashJoinExec(
       * (semi) or unmatched (anti) ones as they are. */
     def probeChunk(probe: Iterator[InternalRow], last: Boolean,
         carried: java.util.BitSet): Iterator[InternalRow] = {
-      val buildMatched = if (marksBuild) new java.util.BitSet(buildMap.size) else null
+      val buildMatched = if (marksBuild) new java.util.BitSet(buildMap.end) else null
       val probed = joinType match {
         case LeftSemi | LeftAnti if probePreserving => probeRows(probe, last, carried)
         case LeftSemi | LeftAnti => markBuildRows(probe, buildMatched)
@@ -389,10 +403,10 @@ case class ParallelHashJoinExec(
       }
       val kept =
         if (buildMatched == null) Iterator.empty
-        else Iterator.range(0, buildMap.size).filter(buildMatched.get(_) == emitOnMatch).map { i =>
+        else buildMap.addresses.filter(buildMatched.get(_) == emitOnMatch).map { a =>
           numOutputRows += 1
-          if (padsBuild) resultProj(joined(buildMap.rowAt(i), nullProbeRow))
-          else resultProj(buildMap.rowAt(i))
+          val row = buildMap.pointTo(buildRow, a)
+          if (padsBuild) resultProj(joined(row, nullProbeRow)) else resultProj(row)
         }
       probed ++ kept
     }
@@ -418,6 +432,8 @@ case class ParallelHashJoinExec(
             bytes += row.getSizeInBytes
             buildMap.append(row)
           }
+          buildMap.finish()
+          longMetric("buildKeys") += buildMap.numKeys
           longMetric("buildChunks") += 1
           probeChunk(probeStore.iterator, last = !buildRows.hasNext, carried)
         }
@@ -428,21 +444,57 @@ case class ParallelHashJoinExec(
   // ===== whole-stage codegen (reference O3-O9's codegen'd build/probe
   // variants, realized as Spark codegen instead of Rust monomorphization;
   // the probe loop fuses into the downstream pipeline like Spark's own
-  // shuffled-hash join). Every join type fuses. Inner, RightOuter and
-  // the probe-preserving semi/anti kernels stream row-at-a-time; the
+  // hash joins). Every join type fuses. Inner, RightOuter and the
+  // probe-preserving semi/anti kernels stream row-at-a-time; the
   // build-side-finalizer types (left outer/semi/anti, full outer) mark a
   // visited bitset during the probe loop and then run a re-entrant
-  // finalizer loop over the dense build-row index after the probe input
-  // drains — the same produce-loop-then-finalizer shape Spark's own
-  // codegen'd full-outer shuffled-hash join uses. =====
+  // finalizer loop over the map's records after the probe input drains —
+  // the same produce-loop-then-finalizer shape Spark's own codegen'd
+  // full-outer shuffled-hash join uses. As in Spark's hash joins, only the
+  // key and condition columns are evaluated before a lookup, and build
+  // columns stay lazy, so `consume` evaluates only the ones it uses. =====
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     if (sharedBuild) right.asInstanceOf[CodegenSupport].inputRDDs()
     else right.execute() :: left.execute() :: Nil
 
-  override def needCopyResult: Boolean = true
+  /** A shared build emits at most one row per probe row when its keys are
+    * unique (or it is a semi/anti join), and then copies only what its
+    * probe side copies, as Spark's `BroadcastHashJoinExec` does. */
+  override def needCopyResult: Boolean =
+    !sharedBuild || right.asInstanceOf[CodegenSupport].needCopyResult ||
+      !(probePreserving || left.executeBroadcast[GraftBuildMap]().value.keyIsUnique)
 
   override protected def canCheckLimitNotReached: Boolean = true
+
+  /** The shared build's broadcast, its map read on the driver (where it
+    * was built), as Spark's `HashJoin.prepareRelation` reads its relation.
+    * The map's counts are set, not added, and posted as driver-side metric
+    * updates, as `BroadcastExchangeExec` posts its own: each broadcast
+    * counts once however often the plan runs. */
+  private def sharedBuildBroadcast(): Broadcast[GraftBuildMap] = {
+    val build = left.executeBroadcast[GraftBuildMap]()
+    val map = build.value
+    val counts = Seq("buildRows" -> map.size.toLong, "buildKeys" -> map.numKeys.toLong,
+      "buildChunks" -> 1L, "buildTime" -> map.buildNanos)
+    counts.foreach { case (name, v) => longMetric(name).set(v) }
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      counts.map { case (name, _) => longMetric(name) })
+    build
+  }
+
+  /** The class of this join's maps, which the generated code names. */
+  private def mapClass: String =
+    if (ParallelHashJoinExec.longKeyed(leftKeys)) classOf[GraftLongMap].getName
+    else classOf[GraftOpenMap].getName
+
+  /** This task's view of the map's records, re-pointed at each one the
+    * generated loop reads. One per join and per task: the map is shared,
+    * the row never is. */
+  private def buildRowState(ctx: CodegenContext): String =
+    ctx.addMutableState(classOf[UnsafeRow].getName, "graftBuildRow",
+      v => s"$v = new ${classOf[UnsafeRow].getName}(${left.output.length});", forceInline = true)
 
   /** Executor-side co-partitioned build for the generated probe loop,
     * through the same byte-tracked loop as `doExecute`. The budget is
@@ -463,12 +515,6 @@ case class ParallelHashJoinExec(
     else new GraftCodegenBuild(null, joinPartition(map, spilled, probeIter, thresholdBytes))
   }
 
-  /** Executor-side map of a shared build for the generated probe loop
-    * (see [[SharedBuildMaps]]). */
-  def sharedBuildMap(build: Broadcast[Array[InternalRow]]): GraftBuildMap =
-    SharedBuildMaps.mapFor(build.value, sharedBuildKeys,
-      longMetric("buildRows"), longMetric("buildChunks"), longMetric("buildTime"))
-
   /** Shared build: the probe child produces and this join consumes, as
     * Spark's broadcast hash join does, so the probe pipeline fuses into
     * the same stage. Co-partitioned: this join drives its own loop over
@@ -478,17 +524,16 @@ case class ParallelHashJoinExec(
     else produceCoPartitioned(ctx)
 
   /** One streamed probe row of a shared build: the same kernels as the
-    * co-partitioned loop, over the broadcast build's map. */
+    * co-partitioned loop, over the broadcast map. The probe columns the
+    * join reads (keys, condition) arrive evaluated (`usedInputs`); the
+    * rest stay lazy. */
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
-    val thisPlan = ctx.addReferenceObj("plan", this)
-    val build = ctx.addReferenceObj("sharedBuild",
-      left.executeBroadcast[Array[InternalRow]](), classOf[Broadcast[_]].getName)
-    val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftSharedMap",
-      v => s"$v = $thisPlan.sharedBuildMap($build);", forceInline = true)
-    s"""
-       |${evaluateVariables(input)}
-       |${probeKernel(ctx, input, mapTerm, visitedTerm = "")}
-     """.stripMargin
+    val build = sharedBuildBroadcast()
+    val buildTerm = ctx.addReferenceObj("sharedBuild", build, classOf[Broadcast[_]].getName)
+    val mapTerm = ctx.addMutableState(mapClass, "graftSharedMap",
+      v => s"$v = ($mapClass) $buildTerm.value();", forceInline = true)
+    probeKernel(ctx, input, mapTerm, buildRowState(ctx), visitedTerm = "",
+      unique = build.value.keyIsUnique)
   }
 
   private def produceCoPartitioned(ctx: CodegenContext): String = {
@@ -502,23 +547,25 @@ case class ParallelHashJoinExec(
       v => s"$v = $thisPlan.buildOrFallbackForCodegen($buildInput, " +
         s"$streamedInput, ${spillThreshold}L);",
       forceInline = true)
-    val mapTerm = ctx.addMutableState("graft.plans.GraftBuildMap", "graftBuildMap",
-      v => s"$v = $buildResTerm.map();", forceInline = true)
+    val mapTerm = ctx.addMutableState(mapClass, "graftBuildMap",
+      v => s"$v = ($mapClass) $buildResTerm.map();", forceInline = true)
     val fbTerm = ctx.addMutableState("scala.collection.Iterator", "graftFallbackIter",
       v => s"$v = $buildResTerm.fallback();", forceInline = true)
+    val buildRow = buildRowState(ctx)
 
-    // evaluate the streamed (probe) columns from the input row
+    // the streamed (probe) columns of the input row: those the join reads
+    // are evaluated before the lookup, the others when consumed
     val streamedRow = ctx.freshName("graftStreamedRow")
     ctx.INPUT_ROW = streamedRow
     ctx.currentVars = null
     val streamVars = right.output.zipWithIndex.map { case (a, i) =>
       BoundReference(i, a.dataType, a.nullable).genCode(ctx)
     }
-    val streamEval = evaluateVariables(streamVars)
+    val streamEval = evaluateRequiredVariables(right.output, streamVars, references)
 
     // Build-finalizer machinery (left outer/semi/anti, full outer):
-    // a visited bit per dense build-row index, marked in the probe
-    // loop, plus a re-entrant cursor for the post-probe emit loop.
+    // a visited bit per build record address, marked in the probe loop, plus
+    // a re-entrant record cursor for the post-probe emit loop.
     val needsFinalizer = joinType match {
       case LeftSemi | LeftAnti if probePreserving => false
       case LeftOuter | FullOuter | LeftSemi | LeftAnti => true
@@ -528,26 +575,24 @@ case class ParallelHashJoinExec(
       ctx.addMutableState("java.util.BitSet", "graftVisited",
         v => s"$v = new java.util.BitSet();", forceInline = true)
     else ""
-    val finIdxTerm = if (needsFinalizer)
+    val finAddrTerm = if (needsFinalizer)
       ctx.addMutableState(org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.JAVA_INT,
-        "graftFinIdx", v => s"$v = 0;", forceInline = true)
+        "graftFinAddr", v => s"$v = 0;", forceInline = true)
     else ""
     val numOutput = metricTerm(ctx, "numOutputRows")
-    val body = probeKernel(ctx, streamVars, mapTerm, visitedTerm)
+    // each task's map has its own key counts, so this loop walks chains
+    val body = probeKernel(ctx, streamVars, mapTerm, buildRow, visitedTerm, unique = false)
 
-    // Post-probe finalizer: walk the dense build-row index and emit the
-    // rows the probe loop marked (semi) or left unmarked (outer/anti),
+    // Post-probe finalizer: walk the map's records and emit the rows the
+    // probe loop marked (semi) or left unmarked (outer/anti),
     // null-padding the probe side for the outer types. Re-entrant: the
     // cursor is codegen mutable state, so processNext re-entry after a
     // full output batch resumes exactly where it stopped.
     val finalizer = if (!needsFinalizer) "" else {
-      val finRow = ctx.freshName("graftFinRow")
-      val (finVars, finEval) = buildVarsFor(ctx, finRow)
+      val finVars = buildVarsFor(ctx, buildRow)
       val emitTerm = ctx.freshName("graftEmit")
-      val emitCond = joinType match {
-        case LeftSemi => s"$visitedTerm.get($finIdxTerm)"
-        case _ => s"!$visitedTerm.get($finIdxTerm)"
-      }
+      val visited = s"$visitedTerm.get($finAddrTerm)"
+      val emitCond = if (joinType == LeftSemi) visited else s"!$visited"
       val finConsume = joinType match {
         case LeftSemi | LeftAnti => consume(ctx, finVars)
         case _ =>
@@ -555,12 +600,11 @@ case class ParallelHashJoinExec(
           consume(ctx, finVars ++ nullProbe)
       }
       s"""
-         |while ($limitNotReachedCond $finIdxTerm < $mapTerm.size()) {
+         |while ($limitNotReachedCond $finAddrTerm < $mapTerm.end()) {
          |  boolean $emitTerm = $emitCond;
-         |  InternalRow $finRow = $mapTerm.rowAt($finIdxTerm);
-         |  $finIdxTerm++;
+         |  if ($emitTerm) $mapTerm.pointTo($buildRow, $finAddrTerm);
+         |  $finAddrTerm = $mapTerm.recordAfter($finAddrTerm);
          |  if ($emitTerm) {
-         |    $finEval
          |    $numOutput.add(1);
          |    $finConsume
          |  }
@@ -596,21 +640,23 @@ case class ParallelHashJoinExec(
      """.stripMargin
   }
 
-  /** Build-side column ExprCodes bound to `row` (fresh scope). */
-  private def buildVarsFor(ctx: CodegenContext, row: String): (Seq[ExprCode], String) = {
+  /** Build-side column ExprCodes read from `row`, not yet evaluated. */
+  private def buildVarsFor(ctx: CodegenContext, row: String): Seq[ExprCode] = {
     ctx.INPUT_ROW = row
     ctx.currentVars = null
-    val vars = left.output.zipWithIndex.map { case (a, i) =>
+    left.output.zipWithIndex.map { case (a, i) =>
       BoundReference(i, a.dataType, a.nullable).genCode(ctx)
     }
-    (vars, evaluateVariables(vars))
   }
 
-  /** The probe kernel for one streamed row whose (already evaluated)
-    * columns are `streamVars`, against the build map `mapTerm`.
-    * `visitedTerm` is the build-row bitset of the finalizer types. */
+  /** The probe kernel for one streamed row whose columns are
+    * `streamVars` (the key and condition columns evaluated), against the
+    * build map `mapTerm`, whose records are read through the task's
+    * `buildRow`. `visitedTerm` is the build-row bitset of the finalizer
+    * types. A `unique` build's loop body runs at most once per probe row:
+    * it never reads a chain link. */
   private def probeKernel(ctx: CodegenContext, streamVars: Seq[ExprCode],
-      mapTerm: String, visitedTerm: String): String = {
+      mapTerm: String, buildRow: String, visitedTerm: String, unique: Boolean): String = {
     // The probe key (same float normalization as the map) and its
     // lookup: one integral key is read as a long, as a `GraftLongMap`
     // indexes it; any other key is an UnsafeRow.
@@ -621,42 +667,43 @@ case class ParallelHashJoinExec(
     val (keyCode, keyNull, lookup) =
       if (ParallelHashJoinExec.longKeyed(keyExprs)) {
         val ev = keyExprs.head.genCode(ctx)
-        (ev.code.toString, ev.isNull.toString,
-          s"((graft.plans.GraftLongMap) $mapTerm).headForLong((long) ${ev.value})")
+        (ev.code.toString, ev.isNull.toString, s"$mapTerm.headForLong((long) ${ev.value})")
       } else {
         val ev = GenerateUnsafeProjection.createCode(ctx, keyExprs)
         (ev.code.toString, s"${ev.value}.anyNull()", s"$mapTerm.headFor(${ev.value})")
       }
 
     val numOutput = metricTerm(ctx, "numOutputRows")
-    val idxTerm = ctx.freshName("graftIdx")
-    val buildRow = ctx.freshName("graftBuildRow")
+    val addr = ctx.freshName("graftAddr")
+    val cur = ctx.freshName("graftCur")
+    val advance = if (unique) s"$addr = -1;" else s"$addr = $mapTerm.next($addr);"
 
-    /** Residual-condition guard over `buildVars ++ streamVars`:
-      * (open, close) code wrapping the emit/mark site. The hash lookup
-      * already guarantees key equality via UnsafeRow equals. */
+    /** Residual-condition guard over `buildVars ++ streamVars`: (open,
+      * close) code wrapping the emit/mark site. Only the build columns the
+      * condition reads are evaluated here. The lookup already guarantees
+      * key equality. */
     def condGuard(buildVars: Seq[ExprCode]): (String, String) =
       condition.map { c =>
+        val eval = evaluateRequiredVariables(left.output, buildVars, c.references)
         ctx.currentVars = buildVars ++ streamVars
         ctx.INPUT_ROW = null
         val bound = BindReferences.bindReference(c, AttributeSeq(left.output ++ right.output))
         val ev = bound.genCode(ctx)
         (s"""
+            |$eval
             |${ev.code}
             |if (!${ev.isNull} && ${ev.value}) {""".stripMargin, "}")
       }.getOrElse(("", ""))
 
     /** Null-guarded build vars for pad-capable loops: `row` may be the
       * Java literal null, in which case every column reads as NULL
-      * (Spark's codegenOuter shape). */
-    def paddedBuildVarsFor(row: String): (Seq[ExprCode], String) = {
-      ctx.INPUT_ROW = row
-      ctx.currentVars = null
-      val vars = left.output.zipWithIndex.map { case (a, i) =>
-        val ev = BoundReference(i, a.dataType, a.nullable).genCode(ctx)
+      * (Spark's codegenOuter shape). Not yet evaluated. */
+    def paddedBuildVarsFor(row: String): Seq[ExprCode] = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, JavaCode}
+      import Block._
+      left.output.zip(buildVarsFor(ctx, row)).map { case (a, ev) =>
         val isNull = ctx.freshName("graftIsNull")
         val value = ctx.freshName("graftValue")
-        import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
         val javaType = CodeGenerator.javaType(a.dataType)
         val newCode =
           s"""
@@ -668,23 +715,22 @@ case class ParallelHashJoinExec(
              |  $value = ${ev.value};
              |}
            """.stripMargin
-        import org.apache.spark.sql.catalyst.expressions.codegen.{Block, JavaCode}
-        import Block._
         ExprCode(code"$newCode",
           JavaCode.isNullVariable(isNull), JavaCode.variable(value, a.dataType))
       }
-      (vars, evaluateVariables(vars))
     }
 
     /** Residual condition as a boolean `passed` var for pad-capable
-      * loops: a null build row (the pad iteration) always passes. */
+      * loops: a null build row (the pad pass) always passes. */
     def condPassed(buildVars: Seq[ExprCode], row: String, passed: String): String =
       condition.map { c =>
+        val eval = evaluateRequiredVariables(left.output, buildVars, c.references)
         ctx.currentVars = buildVars ++ streamVars
         ctx.INPUT_ROW = null
         val bound = BindReferences.bindReference(c, AttributeSeq(left.output ++ right.output))
         val ev = bound.genCode(ctx)
         s"""
+           |$eval
            |boolean $passed = true;
            |if ($row != null) {
            |  ${ev.code}
@@ -696,22 +742,20 @@ case class ParallelHashJoinExec(
     joinType match {
       case Inner | LeftOuter =>
         // inner-style emit of surviving matches; LeftOuter additionally
-        // marks visited build rows so the finalizer below can pad the
-        // unmatched remainder
-        val (buildVars, buildEval) = buildVarsFor(ctx, buildRow)
+        // marks visited build rows so the finalizer can pad the unmatched
+        // remainder
+        val buildVars = buildVarsFor(ctx, buildRow)
         val (condOpen, condClose) = condGuard(buildVars)
-        val curIdx = ctx.freshName("graftCurIdx")
-        val mark = if (joinType == LeftOuter) s"$visitedTerm.set($curIdx);" else ""
+        val mark = if (joinType == LeftOuter) s"$visitedTerm.set($cur);" else ""
         val consumeCode = consume(ctx, buildVars ++ streamVars)
         s"""
            |$keyCode
            |if (!$keyNull) {
-           |  int $idxTerm = $lookup;
-           |  while ($idxTerm != -1) {
-           |    int $curIdx = $idxTerm;
-           |    InternalRow $buildRow = $mapTerm.rowAt($idxTerm);
-           |    $idxTerm = $mapTerm.next($idxTerm);
-           |    $buildEval
+           |  int $addr = $lookup;
+           |  while ($addr != -1) {
+           |    int $cur = $addr;
+           |    $mapTerm.pointTo($buildRow, $addr);
+           |    $advance
            |    $condOpen
            |    $mark
            |    $numOutput.add(1);
@@ -722,28 +766,29 @@ case class ParallelHashJoinExec(
          """.stripMargin
 
       case RightOuter | FullOuter =>
-        // Spark's codegenOuter shape: the loop's final iteration emits
-        // the null-padded row when no match survived the condition.
-        // FullOuter additionally marks visited build rows for the
-        // finalizer below.
-        val (buildVars, buildEval) = paddedBuildVarsFor(buildRow)
+        // Spark's codegenOuter shape: one pass per match, and a last pass
+        // that emits the null-padded row when no match survived the
+        // condition. FullOuter additionally marks visited build rows for
+        // the finalizer.
+        val matched = ctx.freshName("graftMatched")
+        val buildVars = paddedBuildVarsFor(matched)
         val passed = ctx.freshName("graftPassed")
-        val condEval = condPassed(buildVars, buildRow, passed)
+        val condEval = condPassed(buildVars, matched, passed)
         val found = ctx.freshName("graftFound")
-        val curIdx = ctx.freshName("graftCurIdx")
         val mark = if (joinType == FullOuter)
-          s"if ($curIdx != -1) $visitedTerm.set($curIdx);" else ""
+          s"if ($matched != null) $visitedTerm.set($cur);" else ""
         val consumeCode = consume(ctx, buildVars ++ streamVars)
         s"""
            |$keyCode
-           |int $idxTerm = $keyNull ? -1 : $lookup;
+           |int $addr = $keyNull ? -1 : $lookup;
            |boolean $found = false;
-           |// last iteration pads with nulls when no match survived
-           |while ($idxTerm != -1 || !$found) {
-           |  int $curIdx = $idxTerm;
-           |  InternalRow $buildRow = $idxTerm != -1 ? $mapTerm.rowAt($idxTerm) : null;
-           |  if ($idxTerm != -1) $idxTerm = $mapTerm.next($idxTerm);
-           |  $buildEval
+           |while ($addr != -1 || !$found) {
+           |  int $cur = $addr;
+           |  ${classOf[UnsafeRow].getName} $matched = null;
+           |  if ($addr != -1) {
+           |    $matched = $mapTerm.pointTo($buildRow, $addr);
+           |    $advance
+           |  }
            |  $condEval
            |  if ($passed) {
            |    $found = true;
@@ -756,25 +801,31 @@ case class ParallelHashJoinExec(
 
       case LeftSemi | LeftAnti if probePreserving =>
         // probe-preserving semi/anti: stream probe rows; the build side
-        // is only touched to find one surviving match
-        val (buildVars, buildEval) = buildVarsFor(ctx, buildRow)
-        val (condOpen, condClose) = condGuard(buildVars)
+        // is only read to find one match that passes the condition, and
+        // with no condition a lookup decides
         val found = ctx.freshName("graftFound")
+        val search = condition match {
+          case None => s"$found = $lookup != -1;"
+          case Some(_) =>
+            val (condOpen, condClose) = condGuard(buildVarsFor(ctx, buildRow))
+            s"""
+               |int $addr = $lookup;
+               |while ($addr != -1 && !$found) {
+               |  $mapTerm.pointTo($buildRow, $addr);
+               |  $advance
+               |  $condOpen
+               |  $found = true;
+               |  $condClose
+               |}
+             """.stripMargin
+        }
         val emitWhen = if (joinType == LeftSemi) found else s"!$found"
         val consumeCode = consume(ctx, streamVars)
         s"""
            |$keyCode
            |boolean $found = false;
            |if (!$keyNull) {
-           |  int $idxTerm = $lookup;
-           |  while ($idxTerm != -1 && !$found) {
-           |    InternalRow $buildRow = $mapTerm.rowAt($idxTerm);
-           |    $idxTerm = $mapTerm.next($idxTerm);
-           |    $buildEval
-           |    $condOpen
-           |    $found = true;
-           |    $condClose
-           |  }
+           |  $search
            |}
            |if ($emitWhen) {
            |  $numOutput.add(1);
@@ -785,22 +836,20 @@ case class ParallelHashJoinExec(
       case LeftSemi | LeftAnti =>
         // build-preserving semi/anti: the probe loop only MARKS build
         // rows whose residual survives (skipping already-visited ones);
-        // all emission happens in the finalizer loop below
-        val (buildVars, buildEval) = buildVarsFor(ctx, buildRow)
-        val (condOpen, condClose) = condGuard(buildVars)
-        val curIdx = ctx.freshName("graftCurIdx")
+        // all emission happens in the finalizer loop
+        val (condOpen, condClose) = condGuard(buildVarsFor(ctx, buildRow))
+        val point = if (condition.isDefined) s"$mapTerm.pointTo($buildRow, $cur);" else ""
         s"""
            |$keyCode
            |if (!$keyNull) {
-           |  int $idxTerm = $lookup;
-           |  while ($idxTerm != -1) {
-           |    int $curIdx = $idxTerm;
-           |    InternalRow $buildRow = $mapTerm.rowAt($idxTerm);
-           |    $idxTerm = $mapTerm.next($idxTerm);
-           |    if (!$visitedTerm.get($curIdx)) {
-           |      $buildEval
+           |  int $addr = $lookup;
+           |  while ($addr != -1) {
+           |    int $cur = $addr;
+           |    $advance
+           |    if (!$visitedTerm.get($cur)) {
+           |      $point
            |      $condOpen
-           |      $visitedTerm.set($curIdx);
+           |      $visitedTerm.set($cur);
            |      $condClose
            |    }
            |  }
@@ -861,52 +910,25 @@ object ParallelHashJoinExec {
   }
 }
 
-/** Broadcast mode of the shared build: the build rows as they are, as
-  * for Spark's `IdentityBroadcastMode`. It carries the build keys (bound
-  * to the build output) that the executors' maps index the rows by, so
-  * that two joins over one build input with different keys never reuse
-  * one broadcast. */
+/** Broadcast mode of the shared build: the build rows go into one map on
+  * the driver, and the map is the broadcast value, as Spark's
+  * `HashedRelationBroadcastMode` makes a `HashedRelation`. It carries the
+  * build keys (bound to the build output) that the map indexes the rows
+  * by, so that two joins over one build input with different keys never
+  * reuse one broadcast. */
 case class SharedBuildMode(keys: Seq[Expression]) extends BroadcastMode {
-  override def transform(rows: Array[InternalRow]): Array[InternalRow] = rows
+  override def transform(rows: Array[InternalRow]): GraftBuildMap =
+    transform(rows.iterator, None)
 
-  override def transform(
-      rows: Iterator[InternalRow], sizeHint: Option[Long]): Array[InternalRow] = rows.toArray
+  override def transform(rows: Iterator[InternalRow], sizeHint: Option[Long]): GraftBuildMap = {
+    val start = System.nanoTime
+    val map = ParallelHashJoinExec.newBuildMap(keys, Nil)
+    // the exchange hands over the collected rows as UnsafeRows
+    rows.foreach(row => map.append(row.asInstanceOf[UnsafeRow]))
+    map.finish()
+    map.buildNanos = System.nanoTime - start
+    map
+  }
 
   override def canonicalized: BroadcastMode = SharedBuildMode(keys.map(_.canonicalized))
-}
-
-/** Each executor's maps of its shared builds, one per broadcast value:
-  * made by the first probe task that asks, read by every task that asks
-  * while another still holds it. Both sides are held weakly — the value
-  * array as the key, the map by the tasks that use it — because Spark
-  * keeps a broadcast value until the plan that made it is collected,
-  * often long after its query ends: on the join benchmark, maps held as
-  * long as their values kept 30-45 MB more heap after some runs. A map
-  * dropped while its value lives is built again; its build time counts
-  * again, its build rows and chunks are counted once per value. */
-private[plans] object SharedBuildMaps {
-  private val maps =
-    new java.util.WeakHashMap[Array[InternalRow], java.lang.ref.WeakReference[GraftBuildMap]]()
-
-  /** The map over `rows`; the task that builds it records the build in
-    * the given metrics. */
-  def mapFor(rows: Array[InternalRow], keys: Seq[Expression],
-      buildRows: SQLMetric, buildChunks: SQLMetric, buildTime: SQLMetric): GraftBuildMap =
-    rows.synchronized {
-      val held = maps.synchronized(maps.get(rows))
-      val cached = if (held == null) null else held.get
-      if (cached != null) cached
-      else {
-        val start = System.nanoTime
-        val map = ParallelHashJoinExec.newBuildMap(keys, Nil)
-        rows.foreach(map.append)
-        buildTime += System.nanoTime - start
-        if (held == null) {
-          buildRows += map.size
-          buildChunks += 1
-        }
-        maps.synchronized(maps.put(rows, new java.lang.ref.WeakReference(map)))
-        map
-      }
-    }
 }

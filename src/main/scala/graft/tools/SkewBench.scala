@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 /** Skewed-join benchmark derived from the reference's exponential-
   * distribution bench (`/root/reference/benches/
   * exponential_distribution.rs:39-75`; id skew `y = (16^x - 1)/15`,
-  * `/root/reference/src/api_utils.rs:15-23`) — and demonstrating the
-  * Spark-native answer to `WorkStealingRepartitionExec` (SURVEY O18):
-  * AQE skew-join splitting vs explicit [[graft.operators.SaltedJoin]].
+  * reference `src/api_utils.rs:15-23`), comparing two answers to a
+  * hot key on Spark's own sort-merge join: AQE skew-join splitting and
+  * explicit [[graft.operators.SaltedJoin]]. Neither stands in for the
+  * reference's `WorkStealingRepartitionExec` (SURVEY O18) on the graft
+  * join: AQE's skew split (`OptimizeSkewedJoin`) matches only
+  * `SortMergeJoinExec` and `ShuffledHashJoinExec`, never
+  * `ParallelHashJoinExec`; ROADMAP item 1 holds that gap.
   *
   * The fact keys are the reference curve PLUS a single mega-hot key
   * carrying 40% of all rows. The curve alone varies key DENSITY ~16×,

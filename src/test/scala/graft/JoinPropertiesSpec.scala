@@ -43,6 +43,16 @@ class JoinPropertiesSpec extends AnyFunSuite {
   private def sorted(d: DataFrame): Seq[String] =
     d.collect().toSeq.map(_.toSeq.mkString("|")).sorted
 
+  private def withConfs(confs: Seq[(String, String)])(body: => Unit): Unit = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("custom join equals built-in join on arbitrary tables, all types") {
     for (seed <- 1L to 12L) {
       val lRows = sample(tableGen, seed)
@@ -61,12 +71,8 @@ class JoinPropertiesSpec extends AnyFunSuite {
     // a few-byte budget forces the grace path (multiple chunks per
     // partition) even on these tiny tables; whole-stage codegen off so
     // the join runs from the interpreted doExecute
-    val saved = Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey,
-      "spark.sql.codegen.wholeStage")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(graft.plans.ParallelHashJoinExec.spillThresholdKey, "64")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withConfs(Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey -> "64",
+        "spark.sql.codegen.wholeStage" -> "false")) {
       import org.apache.spark.sql.functions.col
       for (seed <- 200L to 208L) {
         val lRows = sample(tableGen, seed)
@@ -83,9 +89,6 @@ class JoinPropertiesSpec extends AnyFunSuite {
           assert(sorted(gotC) == sorted(wantC), s"spill+cond seed=$seed $jt")
         }
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -144,12 +147,8 @@ class JoinPropertiesSpec extends AnyFunSuite {
   test("generative spill matrix: schemas x null rates x all 8 types x both map layouts") {
     val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
       "left_semi", "left_anti", "right_semi", "right_anti")
-    val saved = Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey,
-      "spark.sql.codegen.wholeStage")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(graft.plans.ParallelHashJoinExec.spillThresholdKey, "64")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withConfs(Seq(graft.plans.ParallelHashJoinExec.spillThresholdKey -> "64",
+        "spark.sql.codegen.wholeStage" -> "false")) {
       import org.apache.spark.sql.functions.col
       // the key type picks the map layout: GraftLongMap for the integral
       // keys, GraftOpenMap for the string and double keys
@@ -174,9 +173,6 @@ class JoinPropertiesSpec extends AnyFunSuite {
               s"jt=$jt cond=${cond.nonEmpty} seed=$seed l=$lRows r=$rRows")
         }
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -213,6 +209,34 @@ class JoinPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  private val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
+    "left_semi", "left_anti", "right_semi", "right_anti")
+  private val sharable = Set("inner", "right_outer", "right_semi", "right_anti")
+  private val formulations = Seq(
+    // codegen errors must fail here, not fall back to interpreted
+    "shared, codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
+    "shared, interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+    "co-partitioned" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+    // the one-chunk interpreted kernel of the co-partitioned build
+    "co-partitioned, interpreted" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.codegen.wholeStage" -> "false"))
+
+  /** `got` (a run join) planned the formulation's shape, and its build
+    * metrics count each build row and each distinct non-null key once:
+    * on the driver for a shared build, summed over the key-disjoint tasks
+    * of a co-partitioned one. */
+  private def assertShape(got: DataFrame, formulation: String, jt: String, what: String,
+      buildRows: Int, buildKeys: Int): Unit = {
+    val shared = formulation.startsWith("shared") && sharable(jt)
+    val Seq((exec, fused)) = joinExecs(got)
+    assert(exec.sharedBuild == shared, s"$what should plan sharedBuild=$shared")
+    assert(fused == !formulation.endsWith("interpreted"), s"$what fused=$fused")
+    val counted = Seq("buildRows", "buildKeys", "buildChunks").map(exec.metrics(_).value)
+    val chunks = if (shared) 1L else counted(2)
+    assert(counted == Seq(buildRows.toLong, buildKeys.toLong, chunks),
+      s"$what build rows, keys, chunks: $counted")
+  }
+
   test("shared build, co-partitioned build and built-in join agree on dirty input, all 8 types") {
     import org.apache.spark.sql.functions.col
     val nul = null.asInstanceOf[Integer]
@@ -227,40 +251,86 @@ class JoinPropertiesSpec extends AnyFunSuite {
       ("one giant key", giantKey, giantKey.map { case (k, v) => (k, v + 3) } ++ Seq((i(9), 0)))) ++
       (1L to 4L).map(seed => (s"generated seed $seed",
         sample(tableGen, seed + 500), sample(tableGen, seed + 1500)))
-    val allTypes = Seq("inner", "left_outer", "right_outer", "full_outer",
-      "left_semi", "left_anti", "right_semi", "right_anti")
-    val sharable = Set("inner", "right_outer", "right_semi", "right_anti")
-    val formulations = Seq(
-      // codegen errors must fail here, not fall back to interpreted
-      "shared, codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
-      "shared, interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
-      "co-partitioned" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
-      // the one-chunk interpreted kernel of the co-partitioned build
-      "co-partitioned, interpreted" -> Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.codegen.wholeStage" -> "false"))
     for ((name, lRows, rRows) <- fixtures) {
       val l = localDf(lRows, "lk", "lv")
       val r = localDf(rRows, "rk", "rv")
+      val keys = lRows.flatMap(r => Option(r._1)).distinct.size
       for (jt <- allTypes; cond <- Seq(None, Some(col("lv") < col("rv")))) {
         val want = sorted(nativeJoin(l, r, jt, cond))
-        for ((formulation, confs) <- formulations) {
-          val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          try {
-            val got = ParallelHashJoinApi.parallelHashJoin(l, r, Seq("lk"), Seq("rk"), jt, cond)
-            assert(sorted(got) == want,
-              s"$formulation: $name jt=$jt cond=${cond.nonEmpty} l=$lRows r=$rRows")
-            val shared = formulation.startsWith("shared") && sharable(jt)
-            val Seq((exec, fused)) = joinExecs(got)
-            assert(exec.sharedBuild == shared,
-              s"$formulation: $name jt=$jt should plan sharedBuild=$shared")
-            assert(fused == !formulation.endsWith("interpreted"),
-              s"$formulation: $name jt=$jt fused=$fused")
-          } finally saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
+        for ((formulation, confs) <- formulations) withConfs(confs) {
+          val got = ParallelHashJoinApi.parallelHashJoin(l, r, Seq("lk"), Seq("rk"), jt, cond)
+          assert(sorted(got) == want,
+            s"$formulation: $name jt=$jt cond=${cond.nonEmpty} l=$lRows r=$rRows")
+          assertShape(got, formulation, jt, s"$formulation: $name jt=$jt", lRows.size, keys)
         }
+      }
+    }
+  }
+
+  test("unique and duplicate, dense and sparse long build keys: every formulation, all 8 types") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val L: Long => java.lang.Long = java.lang.Long.valueOf
+    val nul = null.asInstanceOf[java.lang.Long]
+    // a dense range takes GraftLongMap's direct layout, a sparse one its
+    // hashed table; Long.MinValue with Long.MaxValue overflows the range
+    val dense = (0 until 40).map(i => (L(100L + i), i))
+    val sparse = Seq(Long.MinValue, Long.MaxValue, 0L, -1L, 1L << 40).zipWithIndex
+      .map { case (k, i) => (L(k), i * 20) }
+    val fixtures = Seq(
+      "dense unique" -> dense,
+      "dense duplicate" -> (dense ++ dense.take(5).map { case (k, v) => (k, v + 50) }),
+      "sparse unique" -> sparse,
+      "sparse duplicate" -> (sparse ++ sparse.take(2).map { case (k, v) => (k, v + 50) }),
+      "unique with null keys" -> (dense.take(10) ++ Seq((nul, 7), (nul, 8))))
+    // probe keys at and just outside each range's ends, repeated and null
+    val probeRows = (Seq(99L, 100L, 120L, 139L, 140L, Long.MinValue, Long.MaxValue, 0L, -1L,
+      1L << 40, 2L, 100L).zipWithIndex.map { case (k, i) => (L(k), i * 9) }) ++
+      Seq((nul, 61), (L(Long.MinValue + 1), 62))
+    def longDf(rows: Seq[(java.lang.Long, Int)], k: String, v: String): DataFrame = {
+      val schema = StructType(Seq(StructField(k, LongType, nullable = true),
+        StructField(v, IntegerType, nullable = false)))
+      spark.createDataFrame(rows.map(r => Row(r._1, r._2)).asJava, schema)
+    }
+    val r = longDf(probeRows, "rk", "rv")
+    for ((name, lRows) <- fixtures) {
+      val l = longDf(lRows, "lk", "lv")
+      val keys = lRows.flatMap(r => Option(r._1)).distinct.size
+      for (jt <- allTypes; cond <- Seq(None, Some(col("lv") < col("rv")))) {
+        val want = sorted(nativeJoin(l, r, jt, cond))
+        for ((formulation, confs) <- formulations) withConfs(confs) {
+          val got = ParallelHashJoinApi.parallelHashJoin(l, r, Seq("lk"), Seq("rk"), jt, cond)
+          assert(sorted(got) == want, s"$formulation: $name jt=$jt cond=${cond.nonEmpty}")
+          assertShape(got, formulation, jt, s"$formulation: $name jt=$jt", lRows.size, keys)
+        }
+      }
+    }
+  }
+
+  test("string build columns reach the output through an exchange, unique and duplicate keys") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    // build strings of many lengths; the join's rows are written by a
+    // shuffle right after its stage, so a row the loop reuses before the
+    // shuffle copies it would show as a repeated or torn string
+    def str(i: Int) = ("s" + i) * (i % 7 + 1)
+    def build(rows: Seq[(Integer, String)]): DataFrame = spark.createDataFrame(
+      rows.map(r => Row(r._1, r._2)).asJava,
+      StructType(Seq(StructField("lk", IntegerType, nullable = true),
+        StructField("ls", StringType, nullable = true))))
+    val unique = (0 until 30).map(i => (Integer.valueOf(i), str(i)))
+    val fixtures = Seq(
+      "unique" -> unique,
+      "duplicate" -> (unique ++ unique.take(10).map { case (k, s) => (k, s + "-dup") } ++
+        Seq((Integer.valueOf(3), null), (null, "null-key"))))
+    val probe = localDf((0 until 60).map(i => (Integer.valueOf(i % 35), i)), "rk", "rv")
+    for ((name, lRows) <- fixtures; jt <- Seq("inner", "left_outer", "right_outer", "full_outer")) {
+      val l = build(lRows)
+      val want = sorted(l.join(probe, col("lk") === col("rk"), jt).repartition(3, col("ls")))
+      for ((formulation, confs) <- formulations) withConfs(confs) {
+        val got = ParallelHashJoinApi.parallelHashJoin(l, probe, Seq("lk"), Seq("rk"), jt)
+          .repartition(3, col("ls"))
+        assert(sorted(got) == want, s"$formulation: $name jt=$jt")
       }
     }
   }

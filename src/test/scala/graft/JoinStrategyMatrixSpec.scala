@@ -147,9 +147,13 @@ class JoinStrategyMatrixSpec extends AnyFunSuite {
       assert(j.sharedBuild, s"star join on ${j.leftKeys} should share its build")
       assert(unwrapped(j.left).isInstanceOf[BroadcastExchangeLike],
         s"shared build's build child should be a broadcast, got ${unwrapped(j.left).nodeName}")
-      // built once for the 4 probe tasks (and the second run), counted once
-      val built = Seq("buildRows", "buildChunks").map(j.metrics(_).value)
-      assert(built == Seq(150L, 1L), s"shared build rows and chunks on ${j.leftKeys}: $built")
+      // built once, on the driver, for the 4 probe tasks (and the second
+      // run), counted once; every dimension key is unique, so build rows
+      // equal build keys and the probe loop takes the unique route
+      val built = Seq("buildRows", "buildKeys", "buildChunks").map(j.metrics(_).value)
+      assert(built == Seq(150L, 150L, 1L),
+        s"shared build rows, keys and chunks on ${j.leftKeys}: $built")
+      assert(!j.needCopyResult, s"a unique build adds no copy on ${j.leftKeys}")
       assert(j.metrics("buildTime").value > 0)
     }
     val top = joins.maxBy(below(_).size)

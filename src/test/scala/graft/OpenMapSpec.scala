@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Tables.t
-import graft.plans.{GraftLongMap, GraftOpenMap, ParallelHashJoinApi, ParallelHashJoinExec}
+import graft.plans.{GraftBuildMap, GraftLongMap, GraftOpenMap, ParallelHashJoinApi,
+  ParallelHashJoinExec}
 
 /** The open-addressing build maps (reference version10,
   * reference `src/operator/version10/build_implementation.rs:13-191`):
@@ -16,7 +17,8 @@ import graft.plans.{GraftLongMap, GraftOpenMap, ParallelHashJoinApi, ParallelHas
   * other key. Each must give the built-in join's results across every
   * join type, through the interpreted and the generated probe loops and
   * both build formulations, including growth well past the initial slot
-  * capacity and rows spread over many pages. */
+  * capacity, rows of every size, both `GraftLongMap` layouts, unique and
+  * duplicate keys, and a trip through Java and Kryo serialization. */
 class OpenMapSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
@@ -53,6 +55,14 @@ class OpenMapSpec extends AnyFunSuite {
     "codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
     "codegen, co-partitioned" -> Seq("spark.sql.codegen.fallback" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+
+  /** The rows of `map` whose key is `key`, each as a copy: the chain from
+    * `headFor`, read through one re-pointed row. */
+  private def rowsFor(map: GraftBuildMap, key: UnsafeRow, fields: Int): List[UnsafeRow] = {
+    val view = new UnsafeRow(fields)
+    Iterator.iterate(map.headFor(key))(map.next).takeWhile(_ != -1)
+      .map(a => map.pointTo(view, a).copy()).toList
+  }
 
   private def collected(d: DataFrame): Seq[Seq[Any]] =
     d.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
@@ -168,15 +178,12 @@ class OpenMapSpec extends AnyFunSuite {
     assert(map.size == 3 * n)
     val probe = UnsafeProjection.create(
       Seq(BoundReference(0, LongType, nullable = false)))
+    map.finish()
+    assert(map.numKeys == n && !map.keyIsUnique)
     for (k <- 0 until n) {
-      var idx = map.headFor(probe(InternalRow(k.toLong)))
-      var vals = List.empty[Long]
-      while (idx != -1) {
-        assert(map.rowAt(idx).getLong(0) == k.toLong)
-        vals ::= map.rowAt(idx).getLong(1)
-        idx = map.next(idx)
-      }
-      assert(vals.sorted == List(k * 10L, k * 10L + 1, k * 10L + 2),
+      val rows = rowsFor(map, probe(InternalRow(k.toLong)), 2)
+      assert(rows.forall(_.getLong(0) == k.toLong))
+      assert(rows.map(_.getLong(1)).sorted == List(k * 10L, k * 10L + 1, k * 10L + 2),
         s"chain for key $k")
     }
     // absent key
@@ -184,26 +191,27 @@ class OpenMapSpec extends AnyFunSuite {
   }
 
   test("rows of every size survive the row pages") {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types.{DataType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
-    // row sizes from a few bytes to past the largest page, so rows fill
-    // pages of every size, straddle page ends, and get pages of their own
+    // row sizes from a few bytes to several hundred KB, so the page grows
+    // many times with rows of odd and even word counts in it
     val sizes = (0 until 400).map(i => (i * 37) % 900) ++ Seq(300 << 10, 5, 700 << 10, 0)
     val keyProj = UnsafeProjection.create(Seq(BoundReference(0, StringType, nullable = false)))
     val rowProj = UnsafeProjection.create(Array[DataType](StringType, StringType))
     def payload(i: Int, n: Int) = UTF8String.fromString(("" + (i % 10)) * n)
     val map = new GraftOpenMap(keyProj)
     for ((n, i) <- sizes.zipWithIndex) {
-      val row = InternalRow(UTF8String.fromString(s"k$i"), payload(i, n))
-      // every 7th row arrives as a generic row, which is copied as it is
-      map.append(if (i % 7 == 0) new GenericInternalRow(row.toSeq(
-        Seq(StringType, StringType)).toArray) else rowProj(row))
+      map.append(rowProj(InternalRow(UTF8String.fromString(s"k$i"), payload(i, n))))
     }
+    map.finish()
+    assert(map.keyIsUnique && map.numKeys == sizes.size)
+    // the records walk in append order
+    val view = new UnsafeRow(2)
+    assert(map.addresses.map(a => map.pointTo(view, a).getUTF8String(0).toString).toList ==
+      sizes.indices.map(i => s"k$i").toList)
     for ((n, i) <- sizes.zipWithIndex) {
-      val idx = map.headFor(keyProj(InternalRow(UTF8String.fromString(s"k$i"))))
-      assert(idx == i && map.next(idx) == -1, s"row $i")
-      assert(map.rowAt(idx).getUTF8String(1) == payload(i, n), s"payload of row $i ($n bytes)")
+      val Seq(row) = rowsFor(map, keyProj(InternalRow(UTF8String.fromString(s"k$i"))), 2)
+      assert(row.getUTF8String(1) == payload(i, n), s"payload of row $i ($n bytes)")
     }
   }
 
@@ -223,17 +231,14 @@ class OpenMapSpec extends AnyFunSuite {
       map.append(rowProj(InternalRow(k, (i * 10 + copy).toLong)))
     }
     map.append(rowProj(InternalRow(null, 99L)))
+    map.finish()
     assert(map.size == 2 * keys.size + 1)
+    assert(!map.isDirect, "keys over the whole long range are hashed")
     val probe = UnsafeProjection.create(Seq(BoundReference(0, LongType, nullable = true)))
     for ((k, i) <- keys.zipWithIndex) {
-      var idx = map.headFor(probe(InternalRow(k)))
-      var vals = List.empty[Long]
-      while (idx != -1) {
-        assert(map.rowAt(idx).getLong(0) == k)
-        vals ::= map.rowAt(idx).getLong(1)
-        idx = map.next(idx)
-      }
-      assert(vals.sorted == List(i * 10L, i * 10L + 1), s"chain for key $k")
+      val rows = rowsFor(map, probe(InternalRow(k)), 2)
+      assert(rows.forall(_.getLong(0) == k))
+      assert(rows.map(_.getLong(1)).sorted == List(i * 10L, i * 10L + 1), s"chain for key $k")
     }
     assert(map.headFor(probe(InternalRow(12345L))) == -1, "absent key")
     assert(map.headFor(probe(InternalRow(null))) == -1, "null keys never match")
@@ -242,8 +247,126 @@ class OpenMapSpec extends AnyFunSuite {
     val ints = new graft.plans.GraftLongMap(intProj, IntegerType)
     val intRow = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](IntegerType))
     Seq(Int.MinValue, -1, 0, Int.MaxValue).foreach(v => ints.append(intRow(InternalRow(v))))
-    Seq(Int.MinValue, -1, 0, Int.MaxValue).zipWithIndex.foreach { case (v, i) =>
-      assert(ints.headFor(intProj(InternalRow(v))) == i)
+    ints.finish()
+    Seq(Int.MinValue, -1, 0, Int.MaxValue).foreach { v =>
+      assert(ints.pointTo(new UnsafeRow(1), ints.headFor(intProj(InternalRow(v)))).getInt(0) == v)
+      assert(ints.headForLong(v.toLong) == ints.headFor(intProj(InternalRow(v))))
     }
+  }
+
+  /** A long-keyed map of (key, value) rows, built and finished. */
+  private def longMap(rows: Seq[(java.lang.Long, Long)]): GraftLongMap = {
+    val keyProj = UnsafeProjection.create(Seq(BoundReference(0, LongType, nullable = true)))
+    val rowProj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
+      LongType, LongType))
+    val map = new GraftLongMap(keyProj, LongType)
+    rows.foreach { case (k, v) => map.append(rowProj(InternalRow(k, v))) }
+    map.finish()
+    map
+  }
+
+  /** Every key's values as `map` reads them, through `headForLong`. */
+  private def valuesByKey(map: GraftLongMap, keys: Seq[Long]): Map[Long, List[Long]] = {
+    val view = new UnsafeRow(2)
+    keys.map { k =>
+      k -> Iterator.iterate(map.headForLong(k))(map.next).takeWhile(_ != -1)
+        .map(a => map.pointTo(view, a).getLong(1)).toList.sorted
+    }.toMap
+  }
+
+  test("long-key map layouts: direct for a dense range, hashed otherwise, unique or not") {
+    def expect(rows: Seq[(java.lang.Long, Long)], probes: Seq[Long]): Map[Long, List[Long]] =
+      probes.map(k => k -> rows.collect { case (key, v) if key == k => v }.toList.sorted).toMap
+    val n = 5000
+    val dense = (0 until n).map(i => (java.lang.Long.valueOf(1000L + i), i.toLong))
+    val sparse = (0 until n).map(i => (java.lang.Long.valueOf(i * 1000003L - 7L), i.toLong))
+    // Long.MinValue and Long.MaxValue in one build: their range overflows
+    // a long, which must read as too wide, not as a small dense range
+    val extremes = Seq[(java.lang.Long, Long)]((Long.MinValue, 1L), (Long.MaxValue, 2L),
+      (0L, 3L), (-1L, 4L))
+    val negativeToZero = Seq[(java.lang.Long, Long)]((Long.MinValue, 1L), (0L, 2L))
+    val nulls: Seq[(java.lang.Long, Long)] = Seq((null, 90L), (null, 91L))
+    val cases = Seq(
+      ("dense unique", dense, true, true),
+      ("dense duplicate", dense ++ dense.take(10).map { case (k, v) => (k, v + n) }, true, false),
+      ("dense unique with null keys", dense ++ nulls, true, true),
+      ("sparse unique", sparse, false, true),
+      ("sparse duplicate", sparse ++ sparse.takeRight(3).map { case (k, v) => (k, -v) }, false,
+        false),
+      ("Long.MinValue with Long.MaxValue", extremes, false, true),
+      ("Long.MinValue with 0", negativeToZero, false, true),
+      ("one key", Seq[(java.lang.Long, Long)]((42L, 1L), (42L, 2L)), true, false),
+      ("no rows", Nil, false, true),
+      ("only null keys", nulls, false, true))
+    for ((name, rows, direct, unique) <- cases) {
+      val map = longMap(rows)
+      assert(map.isDirect == direct, s"$name: direct layout")
+      assert(map.keyIsUnique == unique, s"$name: keyIsUnique")
+      val keys = rows.flatMap(r => Option(r._1)).map(_.longValue).distinct
+      assert(map.numKeys == keys.size, s"$name: numKeys")
+      assert(map.size == rows.size, s"$name: size")
+      // every key, its neighbours just outside the range, and the extremes
+      val probes = (keys ++ keys.flatMap(k => Seq(k - 1, k + 1)) ++
+        Seq(Long.MinValue, Long.MaxValue, 0L)).distinct
+      assert(valuesByKey(map, probes) == expect(rows, probes), s"$name: lookups")
+    }
+  }
+
+  test("maps survive Java and Kryo serialization") {
+    import org.apache.spark.SparkConf
+    import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
+    import org.apache.spark.sql.types.{DataType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val n = 3000
+    val denseRows = (0 until n).map(i => (java.lang.Long.valueOf(i.toLong), i * 2L)) ++
+      Seq[(java.lang.Long, Long)]((7L, -1L), (null, 5L))
+    val sparseRows = (0 until n).map(i => (java.lang.Long.valueOf(i * 7919L * 104729L), i * 3L))
+    val keyProj = UnsafeProjection.create(Seq(BoundReference(0, StringType, nullable = true)))
+    val rowProj = UnsafeProjection.create(Array[DataType](StringType, LongType))
+    val open = new GraftOpenMap(keyProj)
+    (0 until n).foreach(i => open.append(rowProj(InternalRow(UTF8String.fromString(s"k${i % 997}"),
+      i.toLong))))
+    open.append(rowProj(InternalRow(null, -1L)))
+    open.finish()
+    val conf = new SparkConf()
+    for (ser <- Seq(new JavaSerializer(conf).newInstance(), new KryoSerializer(conf).newInstance())) {
+      val name = ser.getClass.getSimpleName
+      for (rows <- Seq(denseRows, sparseRows)) {
+        val map = longMap(rows)
+        val back = ser.deserialize[GraftLongMap](ser.serialize(map))
+        val keys = rows.flatMap(r => Option(r._1)).map(_.longValue) ++ Seq(-3L, n + 5L)
+        assert(back.isDirect == map.isDirect && back.size == map.size &&
+          back.numKeys == map.numKeys && back.keyIsUnique == map.keyIsUnique, name)
+        assert(back.estimatedSize == map.estimatedSize, name)
+        assert(valuesByKey(back, keys) == valuesByKey(map, keys), s"$name: lookups")
+        assert(back.addresses.toList == map.addresses.toList, s"$name: records")
+      }
+      val back = ser.deserialize[GraftOpenMap](ser.serialize(open))
+      assert(back.size == n + 1 && back.numKeys == 997 && !back.keyIsUnique, name)
+      for (k <- 0 until 997) {
+        val key = keyProj(InternalRow(UTF8String.fromString(s"k$k")))
+        assert(rowsFor(back, key, 2).map(_.getLong(1)).sorted ==
+          rowsFor(open, key, 2).map(_.getLong(1)).sorted, s"$name: key k$k")
+      }
+    }
+  }
+
+  test("a 50k-row dimension's map is smaller than its rows") {
+    import org.apache.spark.sql.types.{DataType, IntegerType}
+    import org.apache.spark.util.SizeEstimator
+    // the join benchmark's dimension shape: an int id and a long weight
+    val rowProj = UnsafeProjection.create(Array[DataType](IntegerType, LongType))
+    val rows = (0 until 50000).map(i => rowProj(InternalRow(i + 1, (i % 100).toLong)).copy())
+    val map = ParallelHashJoinExec.newBuildMap(
+      Seq(BoundReference(0, IntegerType, nullable = false)), Nil)
+    rows.foreach(map.append)
+    map.finish()
+    assert(map.keyIsUnique && map.isInstanceOf[GraftLongMap] &&
+      map.asInstanceOf[GraftLongMap].isDirect)
+    val rowsBytes = SizeEstimator.estimate(rows.toArray[InternalRow])
+    assert(map.estimatedSize < rowsBytes,
+      s"map ${map.estimatedSize} bytes, row array $rowsBytes bytes")
+    // the estimate a broadcast's block store charges is the map's own
+    assert(SizeEstimator.estimate(map) == map.estimatedSize)
   }
 }

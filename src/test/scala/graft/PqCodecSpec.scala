@@ -329,12 +329,10 @@ class PqCodecSpec extends AnyFunSuite {
     val clean = (1L to 160L).map(i => (i, vec(i * 37 + 5)))
     val corpus = ((0L, null: Array[Float]) +: (1000L, Array.empty[Float]) +: clean)
       .toDF("id", "v")
-    // ivfBuild itself does not take NULL vectors: the NULL row joins its
-    // assignment as a degenerate row would, in cluster −1
-    val ivf0 = SimilaritySearch.ivfBuild(corpus.filter(col("v").isNotNull), "id", "v",
-      k = 6, lloydIters = 2)
-    val ivf = ivf0.copy(assigned = ivf0.assigned.unionByName(
-      Seq((0L, null: Array[Float], -1)).toDF("id", "v", "cluster")))
+    // the IVF build skips the NULL and empty rows too, in cluster −1
+    val ivf = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 6, lloydIters = 2)
+    assert(ivf.assigned.filter(col("id").isin(0L, 1000L)).select("cluster").as[Int]
+      .collect().toSeq == Seq(-1, -1))
     val cleanIvf = ivf.copy(assigned = ivf.assigned.filter(col("id").between(1L, 160L)))
     def encodedRows(i: SimilaritySearch.PqIndex) =
       i.encoded.collect().map(r => r.getLong(0) -> r.toSeq.tail.mkString("|")).toMap
