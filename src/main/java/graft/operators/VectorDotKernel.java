@@ -21,14 +21,15 @@ import jdk.incubator.vector.VectorSpecies;
  *
  * Integer addition is associative, so any lane/reduction order gives
  * BIT-IDENTICAL results to the scalar loop in
- * {@code SimilaritySearch.QSide.idot} — the kernel choice is pure
+ * {@link Int8Kernel#scalarDotRange} — the kernel choice is pure
  * scheduling, never semantics (spec-pinned against random arrays).
  *
- * Callers guarantee {@code x.length == y.length == n} (dimension
- * validation lives in QSide, shared with the scalar path). Requires
- * {@code --add-modules jdk.incubator.vector} at class-load time; the
- * Scala side probes availability once per JVM and falls back to the
- * scalar loop, so a JVM without the flag degrades, never crashes.
+ * Callers guarantee both ranges lie inside their arrays (dimension
+ * validation lives in the callers, shared with the scalar path).
+ * Requires {@code --add-modules jdk.incubator.vector} at class-load
+ * time; {@link Int8Kernel} probes availability once per JVM and falls
+ * back to the scalar loop, so a JVM without the flag degrades, never
+ * crashes.
  *
  * Two chains, chosen once at class init from the host's preferred
  * vector width: 512-bit hosts (AVX-512BW — this bench host) run

@@ -184,7 +184,7 @@ object SimilaritySearch {
     val den = sqrt(selfDot.cast("double")) * sqrt(col("__qs").cast("double"))
     // Spark 4's default ANSI mode raises DIVIDE_BY_ZERO even for DOUBLE
     // division, so a zero (degenerate) vector would crash the whole scan
-    // (found by the generative kernel-vs-expr identity property). A zero
+    // (found by a generative property test). A zero
     // vector has no cosine: score it NULL — NULL drops through every
     // `>= threshold` admission filter and sorts LAST in every
     // descending rank, the same drop policy as the exact kernels' NaN.
@@ -815,7 +815,9 @@ object SimilaritySearch {
     val seeds = y.toDF(idCol, "__y", "nrm", "cluster")
       .filter(size(col("__y")) === dim)
       .filter(pmod(seedHash, lit(strideMod)) === 0)
-      .orderBy(seedHash, col(idCol))
+      // the vector breaks ties between rows that share an id, so the
+      // seeds do not depend on row order or partitioning
+      .orderBy(seedHash, col(idCol), col("__y"))
       .limit(ksub)
       .select(col(idCol), col("__y"))
       .as[(Long, Array[Double])]
@@ -1891,7 +1893,8 @@ object SimilaritySearch {
     val seeds = corpus.select(col(idCol), col(vecCol))
       .filter(size(col(vecCol)) > 0)
       .filter(pmod(seedHash, lit(strideMod)) === 0)
-      .orderBy(seedHash, col(idCol))
+      // the vector breaks ties between rows that share an id (see lloyd)
+      .orderBy(seedHash, col(idCol), col(vecCol))
       .limit(k)
       .as[(Long, Array[Float])]
       .collect()
@@ -1957,8 +1960,8 @@ object SimilaritySearch {
     * accumulates. Returns (idCol, cluster, cos_sim) — the assigned
     * cluster and the rounded cosine to its centroid. Ties break to the
     * lower cluster index, exactly like the build's own assignment.
-    * Degenerate (zero/empty) vectors — whose cosine to every centroid
-    * is NaN — place in cluster −1 with cos_sim −1.0, matching where
+    * Degenerate (zero, empty or NULL) vectors — whose cosine to every
+    * centroid is NaN — place in cluster −1 with cos_sim −1.0, matching where
     * [[ivfBuild]]/[[ivfAppend]] put such rows (nearestCentroid −1) and
     * the exact kernels' drop policy; cluster −1 is never probed, so
     * they match nothing. */
@@ -1966,7 +1969,7 @@ object SimilaritySearch {
     val sp = batch.sparkSession
     import sp.implicits._
     val bc = sp.sparkContext.broadcast(index.centroids)
-    batch.select(col(index.idCol).cast("long"), col(index.vecCol))
+    batch.select(col(index.idCol).cast("long"), nullAsEmpty(col(index.vecCol)))
       .as[(Long, Array[Float])]
       .map { case (id, v) =>
         val cs = bc.value
@@ -1984,7 +1987,9 @@ object SimilaritySearch {
   /** The growing-index fold: [[ivfAssign]]-shaped placement of `batch`
     * into `index.assigned`, returning the index with the batch rows
     * serving queries ([[ivfTopK]]) immediately. Centroids are unchanged
-    * by design — rebalancing is [[ivfBuild]]'s periodic job. */
+    * by design — rebalancing is [[ivfBuild]]'s periodic job. A
+    * degenerate (zero, empty or NULL) vector keeps its value and lands
+    * in cluster −1. */
   def ivfAppend(index: IvfIndex, batch: DataFrame): IvfIndex = {
     val sp = batch.sparkSession
     import sp.implicits._
@@ -1992,8 +1997,9 @@ object SimilaritySearch {
     val placed = batch.select(col(index.idCol).cast("long"), col(index.vecCol))
       .as[(Long, Array[Float])]
       .map { case (id, v) =>
-        checkAssignDim(bc.value, v)
-        (id, v, nearestCentroid(bc.value, v))
+        val pv = if (v == null) Array.emptyFloatArray else v
+        checkAssignDim(bc.value, pv)
+        (id, v, nearestCentroid(bc.value, pv))
       }
       .toDF(index.idCol, index.vecCol, "cluster")
     // the materialized int8 projection (if any) does NOT contain the
@@ -2003,12 +2009,18 @@ object SimilaritySearch {
     index.copy(assigned = index.assigned.unionByName(placed), quantized = None)
   }
 
+  /** A batch vector column with NULL read as the empty vector — the
+    * degenerate every batch path documents (cluster −1, no probes,
+    * status 'keep'), as [[encodeBatchRow]] reads it. */
+  private def nullAsEmpty(v: Column): Column =
+    coalesce(v, typedLit(Array.empty[Float]))
+
   /** Loud mixed-dimension policy of the assignment paths (round-13
     * advice): a batch vector SHORTER than the centroid dimension would
     * silently truncate the dot in [[nearestCentroid]] (a plausible-but-
     * wrong placement), a LONGER one would surface as a raw
     * ArrayIndexOutOfBoundsException — inconsistent with the int8 paths'
-    * loud policy ([[QSide.idot]], [[incrementalNearDup]]). Empty
+    * loud policy ([[blockedCandidatePairs]], [[incrementalNearDup]]). Empty
     * (degenerate) vectors stay on the documented cluster −1 path. */
   private def checkAssignDim(
       cents: Array[(Array[Double], Double)], v: Array[Float]): Unit =
@@ -2303,8 +2315,8 @@ object SimilaritySearch {
     * codegen'd float kernel, r4 rounding) per query. Returns
     * (queryIdCol, idCol, cos_sim, rank) with rank 1..topK per query.
     *
-    * Degenerate (zero/empty) query vectors probe nothing and simply
-    * produce no output rows — the batch form's counterpart of the
+    * Degenerate (zero, empty or NULL) query vectors probe nothing and
+    * simply produce no output rows — the batch form's counterpart of the
     * single-query loud refusal (one bad vector must not kill a
     * million-query serving job; its absence from the output is the
     * visible signal, mirroring [[ivfAssign]]'s cluster −1). Queries
@@ -2363,7 +2375,7 @@ object SimilaritySearch {
     // for the caller's release; otherwise the RUNNER's clearCache owns
     // it.
     val probed = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol))
+      .select(col(queryIdCol).cast("long"), nullAsEmpty(col(queryVecCol)))
       .as[(Long, Array[Float])]
       .flatMap { case (qid, v) =>
         val cs = bc.value
@@ -2711,14 +2723,12 @@ object SimilaritySearch {
       bc: org.apache.spark.broadcast.Broadcast[PackedBatch],
       base: Int,
       width: Int,
-      keep: Int,
-      kMode: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+      keep: Int): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     val sp = cq.sparkSession
     import sp.implicits._
     cq.as[(Long, Int, Array[Byte], Long)]
       .mapPartitions { it =>
         val p = bc.value
-        val useVector = resolveUseVector(kMode)
         val heaps = Array.fill(p.ids.length)(
           scala.collection.mutable.PriorityQueue.empty[(Double, Long)](heapWorst))
         it.foreach { case (nid, cc, cqv, cn2) =>
@@ -2733,10 +2743,7 @@ object SimilaritySearch {
             while (jj < p.ids.length) {
               val dj = p.dens(jj)
               if ((p.masks(jj) & cbit) != 0L && dj != 0.0) {
-                val c =
-                  if (useVector)
-                    VectorDotKernel.dotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
-                  else QSide.sdotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
+                val c = Int8Kernel.dotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
                 heapOffer(heaps(jj),
                   math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0, nid, keep)
               }
@@ -2755,8 +2762,7 @@ object SimilaritySearch {
     * the cross product) are COARSE-scored by the FLAT int8 kernel scan
     * — the batch's quantized bytes and per-query cluster bitmasks ride
     * ONE broadcast, each corpus partition streams its rows through
-    * direct static kernel calls (Panama SIMD under
-    * `spark.graft.neardup.kernel`, scalar twin otherwise) and keeps a
+    * direct static kernel calls ([[Int8Kernel]]) and keeps a
     * bounded per-query heap of the `topK × overFetch` best coarse
     * scores — and ONLY the heap survivors (≈ queries × topK ×
     * overFetch rows, independent of corpus size) touch float vectors
@@ -2846,7 +2852,6 @@ object SimilaritySearch {
     requireDistinctIdCols("ivfTopKBatchQuantized", queryIdCol, index.idCol)
     val k = index.centroids.length
     require(k >= 1, "ivfTopKBatchQuantized needs a built index (no centroids)")
-    val kMode = resolveKernelMode(sp)
     val nQueries = queries.select(col(queryIdCol)).count()
     require(nQueries <= maxExactRows,
       s"ivfTopKBatchQuantized got $nQueries queries — the broadcast probe " +
@@ -2856,9 +2861,10 @@ object SimilaritySearch {
     val keep = topK * overFetch
     // one pass computes each query's GLOBAL probe set (nprobe nearest
     // among all k centroids) + int8 packing; O(batch) driver fetch
+    val qv = nullAsEmpty(col(queryVecCol))
     val brows = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol),
-        VectorFunctions.quantizeInt8(col(queryVecCol)).as("__qq"))
+      .select(col(queryIdCol).cast("long"), qv,
+        VectorFunctions.quantizeInt8(qv).as("__qq"))
       .withColumn("__qs", VectorFunctions.int8Dot(col("__qq"), col("__qq")))
       .as[(Long, Array[Float], Array[Byte], Long)]
       .map { case (id, v, qq, qs) =>
@@ -2884,7 +2890,7 @@ object SimilaritySearch {
     // on p.ids, so the harness dropping zero-mask rows is
     // output-identical (see shardedKernelScans for the cost shape)
     val coarse = shardedKernelScans(brows, cq, k, maskWidth) {
-      (slice, bc, base) => coarseKernelScan(slice, bc, base, maskWidth, keep, kMode)
+      (slice, bc, base) => coarseKernelScan(slice, bc, base, maskWidth, keep)
     }.reduceOption(_ union _).getOrElse(
       sp.emptyDataset[(Long, Long, Double)])
     // GLOBAL coarse cut (found in review: the per-partition heap union
@@ -3141,10 +3147,9 @@ object SimilaritySearch {
 
   val maxExactRows: Long = 1L << 20
 
-  /** Resolve `numBlocks = 0` (auto) for the blocked pairwise kernels:
-    * `spark.graft.neardup.blocks` if set, else the smallest B whose
-    * B·(B+1)/2 block-pair groups give at least two groups per shuffle
-    * partition — so the balanced slot packing (below) always has
+  /** Resolve `numBlocks = 0` (auto) for the blocked pairwise kernel:
+    * the smallest B whose B·(B+1)/2 block-pair groups give at least
+    * two groups per shuffle partition — so the balanced slot packing (below) always has
     * enough items to fill every partition evenly, and the kernel's
     * task granularity scales with the cluster instead of being pinned
     * to a constant written for one machine. Task memory shrinks as
@@ -3156,23 +3161,11 @@ object SimilaritySearch {
     require(numBlocks >= 0,
       s"numBlocks must be positive, or 0 for auto, got $numBlocks")
     if (numBlocks > 0) numBlocks
-    else sp.conf.getOption("spark.graft.neardup.blocks").map { raw =>
-      // loud-failure convention of this file's other knobs: name the
-      // conf key and the offending value, not a bare NumberFormatException
-      try raw.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.neardup.blocks must be an integer (positive, or 0 " +
-            s"for auto), got '$raw'")
-      }
-    } match {
-      case Some(b) if b != 0 => // 0 = auto, same semantics as the parameter
-        require(b > 0, s"spark.graft.neardup.blocks must be positive or 0, got $b")
-        b
-      case _ =>
-        val p = sp.conf.get("spark.sql.shuffle.partitions").toInt
-        var b = 8 // floor: below 8 blocks the groups get too chunky to pack
-        while (b.toLong * (b + 1) / 2 < 2L * p) b += 1
-        b
+    else {
+      val p = sp.conf.get("spark.sql.shuffle.partitions").toInt
+      var b = 8 // floor: below 8 blocks the groups get too chunky to pack
+      while (b.toLong * (b + 1) / 2 < 2L * p) b += 1
+      b
     }
   }
 
@@ -3187,8 +3180,7 @@ object SimilaritySearch {
     * placement of G keys into P partitions leaves ~P·(1−1/P)^G
     * partitions EMPTY while others stack 2–3 groups — measured 24
     * busy tasks for 36 groups on 32 partitions, wall 90.6 s against a
-    * 31 s work/threads ideal (round-12 `PairBandwidthBench` stage
-    * attribution). AQE cannot repair it: coalescing merges by BYTES
+    * 31 s work/threads ideal (round-12 per-stage attribution). AQE cannot repair it: coalescing merges by BYTES
     * and never splits a partition.
     *
     * How: a cross group (p < q) scores n·n pairs from 2n rows, a
@@ -3232,13 +3224,10 @@ object SimilaritySearch {
     }.toMap
   }
 
-  /** The shared shuffle of both pairwise kernels: group the tagged
-    * replicas into their B·(B+1)/2 block-pair tasks.
-    * `spark.graft.neardup.slots` = `balanced` (default — the
-    * [[balancedSlots]] placement) or `hash` (the legacy
-    * group-by-(p, q) placement, kept as the A/B baseline for the
-    * placement policy). Both run the same kernel `f`; placement is
-    * scheduling, not semantics.
+  /** The shuffle of the blocked pairwise kernel: group the tagged
+    * replicas into their B·(B+1)/2 block-pair tasks, each placed on
+    * the partition [[balancedSlots]] chose for it. Placement is
+    * scheduling, not semantics: every group runs the same kernel `f`.
     *
     * ==The balanced exchange is pinned, not assumed==
     * [[balancedSlots]] predicts the key→partition map driver-side, so
@@ -3249,15 +3238,15 @@ object SimilaritySearch {
     * partitions (they carry kilobytes but seconds of CPU — exactly
     * what byte-based coalescing mis-judges), and a
     * `spark.sql.shuffle.partitions` change between plan build and
-    * action shifts P (round-12 advice). The balanced branch therefore
-    * shuffles via `repartition(parts, slot)` — a `REPARTITION_BY_NUM`
+    * action shifts P (round-12 advice). The shuffle therefore goes
+    * through `repartition(parts, slot)` — a `REPARTITION_BY_NUM`
     * exchange, which AQE's `CoalesceShufflePartitions` rule never
     * touches and whose partition count is baked into the plan — then
     * sorts within partitions and splits slot runs in `mapPartitions`,
     * the same exchange+sort shape `flatMapGroups`' sort-based grouping
     * produces, with the partition count now a structural guarantee.
     *
-    * Kernel contract (both kernels honor it, and the splitter enforces
+    * Kernel contract (the kernel honors it, and the splitter enforces
     * it defensively): `f` drains its input iterator before emitting —
     * its lazy output may reference materialized state but never the
     * input iterator. */
@@ -3267,61 +3256,49 @@ object SimilaritySearch {
       f: Iterator[(Int, Int, Byte, Long, P)] => Iterator[R])
       : org.apache.spark.sql.Dataset[R] = {
     val sp = tagged.sparkSession
-    import sp.implicits._
-    val mode =
-      sp.conf.getOption("spark.graft.neardup.slots").getOrElse("balanced")
-    mode match {
-      case "balanced" =>
-        val parts = sp.conf.get("spark.sql.shuffle.partitions").toInt
-        val slots = balancedSlots(numBlocks, parts)
-        // the slot replaces (p, q) in the tuple — the kernels key off
-        // the tag alone (see blockTags), so the schema and encoder are
-        // unchanged and the slot is a plain Int column to shuffle on
-        val slotted = tagged.map(r => (slots((r._1, r._2)), 0, r._3, r._4, r._5))(
-          tagged.encoder)
-        slotted
-          .repartition(parts, col("_1"))
-          .sortWithinPartitions(col("_1"))
-          .mapPartitions { it =>
-            val buf = it.buffered
-            new scala.collection.AbstractIterator[R] {
-              private var run: Iterator[(Int, Int, Byte, Long, P)] = Iterator.empty
-              private var out: Iterator[R] = Iterator.empty
-              @annotation.tailrec
-              override final def hasNext: Boolean =
-                out.hasNext || {
-                  // drain the PREVIOUS run before testing buf (round-13
-                  // advice): the defensive drain consumes from buf, so a
-                  // kernel that violated the drain contract on the last
-                  // slot of a partition could otherwise empty buf between
-                  // the buf.hasNext test and buf.head
-                  while (run.hasNext) run.next() // enforce the drain contract
-                  buf.hasNext && {
-                    val key = buf.head._1
-                    run = new scala.collection.AbstractIterator[(Int, Int, Byte, Long, P)] {
-                      def hasNext: Boolean = buf.hasNext && buf.head._1 == key
-                      def next(): (Int, Int, Byte, Long, P) = buf.next()
-                    }
-                    out = f(run)
-                    hasNext
-                  }
+    val parts = sp.conf.get("spark.sql.shuffle.partitions").toInt
+    val slots = balancedSlots(numBlocks, parts)
+    // the slot replaces (p, q) in the tuple — the kernel keys off
+    // the tag alone (see blockTags), so the schema and encoder are
+    // unchanged and the slot is a plain Int column to shuffle on
+    val slotted = tagged.map(r => (slots((r._1, r._2)), 0, r._3, r._4, r._5))(
+      tagged.encoder)
+    slotted
+      .repartition(parts, col("_1"))
+      .sortWithinPartitions(col("_1"))
+      .mapPartitions { it =>
+        val buf = it.buffered
+        new scala.collection.AbstractIterator[R] {
+          private var run: Iterator[(Int, Int, Byte, Long, P)] = Iterator.empty
+          private var out: Iterator[R] = Iterator.empty
+          @annotation.tailrec
+          override final def hasNext: Boolean =
+            out.hasNext || {
+              // drain the PREVIOUS run before testing buf (round-13
+              // advice): the defensive drain consumes from buf, so a
+              // kernel that violated the drain contract on the last
+              // slot of a partition could otherwise empty buf between
+              // the buf.hasNext test and buf.head
+              while (run.hasNext) run.next() // enforce the drain contract
+              buf.hasNext && {
+                val key = buf.head._1
+                run = new scala.collection.AbstractIterator[(Int, Int, Byte, Long, P)] {
+                  def hasNext: Boolean = buf.hasNext && buf.head._1 == key
+                  def next(): (Int, Int, Byte, Long, P) = buf.next()
                 }
-              override def next(): R =
-                if (hasNext) out.next() else Iterator.empty.next()
+                out = f(run)
+                hasNext
+              }
             }
-          }
-      case "hash" =>
-        tagged.groupByKey(r => (r._1, r._2))
-          .flatMapGroups((_: (Int, Int), rows) => f(rows))
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.slots must be balanced or hash, got '$other'")
-    }
+          override def next(): R =
+            if (hasNext) out.next() else Iterator.empty.next()
+        }
+      }
   }
 
-  /** Triangle-block replication shared by BOTH pairwise arms (exact
-    * floats and quantized int8), so the blocking invariant lives in one
-    * place: a row in block `b = floorMod(id, numBlocks)` (floorMod —
-    * a negative `%` block would silently drop its cross-block pairs)
+  /** Triangle-block replication of the blocked pairwise kernel, so
+    * the blocking invariant lives in one place: a row in block
+    * `b = floorMod(id, numBlocks)` (floorMod — a negative `%` block would silently drop its cross-block pairs)
     * lands once in its diagonal group `(b, b)` with tag 0, and once in
     * every cross group — tag 1 as the LEFT block of `(b, q>b)`, tag 2
     * as the RIGHT block of `(p<b, b)`. Every unordered pair therefore
@@ -3346,25 +3323,25 @@ object SimilaritySearch {
     * memory 2·N/B vectors, nothing on the driver.
     *
     * ==The blocking shuffle ships int8, not float32==
-    * By default (`spark.graft.neardup.exact=int8`) the quadratic stage
-    * runs on the packed int8 payload and admits a pair only when its
-    * integer coarse cosine PLUS a per-pair CERTIFIED error bound
-    * (computed from each vector's quantization scale and exact float
-    * norm — see [[certifiedCandidatePairs]]) clears the threshold: a
-    * mathematical no-false-negative guarantee, not a tuned margin.
-    * Only admitted pairs fetch their float vectors, where the exact
-    * kernel (same rounding, same loop order) applies the real
-    * threshold — so the output is IDENTICAL to the float kernel's
-    * while the O(N·B) blocking shuffle moves ~3–4× fewer bytes and
-    * the quadratic inner loop reads 1 byte per component. Set
-    * `spark.graft.neardup.exact=float` to run the legacy float-shuffled
-    * kernel (the A/B baseline).
+    * The quadratic stage runs on the packed int8 payload and admits a
+    * pair only when its integer coarse cosine PLUS a per-pair
+    * CERTIFIED error bound (computed from each vector's quantization
+    * scale and exact float norm — see [[certifiedCandidatePairs]])
+    * clears the threshold: a mathematical no-false-negative guarantee,
+    * not a tuned margin. Only admitted pairs fetch their float vectors
+    * in [[exactVerify]], where the exact r4 cosine applies the real
+    * threshold — so the output is exactly the brute-force all-pairs
+    * answer (pinned against one in the tests) while the O(N·B)
+    * blocking shuffle moves ~3–4× fewer bytes than float rows and the
+    * quadratic inner loop reads 1 byte per component. Empty and zero
+    * vectors have no cosine and pair with nothing; non-empty vectors
+    * of different dimensions fail loudly.
     *
     * ==This is the EXACT arm — it is quadratic by design==
     * O(N²) flops are inherent to exact pairwise: the builder's sf1
     * soak measured 60× wall time at 10× data, vs flat for the LSH
-    * arm over the same growth. Use it as the A/B correctness baseline
-    * against [[lshCandidates]] (bucketed, subquadratic) or
+    * arm over the same growth. Use it as the exact reference for
+    * [[lshCandidates]] (bucketed, subquadratic) or
     * [[ivfBuild]]/[[ivfTopK]] (cluster-pruned), and switch to those
     * beyond roughly 1M vectors (~10⁹ flops × dim per 1M² pairs). Pass
     * the corpus size as `sizeHint` when you know it — inputs past
@@ -3377,95 +3354,9 @@ object SimilaritySearch {
       threshold: Double,
       numBlocks: Int = 0,
       sizeHint: Long = -1L): DataFrame = {
-    val blocks = resolveNumBlocks(corpus.sparkSession, numBlocks)
-    val impl = corpus.sparkSession.conf
-      .getOption("spark.graft.neardup.exact").getOrElse("int8")
-    impl match {
-      case "int8" =>
-        val cand = certifiedCandidatePairs(corpus, idCol, vecCol, threshold,
-          blocks, sizeHint)
-        exactVerify(cand, corpus, idCol, vecCol, threshold, sizeHint)
-      case "float" =>
-        floatNearDupPairs(corpus, idCol, vecCol, threshold, blocks, sizeHint)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.exact must be int8 or float, got '$other'")
-    }
-  }
-
-  /** The legacy float-shuffled exact kernel — retained as the A/B
-    * baseline for the int8-certified default path (identical output is
-    * a tested invariant, not an assumption). */
-  private def floatNearDupPairs(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      numBlocks: Int,
-      sizeHint: Long): DataFrame = {
-    require(numBlocks >= 1, s"numBlocks must be positive, got $numBlocks")
-    require(sizeHint <= maxExactRows,
-      s"cosineNearDupPairs is the exact quadratic arm: $sizeHint rows would " +
-        s"cost ~${sizeHint / 1000000}M^2 cosine evaluations; use " +
-        "lshCandidates (LSH buckets) or ivfBuild/ivfTopK (IVF clusters) " +
-        s"beyond $maxExactRows vectors")
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val base = corpus.select(col(idCol), col(vecCol)).as[(Long, Array[Float])]
-    val tagged = base.flatMap { case (id, vec) => blockTags(id, vec, numBlocks) }
-    // empty-vector rows score NaN-and-drop against any partner (norm
-    // 0); NON-empty mismatched dimensions fail loudly — silent
-    // min-length truncation would produce plausible-but-wrong cosines
-    // for a mixed-dimension corpus, the exact failure mode Int8Dot
-    // already rejects (same policy in QSide.idot)
-    def dotd(x: Array[Float], y: Array[Float]): Double = {
-      if (x.length != y.length && x.length != 0 && y.length != 0)
-        throw new IllegalArgumentException(
-          s"mixed-dimension corpus: cosine over ${x.length}- vs " +
-            s"${y.length}-component vectors would silently truncate")
-      val n = math.min(x.length, y.length)
-      var d = 0.0; var k = 0
-      while (k < n) { d += x(k).toDouble * y(k).toDouble; k += 1 }
-      d
-    }
-    def nrm(x: Array[Float]): Double = math.sqrt(dotd(x, x))
-    // same floor-based half-up rounding as r4 (raw double arithmetic,
-    // bit-identical across engines)
-    def score(a: (Long, Array[Float], Double), b: (Long, Array[Float], Double)) =
-      math.floor(dotd(a._2, b._2) / (a._3 * b._3) * 10000 + 0.5) / 10000.0
-    val pairs = groupBlocked(tagged, numBlocks) { rows =>
-        val aSide = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float], Double)]
-        val bSide = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float], Double)]
-        // a group holds tag-0 rows (diagonal) XOR tag-1/2 rows (cross)
-        // — blockTags gives every replica of a group the same shape,
-        // so the tag identifies the group kind without carrying (p, q)
-        // through the key
-        var diagonal = false
-        rows.foreach { case (_, _, tag, id, vec) =>
-          val entry = (id, vec, nrm(vec))
-          if (tag == 0.toByte) { diagonal = true; aSide += entry }
-          else if (tag == 1.toByte) aSide += entry
-          else bSide += entry
-        }
-        if (diagonal) {
-          // within-block: ordered pairs by id
-          val sorted = aSide.sortBy(_._1)
-          for {
-            i <- sorted.indices.iterator
-            j <- (i + 1 until sorted.length).iterator
-            cos = score(sorted(i), sorted(j))
-            if cos >= threshold
-          } yield (sorted(i)._1, sorted(j)._1, cos)
-        } else {
-          // cross-block: full A×B, pair reported (smaller id, larger id)
-          for {
-            a <- aSide.iterator
-            b <- bSide.iterator
-            cos = score(a, b)
-            if cos >= threshold
-          } yield if (a._1 < b._1) (a._1, b._1, cos) else (b._1, a._1, cos)
-        }
-      }
-    pairs.toDF("idA", "idB", "cos_sim")
+    val cand = certifiedCandidatePairs(corpus, idCol, vecCol, threshold,
+      numBlocks, sizeHint)
+    exactVerify(cand, corpus, idCol, vecCol, threshold, sizeHint)
   }
 
   /** Exact near-dup pairs with an int8-quantized coarse prefilter —
@@ -3520,7 +3411,8 @@ object SimilaritySearch {
     * [[quantizedNearDupPairs]] (`coarseCos ≥ threshold − margin`); only
     * admitted (batch, corpus) pairs touch float vectors for the exact
     * verify. Per-batch cost is one 1-byte corpus scan + the admitted
-    * pairs — never a float corpus × batch product. When even a 1-byte
+    * pairs — never a float corpus × batch product. A zero, empty or
+    * NULL batch vector has no cosine and statuses 'keep'. When even a 1-byte
     * full scan is too much (the 100 TB regime), compose with the IVF
     * partitioner first ([[ivfBuild]]) and feed the probed subset in as
     * `corpus`. */
@@ -3536,97 +3428,36 @@ object SimilaritySearch {
     require(margin >= 0.0,
       s"margin must be >= 0, got $margin — a negative margin would raise the " +
         "coarse bound ABOVE the threshold and silently drop true dups")
+    import sp.implicits._
+    // the coarse scan is the N·M hot loop: one flat-buffer pass per
+    // corpus partition — the batch's quantized bytes sit in ONE
+    // row-major array (the QSide layout) and each corpus row calls the
+    // int8 dot kernel as a direct static call, the shape
+    // KernelShapeBench measured at ~13 ns/pair vs ~160 ns/pair for
+    // per-row expression eval through a broadcast-nested-loop join. It
+    // is the IVF arm's admission scan run as ONE shard: every corpus
+    // row sits in cluster 0 and every batch mask is all ones
     val cq = quantizeCorpus(corpus, idCol, vecCol)
-      .select(col(idCol).as("__cid"), col("qvec").as("__cq"),
-        col("qnorm2").as("__cn2"))
-    val bq = batch.select(col(idCol).as("__bid"),
-        VectorFunctions.quantizeInt8(col(vecCol)).as("__qq"))
+      .select(col(idCol).cast("long").as("__cid"), lit(0).as("__cc"),
+        col("qvec").as("__cq"), col("qnorm2").as("__cn2"))
+    // cap check BEFORE the collect — a cheap count must refuse an
+    // over-size batch while the driver is still healthy, not after the
+    // full quantized fetch has already OOM'd it
+    val nBatch = batch.select(col(idCol)).count()
+    require(nBatch <= maxExactRows,
+      s"incrementalNearDup batch has $nBatch rows — the " +
+        s"broadcast coarse scan is capped at $maxExactRows; split the " +
+        "ingest batch or prune the corpus side with ivfBuild")
+    // O(batch) driver fetch; a NULL vector is the empty degenerate
+    val qq = VectorFunctions.quantizeInt8(nullAsEmpty(col(vecCol)))
+    val brows = batch.select(col(idCol).cast("long"), qq.as("__qq"))
       .withColumn("__qs", VectorFunctions.int8Dot(col("__qq"), col("__qq")))
-    // The coarse scan is the N·M hot loop: `kernel` (default) runs it as
-    // one flat-buffer pass per corpus partition — the batch's quantized
-    // bytes sit in ONE row-major array (the QSide layout) and each
-    // corpus row calls the int8 dot kernel (Panama SIMD under
-    // `spark.graft.neardup.kernel` auto/vector, scalar twin otherwise)
-    // as a direct static call, the shape KernelShapeBench measured at
-    // ~13 ns/pair vs ~160 ns/pair for per-row expression eval through
-    // the broadcast-nested-loop join. `expr` keeps that BNLJ
-    // formulation as the A/B baseline. Integer dots + identical IEEE
-    // double sequence (div, ×10000, floor) make the two arms
-    // bit-identical — the knob is scheduling, never semantics.
-    val mode = sp.conf.getOption("spark.graft.increment.coarse").getOrElse("kernel")
-    val bound = threshold - margin
-    val admitted: DataFrame = mode match {
-      case "expr" =>
-        cq.crossJoin(broadcast(bq))
-          .filter(coarseCos(col("__cn2")) >= bound)
-          .select(col("__bid"), col("__cid"))
-      case "kernel" =>
-        import sp.implicits._
-        val kMode = resolveKernelMode(sp)
-        // cap check BEFORE the collect — a cheap count must refuse an
-        // over-size batch while the driver is still healthy, not after
-        // the full quantized fetch has already OOM'd it
-        val nBatch = batch.select(col(idCol)).count()
-        require(nBatch <= maxExactRows,
-          s"incrementalNearDup batch has $nBatch rows — the " +
-            s"broadcast coarse scan is capped at $maxExactRows; split the " +
-            "ingest batch or prune the corpus side with ivfBuild")
-        // O(batch) driver fetch, the same bytes the expr arm broadcasts
-        // through the BNLJ
-        val brows = bq.select(col("__bid").cast("long"), col("__qq"), col("__qs"))
-          .as[(Long, Array[Byte], Long)].collect()
-        // no probe masks on the full-scan arm: pack with the all-ones
-        // sentinel so the shared layout/dim/capacity policy applies
-        val packed = packQuantizedBatch(
-          brows.map { case (id, q, qs) => (id, -1L, q, qs) })
-        val bc = sp.sparkContext.broadcast(packed)
-        cq.select(col("__cid").cast("long"), col("__cq"), col("__cn2"))
-          .as[(Long, Array[Byte], Long)]
-          .mapPartitions { it =>
-            val p = bc.value
-            // kernel pick happens HERE, on the executor JVM that runs
-            // the loop — heterogeneous clusters degrade bit-identically
-            val useVector = resolveUseVector(kMode)
-            it.flatMap { case (cid, cqv, cn2) =>
-              if (cqv.isEmpty || cn2 == 0L || p.dim == 0) Iterator.empty
-              else if (cqv.length != p.dim) throw new IllegalArgumentException(
-                s"mixed-dimension corpus vs batch: int8 dot over " +
-                  s"${cqv.length}- vs ${p.dim}-component vectors would silently truncate")
-              else {
-                // raw while + direct static kernel call: Iterator
-                // combinators here boxed every probe index and cost
-                // ~4× on the N·M wall (the KernelShapeBench lesson)
-                val cden = math.sqrt(cn2.toDouble)
-                val hits = Array.newBuilder[(Long, Long)]
-                var jj = 0
-                if (useVector) {
-                  while (jj < p.ids.length) {
-                    val dj = p.dens(jj)
-                    if (dj != 0.0) {
-                      val c = VectorDotKernel.dotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
-                      if (math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0 >= bound)
-                        hits += ((p.ids(jj), cid))
-                    }
-                    jj += 1
-                  }
-                } else {
-                  while (jj < p.ids.length) {
-                    val dj = p.dens(jj)
-                    if (dj != 0.0) {
-                      val c = QSide.sdotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
-                      if (math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0 >= bound)
-                        hits += ((p.ids(jj), cid))
-                    }
-                    jj += 1
-                  }
-                }
-                hits.result().iterator
-              }
-            }
-          }.toDF("__bid", "__cid")
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.increment.coarse must be kernel or expr, got '$other'")
-    }
+      .as[(Long, Array[Byte], Long)].collect()
+    val packed = packQuantizedBatch(
+      brows.map { case (id, q, qs) => (id, -1L, q, qs) })
+    val bc = sp.sparkContext.broadcast(packed)
+    val admitted = admittedShardScan(cq, bc, base = 0, width = 64,
+      bound = threshold - margin)
     statusAdmitted(admitted, corpus, batch, idCol, vecCol, threshold,
       corpusSizeHint)
   }
@@ -3636,10 +3467,10 @@ object SimilaritySearch {
     * verify over the admitted (__bid, __cid) pairs — same codegen'd
     * kernel, rounding, and threshold as every other exact site — then
     * per-batch-id aggregation into (idCol, n_dups, best_sim, status).
-    * The verify-stage fetch policy is exactVerify's (same knob, same
-    * rationale): broadcasting the corpus float side deletes the
-    * admitted-pair exchanges — candidates stay where the coarse scan
-    * produced them and resolve their float lookups locally. */
+    * The verify-stage fetch follows [[exactVerify]]'s rule
+    * ([[broadcastFetch]]): broadcasting the corpus float side deletes
+    * the admitted-pair exchanges — candidates stay where the coarse
+    * scan produced them and resolve their float lookups locally. */
   private def statusAdmitted(
       admitted: DataFrame,
       corpus: DataFrame,
@@ -3651,25 +3482,7 @@ object SimilaritySearch {
     implicit val sp: SparkSession = corpus.sparkSession
     val bf = batch.select(col(idCol).as("__bid"), col(vecCol).as("__bv"))
     val cf = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
-    val verifyMode = sp.conf.getOption("spark.graft.neardup.verify").getOrElse("auto")
-    val maxBcRows = sp.conf
-      .getOption("spark.graft.neardup.verify.broadcastMaxRows")
-      .map(_.toLong).getOrElse(maxExactRows)
-    val bcCorpus = verifyMode match {
-      case "broadcast" => true
-      case "shuffle" => false
-      case "auto" =>
-        // per-batch ingest hot path: callers statusing many batches
-        // against one standing corpus pass corpusSizeHint once instead
-        // of paying a corpus count per call (same escape hatch as
-        // exactVerify's sizeHint)
-        val n = if (corpusSizeHint >= 0) corpusSizeHint
-                else corpus.select(col(idCol)).count()
-        n <= maxBcRows
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.verify must be auto, broadcast or shuffle, got '$other'")
-    }
-    val cfj = if (bcCorpus) broadcast(cf) else cf
+    val cfj = if (broadcastFetch(corpus, idCol, corpusSizeHint)) broadcast(cf) else cf
     val sims = admitted.join(broadcast(bf), "__bid").join(cfj, "__cid")
       .select(col("__bid"),
         r4(VectorFunctions.dot(col("__cv"), col("__bv")) /
@@ -3706,17 +3519,17 @@ object SimilaritySearch {
     * vector (its `nprobe` nearest centroids by exact float cosine, ties
     * to the lower cluster index — the same argmax convention as the
     * build); the coarse scan maps once over the quantized cluster-keyed
-    * corpus and each corpus row calls the int8 dot kernel (Panama SIMD
-    * under `spark.graft.neardup.kernel`, scalar twin otherwise) only
-    * against batch vectors whose mask contains its cluster. k above 64
+    * corpus and each corpus row calls the int8 dot kernel
+    * ([[Int8Kernel]]) only against batch vectors whose mask contains
+    * its cluster. k above 64
     * mask-shards exactly like the serving arm
     * ([[ivfTopKBatchQuantized]]'s round-15 sharding, ported round 16):
     * one admission scan per PROBED 64-wide shard over that shard's
     * corpus slice, disjoint outputs unioned — no ingest batch is
     * refused for k any more, and the k ≤ 64 path is bit-identical to
     * its pre-sharding form (spec'd via forced narrow shards).
-    * Degenerate (zero/empty) batch vectors probe nothing and status
-    * 'keep'; corpus rows in cluster −1 (degenerate at build time)
+    * Degenerate (zero, empty or NULL) batch vectors probe nothing and
+    * status 'keep'; corpus rows in cluster −1 (degenerate at build time)
     * match nothing, mirroring [[ivfAssign]]. */
   def ivfIncrementalNearDup(
       index: IvfIndex,
@@ -3751,7 +3564,6 @@ object SimilaritySearch {
     val k = index.centroids.length
     require(k >= 1, "ivfIncrementalNearDup needs a built index (no centroids)")
     val bound = threshold - margin
-    val kMode = resolveKernelMode(sp)
     // cap check BEFORE the collect, like incrementalNearDup: refuse an
     // over-size batch while the driver is still healthy
     val nBatch = batch.select(col(index.idCol)).count()
@@ -3763,9 +3575,10 @@ object SimilaritySearch {
     // do the k·dim flops, the driver only receives (id, probes, q-bytes))
     val bcCents = sp.sparkContext.broadcast(index.centroids)
     val effNprobe = math.min(nprobe, k)
+    val bv = nullAsEmpty(col(index.vecCol))
     val brows = batch
-      .select(col(index.idCol).cast("long"), col(index.vecCol),
-        VectorFunctions.quantizeInt8(col(index.vecCol)).as("__qq"))
+      .select(col(index.idCol).cast("long"), bv,
+        VectorFunctions.quantizeInt8(bv).as("__qq"))
       .withColumn("__qs", VectorFunctions.int8Dot(col("__qq"), col("__qq")))
       .as[(Long, Array[Float], Array[Byte], Long)]
       .map { case (id, v, qq, qs) =>
@@ -3792,7 +3605,7 @@ object SimilaritySearch {
     // admit nothing there), so degenerate vectors ride no broadcast
     // and still status 'keep' through the left join.
     val admitted = shardedKernelScans(brows, cq, k, maskWidth) {
-      (slice, bcp, base) => admittedShardScan(slice, bcp, base, maskWidth, bound, kMode)
+      (slice, bcp, base) => admittedShardScan(slice, bcp, base, maskWidth, bound)
     }.reduceOption(_ union _).getOrElse(
       sp.emptyDataset[(Long, Long)].toDF("__bid", "__cid"))
     // the exact-verify fetch side is pruned to the probe union too
@@ -3813,21 +3626,21 @@ object SimilaritySearch {
     * corpus id) for every pair whose COARSE cosine clears `bound` —
     * the admission counterpart of [[coarseKernelScan]]'s top-k heaps
     * (threshold admission keeps every clearing pair; top-k keeps the
-    * best). Factored out of [[ivfIncrementalNearDupImpl]] when k
-    * outgrew one mask word so the kernel loop exists exactly once. */
+    * best). The one int8 admission loop: [[ivfIncrementalNearDupImpl]]
+    * runs it once per probed mask shard, and [[incrementalNearDup]]'s
+    * full scan runs it as one shard (every corpus row in cluster 0,
+    * every batch mask all ones). */
   private def admittedShardScan(
       cq: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[PackedBatch],
       base: Int,
       width: Int,
-      bound: Double,
-      kMode: String): DataFrame = {
+      bound: Double): DataFrame = {
     val sp = cq.sparkSession
     import sp.implicits._
     cq.as[(Long, Int, Array[Byte], Long)]
       .mapPartitions { it =>
         val p = bc.value
-        val useVector = resolveUseVector(kMode)
         it.flatMap { case (cid, cc, cqv, cn2) =>
           val ccs = cc - base
           if (cqv.isEmpty || cn2 == 0L || p.dim == 0 || ccs < 0 || ccs >= width)
@@ -3836,35 +3649,39 @@ object SimilaritySearch {
             s"mixed-dimension corpus vs batch: int8 dot over " +
               s"${cqv.length}- vs ${p.dim}-component vectors would silently truncate")
           else {
+            // raw while + direct static kernel call: Iterator
+            // combinators here boxed every probe index and cost ~4× on
+            // the N·M wall (the KernelShapeBench lesson)
             val cbit = 1L << ccs
             val cden = math.sqrt(cn2.toDouble)
             val hits = Array.newBuilder[(Long, Long)]
             var jj = 0
-            if (useVector) {
-              while (jj < p.ids.length) {
-                val dj = p.dens(jj)
-                if ((p.masks(jj) & cbit) != 0L && dj != 0.0) {
-                  val c = VectorDotKernel.dotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
-                  if (math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0 >= bound)
-                    hits += ((p.ids(jj), cid))
-                }
-                jj += 1
+            while (jj < p.ids.length) {
+              val dj = p.dens(jj)
+              if ((p.masks(jj) & cbit) != 0L && dj != 0.0) {
+                val c = Int8Kernel.dotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
+                if (math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0 >= bound)
+                  hits += ((p.ids(jj), cid))
               }
-            } else {
-              while (jj < p.ids.length) {
-                val dj = p.dens(jj)
-                if ((p.masks(jj) & cbit) != 0L && dj != 0.0) {
-                  val c = QSide.sdotRange(cqv, 0, p.buf, jj * p.dim, p.dim)
-                  if (math.floor(c / (cden * dj) * 10000 + 0.5) / 10000.0 >= bound)
-                    hits += ((p.ids(jj), cid))
-                }
-                jj += 1
-              }
+              jj += 1
             }
             hits.result().iterator
           }
         }
       }.toDF("__bid", "__cid")
+  }
+
+  /** The exact verify stage's fetch decision, shared by [[exactVerify]]
+    * and [[statusAdmitted]]: broadcast the corpus float side when the
+    * corpus has at most [[maxExactRows]] rows, else keep the shuffled
+    * join. The row count is `sizeHint` when the caller knows it (≥ 0 —
+    * a per-batch ingest loop against one standing corpus passes it
+    * once instead of paying a count per call), else one count job:
+    * O(N) next to the pass it serves, and it closes the `sizeHint = -1`
+    * blind spot of the static guards. */
+  private def broadcastFetch(corpus: DataFrame, idCol: String, sizeHint: Long): Boolean = {
+    val n = if (sizeHint >= 0) sizeHint else corpus.select(col(idCol)).count()
+    n <= maxExactRows
   }
 
   /** The shared verify stage of both pairwise arms: only (idA, idB)
@@ -3880,22 +3697,16 @@ object SimilaritySearch {
     * every candidate CARRIES its idA float vector through the second
     * exchange — measured at 200k vectors / 3.2M candidates this single
     * term was 629 MB, the int8 arm's dominant remaining shuffle
-    * (round-11 `PairBandwidthBench` stage attribution). The corpus
-    * float side itself is small — this arm is loudly capped at
-    * [[maxExactRows]] (1M) vectors, ≈270 MB of 64-dim floats worst
+    * (round-11 per-stage attribution). The corpus float side itself
+    * is small — this arm is loudly capped at [[maxExactRows]] (1M)
+    * vectors, ≈270 MB of 64-dim floats worst
     * case, ~50 MB at the bench's 200k — so broadcasting the (id, vec)
     * fetch side to both joins deletes every candidate-side exchange:
     * candidates stay where the blocked kernel produced them and each
     * task resolves its own float lookups locally. Zero verify-stage
-    * shuffle, same rows out (a join strategy is not a semantics).
-    *
-    * `spark.graft.neardup.verify`: `auto` (default — broadcast when
-    * the corpus row count, from `sizeHint` or one cheap count, is ≤
-    * `spark.graft.neardup.verify.broadcastMaxRows`, default
-    * [[maxExactRows]]), `broadcast` (force), `shuffle` (the legacy
-    * shuffled-join shape, the A/B baseline and the fallback a derived
-    * library should pick if it ever lifts the cap past driver
-    * memory). */
+    * shuffle, same rows out (a join strategy is not a semantics). A
+    * corpus above the cap keeps the shuffled-join shape (see
+    * [[broadcastFetch]]). */
   private def exactVerify(
       cand: DataFrame,
       corpus: DataFrame,
@@ -3904,25 +3715,11 @@ object SimilaritySearch {
       threshold: Double,
       sizeHint: Long = -1L): DataFrame = {
     implicit val sp: SparkSession = corpus.sparkSession
-    val mode = sp.conf.getOption("spark.graft.neardup.verify").getOrElse("auto")
-    val maxBcRows = sp.conf
-      .getOption("spark.graft.neardup.verify.broadcastMaxRows")
-      .map(_.toLong).getOrElse(maxExactRows)
-    val useBroadcast = mode match {
-      case "broadcast" => true
-      case "shuffle" => false
-      case "auto" =>
-        // one O(N) count against an O(N²) pass that already ran; it
-        // also closes the sizeHint=-1 blind spot the static guard has
-        val n = if (sizeHint >= 0) sizeHint
-                else corpus.select(col(idCol)).count()
-        n <= maxBcRows
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.verify must be auto, broadcast or shuffle, got '$other'")
-    }
     val va = corpus.select(col(idCol).as("idA"), col(vecCol).as("__va"))
     val vb = corpus.select(col(idCol).as("idB"), col(vecCol).as("__vb"))
-    val (fa, fb) = if (useBroadcast) (broadcast(va), broadcast(vb)) else (va, vb)
+    val (fa, fb) =
+      if (broadcastFetch(corpus, idCol, sizeHint)) (broadcast(va), broadcast(vb))
+      else (va, vb)
     cand.join(fa, "idA").join(fb, "idB")
       .select(col("idA"), col("idB"),
         r4(VectorFunctions.dot(col("__va"), col("__vb")) /
@@ -3942,15 +3739,13 @@ object SimilaritySearch {
       vecCol: String,
       bound: Double,
       numBlocks: Int = 0,
-      sizeHint: Long = -1L): DataFrame = {
-    val mode = resolveKernelMode(corpus.sparkSession)
+      sizeHint: Long = -1L): DataFrame =
     blockedCandidatePairs(corpus, idCol, vecCol,
       resolveNumBlocks(corpus.sparkSession, numBlocks), sizeHint,
       // same floor-based half-up rounding as r4 — integer dot and
       // integer-derived norms, so the double division sees identical
       // inputs on every engine (this is the v8 oracle's replayed rule)
-      () => pickRule(mode, new QuantRuleScalar(bound), new QuantRuleVector(bound)))
-  }
+      new QuantRule(bound))
 
   /** CERTIFIED candidate pairs — the admission rule behind the exact
     * arm's int8 shuffle: admit (a, b) iff
@@ -3979,12 +3774,10 @@ object SimilaritySearch {
       vecCol: String,
       threshold: Double,
       numBlocks: Int = 0,
-      sizeHint: Long = -1L): DataFrame = {
-    val mode = resolveKernelMode(corpus.sparkSession)
+      sizeHint: Long = -1L): DataFrame =
     blockedCandidatePairs(corpus, idCol, vecCol,
       resolveNumBlocks(corpus.sparkSession, numBlocks), sizeHint,
-      () => pickRule(mode, new CertRuleScalar(threshold), new CertRuleVector(threshold)))
-  }
+      new CertRule(threshold))
 
   /** Parallel-primitive-array side storage for the blocked kernel: the
     * O(N²/B²) hot loop must touch no tuples, no iterators-per-pair, no
@@ -4071,98 +3864,49 @@ object SimilaritySearch {
     * kernel. A SAM with Int parameters instead of a `Function4`:
     * Scala's FunctionN beyond arity 2 box every Int argument, and the
     * quadratic loop calls this once per PAIR — 2×10¹⁰ admissions at
-    * 200k vectors. Implementations bake their dot-kernel choice in as
-    * a DIRECT static call (never a function-value hop): the Panama
-    * Vector API only reaches its measured throughput when the kernel
-    * inlines into the loop (a megamorphic callsite de-optimizes it to
-    * per-op vector-object allocation — the r13 kernel A/B measured
-    * exactly that: 3.7× in isolation, ~0% end-to-end through a
-    * Function2 indirection). */
+    * 200k vectors. Each rule calls the int8 dot as a DIRECT static
+    * call to [[Int8Kernel.dotRange]] (never a function-value hop): the
+    * Panama Vector API only reaches its measured throughput when the
+    * kernel inlines into the loop (a megamorphic callsite de-optimizes
+    * it to per-op vector-object allocation — the r13 kernel comparison
+    * measured exactly that: 3.7× in isolation, ~0% end-to-end through
+    * a Function2 indirection). `Int8Kernel.SIMD` is a static final, so
+    * the scalar/SIMD choice folds away and adds no per-pair branch. */
   private[graft] trait PairRule extends Serializable {
     def admit(a: QSide, i: Int, b: QSide, j: Int): Boolean
   }
 
-  /** The quantized-margin admission ([[quantizedCandidatePairs]]) —
-    * scalar and SIMD twins, bit-identical (integer dot). The zero-
-    * denominator short-circuit replaces the old NaN-compares-false
-    * path: same outcome (an all-zero q row admits nothing), one branch
-    * instead of a NaN-propagating divide. */
-  private final class QuantRuleScalar(bound: Double) extends PairRule {
+  /** The quantized-margin admission ([[quantizedCandidatePairs]]).
+    * The zero-denominator short-circuit replaces the old
+    * NaN-compares-false path: same outcome (an all-zero q row admits
+    * nothing), one branch instead of a NaN-propagating divide. */
+  private final class QuantRule(bound: Double) extends PairRule {
     def admit(a: QSide, i: Int, b: QSide, j: Int): Boolean = {
       val den = a.ns(i) * b.ns(j)
       if (den == 0.0) false
       else {
-        val c = QSide.sdotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
-        math.floor(c / den * 10000 + 0.5) / 10000.0 >= bound
-      }
-    }
-  }
-  private final class QuantRuleVector(bound: Double) extends PairRule {
-    def admit(a: QSide, i: Int, b: QSide, j: Int): Boolean = {
-      val den = a.ns(i) * b.ns(j)
-      if (den == 0.0) false
-      else {
-        val c = VectorDotKernel.dotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
+        val c = Int8Kernel.dotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
         math.floor(c / den * 10000 + 0.5) / 10000.0 >= bound
       }
     }
   }
 
-  /** The certified-bound admission ([[certifiedCandidatePairs]]) —
-    * scalar and SIMD twins. When `den != 0` both rows are non-empty, so
-    * `a.dim` is the shared stride (per-group check) and the old
-    * `qs(i).length` bound term. */
-  private final class CertRuleScalar(threshold: Double) extends PairRule {
-    def admit(a: QSide, i: Int, b: QSide, j: Int): Boolean = {
-      val den = a.nfs(i) * b.nfs(j)
-      if (den == 0.0) false // zero vector: exact arm scores NaN, drops
-      else {
-        val sa = a.ss(i); val sb = b.ss(j)
-        val coarse =
-          sa * sb * QSide.sdotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
-        val eb = 0.5 * (sb * a.a1s(i) + sa * b.a1s(j)) + 0.25 * sa * sb * a.dim
-        (coarse + eb) / den + 2e-4 >= threshold
-      }
-    }
-  }
-  private final class CertRuleVector(threshold: Double) extends PairRule {
+  /** The certified-bound admission ([[certifiedCandidatePairs]]). When
+    * `den != 0` both rows are non-empty, so `a.dim` is the shared
+    * stride (per-group check) and the old `qs(i).length` bound term. */
+  private final class CertRule(threshold: Double) extends PairRule {
     def admit(a: QSide, i: Int, b: QSide, j: Int): Boolean = {
       val den = a.nfs(i) * b.nfs(j)
       if (den == 0.0) false // zero vector: exact arm scores NaN, drops
       else {
         val sa = a.ss(i); val sb = b.ss(j)
         val coarse = sa * sb *
-          VectorDotKernel.dotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
+          Int8Kernel.dotRange(a.qbuf, i * a.dim, b.qbuf, j * b.dim, a.dim)
         val eb = 0.5 * (sb * a.a1s(i) + sa * b.a1s(j)) + 0.25 * sa * sb * a.dim
         (coarse + eb) / den + 2e-4 >= threshold
       }
     }
   }
-
-  /** Executor-side kernel pick for a rule family: called ONCE PER GROUP
-    * inside the blocked kernel, so `auto` probes the module on the JVM
-    * that actually runs the loop (heterogeneous clusters degrade to
-    * scalar per-executor, bit-identically) and the quadratic loop runs
-    * a monomorphic rule with zero per-pair branches. `vector` fails
-    * loudly on a module-less JVM. */
-  private def pickRule(
-      mode: String, scalar: => PairRule, vector: => PairRule): PairRule =
-    if (resolveUseVector(mode)) vector else scalar
-
-  /** The ONE executor-side scalar/vector resolution (shared by
-    * [[pickRule]] and the incremental coarse scan, so the knob
-    * semantics and the loud-failure message can never diverge). */
-  private def resolveUseVector(mode: String): Boolean =
-    mode match {
-      case "scalar" => false
-      case "vector" =>
-        if (!QSide.vectorAvailable) throw new IllegalStateException(
-          "spark.graft.neardup.kernel=vector but jdk.incubator.vector is " +
-            "not loadable in this JVM — add --add-modules " +
-            "jdk.incubator.vector, or use kernel=auto for scalar fallback")
-        true
-      case _ => QSide.vectorAvailable
-    }
 
   private[graft] object QSide {
     /** packed payload header: [max|v| float][‖v‖ float], then q bytes */
@@ -4176,71 +3920,7 @@ object SimilaritySearch {
       b(off) = (bits >>> 24).toByte; b(off + 1) = (bits >>> 16).toByte
       b(off + 2) = (bits >>> 8).toByte; b(off + 3) = bits.toByte
     }
-    /** Shared dimension policy of every int8 dot path: empty
-      * (degenerate) q-arrays dot to 0 and their rows are dropped by the
-      * admission rules (norm/den 0); non-empty mismatches fail loudly —
-      * same policy as Int8Dot and the float kernel, never silent
-      * min-length truncation. Returns the effective length. */
-    private def checkDims(x: Array[Byte], y: Array[Byte]): Int = {
-      if (x.length != y.length && x.length != 0 && y.length != 0)
-        throw new IllegalArgumentException(
-          s"mixed-dimension corpus: int8 dot over ${x.length}- vs " +
-            s"${y.length}-component vectors would silently truncate")
-      math.min(x.length, y.length)
-    }
-
-    /** Scalar kernel. int accumulator: HotSpot vectorizes byte→int
-      * mul-acc ~1.5× over a long accumulator (tools/ByteDotBench: 41 vs
-      * 27 Mdot/s; the float loop runs 19). Exact while
-      * dim ≤ 2³¹/127² ≈ 133k — far past any embedding dimensionality. */
-    def idot(x: Array[Byte], y: Array[Byte]): Int = {
-      val n = checkDims(x, y)
-      var s = 0; var k = 0
-      while (k < n) { s += x(k) * y(k); k += 1 }
-      s
-    }
-
-    /** Panama SIMD kernel availability, probed ONCE per JVM (executors
-      * decide for their own JVM — a cluster whose executors lack
-      * `--add-modules jdk.incubator.vector` degrades to the scalar
-      * loop, never crashes, and the two kernels are bit-identical so
-      * heterogeneous fleets stay correct). The probe both loads the
-      * class and sanity-checks one dot. */
-    lazy val vectorAvailable: Boolean =
-      try VectorDotKernel.dot(Array[Byte](1, 2, 3), Array[Byte](4, 5, 6), 3) == 32
-      catch { case _: Throwable => false }
-
-    /** SIMD kernel with the shared dimension policy. Caller must have
-      * established availability ([[vectorAvailable]]). */
-    def vdot(x: Array[Byte], y: Array[Byte]): Int =
-      VectorDotKernel.dot(x, y, checkDims(x, y))
-
-    /** Scalar dot over flat (buffer, offset) ranges — the scalar twin
-      * of `VectorDotKernel.dotRange`, for the flat [[QSide]] layout.
-      * Range validity is the caller's (the per-group dim check). */
-    def sdotRange(x: Array[Byte], xo: Int, y: Array[Byte], yo: Int, n: Int): Int = {
-      var s = 0; var k = 0
-      while (k < n) { s += x(xo + k) * y(yo + k); k += 1 }
-      s
-    }
   }
-
-  /** Plan-time VALIDATION of the int8 dot-kernel knob for the pairwise
-    * arms: `spark.graft.neardup.kernel` = `auto` (default — Panama SIMD
-    * when the executor JVM has `--add-modules jdk.incubator.vector`,
-    * scalar otherwise), `scalar` (force the scalar loop), or `vector`
-    * (force SIMD, failing LOUDLY on a JVM without the module — the
-    * honest A/B arm). Integer addition is associative, so every choice
-    * is bit-identical; this knob is scheduling, never semantics. The
-    * actual kernel PICK happens executor-side, once per group
-    * ([[pickRule]]) — this only rejects bad values before any job
-    * launches. */
-  private def resolveKernelMode(sp: SparkSession): String =
-    sp.conf.getOption("spark.graft.neardup.kernel").getOrElse("auto") match {
-      case m @ ("auto" | "scalar" | "vector") => m
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.kernel must be auto, scalar or vector, got '$other'")
-    }
 
   /** The shared triangle-blocked quadratic stage of BOTH pairwise arms.
     *
@@ -4261,7 +3941,7 @@ object SimilaritySearch {
       vecCol: String,
       numBlocks: Int,
       sizeHint: Long,
-      admitFactory: () => PairRule): DataFrame = {
+      admit: PairRule): DataFrame = {
     require(numBlocks >= 1, s"numBlocks must be positive, got $numBlocks")
     require(sizeHint <= maxExactRows,
       s"the blocked pairwise kernel is still the exact quadratic arm ($sizeHint " +
@@ -4279,8 +3959,8 @@ object SimilaritySearch {
         VectorFunctions.quantizeInt8(col(vecCol)).as("__q"),
         // coalesce: array_max of an EMPTY vector is null, which would
         // NPE the non-nullable tuple decode below — 0.0 gives that row
-        // s = 0, nf = 0, so both admission rules drop it, matching the
-        // float kernel's NaN-score drop (bit-identity incl. degenerates)
+        // s = 0, nf = 0, so both admission rules drop it, as the exact
+        // cosine drops its NaN score
         coalesce(
           array_max(transform(col(vecCol), x => abs(x.cast("double")))),
           lit(0.0)).as("__mx"),
@@ -4294,18 +3974,17 @@ object SimilaritySearch {
         (id, payload)
       }
     val tagged = packed.flatMap { case (id, p) => blockTags(id, p, numBlocks) }
-    // pairs are EMITTED LAZILY (like the float arm): a buffered result
+    // pairs are EMITTED LAZILY: a buffered result
     // would hold every passing pair of a (N/B)² group in task memory —
     // under adversarial selectivity (the pre-rotation degenerate
     // corpus passed 54% of ALL pairs) that is an OOM, not a slowdown
     val cand = groupBlocked(tagged, numBlocks) { rows =>
-        // rule instantiated HERE, on the executor, once per group: the
-        // kernel pick (auto = per-JVM Panama probe) happens where the
-        // loop runs, and the loop's admit callsite is monomorphic
-        val admit = admitFactory()
         val aSide = new QSide
         val bSide = new QSide
-        // diagonal groups hold tag-0 rows only (see the float kernel)
+        // a group holds tag-0 rows (diagonal) XOR tag-1/2 rows (cross)
+        // — blockTags gives every replica of a group the same shape,
+        // so the tag identifies the group kind without carrying (p, q)
+        // through the key
         var diagonal = false
         rows.foreach { case (_, _, tag, id, payload) =>
           if (tag == 0.toByte) { diagonal = true; aSide.add(id, payload) }

@@ -79,7 +79,7 @@ object ByteDotBench {
     // Panama SIMD kernel (round-13): the explicit-vector formulation of
     // intAcc — same byte arrays, same exact result, explicit widening
     // lanes instead of hoping C2's auto-vectorizer fires
-    if (graft.operators.SimilaritySearch.QSide.vectorAvailable)
+    if (graft.operators.Int8Kernel.SIMD)
       time("panama") {
         var s = 0L
         var i = 0

@@ -128,7 +128,7 @@ object KernelShapeBench {
       }
       hits
     }
-    if (graft.operators.SimilaritySearch.QSide.vectorAvailable)
+    if (graft.operators.Int8Kernel.SIMD)
       time("samflatV") {
         var hits = 0L; var i = 0
         while (i < n - 1) {

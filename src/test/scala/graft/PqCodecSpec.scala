@@ -321,6 +321,34 @@ class PqCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("seeding is deterministic when two corpus rows share an id") {
+    val sp = spark
+    import sp.implicits._
+    val clean = (1L to 40L).map(i => (i, vec(i * 37 + 5)))
+    // the id every seed cut takes first (lowest xxhash64), given a
+    // second row with another vector: only the vector can order the tie
+    val dupId = clean.map(_._1).toDF("id")
+      .select(col("id"), xxhash64(col("id")).as("h")).orderBy("h").as[(Long, Long)]
+      .head()._1
+    val rows = clean :+ ((dupId, vec(424242L)))
+    // one partition in each row order (coalesce keeps the order), and
+    // a hash repartition
+    val orders = Seq(
+      rows.toDF("id", "v").coalesce(1),
+      rows.reverse.toDF("id", "v").coalesce(1),
+      rows.toDF("id", "v").repartition(3, col("id")))
+    // k = 20 of 41 rows: every row is a seed candidate, as is every
+    // residual in the wide (ksub = 256) codebook
+    val ivfs = orders.map(c => SimilaritySearch.ivfBuild(c, "id", "v", k = 20, lloydIters = 2))
+    val cents = ivfs.map(_.centroids.map { case (c, n) => c.toSeq :+ n }.toSeq)
+    assert(cents.distinct.size == 1, "IVF centroids depend on row order")
+    val pqs = ivfs.map(i => SimilaritySearch.residualPqBuild(i, m = 8, ksub = 256,
+      lloydIters = 2, rotation = "hadamard"))
+    assert(pqs.map(_.codebook.flatten.flatten.toSeq).distinct.size == 1,
+      "PQ codebook depends on row order")
+    assert(pqs.map(p => fp(p.encoded)).distinct.size == 1, "PQ codes depend on row order")
+  }
+
   test("every build skips NULL and empty corpus vectors, wherever they sit") {
     // a NULL first row used to crash the raw build (NPE in the Lloyd
     // pass) or hand the dimension probe a zero-length vector

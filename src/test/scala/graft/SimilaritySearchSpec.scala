@@ -31,6 +31,42 @@ class SimilaritySearchSpec extends AnyFunSuite {
   private def trained(i: SimilaritySearch.PqIndex): SimilaritySearch.PqRotation.Trained =
     i.rotation.asInstanceOf[SimilaritySearch.PqRotation.Trained]
 
+  /** The brute-force exact cosine every near-dup op must reproduce:
+    * ascending double dot over double norms, then r4's floor-based
+    * half-up rounding. An empty or zero vector has no cosine: NaN,
+    * which clears no threshold. */
+  private def r4cos(a: Array[Float], b: Array[Float]): Double = {
+    def dotd(x: Array[Float], y: Array[Float]): Double = {
+      var d = 0.0; var k = 0
+      while (k < math.min(x.length, y.length)) { d += x(k).toDouble * y(k).toDouble; k += 1 }
+      d
+    }
+    math.floor(dotd(a, b) / (math.sqrt(dotd(a, a)) * math.sqrt(dotd(b, b))) * 10000 + 0.5) /
+      10000.0
+  }
+
+  /** Brute-force all-pairs near-dups: (smaller id, larger id, r4 cosine)
+    * for every pair whose cosine clears `threshold`. */
+  private def bruteForcePairs(
+      rows: Seq[(Long, Array[Float])], threshold: Double): Set[(Long, Long, Double)] =
+    (for {
+      i <- rows.indices; j <- (i + 1) until rows.size
+      cos = r4cos(rows(i)._2, rows(j)._2)
+      if cos >= threshold
+      (a, b) = (rows(i)._1, rows(j)._1)
+    } yield (math.min(a, b), math.max(a, b), cos)).toSet
+
+  /** Brute-force incremental status: per batch id, (n_dups, best_sim,
+    * status) against every corpus vector. */
+  private def bruteForceStatus(
+      corpus: Seq[(Long, Array[Float])], batch: Seq[(Long, Array[Float])],
+      threshold: Double): Map[Long, (Long, Double, String)] =
+    batch.map { case (bid, bv) =>
+      val sims = corpus.map(c => r4cos(c._2, bv)).filter(_ >= threshold)
+      bid -> ((sims.size.toLong, if (sims.isEmpty) -1.0 else sims.max,
+        if (sims.isEmpty) "keep" else "dup"))
+    }.toMap
+
   test("cosineTopK ranks the planted near-copy first, exact and ordered") {
     import spark.implicits._
     val q = vec(999L)
@@ -212,71 +248,31 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
   }
 
-  test("neardup.blocks conf parse failure names the key and value") {
-    val prev = spark.conf.getOption("spark.graft.neardup.blocks")
-    spark.conf.set("spark.graft.neardup.blocks", "thirty-two")
-    try {
-      import spark.implicits._
-      val corpus = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("id", "v")
-      val e = intercept[IllegalArgumentException] {
-        SimilaritySearch.cosineNearDupPairs(corpus, "id", "v",
-          threshold = 0.9, numBlocks = 0).collect()
-      }
-      assert(e.getMessage.contains("spark.graft.neardup.blocks"))
-      assert(e.getMessage.contains("thirty-two"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.neardup.blocks", v)
-        case None => spark.conf.unset("spark.graft.neardup.blocks")
-      }
-    }
-  }
-
   test("SIMD int8 dot is bit-identical to the scalar kernel (all tail shapes)") {
+    import graft.operators.{Int8Kernel, VectorDotKernel}
     // Integer addition is associative, so the Panama kernel's lane
     // order cannot change the result — pin it anyway, per length 0..70
     // (covers both widening chains' main loops AND their scalar tails)
-    // over seeded random extremes including ±127 saturation values.
-    assert(SimilaritySearch.QSide.vectorAvailable,
+    // over seeded random extremes including ±127 saturation values, at
+    // non-zero offsets into flat buffers as the kernels call it.
+    assert(Int8Kernel.SIMD,
       "test JVM must have --add-modules jdk.incubator.vector (build.sbt javaOptions)")
     val rnd = new scala.util.Random(20260815L)
     for (n <- 0 to 70; _ <- 1 to 3) {
-      val x = Array.fill[Byte](n)((rnd.nextInt(255) - 127).toByte)
-      val y = Array.fill[Byte](n)((rnd.nextInt(255) - 127).toByte)
-      assert(SimilaritySearch.QSide.vdot(x, y) == SimilaritySearch.QSide.idot(x, y),
-        s"n=$n: vector and scalar kernels diverged")
+      val xo = 1 + rnd.nextInt(9); val yo = 1 + rnd.nextInt(9)
+      val x = Array.fill[Byte](xo + n + 3)((rnd.nextInt(255) - 127).toByte)
+      val y = Array.fill[Byte](yo + n + 5)((rnd.nextInt(255) - 127).toByte)
+      val ref = (0 until n).map(k => x(xo + k) * y(yo + k)).sum
+      val simd = VectorDotKernel.dotRange(x, xo, y, yo, n)
+      assert(Int8Kernel.scalarDotRange(x, xo, y, yo, n) == ref, s"n=$n: scalar loop is wrong")
+      assert(simd == ref, s"n=$n: vector and scalar kernels diverged")
+      assert(Int8Kernel.dotRange(x, xo, y, yo, n) == ref, s"n=$n: dispatch diverged")
     }
     // worst-case magnitude: ±127 everywhere, n=64 (the corpus dim)
     val all127 = Array.fill[Byte](64)(127)
     val allNeg = Array.fill[Byte](64)(-127)
-    assert(SimilaritySearch.QSide.vdot(all127, allNeg) == 64 * 127 * -127)
-    // dimension policy is shared with the scalar path
-    intercept[IllegalArgumentException] {
-      SimilaritySearch.QSide.vdot(Array[Byte](1, 2), Array[Byte](1, 2, 3))
-    }
-  }
-
-  test("neardup.kernel knob: scalar and vector arms produce identical pairs; bad value loud") {
-    import spark.implicits._
-    val base = (1L to 40L).map(i => (i, vec(i)))
-    val planted = Seq((103L, jitter(base(2)._2, 0.01f)))
-    val corpus = (base ++ planted).toDF("id", "v")
-    def run(kernel: String) = {
-      spark.conf.set("spark.graft.neardup.kernel", kernel)
-      try SimilaritySearch.quantizedNearDupPairs(corpus, "id", "v",
-          threshold = 0.98, margin = 0.05, numBlocks = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally spark.conf.unset("spark.graft.neardup.kernel")
-    }
-    val scalar = run("scalar")
-    val vector = run("vector")
-    assert(scalar == vector, "kernel arms diverged")
-    assert(scalar.map(p => (p._1, p._2)) == Set((3L, 103L)))
-    spark.conf.set("spark.graft.neardup.kernel", "simd")
-    try intercept[IllegalArgumentException] {
-      SimilaritySearch.quantizedNearDupPairs(corpus, "id", "v",
-        threshold = 0.98, margin = 0.05, numBlocks = 4).collect()
-    } finally spark.conf.unset("spark.graft.neardup.kernel")
+    assert(VectorDotKernel.dotRange(all127, 0, allNeg, 0, 64) == 64 * 127 * -127)
+    assert(Int8Kernel.scalarDotRange(all127, 0, allNeg, 0, 64) == 64 * 127 * -127)
   }
 
   test("cosineNearDupPairs handles negative ids (floorMod blocking)") {
@@ -371,32 +367,15 @@ class SimilaritySearchSpec extends AnyFunSuite {
     }
     assert(out(101L)._3 == "dup" && out(103L)._3 == "dup" && out(102L)._3 == "keep",
       s"planted copies must be dups, fresh must keep: $out")
-    // the flat-kernel coarse scan (default) and the BNLJ expression arm
-    // are bit-identical — the knob is scheduling, never semantics
-    spark.conf.set("spark.graft.increment.coarse", "expr")
-    try {
-      val outExpr = SimilaritySearch.incrementalNearDup(
-          corpus, batch, "id", "v", threshold = 0.9, margin = 0.05)
+    // the verify-stage corpus fetch is a join strategy, never a
+    // semantics: a size hint at the cap (broadcast, no count) and one
+    // above it (the shuffled join) emit the same rows as the count
+    for (hint <- Seq(SimilaritySearch.maxExactRows, SimilaritySearch.maxExactRows + 1)) {
+      val m = SimilaritySearch.incrementalNearDup(
+          corpus, batch, "id", "v", threshold = 0.9, margin = 0.05, corpusSizeHint = hint)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
-      assert(outExpr == out, s"expr arm diverged: $outExpr vs $out")
-    } finally spark.conf.unset("spark.graft.increment.coarse")
-    // bad knob value fails loudly
-    spark.conf.set("spark.graft.increment.coarse", "bogus")
-    try intercept[IllegalArgumentException] {
-      SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", 0.9, 0.05)
-    } finally spark.conf.unset("spark.graft.increment.coarse")
-    // the verify-stage corpus fetch (shared exactVerify knob) is a join
-    // strategy, never a semantics: all three modes emit identical rows
-    for (mode <- Seq("broadcast", "shuffle")) {
-      spark.conf.set("spark.graft.neardup.verify", mode)
-      try {
-        val m = SimilaritySearch.incrementalNearDup(
-            corpus, batch, "id", "v", threshold = 0.9, margin = 0.05)
-          .collect().map(r => r.getLong(0) ->
-            ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
-        assert(m == out, s"verify=$mode diverged: $m vs $out")
-      } finally spark.conf.unset("spark.graft.neardup.verify")
+      assert(m == out, s"corpusSizeHint=$hint diverged: $m vs $out")
     }
   }
 
@@ -619,6 +598,45 @@ class SimilaritySearchSpec extends AnyFunSuite {
         idx, Seq((702L, Array.empty[Float])).toDF("id", "v"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(emptyOk == Seq((702L, -1L)))
+  }
+
+  test("a NULL batch vector is the empty degenerate in every IVF batch path") {
+    import spark.implicits._
+    val corpus = (1L to 60L).map(i => (i, vec(i))).toDF("id", "v")
+    val idx = SimilaritySearch.ivfBuild(corpus, "id", "v", k = 4, lloydIters = 2)
+    // one NULL vector among live ones; the same batch with an EMPTY
+    // vector in its place is the reference every answer must equal
+    def batchWith(degenerate: Array[Float]) = Seq[(Long, Array[Float])](
+      (200L, jitter(vec(7L), 0.01f)), (201L, degenerate), (202L, vec(202L)))
+      .toDF("id", "v")
+    val withNull = batchWith(null)
+    val withEmpty = batchWith(Array.empty[Float])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def same(what: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[String] = {
+      val got = rows(f(withNull))
+      assert(got == rows(f(withEmpty)), s"$what: NULL and empty vectors differ")
+      got
+    }
+    assert(same("ivfAssign")(SimilaritySearch.ivfAssign(idx, _)).contains("201|-1|-1.0"))
+    assert(same("ivfAppend")(b => SimilaritySearch.ivfAppend(idx, b).assigned
+        .filter(col("id") >= 200L).select("id", "cluster"))
+      .contains("201|-1"))
+    def queries(b: org.apache.spark.sql.DataFrame) =
+      b.select(col("id").as("q_id"), col("v").as("qv"))
+    val exact = same("ivfTopKBatch")(b => SimilaritySearch.ivfTopKBatch(
+      idx, queries(b), "q_id", "qv", topK = 3, nprobe = 2))
+    val quant = same("ivfTopKBatchQuantized")(b => SimilaritySearch.ivfTopKBatchQuantized(
+      idx, queries(b), "q_id", "qv", topK = 3, nprobe = 2))
+    for (out <- Seq(exact, quant)) {
+      assert(!out.exists(_.startsWith("201|")), s"a NULL query probes nothing: $out")
+      assert(out.exists(_.startsWith("200|")) && out.exists(_.startsWith("202|")))
+    }
+    assert(same("ivfIncrementalNearDup")(SimilaritySearch.ivfIncrementalNearDup(
+      idx, _, nprobe = 2, threshold = 0.9)).contains("201|0|-1.0|keep"))
+    assert(same("incrementalNearDup")(SimilaritySearch.incrementalNearDup(
+      corpus, _, "id", "v", threshold = 0.9)).contains("201|0|-1.0|keep"))
   }
 
   test("ivfTopKBatch agrees with per-query ivfTopK; degenerate queries yield no rows") {
@@ -1091,40 +1109,31 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(overlap >= 3, s"recall too low: $overlap/5")
   }
 
-  test("exact arm: the int8-certified default is bit-identical to the float kernel") {
+  test("exact arm: the int8-certified pipeline equals the brute-force r4 cosine") {
     import spark.implicits._
     // 300 random vectors plus the hard cases: an exact duplicate (cos
-    // 1.0), a tight near-copy, a zero vector (NaN score — dropped by
-    // both arms), negative ids. Full-output equality (ids AND scores)
-    // at a low and a high threshold is the certified-bound contract:
-    // no false negative survives the coarse admission, no false
-    // positive survives the verify.
+    // 1.0), a tight near-copy, a zero vector (no cosine — dropped),
+    // negative ids. Full-output equality (ids AND scores) at a low and
+    // a high threshold is the certified-bound contract: no false
+    // negative survives the coarse admission, no false positive
+    // survives the verify.
     val base = (1L to 300L).map(i => (i - 150L, vec(i * 37 + 11)))
     val extra = Seq(
       (400L, base(5)._2.clone()),
       (401L, jitter(base(9)._2, 0.02f)),
       (402L, Array.fill(base.head._2.length)(0f)),
-      // EMPTY vector: the float arm NaN-drops it; the int8 packed
-      // projection must coalesce its null array_max rather than NPE
+      // EMPTY vector: no cosine; the int8 packed projection must
+      // coalesce its null array_max rather than NPE
       (403L, Array.empty[Float]))
     val corpus = (base ++ extra).toDF("id", "v")
     for (th <- Seq(0.45, 0.9)) {
-      spark.conf.set("spark.graft.neardup.exact", "float")
-      val fl = try SimilaritySearch
+      val i8 = SimilaritySearch
         .cosineNearDupPairs(corpus, "id", "v", threshold = th, numBlocks = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally spark.conf.unset("spark.graft.neardup.exact")
-      val i8 = SimilaritySearch // default impl = int8-certified
-        .cosineNearDupPairs(corpus, "id", "v", threshold = th, numBlocks = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(i8 == fl, s"threshold $th: int8=$i8 float=$fl")
+      val ref = bruteForcePairs(base ++ extra, th)
+      assert(i8 == ref, s"threshold $th: int8 extra ${i8 -- ref}, missing ${ref -- i8}")
       assert(i8.nonEmpty, s"threshold $th produced no pairs — test is vacuous")
     }
-    // unknown impl values fail loudly, not silently fall back
-    spark.conf.set("spark.graft.neardup.exact", "f16")
-    try intercept[IllegalArgumentException] {
-      SimilaritySearch.cosineNearDupPairs(corpus, "id", "v", threshold = 0.9)
-    } finally spark.conf.unset("spark.graft.neardup.exact")
   }
 
   test("quantizedNearDupPairs == exact pairs when the margin covers quantization error") {
@@ -1159,56 +1168,62 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("verify stage: broadcast, shuffle and auto fetch modes emit identical pairs") {
     import spark.implicits._
-    val base = (1L to 120L).map(i => (i, vec(i * 53 + 3)))
-    val planted = Seq((300L, jitter(base(4)._2, 0.02f)),
-      (301L, jitter(base(40)._2, 0.02f)))
-    val corpus = (base ++ planted).toDF("id", "v")
-    def run(mode: String): Set[(Long, Long, Double)] = {
-      spark.conf.set("spark.graft.neardup.verify", mode)
-      try SimilaritySearch
-        .cosineNearDupPairs(corpus, "id", "v", threshold = 0.45, numBlocks = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally spark.conf.unset("spark.graft.neardup.verify")
-    }
-    val bc = run("broadcast"); val sh = run("shuffle"); val auto = run("auto")
-    assert(bc.nonEmpty, "vacuous: no pairs produced")
-    assert(bc == sh, s"broadcast=$bc shuffle=$sh")
-    assert(auto == sh, s"auto=$auto shuffle=$sh")
-    // the broadcast mode must actually plan broadcast joins for the
-    // float fetch — that is the whole point (no candidate-carrying
-    // exchange); auto at 122 rows picks the same plan
-    spark.conf.set("spark.graft.neardup.verify", "broadcast")
-    val plan = try SimilaritySearch
+    val baseRows = (1L to 120L).map(i => (i, vec(i * 53 + 3)))
+    val rows = baseRows ++ Seq((300L, jitter(baseRows(4)._2, 0.02f)),
+      (301L, jitter(baseRows(40)._2, 0.02f)))
+    val corpus = rows.toDF("id", "v")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // auto: 122 rows, counted, is under the cap — the float fetch must
+    // plan broadcast joins (no candidate-carrying exchange); a size
+    // hint under the cap picks the same plan without the count
+    val auto = SimilaritySearch
       .cosineNearDupPairs(corpus, "id", "v", threshold = 0.45, numBlocks = 4)
-      .queryExecution.executedPlan.toString
-    finally spark.conf.unset("spark.graft.neardup.verify")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"verify fetch not broadcast:\n$plan")
-    // auto with a tiny broadcastMaxRows must fall back to the shuffle
-    // shape (the >driver-memory escape hatch), and still match
-    spark.conf.set("spark.graft.neardup.verify.broadcastMaxRows", "10")
-    val autoSmall = try run("auto")
-    finally spark.conf.unset("spark.graft.neardup.verify.broadcastMaxRows")
-    assert(autoSmall == sh)
-    // unknown modes fail loudly
-    spark.conf.set("spark.graft.neardup.verify", "mmap")
-    try intercept[IllegalArgumentException] {
-      SimilaritySearch.cosineNearDupPairs(corpus, "id", "v", threshold = 0.45)
-    } finally spark.conf.unset("spark.graft.neardup.verify")
+    val plan = auto.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"verify fetch not broadcast:\n$plan")
+    val got = pairs(auto)
+    assert(got.nonEmpty, "vacuous: no pairs produced")
+    assert(got == pairs(SimilaritySearch.cosineNearDupPairs(
+      corpus, "id", "v", threshold = 0.45, numBlocks = 4, sizeHint = 122L)))
+    assert(got == bruteForcePairs(rows, 0.45))
+    // the shuffled-join shape, reached through a corpus size hint above
+    // the cap (the pairwise arm refuses such a corpus outright), emits
+    // the same statuses as the broadcast fetch
+    val batch = rows.take(12).map { case (id, v) => (id + 1000L, jitter(v, 0.01f)) }
+      .toDF("id", "v")
+    def status(hint: Long) = SimilaritySearch.incrementalNearDup(
+        corpus, batch, "id", "v", threshold = 0.45, corpusSizeHint = hint)
+    val shuffled = status(SimilaritySearch.maxExactRows + 1)
+    val rowsOf = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rowsOf(shuffled) == rowsOf(status(-1L)))
+    assert(rowsOf(shuffled).exists(_.endsWith("|dup")), "vacuous: no dups")
+    // over the cap the corpus float side is not broadcast: with the
+    // planner's own size-based broadcasts off, the only broadcast left
+    // is the small batch side of the verify join
+    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      def broadcasts(hint: Long) = "BroadcastExchange".r
+        .findAllIn(status(hint).queryExecution.executedPlan.toString).size
+      assert(broadcasts(SimilaritySearch.maxExactRows + 1) == 1)
+      assert(broadcasts(-1L) == 2)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
   }
 
-  test("property: incrementalNearDup kernel and expr arms are identical on random geometry") {
+  test("property: incrementalNearDup equals brute-force r4 cosine, random data") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
     // the flat-kernel coarse scan has hand-written offsets/loops where
     // an off-by-one hides from structured fixtures; random corpora with
     // mixed magnitudes, zero vectors, and ODD dims (SIMD tail shapes)
-    // pin the kernel == expr identity generatively
+    // pin it against the brute-force cosine generatively
     val compGen: Gen[Float] = Gen.frequency(
       (8, Gen.chooseNum(-1.0, 1.0).map(_.toFloat)),
       (1, Gen.chooseNum(-1.0, 1.0).map(x => (x * 1e6).toFloat)),
       (2, Gen.const(0f)))
+    var nonVacuous = 0
     for (seed <- 1 to 8) {
       val dimP = 7 + seed * 3 // 10..31: crosses the 16/32-lane boundaries
       val vecGen: Gen[Array[Float]] = Gen.frequency(
@@ -1221,17 +1236,17 @@ class SimilaritySearchSpec extends AnyFunSuite {
       } yield (cs, bs, th)
       val (cs, bs0, th) = g.pureApply(Gen.Parameters.default, Seed(seed.toLong))
       val bs = bs0 :+ jitter(cs.head, 1e-4f) // plant one likely dup
-      val corpus = cs.indices.map(i => (i.toLong, cs(i))).toDF("id", "v")
-      val batch = bs.indices.map(i => (100L + i, bs(i))).toDF("id", "v")
-      def run(): Map[Long, (Long, Double, String)] =
-        SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", th, 0.05)
-          .collect().map(r => r.getLong(0) ->
-            ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
-      val kernel = run()
-      spark.conf.set("spark.graft.increment.coarse", "expr")
-      val expr = try run() finally spark.conf.unset("spark.graft.increment.coarse")
-      assert(kernel == expr, s"seed=$seed dim=$dimP th=$th: $kernel vs $expr")
+      val crows = cs.indices.map(i => (i.toLong, cs(i)))
+      val brows = bs.indices.map(i => (100L + i, bs(i)))
+      val got = SimilaritySearch
+        .incrementalNearDup(crows.toDF("id", "v"), brows.toDF("id", "v"), "id", "v", th, 0.05)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
+      val ref = bruteForceStatus(crows, brows, th)
+      if (ref.values.exists(_._3 == "dup")) nonVacuous += 1
+      assert(got == ref, s"seed=$seed dim=$dimP th=$th: $got vs $ref")
     }
+    assert(nonVacuous >= 6, s"only $nonVacuous/8 cases had a dup — weak corpus")
   }
 
   test("property: certified and margin admission are supersets of the exact pairs") {
@@ -1302,24 +1317,25 @@ class SimilaritySearchSpec extends AnyFunSuite {
       while (c != null) { sb.append(c.getMessage).append('\n'); c = c.getCause }
       sb.toString
     }
-    for (impl <- Seq("float", "int8")) {
-      spark.conf.set("spark.graft.neardup.exact", impl)
-      val e = try intercept[Throwable] {
-        SimilaritySearch
-          .cosineNearDupPairs(corpus, "id", "v", threshold = -1.0, numBlocks = 2)
-          .count()
-      } finally spark.conf.unset("spark.graft.neardup.exact")
+    // the certified (cosineNearDupPairs) and the margin
+    // (quantizedNearDupPairs) admission rules of the blocked kernel
+    val arms = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "certified" -> (c => SimilaritySearch.cosineNearDupPairs(
+        c, "id", "v", threshold = -1.0, numBlocks = 2)),
+      "margin" -> (c => SimilaritySearch.quantizedNearDupPairs(
+        c, "id", "v", threshold = -1.0, margin = 0.0, numBlocks = 2)))
+    for ((arm, run) <- arms) {
+      val e = intercept[Throwable](run(corpus).count())
       assert(rootMsg(e).contains("mixed-dimension"),
-        s"$impl arm: expected loud mixed-dimension failure, got $e")
+        s"$arm arm: expected loud mixed-dimension failure, got $e")
     }
     // empty vectors remain the allowed degenerate: dropped, not thrown
     val withEmpty = ((1L to 20L).map(i => (i, vec(i * 97 + 1))) :+
       (99L, Array.empty[Float])).toDF("id", "v")
-    for (impl <- Seq("float", "int8")) {
-      spark.conf.set("spark.graft.neardup.exact", impl)
-      try assert(SimilaritySearch
-        .cosineNearDupPairs(withEmpty, "id", "v", threshold = 2.0).count() == 0L)
-      finally spark.conf.unset("spark.graft.neardup.exact")
+    for ((arm, run) <- arms) {
+      val got = run(withEmpty).collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == 20 * 19 / 2, s"$arm arm: ${got.length} pairs")
+      assert(!got.exists(p => p._1 == 99L || p._2 == 99L), s"$arm arm paired the empty row")
     }
   }
 

@@ -1,6 +1,6 @@
 #!/bin/bash
 # Round-14 measurement chain: sf1 synthesis, TPC re-anchor, ingest
-# cost curve, v14 scaling, sf10 v12 kernel A/B. Sequential on purpose
+# cost curve, v14 scaling, sf10 v12 kernel timing. Sequential on purpose
 # (one Spark JVM at a time owns the 32 threads).
 set -x
 cd /root/repo
@@ -20,7 +20,5 @@ sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 100 /tmp/graft_sf10
 SPARK_GRAFT_SF_DIR=/tmp/graft_sf10 SPARK_GRAFT_BENCH_OUT=/tmp/v14_sf10.json sbt -batch "runMain graft.Bench v14_ivf_incremental_dedup" || exit 1
 
 SPARK_GRAFT_SF_DIR=/tmp/graft_sf10 SPARK_GRAFT_BENCH_OUT=/tmp/v12_sf10_simd.json sbt -batch "runMain graft.Bench v12_incremental_embedding_dedup" || exit 1
-
-SPARK_GRAFT_SF_DIR=/tmp/graft_sf10 SPARK_GRAFT_EXTRA_CONF=spark.graft.neardup.kernel=scalar SPARK_GRAFT_BENCH_OUT=/tmp/v12_sf10_scalar.json sbt -batch "runMain graft.Bench v12_incremental_embedding_dedup" || exit 1
 
 echo ALL_DONE
