@@ -2009,9 +2009,10 @@ object SimilaritySearch {
     index.copy(assigned = index.assigned.unionByName(placed), quantized = None)
   }
 
-  /** A batch vector column with NULL read as the empty vector — the
-    * degenerate every batch path documents (cluster −1, no probes,
-    * status 'keep'), as [[encodeBatchRow]] reads it. */
+  /** A vector column with NULL read as the empty vector — the
+    * degenerate every batch and int8 corpus path documents (cluster −1,
+    * no probes, status 'keep', never in a pair), as [[encodeBatchRow]]
+    * reads it. */
   private def nullAsEmpty(v: Column): Column =
     coalesce(v, typedLit(Array.empty[Float]))
 
@@ -2111,7 +2112,7 @@ object SimilaritySearch {
       index.quantized.getOrElse(
         sp.read.parquet(s"$vdir/assigned")
           .select(col(index.idCol), col("cluster"),
-            VectorFunctions.quantizeInt8(col(index.vecCol)).as("__cq"))
+            VectorFunctions.quantizeInt8(nullAsEmpty(col(index.vecCol))).as("__cq"))
           .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq"))))
     }
     quant.select(col(index.idCol), col("__cq"), col("__cn2"), col("cluster"))
@@ -2450,7 +2451,7 @@ object SimilaritySearch {
         pruneToProbed(index.assigned, probed, k)
           .select(col(index.idCol).cast("long").as(idAlias),
             col("cluster").cast("int").as("__cc"),
-            VectorFunctions.quantizeInt8(col(index.vecCol)).as("__cq"))
+            VectorFunctions.quantizeInt8(nullAsEmpty(col(index.vecCol))).as("__cq"))
           .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq")))
     }
   }
@@ -3412,10 +3413,13 @@ object SimilaritySearch {
     * admitted (batch, corpus) pairs touch float vectors for the exact
     * verify. Per-batch cost is one 1-byte corpus scan + the admitted
     * pairs — never a float corpus × batch product. A zero, empty or
-    * NULL batch vector has no cosine and statuses 'keep'. When even a 1-byte
+    * NULL batch vector has no cosine and statuses 'keep'; such a corpus
+    * vector is never admitted. When even a 1-byte
     * full scan is too much (the 100 TB regime), compose with the IVF
     * partitioner first ([[ivfBuild]]) and feed the probed subset in as
-    * `corpus`. */
+    * `corpus`. The batch broadcast follows [[shardedKernelScans]]'
+    * lifecycle: [[withServingResources]] or [[releaseServingBroadcasts]]
+    * frees it once the result is materialized. */
   def incrementalNearDup(
       corpus: DataFrame,
       batch: DataFrame,
@@ -3437,9 +3441,11 @@ object SimilaritySearch {
     // per-row expression eval through a broadcast-nested-loop join. It
     // is the IVF arm's admission scan run as ONE shard: every corpus
     // row sits in cluster 0 and every batch mask is all ones
-    val cq = quantizeCorpus(corpus, idCol, vecCol)
+    // a NULL corpus vector is the empty degenerate: it admits nothing
+    val cq = corpus
       .select(col(idCol).cast("long").as("__cid"), lit(0).as("__cc"),
-        col("qvec").as("__cq"), col("qnorm2").as("__cn2"))
+        VectorFunctions.quantizeInt8(nullAsEmpty(col(vecCol))).as("__cq"))
+      .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq")))
     // cap check BEFORE the collect — a cheap count must refuse an
     // over-size batch while the driver is still healthy, not after the
     // full quantized fetch has already OOM'd it
@@ -3456,6 +3462,7 @@ object SimilaritySearch {
     val packed = packQuantizedBatch(
       brows.map { case (id, q, qs) => (id, -1L, q, qs) })
     val bc = sp.sparkContext.broadcast(packed)
+    registerServingCleanup(() => bc.destroy(), Some(bc))
     val admitted = admittedShardScan(cq, bc, base = 0, width = 64,
       bound = threshold - margin)
     statusAdmitted(admitted, corpus, batch, idCol, vecCol, threshold,
@@ -3954,17 +3961,19 @@ object SimilaritySearch {
     // float, so packing it as one loses nothing; the float norm is a
     // coarse-denominator/bound input whose float32 rounding is
     // swallowed by the certified ε.
+    // a NULL vector is read as the empty one, once per row
+    val v = nullAsEmpty(col(vecCol))
     val packed = corpus
       .select(col(idCol).cast("long").as("__id"),
-        VectorFunctions.quantizeInt8(col(vecCol)).as("__q"),
+        VectorFunctions.quantizeInt8(v).as("__q"),
         // coalesce: array_max of an EMPTY vector is null, which would
         // NPE the non-nullable tuple decode below — 0.0 gives that row
         // s = 0, nf = 0, so both admission rules drop it, as the exact
         // cosine drops its NaN score
         coalesce(
-          array_max(transform(col(vecCol), x => abs(x.cast("double")))),
+          array_max(transform(v, x => abs(x.cast("double")))),
           lit(0.0)).as("__mx"),
-        VectorFunctions.norm(col(vecCol)).as("__nf"))
+        VectorFunctions.norm(v).as("__nf"))
       .as[(Long, Array[Byte], Double, Double)]
       .map { case (id, q, mx, nf) =>
         val payload = new Array[Byte](QSide.HeaderBytes + q.length)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,6 +37,54 @@ object TextDedup {
     org.apache.spark.sql.classic.GraftSqlBridge.column(
       graft.functions.Md5Prefix60(
         org.apache.spark.sql.classic.GraftSqlBridge.expression(spark, c)))
+  }
+
+  /** Word shingles of every row, duplicates included: `(__id, __g)`, one
+    * row per window of `shingleSize` space-separated words, the first
+    * `maxShingles` windows of each row (the cap bounds a degenerate
+    * mega-document). Rows with fewer words have no shingle. The one
+    * shingle expansion behind every shingle-based operator here and in
+    * the text queries.
+    *
+    * Each input row turns into up to `maxShingles` strings, each
+    * concatenated and then hashed by the caller, so this is the costly
+    * stage of its job. A file of one parquet row group reads in one
+    * task, and everything fused with the scan runs there. So when the
+    * input would run in fewer tasks than `defaultParallelism`, its
+    * `(id, text)` rows are round-robined over that many partitions first:
+    * a small shuffle of narrow rows, against an expansion that then runs
+    * on every core. An input that already has the tasks, or that has a
+    * shuffle below it (AQE sizes that one), is left alone. */
+  private[graft] def shingleRows(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleSize: Int,
+      maxShingles: Int): DataFrame = {
+    val rows = df.select(col(idCol).as("__id"), col(textCol).as("__t"))
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val spread =
+      if (narrowScanTasks(rows).exists(_ < cores)) rows.repartition(cores) else rows
+    spread.select(col("__id"), split(col("__t"), " ").as("__ws"))
+      .filter(size(col("__ws")) >= shingleSize)
+      .select(col("__id"), explode(expr(
+        s"transform(sequence(0, least(size(__ws)-$shingleSize, ${maxShingles - 1})), " +
+          s"i -> concat_ws(' ', ${(0 until shingleSize).map(j => s"__ws[i+$j]").mkString(", ")}))"))
+        .as("__g"))
+  }
+
+  /** The tasks `df` runs in when only projections and filters sit
+    * between it and one file scan: the scan's planned partitions. None
+    * for any other plan. Reads the physical plan before exchanges are
+    * placed, so no job starts; a plan with a shuffle or a cache below is
+    * never executed to count its partitions. */
+  private def narrowScanTasks(df: DataFrame): Option[Int] = {
+    def walk(p: SparkPlan): Option[Int] = p match {
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case _: ProjectExec | _: FilterExec => walk(p.children.head)
+      case _ => None
+    }
+    walk(df.queryExecution.sparkPlan)
   }
 
   /** Keep exactly one row per distinct `textCol` value — the winner is
@@ -76,12 +125,7 @@ object TextDedup {
     // `.distinct()` was a full exchange of every shingle string bought
     // for nothing — without it the signature build's one shuffle is the
     // partial-min aggregate (r21 optimization, guide §2.3)
-    val sh = df.select(col(idCol).as("__id"), split(col(textCol), " ").as("__ws"))
-      .filter(size(col("__ws")) >= shingleSize)
-      .select(col("__id"), explode(expr(
-        s"transform(sequence(0, least(size(__ws)-$shingleSize, ${maxShingles - 1})), " +
-          s"i -> concat_ws(' ', ${(0 until shingleSize).map(j => s"__ws[i+$j]").mkString(", ")}))"))
-        .as("__g"))
+    val sh = shingleRows(df, idCol, textCol, shingleSize, maxShingles)
       .select(col("__id"), pmod(xxhash64(col("__g")), lit(prime)).as("__gh"))
 
     def affine(i: Int): Column = {
@@ -285,23 +329,6 @@ object TextDedup {
           |  p -> element_at(__ws, p)), ' ')""".stripMargin).as("clean_text"))
   }
 
-  /** Distinct word-shingle strings per row: (__id, __g). Shared by the
-    * shingle-based checks; capped per doc so a degenerate mega-document
-    * cannot explode the shingle table. */
-  private def shingleStrings(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int,
-      maxShingles: Int): DataFrame =
-    df.select(col(idCol).as("__id"), split(col(textCol), " ").as("__ws"))
-      .filter(size(col("__ws")) >= shingleSize)
-      .select(col("__id"), explode(expr(
-        s"transform(sequence(0, least(size(__ws)-$shingleSize, ${maxShingles - 1})), " +
-          s"i -> concat_ws(' ', ${(0 until shingleSize).map(j => s"__ws[i+$j]").mkString(", ")}))"))
-        .as("__g"))
-      .distinct()
-
   /** Train/test contamination check — the overlap scan a training
     * pipeline runs before trusting held-out data: for every `test` row,
     * the fraction of its word shingles that appear ANYWHERE in `train`.
@@ -320,9 +347,9 @@ object TextDedup {
       textCol: String,
       shingleSize: Int = 3,
       maxShingles: Int = 1000): DataFrame = {
-    val trainSh = shingleStrings(train, idCol, textCol, shingleSize, maxShingles)
+    val trainSh = shingleRows(train, idCol, textCol, shingleSize, maxShingles)
       .select(mdHash(col("__g")).as("__tgh")).distinct()
-    shingleStrings(test, idCol, textCol, shingleSize, maxShingles)
+    shingleRows(test, idCol, textCol, shingleSize, maxShingles).distinct()
       .select(col("__id"), mdHash(col("__g")).as("__gh"))
       .join(trainSh, col("__gh") === col("__tgh"), "left")
       .groupBy("__id")

@@ -17,25 +17,19 @@ import graft.engine.Tables.t
   */
 object TextQueries {
 
-  /** Distinct 3-word shingles per doc, hashed to 64-bit keys; capped at
-    * the first 1000 shingles — the SAME cap as the t8 oracle's
+  /** Raw (doc_id, g) 3-word shingles, duplicates INCLUDED, capped at
+    * the first 1000 per doc — the SAME cap as the oracles'
     * generate_series bound, which must stay in lockstep. Shared by the
     * exact-Jaccard (t8) and MinHash (t6) pipelines so the cap and
-    * shingle shape can never diverge between them. */
-  /** Raw (doc_id, g) word shingles, duplicates INCLUDED — no exchange.
-    * r21 optimization (guide §2.3, "shuffle fewer bytes"): the set
-    * semantics the oracles' DISTINCT expresses moved downstream of the
-    * hash — the signature path's `MIN(affine(h))` is duplicate-
-    * idempotent so it needs no distinct at all, and the t8 path
-    * dedupes on the 8-byte hash instead of the ~40-byte string. The
-    * former string-level `.distinct()` here was a full exchange of
-    * every shingle string before any aggregation. */
+    * shingle shape can never diverge between them; the expansion itself
+    * is [[graft.operators.TextDedup.shingleRows]], which also spreads a
+    * one-task scan over every core. Set semantics (the oracles'
+    * DISTINCT) live downstream of the hash: the signature path's
+    * `MIN(affine(h))` is duplicate-idempotent, and the t8 path dedupes on
+    * the 8-byte hash instead of the ~40-byte string. */
   private def shingleStrings(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"), explode(
-        expr("transform(sequence(0, least(size(ws)-3, 999)), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))"))
-        .as("g"))
+    graft.operators.TextDedup.shingleRows(docs, "doc_id", "text", 3, 1000)
+      .select(col("__id").as("doc_id"), col("__g").as("g"))
 
   /** Distinct (doc_id, gh) 64-bit shingle hashes for the t8 inverted
     * index. Dedup is on the hash, not the string (the index, the

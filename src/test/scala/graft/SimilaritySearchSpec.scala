@@ -639,6 +639,63 @@ class SimilaritySearchSpec extends AnyFunSuite {
       corpus, _, "id", "v", threshold = 0.9)).contains("201|0|-1.0|keep"))
   }
 
+  test("a NULL corpus vector is the empty degenerate in every int8 near-dup scan") {
+    import spark.implicits._
+    // 60 live rows, ids 31..60 near-copies of 1..30, and one degenerate
+    // row 61; the same corpus with an EMPTY vector there is the reference
+    val live = (1L to 30L).map(i => (i, vec(i))) ++
+      (31L to 60L).map(i => (i, jitter(vec(i - 30), 0.01f)))
+    def corpusWith(degenerate: Array[Float]) =
+      (live :+ ((61L, degenerate))).toDF("id", "v")
+    val withNull = corpusWith(null)
+    val withEmpty = corpusWith(Array.empty[Float])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def same(what: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[String] = {
+      val got = rows(f(withNull))
+      assert(got == rows(f(withEmpty)), s"$what: NULL and empty vectors differ")
+      got
+    }
+    def ids(out: Seq[String], at: Int*): Set[String] =
+      out.flatMap(r => at.map(r.split('|')(_))).toSet
+    val pairs = same("cosineNearDupPairs")(
+      SimilaritySearch.cosineNearDupPairs(_, "id", "v", threshold = 0.9))
+    assert(pairs == bruteForcePairs(live, 0.9).toSeq.map(_.productIterator.mkString("|")).sorted)
+    assert(pairs.size == 30 && !ids(pairs, 0, 1).contains("61"))
+    assert(same("quantizedNearDupPairs")(
+      SimilaritySearch.quantizedNearDupPairs(_, "id", "v", threshold = 0.9)) == pairs)
+
+    val batch = Seq((200L, jitter(vec(7L), 0.01f)), (202L, vec(202L))).toDF("id", "v")
+    val want = bruteForceStatus(live,
+        Seq((200L, jitter(vec(7L), 0.01f)), (202L, vec(202L))), 0.9).toSeq
+      .map { case (id, (n, best, st)) => s"$id|$n|$best|$st" }.sorted
+    assert(want.exists(_.startsWith("200|2|")))
+    assert(same("incrementalNearDup")(
+      SimilaritySearch.incrementalNearDup(_, batch, "id", "v", threshold = 0.9)) == want)
+    // every cluster probed, so the scan reads the build's cluster -1 too;
+    // the in-memory index quantizes inline, the loaded one reads the
+    // projection ivfSave wrote
+    val root = java.nio.file.Files.createTempDirectory("null-corpus-ivf").toString
+    def ivf(c: org.apache.spark.sql.DataFrame, inline: Boolean) = {
+      val idx = SimilaritySearch.ivfBuild(c, "id", "v", k = 4, lloydIters = 2)
+      if (inline) idx
+      else {
+        val dir = s"$root/${if (c eq withNull) "null" else "empty"}"
+        SimilaritySearch.ivfSave(idx, dir)
+        SimilaritySearch.ivfLoad(spark, dir)
+      }
+    }
+    for (inline <- Seq(true, false)) {
+      assert(same(s"ivfIncrementalNearDup inline=$inline")(c => SimilaritySearch
+          .ivfIncrementalNearDup(ivf(c, inline), batch, nprobe = 4, threshold = 0.9)) == want)
+      val top = same(s"ivfTopKBatchQuantized inline=$inline")(c => SimilaritySearch
+        .ivfTopKBatchQuantized(ivf(c, inline), batch.select(col("id").as("q_id"),
+          col("v").as("qv")), "q_id", "qv", topK = 70, nprobe = 4))
+      assert(top.size == 120 && !ids(top, 1).contains("61"), top)
+    }
+  }
+
   test("ivfTopKBatch agrees with per-query ivfTopK; degenerate queries yield no rows") {
     import spark.implicits._
     val corpus = (1L to 100L).map(i => (i, vec(i))).toDF("id", "v")
@@ -803,6 +860,30 @@ class SimilaritySearchSpec extends AnyFunSuite {
       idx, queries, "qid", "qv", topK = 3, nprobe = 2).collect()
     assert(again.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
     SimilaritySearch.releaseServingBroadcasts(): Unit
+  }
+
+  test("incrementalNearDup's batch broadcast is freed by its withServingResources release") {
+    import spark.implicits._
+    val corpus = (1L to 40L).map(i => (i, vec(i))).toDF("id", "v")
+    val batch = Seq((900L, jitter(vec(3L), 0.01f)), (901L, vec(901L))).toDF("id", "v")
+    def packed(): Set[Long] = org.apache.spark.GraftBroadcasts.live()
+      .collect { case (id, cls) if cls.endsWith("PackedBatch") => id }.toSet
+    SimilaritySearch.releaseServingBroadcasts() // start from an empty queue
+    val before = packed()
+    val (rows, release) = SimilaritySearch.withServingResources {
+      SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", threshold = 0.9).collect()
+    }
+    assert(rows.map(r => (r.getLong(0), r.getString(3))).sorted.toSeq ==
+      Seq((900L, "dup"), (901L, "keep")))
+    val made = packed() -- before
+    assert(made.size == 1, s"one batch broadcast per call: $made")
+    assert(SimilaritySearch.releaseServingBroadcasts() == 0,
+      "a scoped call's broadcast must not reach the process-wide queue")
+    release()
+    assert((packed() intersect made).isEmpty, "the scope's release must destroy the batch broadcast")
+    // outside a scope the broadcast joins the process-wide queue
+    SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", threshold = 0.9).collect()
+    assert(SimilaritySearch.releaseServingBroadcasts() == 1)
   }
 
   test("mask sharding: forced 5-wide shards are bit-identical to the one-word scan") {

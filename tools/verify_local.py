@@ -17,7 +17,10 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 if "--skip-spark" not in flags:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True,
+        # the checkout this script belongs to, not a fixed path: a copy of
+        # the repo runs the gate against its own sources
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.stdout.write(r.stdout[-3000:])
     sys.stderr.write(r.stderr[-2000:])
     if r.returncode != 0:
