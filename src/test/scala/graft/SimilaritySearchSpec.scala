@@ -880,7 +880,12 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(SimilaritySearch.releaseServingBroadcasts() == 0,
       "a scoped call's broadcast must not reach the process-wide queue")
     release()
-    assert((packed() intersect made).isEmpty, "the scope's release must destroy the batch broadcast")
+    // destroy() removes the blocks asynchronously
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    eventually(timeout(Span(10, Seconds))) {
+      assert((packed() intersect made).isEmpty, "the scope's release must destroy the batch broadcast")
+    }
     // outside a scope the broadcast joins the process-wide queue
     SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", threshold = 0.9).collect()
     assert(SimilaritySearch.releaseServingBroadcasts() == 1)
