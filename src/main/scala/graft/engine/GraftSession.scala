@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The one session factory: `graft.Bench`, `graft.Verify` and `perfbench`
   * build their sessions here, so the oracle gate runs the settings that
   * users and the benchmark get. It mirrors the reference's
-  * `make_session_state_with_config` (`/root/reference/src/parse_sql.rs:26-76`).
+  * `make_session_state_with_config` (its `src/parse_sql.rs:26-76`).
   * What it sets, and why:
   *
   *  - `spark.sql.shuffle.partitions` = `shufflePartitions`: DataFusion's
@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   *    40–60 ms of work in 170–300 ms of wall time.
   *
   * The reference's `WorkStealingRepartitionExec`
-  * (`/root/reference/src/operator/work_stealing_repartition_exec.rs:129-296`)
+  * (its `src/operator/work_stealing_repartition_exec.rs:129-296`)
   * rebalances work between probe partitions at task granularity. Spark's
   * execution model has no intra-stage work stealing, and AQE's skew split
   * (`OptimizeSkewedJoin`, Spark 4.1.2) matches only `SortMergeJoinExec`

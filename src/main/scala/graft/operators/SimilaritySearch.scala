@@ -2016,6 +2016,16 @@ object SimilaritySearch {
   private def nullAsEmpty(v: Column): Column =
     coalesce(v, typedLit(Array.empty[Float]))
 
+  /** `df` projected to `keys` plus the int8 corpus columns every
+    * quantized scan reads: `__cq`, the int8 quantization of `vec` with
+    * NULL read as empty ([[nullAsEmpty]]), and `__cn2` = Σq². A NULL
+    * corpus vector is then admitted by no scan. */
+  private def int8Corpus(df: DataFrame, keys: Seq[Column], vec: Column): DataFrame = {
+    implicit val sp: SparkSession = df.sparkSession
+    df.select(keys :+ VectorFunctions.quantizeInt8(nullAsEmpty(vec)).as("__cq"): _*)
+      .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq")))
+  }
+
   /** Loud mixed-dimension policy of the assignment paths (round-13
     * advice): a batch vector SHORTER than the centroid dimension would
     * silently truncate the dot in [[nearestCentroid]] (a plausible-but-
@@ -2099,22 +2109,16 @@ object SimilaritySearch {
     // ingest, serve from bytes): reuse the index's own projection when
     // it carries one, else compute it here. Written BEFORE meta.json so
     // the completeness marker covers it.
-    val quant = {
-      implicit val isp: SparkSession = sp // the vector expressions bind here
-      // computed from the $vdir/assigned parquet JUST WRITTEN, never from
-      // index.assigned's lineage (self-review): ivfBuild returns an
-      // unpersisted assignment, so the lineage path would execute the
-      // full assignment DAG a second time — and a replay-unstable
-      // upstream could make quantized/ silently disagree with assigned/,
-      // serving coarse ids the rerank corpus doesn't contain. Reading
-      // the committed files back is cheaper AND makes divergence
-      // structurally impossible.
-      index.quantized.getOrElse(
-        sp.read.parquet(s"$vdir/assigned")
-          .select(col(index.idCol), col("cluster"),
-            VectorFunctions.quantizeInt8(nullAsEmpty(col(index.vecCol))).as("__cq"))
-          .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq"))))
-    }
+    // computed from the $vdir/assigned parquet JUST WRITTEN, never from
+    // index.assigned's lineage: ivfBuild returns an
+    // unpersisted assignment, so the lineage path would execute the
+    // full assignment DAG a second time — and a replay-unstable
+    // upstream could make quantized/ silently disagree with assigned/,
+    // serving coarse ids the rerank corpus doesn't contain. Reading
+    // the committed files back is cheaper AND makes divergence
+    // structurally impossible.
+    val quant = index.quantized.getOrElse(int8Corpus(sp.read.parquet(s"$vdir/assigned"),
+      Seq(col(index.idCol), col("cluster")), col(index.vecCol)))
     quant.select(col(index.idCol), col("__cq"), col("__cn2"), col("cluster"))
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$vdir/quantized")
     // column names land in meta.json verbatim — escape control chars
@@ -2440,21 +2444,17 @@ object SimilaritySearch {
     * (`idAlias` long, __cc int, __cq binary, __cn2 long). Bit-identical
     * either way: quantization is deterministic (spec'd on both arms). */
   private def quantizedCorpusProjection(
-      index: IvfIndex, probed: Set[Int], k: Int, idAlias: String): DataFrame = {
-    implicit val sp: SparkSession = index.assigned.sparkSession
+      index: IvfIndex, probed: Set[Int], k: Int, idAlias: String): DataFrame =
     index.quantized match {
       case Some(qf8) =>
         pruneToProbed(qf8, probed, k)
           .select(col(index.idCol).cast("long").as(idAlias),
             col("cluster").cast("int").as("__cc"), col("__cq"), col("__cn2"))
       case None =>
-        pruneToProbed(index.assigned, probed, k)
-          .select(col(index.idCol).cast("long").as(idAlias),
-            col("cluster").cast("int").as("__cc"),
-            VectorFunctions.quantizeInt8(nullAsEmpty(col(index.vecCol))).as("__cq"))
-          .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq")))
+        int8Corpus(pruneToProbed(index.assigned, probed, k),
+          Seq(col(index.idCol).cast("long").as(idAlias), col("cluster").cast("int").as("__cc")),
+          col(index.vecCol))
     }
-  }
 
   /** "Worseness" ordering of the bounded top-k heaps: the queue's max
     * is the worst kept row — lowest score, ties to the HIGHER id — so
@@ -2586,9 +2586,10 @@ object SimilaritySearch {
     * long-lived serving loop (ServeStreaming's foreachBatch) otherwise
     * accumulates one batch-sized broadcast block per probed shard per
     * micro-batch. Callers that MATERIALIZE their result (write/collect)
-    * should call [[releaseServingBroadcasts]] afterwards; callers that
-    * return the lazy frame must leave the queue alone (the frame's
-    * execution still needs the blocks) and inherit the GC fallback. */
+    * should call [[releaseServingBroadcasts]] afterwards. Outside a
+    * scope the queue holds each broadcast strongly until that call, so
+    * a caller that returns the lazy frame (the frame's execution still
+    * needs the blocks) keeps them until the next release. */
   private def shardedKernelScans[T](
       brows: Array[(Long, Seq[Int], Array[Byte], Long)],
       cq: DataFrame,
@@ -2635,8 +2636,9 @@ object SimilaritySearch {
     * open [[withServingResources]] scope when there is one, else (for
     * broadcasts only) the process-wide queue that
     * [[releaseServingBroadcasts]] drains. `asBroadcast` carries the
-    * queue fallback; persist-style cleanups without a scope are left
-    * to the runner's cache lifecycle (see Q.scala's contract). */
+    * queue fallback; without it, a cleanup outside a scope is dropped:
+    * a persist is left to the runner's cache lifecycle (see Q.scala's
+    * contract), a broadcast to the weak-reference GC. */
   private def registerServingCleanup(
       cleanup: () => Unit,
       asBroadcast: Option[org.apache.spark.broadcast.Broadcast[_]]): Unit = {
@@ -3417,9 +3419,10 @@ object SimilaritySearch {
     * vector is never admitted. When even a 1-byte
     * full scan is too much (the 100 TB regime), compose with the IVF
     * partitioner first ([[ivfBuild]]) and feed the probed subset in as
-    * `corpus`. The batch broadcast follows [[shardedKernelScans]]'
-    * lifecycle: [[withServingResources]] or [[releaseServingBroadcasts]]
-    * frees it once the result is materialized. */
+    * `corpus`. Built inside a [[withServingResources]] scope, the
+    * batch broadcast is freed by the scope's release once the result is
+    * materialized; outside one it is left to the weak-reference GC, so
+    * a caller that never releases holds nothing past the result. */
   def incrementalNearDup(
       corpus: DataFrame,
       batch: DataFrame,
@@ -3441,11 +3444,8 @@ object SimilaritySearch {
     // per-row expression eval through a broadcast-nested-loop join. It
     // is the IVF arm's admission scan run as ONE shard: every corpus
     // row sits in cluster 0 and every batch mask is all ones
-    // a NULL corpus vector is the empty degenerate: it admits nothing
-    val cq = corpus
-      .select(col(idCol).cast("long").as("__cid"), lit(0).as("__cc"),
-        VectorFunctions.quantizeInt8(nullAsEmpty(col(vecCol))).as("__cq"))
-      .withColumn("__cn2", VectorFunctions.int8Dot(col("__cq"), col("__cq")))
+    val cq = int8Corpus(corpus,
+      Seq(col(idCol).cast("long").as("__cid"), lit(0).as("__cc")), col(vecCol))
     // cap check BEFORE the collect — a cheap count must refuse an
     // over-size batch while the driver is still healthy, not after the
     // full quantized fetch has already OOM'd it
@@ -3462,7 +3462,7 @@ object SimilaritySearch {
     val packed = packQuantizedBatch(
       brows.map { case (id, q, qs) => (id, -1L, q, qs) })
     val bc = sp.sparkContext.broadcast(packed)
-    registerServingCleanup(() => bc.destroy(), Some(bc))
+    registerServingCleanup(() => bc.destroy(), asBroadcast = None)
     val admitted = admittedShardScan(cq, bc, base = 0, width = 64,
       bound = threshold - margin)
     statusAdmitted(admitted, corpus, batch, idCol, vecCol, threshold,

@@ -1,7 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,12 +55,13 @@ object TextDedup {
     * Each input row turns into up to `maxShingles` strings, each
     * concatenated and then hashed by the caller, so this is the costly
     * stage of its job. A file of one parquet row group reads in one
-    * task, and everything fused with the scan runs there. So when the
-    * input would run in fewer tasks than `defaultParallelism`, its
+    * task, however many byte ranges the scan splits it into, and
+    * everything fused with the scan runs there. So when the input would
+    * read its rows in fewer tasks than `defaultParallelism`, its
     * `(id, text)` rows are round-robined over that many partitions first:
     * a small shuffle of narrow rows, against an expansion that then runs
-    * on every core. An input that already has the tasks, or that has a
-    * shuffle below it (AQE sizes that one), is left alone. */
+    * on every core. An input that already reads in that many tasks, or
+    * that has a shuffle below it (AQE sizes that one), is left alone. */
   private[graft] def shingleRows(
       df: DataFrame,
       idCol: String,
@@ -63,8 +70,7 @@ object TextDedup {
       maxShingles: Int): DataFrame = {
     val rows = df.select(col(idCol).as("__id"), col(textCol).as("__t"))
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (narrowScanTasks(rows).exists(_ < cores)) rows.repartition(cores) else rows
+    val spread = if (fewScanTasks(rows, cores)) rows.repartition(cores) else rows
     spread.select(col("__id"), split(col("__t"), " ").as("__ws"))
       .filter(size(col("__ws")) >= shingleSize)
       .select(col("__id"), explode(expr(
@@ -73,16 +79,38 @@ object TextDedup {
         .as("__g"))
   }
 
-  /** The tasks `df` runs in when only projections and filters sit
-    * between it and one file scan: the scan's planned partitions. None
-    * for any other plan. Reads the physical plan before exchanges are
-    * placed, so no job starts; a plan with a shuffle or a cache below is
-    * never executed to count its partitions. */
-  private def narrowScanTasks(df: DataFrame): Option[Int] = {
-    def walk(p: SparkPlan): Option[Int] = p match {
-      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+  /** Whether `df` reads its rows in fewer than `cores` tasks: true only
+    * when projections and filters alone sit between it and one file scan
+    * with fewer than `cores` planned partitions that return rows. A
+    * parquet byte range returns rows only if it holds the midpoint of a
+    * row group, so a file of one row group that the scan splits into
+    * several ranges still reads in one task. Each such file's footer is
+    * read once on the driver, and only when the scan plans at least
+    * `cores` partitions; a range that is a whole file counts without it.
+    * Reads the physical plan before exchanges are placed, so no job
+    * starts; a plan with a shuffle or a cache below is never executed. */
+  private def fewScanTasks(df: DataFrame, cores: Int): Boolean = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val midpoints = scala.collection.mutable.Map.empty[String, Seq[Long]]
+    def returnsRows(f: PartitionedFile): Boolean =
+      (f.start == 0 && f.length == f.fileSize) || {
+        val mids = midpoints.getOrElseUpdate(f.filePath.toString, {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.toPath, conf))
+          try reader.getFooter.getBlocks.asScala.toSeq
+            .map(b => b.getStartingPos + b.getCompressedSize / 2)
+          finally reader.close()
+        })
+        mids.exists(m => m >= f.start && m < f.start + f.length)
+      }
+    def walk(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec =>
+        val parts = s.inputRDD.partitions
+        if (parts.length < cores) true
+        else if (!s.relation.fileFormat.isInstanceOf[ParquetFileFormat]) false
+        else parts.iterator.collect { case fp: FilePartition => fp }
+          .filter(_.files.exists(returnsRows)).take(cores).size < cores
       case _: ProjectExec | _: FilterExec => walk(p.children.head)
-      case _ => None
+      case _ => false
     }
     walk(df.queryExecution.sparkPlan)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.TextDedup
+import graft.operators.{SimilaritySearch, TextDedup}
 
 /** Streaming ingest deduplication — the unbounded form of
   * [[graft.operators.TextDedup.incrementalDedup]]: documents arrive as
@@ -114,12 +114,16 @@ object IngestStreaming {
     * text / embedding): every arriving micro-batch is statused
     * (dup / keep, with `n_dups` and `best_sim`) against the standing
     * corpus PLUS all previously-accepted survivors via
-    * [[graft.operators.SimilaritySearch.incrementalNearDup]] — the
+    * [[SimilaritySearch.incrementalNearDup]] — the
     * int8-quantized coarse scan against the broadcast batch, margin
     * admission, exact float verify — before its own keeps join the
     * index. Identical restart semantics to the text form: per-batch
     * idempotent `overwrite` into batchId-keyed subdirectories, the
     * index read excludes the current batchId, Hadoop FS API paths.
+    * Each batch's broadcast of its quantized vectors is built inside
+    * [[SimilaritySearch.withServingResources]] and destroyed after the
+    * batch's two writes, so a long ingest holds no broadcast per past
+    * batch.
     * Statuses land under `statusDir/batch=<id>` as
     * (idCol, n_dups, best_sim, status); accepted (idCol, vecCol) rows
     * under `survivorsDir/__ingest_batch=<id>`.
@@ -163,9 +167,12 @@ object IngestStreaming {
               case _: org.apache.spark.sql.AnalysisException => base
             }
           else base
-        val statuses = graft.operators.SimilaritySearch
-          .incrementalNearDup(index, batch, idCol, vecCol, threshold, margin)
-          .persist() // two consumers below; freed before the batch commits
+        // the scope captures this batch's broadcast of its quantized
+        // vectors, destroyed once both writes below have read it
+        val (statuses, release) = SimilaritySearch.withServingResources(
+          SimilaritySearch
+            .incrementalNearDup(index, batch, idCol, vecCol, threshold, margin)
+            .persist()) // two consumers below; freed before the batch commits
         statuses.write.mode("overwrite").parquet(s"$statusDir/batch=$batchId")
         batch
           .join(statuses.filter(col("status") === "keep").select(col(idCol)),
@@ -174,6 +181,7 @@ object IngestStreaming {
           .write.mode("overwrite")
           .parquet(s"$survivorsDir/__ingest_batch=$batchId")
         statuses.unpersist(blocking = false)
+        release()
         ()
       }
       .start()

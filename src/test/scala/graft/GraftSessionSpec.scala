@@ -152,6 +152,40 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(stages.head >= spark.sparkContext.defaultParallelism, s"stage tasks: $stages")
   }
 
+  test("one row group split into several ranges is spread; many row groups are not") {
+    val cores = spark.sparkContext.defaultParallelism
+    val root = Files.createTempDirectory("graft-spread-big")
+    // incompressible text, several MB per core, written as one row
+    // group and as row groups of 1 MB
+    val rows = spark.range(0, 12000).select(col("id").as("doc_id"),
+      expr("concat_ws(' ', transform(sequence(1, 40), i -> sha2(cast(id * 100 + i AS STRING), 256)))")
+        .as("text"))
+    def write(name: String, blockBytes: Long): (String, Int) = {
+      val dir = root.resolve(name).resolve("documents.parquet").toString
+      rows.coalesce(1).write.option("parquet.block.size", blockBytes).parquet(dir)
+      val file = Files.list(Paths.get(dir)).iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.toString), spark.sparkContext.hadoopConfiguration))
+      val groups = try reader.getFooter.getBlocks.size finally reader.close()
+      (root.resolve(name).toString, groups)
+    }
+    val (oneGroup, g1) = write("one", 256L << 20)
+    val (manyGroups, gn) = write("many", 1L << 20)
+    assert(g1 == 1 && gn >= cores, s"row groups: $g1, $gn")
+    def planned(dir: String) = Tables.t(spark, dir, "documents")
+    // both files are planned as at least one byte range per core
+    for (dir <- Seq(oneGroup, manyGroups))
+      assert(planned(dir).rdd.getNumPartitions >= cores)
+    // the plan before it runs: its exchanges are all placed already
+    def roundRobin(dir: String) = flatten(shingles(planned(dir)).queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeExec => e }
+      .filter(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+    assert(roundRobin(oneGroup).map(_.outputPartitioning.numPartitions) == Seq(cores))
+    assert(roundRobin(manyGroups).isEmpty)
+  }
+
   test("building the expansion starts no job, whatever sits below it") {
     val docs = Tables.t(spark, one, "documents")
     val shuffled = docs.repartition(2, col("doc_id"))

@@ -886,9 +886,46 @@ class SimilaritySearchSpec extends AnyFunSuite {
     eventually(timeout(Span(10, Seconds))) {
       assert((packed() intersect made).isEmpty, "the scope's release must destroy the batch broadcast")
     }
-    // outside a scope the broadcast joins the process-wide queue
+    // outside a scope the broadcast is left to the weak-reference GC:
+    // the process-wide queue, which holds what it gets, stays empty
     SimilaritySearch.incrementalNearDup(corpus, batch, "id", "v", threshold = 0.9).collect()
-    assert(SimilaritySearch.releaseServingBroadcasts() == 1)
+    assert(SimilaritySearch.releaseServingBroadcasts() == 0)
+  }
+
+  test("streaming embedding ingest leaves no batch broadcast live after its micro-batches") {
+    import spark.implicits._
+    def packed(): Set[Long] = org.apache.spark.GraftBroadcasts.live()
+      .collect { case (id, cls) if cls.endsWith("PackedBatch") => id }.toSet
+    val corpus = (1L to 40L).map(i => (i, vec(i))).toDF("id", "v")
+    val root = java.nio.file.Files.createTempDirectory("graft_ingest_bc").toString
+    val src = s"$root/src"
+    // two source files, one micro-batch each
+    for ((rows, stamp) <- Seq(
+        Seq((900L, jitter(vec(3L), 0.01f)), (901L, vec(901L))) -> 60000L,
+        Seq((902L, jitter(vec(901L), 0.01f)), (903L, vec(903L))) -> 0L)) {
+      val before = new java.io.File(src).listFiles() match {
+        case null => Set.empty[String]
+        case fs => fs.map(_.getName).toSet
+      }
+      rows.toDF("id", "v").coalesce(1).write.mode("append").parquet(src)
+      new java.io.File(src).listFiles().filter(f => !before.contains(f.getName))
+        .foreach(_.setLastModified(System.currentTimeMillis() - stamp))
+    }
+    val stream = spark.readStream.schema("id LONG, v ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val live = packed()
+    val q = graft.streaming.IngestStreaming.incrementalEmbeddingDedupStream(
+      corpus, stream, "id", "v", s"$root/status", s"$root/survivors", threshold = 0.9)
+    try q.processAllAvailable() finally q.stop()
+    val st = spark.read.parquet(s"$root/status").select("id", "status")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(st == Map(900L -> "dup", 901L -> "keep", 902L -> "dup", 903L -> "keep"), s"$st")
+    // destroy() removes the blocks asynchronously
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    eventually(timeout(Span(10, Seconds))) {
+      assert((packed() -- live).isEmpty, "every micro-batch's broadcast must be destroyed")
+    }
   }
 
   test("mask sharding: forced 5-wide shards are bit-identical to the one-word scan") {
