@@ -3,17 +3,16 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph operators over arbitrary edge tables, built on the
-  * same one-Spark-job-per-round discipline as
-  * [[TextDedup.components]]: each round is a fixed shuffle pipeline
-  * materialized by ONE eager checkpoint ([[Checkpoints.cut]] — lineage
-  * truncation, the standard fix for iterative DataFrame plans;
-  * executor-local by default, reliable-to-storage under
-  * `spark.graft.checkpoint.reliable=true` for real clusters), and
-  * round N−1's checkpoint blocks are freed the moment round N
-  * materializes, so a long loop never accumulates storage (the Pregel
-  * discipline; without it a 7-run sf1 soak of the components loop
-  * degraded 9.8 s → 105 s on pure GC).
+/** Iterative graph operators over arbitrary edge tables. pageRank,
+  * connectedComponents and kCore run their rounds through the one round
+  * driver, [[Rounds.iterate]]: each round is a fixed shuffle pipeline
+  * materialized by ONE Spark job into a checkpoint ([[Checkpoints.cut]]
+  * — lineage truncation, the standard fix for iterative DataFrame
+  * plans; executor-local by default, reliable-to-storage under
+  * `spark.graft.checkpoint.reliable=true` for real clusters), round
+  * N−1's checkpoint is freed the moment round N materializes, and each
+  * round's jobs run under the job description `"<op> round i"`, which
+  * any `SparkListener` can read.
   *
   * Counterpart of the reference's iterative-operator surface: the
   * reference keeps all cores busy through a work-stealing repartition
@@ -136,10 +135,8 @@ object Graph {
         org.apache.spark.util.sketch.BloomFilter]] = {
     require(shardBytes > 0, s"shardBytes must be positive, got $shardBytes")
     val items = math.max(expectedItems, 1L)
-    // ~9.585 bits/item at 1% fpp (optimalNumOfBits) ≈ 1.2 B/item; the
-    // estimate only sizes SHARD COUNT, the filters size themselves
-    val bitsPerItem = -math.log(fpp) / (math.log(2) * math.log(2))
-    val totalBytes = (items * bitsPerItem / 8.0).toLong
+    // the estimate only sizes SHARD COUNT, the filters size themselves
+    val totalBytes = bloomBytes(items, fpp)
     val shards = math.max(1L, (totalBytes + shardBytes - 1) / shardBytes).toInt
     val perShard = math.max(1L, (items + shards - 1) / shards)
     val parts = math.min(maxBuildTasks, math.max(1, hashes.getNumPartitions))
@@ -171,6 +168,12 @@ object Graph {
       s"bloom shard merge lost a shard (${shardFilters.count(_ == null)} of $shards)")
     shardFilters.toSeq.map(spark.sparkContext.broadcast(_))
   }
+
+  /** Estimated bytes of a Bloom filter set over `items` keys at `fpp`:
+    * ~9.585 bits/item at 1% fpp (`BloomFilter.optimalNumOfBits`),
+    * ≈ 1.2 B per item. */
+  private[graft] def bloomBytes(items: Long, fpp: Double): Long =
+    (math.max(items, 1L) * (-math.log(fpp) / (math.log(2) * math.log(2))) / 8.0).toLong
 
   /** Fixed-iteration PageRank in pure integer fixed-point arithmetic.
     *
@@ -272,7 +275,8 @@ object Graph {
     // no src∪dst distinct, no left join, and the aggregate reuses the
     // edge cache's partitioning (zero exchanges in the init job beyond
     // the one that built the cache).
-    val init = Checkpoints.cut(
+    val spark = edges.sparkSession
+    val init = Rounds.init(spark, "pageRank")(Checkpoints.cut(
       if (edgesSymmetric)
         deg.select(col("__id"), col("__deg"), lit(scale).as("__r"))
       else {
@@ -282,13 +286,13 @@ object Graph {
           .select(col("__id"), coalesce(col("__deg"), lit(0L)).as("__deg"),
             lit(scale).as("__r"))
       },
-      eager = true)
+      eager = true))
     // enforce the documented overflow bound at runtime: total mass is
     // ≤ nodes × scale and the damping step multiplies a partial sum by
     // dampingPct ≤ 100, so nodes × scale × 100 must stay below 2^63 or
     // the (non-ANSI) long multiply wraps silently and every rank after
     // it is garbage. One cheap count over the materialized checkpoint.
-    val nodeCount = init.count()
+    val nodeCount = Rounds.init(spark, "pageRank")(init.count())
     require(nodeCount <= Long.MaxValue / 100 / scale,
       s"pageRank overflow bound exceeded: $nodeCount nodes at scale=$scale " +
         s"(need nodes * scale * 100 < 2^63) — lower `scale`")
@@ -298,23 +302,13 @@ object Graph {
     // exchanges; with it a round is ONE small exchange (the __dst
     // partial-aggregate) plus two O(nodes) broadcast builds. The count
     // gating it is the overflow-bound count above — no extra job.
-    val bcastRounds = nodeCount <= broadcastMaxRows(edges.sparkSession)
-    var ranks = init
-    var prevCkpt = init
-    // `spark.graft.pagerank.roundLog=true`: print each round's wall time
-    // — the per-round cost is where reliable-checkpoint overhead and
-    // round-to-round skew live, and a whole-query timing can't separate
-    // them (a cluster operator deciding on `spark.graft.checkpoint
-    // .reliable` needs the per-round table, not the total)
-    val roundLog = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.roundLog").contains("true")
-    var i = 0
-    while (i < iters) {
-      val t0 = if (roundLog) System.nanoTime() else 0L
+    val bcastRounds = nodeCount <= broadcastMaxRows(spark)
+    // a fixed number of rounds: the step never reports convergence
+    val ranks = Rounds.iterate("pageRank", init, iters) { (prev, _) =>
       // per-edge share = floor(rank / out-degree); summed per
       // destination; damping applied in integer space. All operands
       // non-negative → `div` == floor division == DuckDB `//`.
-      val shares0 = ranks.filter(col("__deg") > 0)
+      val shares0 = prev.filter(col("__deg") > 0)
         .select(col("__id"), expr("__r div __deg").as("__share"))
       // Only `shares` carries an explicit broadcast hint under the cap:
       // it is a projection of the round checkpoint — a LogicalRDD with
@@ -337,18 +331,13 @@ object Graph {
         .groupBy(col("__dst").as("__cid"))
         .agg(sum(col("__share")).as("__c"))
       val next = Checkpoints.cut( // the ONE action of the round
-        ranks.select(col("__id"), col("__deg"))
+        prev.select(col("__id"), col("__deg"))
           .join(contrib, col("__id") === col("__cid"), "left")
           .select(col("__id"), col("__deg"),
             (lit(base) + expr(s"($dampingPct * coalesce(__c, 0L)) div 100"))
               .as("__r")),
         eager = true)
-      if (roundLog)
-        println(f"[graft] pageRank round ${i + 1}/$iters: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      Checkpoints.free(prevCkpt)
-      prevCkpt = next
-      ranks = next
-      i += 1
+      (next, false)
     }
     e.unpersist(blocking = false)
     ranks.select(col("__id").as("id"), col("__r").as("rank_scaled"))
@@ -363,14 +352,13 @@ object Graph {
     * Edges are treated as undirected (symmetrized internally).
     *
     * Each round is ONE join + groupBy-min over symmetric + self-loop
-    * edges (no left-join finalizer); `localCheckpoint` truncates
-    * lineage per round (the standard fix for iterative DataFrame
-    * plans). Each round costs exactly ONE Spark job: the self-loop row
-    * carries the node's previous label through the same aggregate
-    * (`__old`), so the convergence check — "did any label decrease
-    * this round?" — is a column on the already-materialized round, not
-    * a second driver-synchronized action. (Labels only ever decrease,
-    * so zero decreases IS the fixpoint.) Wall-time is
+    * edges (no left-join finalizer), run by [[Rounds.iterate]] into a
+    * lazy checkpoint. Each round costs exactly ONE Spark job: the
+    * self-loop row carries the node's previous label through the same
+    * aggregate (`__old`), so the convergence check — "did any label
+    * decrease this round?" — is a column on the already-materialized
+    * round, not a second driver-synchronized action. (Labels only ever
+    * decrease, so zero decreases IS the fixpoint.) Wall-time is
     * `rounds × (one job)` instead of `rounds × 2 × (job-launch +
     * slowest-stage)`, which is what keeps the loop from serializing on
     * a busy driver/cluster. Nothing but the one-row change count ever
@@ -394,17 +382,13 @@ object Graph {
     * "constant label per component = component min". The jump join is
     * over the (id, label) table only — the big per-round edge join is
     * unchanged, and each round remains exactly one Spark job.
-    * `spark.graft.components.jump=false` restores bare propagation
-    * (the A/B baseline).
     *
     * The edge table is hash-partitioned on the probe key and persisted
     * across rounds, so per round only the small (id, label) side moves;
-    * round N−1's checkpoint blocks are freed EAGERLY the moment round N
-    * materializes (the Pregel discipline — without it a 7-run sf1 soak
-    * degraded 9.8 s → 105 s on accumulated blocks and GC). The API is
-    * eager and leak-free: internal caches are unpersisted before
-    * returning; the result is backed by the final round's checkpoint,
-    * freed by the ContextCleaner once unreferenced.
+    * the round driver frees round N−1's checkpoint the moment round N
+    * materializes. The API is eager and leak-free: internal caches are
+    * unpersisted before returning; the result is backed by the final
+    * round's checkpoint, freed by the ContextCleaner once unreferenced.
     *
     * @throws IllegalStateException if propagation has not converged
     *   after `maxIters` rounds (component diameter exceeds the cap) —
@@ -429,9 +413,10 @@ object Graph {
     // at 4× the configured parallelism so the conf stays the scale
     // knob on a real cluster. Override:
     // spark.graft.components.targetPartitionRows.
-    val eCnt = e.count()
-    val sp = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val targetRows = math.max(1L, confLong(edges.sparkSession,
+    val spark = edges.sparkSession
+    val eCnt = Rounds.init(spark, "connectedComponents")(e.count())
+    val sp = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val targetRows = math.max(1L, confLong(spark,
       "spark.graft.components.targetPartitionRows", 250000L))
     val nParts = math.max(1L, math.min(
       (2L * eCnt + targetRows - 1L) / targetRows, 4L * sp)).toInt
@@ -446,40 +431,30 @@ object Graph {
       .persist()
     // one job: materializes the initial labels AND, through their
     // lineage, the eb cache (so e's upstream pipeline runs exactly once)
-    val init = Checkpoints.cut(
+    val init = Rounds.init(spark, "connectedComponents")(Checkpoints.cut(
       eb.select(col("__a").as("__id")).distinct()
         .select(col("__id"), col("__id").as("__comp")),
-      eager = true)
-    var labels = init
-    var prevCkpt = init
+      eager = true))
     // eb is materialized; the raw edge list cache is no longer needed
     e.unpersist(blocking = false)
-    var iter = 0
-    var converged = false
-    val jump = edges.sparkSession.conf
-      .getOption("spark.graft.components.jump").forall(_.toBoolean)
-    // `spark.graft.components.roundLog=true`: per-round wall time +
-    // change count (same diagnostic contract as pagerank.roundLog)
-    val roundLog = edges.sparkSession.conf
-      .getOption("spark.graft.components.roundLog").contains("true")
-    while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
+    // labels are node-sized (≤ 2× the counted edge rows) and read off
+    // the round checkpoint: broadcast under the cap (see
+    // [[broadcastMaxRows]]) so the cached edge table is never re-sorted
+    // for the round's SortMergeJoin and the label exchange disappears;
+    // past the cap the shuffle join stands. The jump self-join below
+    // deliberately stays a shuffle join — broadcasting one of its arms
+    // would forfeit the exchange reuse that lets both arms share one
+    // physical aggregation.
+    val bcastLabels = 2L * eCnt <= broadcastMaxRows(spark)
+    val labels = try Rounds.iterate("connectedComponents", init, maxIters,
+      Some(n => s"component propagation did not converge within $n rounds " +
+        "(component diameter exceeds maxIters); raise maxIters")) { (prev, _) =>
+      val current = prev.select(col("__id"), col("__comp"))
+      val labelsSide = if (bcastLabels) broadcast(current) else current
       // min label over neighbors (self-loop included). The self-loop row
       // (__a == __b) joins to the node's own current label, so
       // min-filtered on it == the PREVIOUS label — carried as __old in
       // the same shuffle, no extra pass over the data.
-      // labels are node-sized (≤ 2× the counted edge rows) and read off
-      // the round checkpoint: broadcast under the cap (see
-      // [[broadcastMaxRows]]) so the cached edge table is never
-      // re-sorted for the round's SortMergeJoin and the label exchange
-      // disappears; past the cap the shuffle join stands. The jump
-      // self-join below deliberately stays a shuffle join — broadcasting
-      // one of its arms would forfeit the exchange reuse that lets both
-      // arms share one physical aggregation.
-      val labelsSide =
-        if (2L * eCnt <= broadcastMaxRows(edges.sparkSession))
-          broadcast(labels)
-        else labels
       val relaxed =
         eb.join(labelsSide, eb("__a") === labelsSide("__id"))
           .groupBy(eb("__b").as("__id"))
@@ -497,36 +472,21 @@ object Graph {
       // edge-relaxations whose neighbor improved in the same round, not
       // pointer chains, so a second jump buys no round while paying an
       // extra join stage every round.)
-      val stepped =
-        if (!jump) relaxed
-        else relaxed.as("x").join(
-            relaxed.select(col("__id").as("__jid"), col("__comp").as("__jm")).as("j"),
-            col("x.__comp") === col("__jid"), "left")
-          .select(col("x.__id").as("__id"),
-            least(col("x.__comp"), coalesce(col("__jm"), col("x.__comp")))
-              .as("__comp"),
-            col("x.__old").as("__old"))
+      val stepped = relaxed.as("x").join(
+          relaxed.select(col("__id").as("__jid"), col("__comp").as("__jm")).as("j"),
+          col("x.__comp") === col("__jid"), "left")
+        .select(col("x.__id").as("__id"),
+          least(col("x.__comp"), coalesce(col("__jm"), col("x.__comp")))
+            .as("__comp"),
+          col("x.__old").as("__old"))
       val next = Checkpoints.cut(stepped, eager = false)
       // the ONE action of the round: materializes the (lazy) checkpoint
       // and reduces the change count in the same job
       val changedRow = next
         .agg(sum(when(col("__comp") < col("__old"), 1L).otherwise(0L)))
         .collect()(0)
-      converged = changedRow.isNullAt(0) || changedRow.getLong(0) == 0L
-      if (roundLog) {
-        val changed = if (changedRow.isNullAt(0)) 0L else changedRow.getLong(0)
-        println(f"[graft] components round ${iter + 1}: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s, $changed changed")
-      }
-      Checkpoints.free(prevCkpt)
-      prevCkpt = next
-      labels = next.select(col("__id"), col("__comp"))
-      iter += 1
-    }
-    eb.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"component propagation did not converge within $iter rounds " +
-        "(component diameter exceeds maxIters); raise maxIters")
+      (next, changedRow.isNullAt(0) || changedRow.getLong(0) == 0L)
+    } finally eb.unpersist(blocking = false)
     labels.select(col("__id").as("id"), col("__comp").as("componentId"),
       when(col("__comp") === col("__id"), 1).otherwise(0).as("isCanonical"))
   }
@@ -571,7 +531,21 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      edgesCanonical: Boolean = false): DataFrame = {
+      edgesCanonical: Boolean = false): DataFrame =
+    // the closing Bloom filter set can sit on the driver ~10× over: the
+    // merged shards and their broadcast copies (2×) plus, in local mode,
+    // the ≤ 8 concurrent build tasks' partial sets in the same JVM (8×)
+    triangleCounts(edges, srcCol, dstCol, edgesCanonical,
+      Runtime.getRuntime.maxMemory / 10)
+
+  /** [[triangleCounts]] with the Bloom prefilter skipped when its
+    * estimated size exceeds `bloomMaxBytes`. */
+  private[graft] def triangleCounts(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      edgesCanonical: Boolean,
+      bloomMaxBytes: Long): DataFrame = {
     // normalize to one canonical row per undirected non-loop edge;
     // read 3× (both endpoint arms of the degree union, orientation
     // base) — persisted so the caller's edge pipeline runs once, and
@@ -653,45 +627,38 @@ object Graph {
     // close the wedge: the y–z edge is oriented y→z by construction
     // (y ≺ z), and `o` is distinct, so inner join == existence check.
     //
-    // BLOOM PREFILTER on the closing key (default on,
-    // `spark.graft.triangles.bloom=false` to disable): the closing
-    // join re-keys the WEDGE table on (__y, __z), and wedges outnumber
-    // edges ~100× on dense graphs — the r10 sf1 phase profile measured
-    // this shuffle+probe at 83% of the operator (63.6 s of 76.7 s).
-    // Almost no wedge closes, so a Bloom filter over the edge keys,
-    // broadcast and applied BEFORE the shuffle, deletes most of that
-    // volume. Correctness is unconditional: Bloom filters have no
-    // false negatives (every true triangle's wedge survives) and false
+    // BLOOM PREFILTER on the closing key: the closing join re-keys the
+    // WEDGE table on (__y, __z), and wedges outnumber edges ~100× on
+    // dense graphs — the r10 sf1 phase profile measured this
+    // shuffle+probe at 83% of the operator (63.6 s of 76.7 s). Almost no
+    // wedge closes, so a Bloom filter over the edge keys, broadcast and
+    // applied BEFORE the shuffle, deletes most of that volume.
+    // Correctness is unconditional: Bloom filters have no false
+    // negatives (every true triangle's wedge survives) and false
     // positives merely re-enter the exact join that was already there.
     // Spark's own runtime bloom injection declines this join (the
     // creation side exceeds its 10 MB threshold), hence the explicit
-    // build: one treeAggregate over the persisted `o`, ~1.2 MB per
-    // million edges at 1% fpp on the driver — at billions of edges,
-    // raise fpp or flip the knob off and pay the shuffle.
+    // build over the persisted `o`, ~1.2 MB per million edges at 1% fpp
+    // on the driver. Past `bloomMaxBytes` (a share of the driver heap —
+    // billions of edges on a small driver) the filter is skipped and the
+    // closing join pays the full shuffle, with the same result.
     val spark = edges.sparkSession
-    val useBloom = spark.conf.getOption("spark.graft.triangles.bloom") match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"spark.graft.triangles.bloom must be true or false, got '$v'")
-    }
+    // a build destroys the PREVIOUS call's broadcasts (not just
+    // unpersist): unpersist at the end of each call removes executor
+    // copies but leaves the driver-resident blocks until the
+    // ContextCleaner GC-sweeps the handle, so a long driver session
+    // looping triangleCounts could stack several ~143 MB filters of
+    // driver heap between GCs. Destroying them here — one call later —
+    // is zombie-task safe: the previous call's jobs are long finished.
+    Graph.releasePreviousBloom()
+    // cheap: o is an eagerly-materialized checkpoint snapshot
+    val edgeCount = o.count()
+    val fpp = 0.01
     var bloomBcs: Seq[org.apache.spark.broadcast.Broadcast[
       org.apache.spark.util.sketch.BloomFilter]] = Nil
     val closable =
-      if (!useBloom) wedges
+      if (bloomBytes(edgeCount, fpp) > bloomMaxBytes) wedges
       else {
-        // a NEW build destroys the PREVIOUS call's broadcasts (not just
-        // unpersist): unpersist at the end of each call removes executor
-        // copies but leaves the driver-resident blocks until the
-        // ContextCleaner GC-sweeps the handle, so a long driver session
-        // looping triangleCounts could stack several ~143 MB filters of
-        // driver heap between GCs. Destroying them here — one call
-        // later — is zombie-task safe: the previous call's jobs are long
-        // finished by the time a new build starts.
-        Graph.releasePreviousBloom()
-        // cheap: o is an eagerly-materialized checkpoint snapshot
-        val edgeCount = o.count()
         // EXPLICIT build over the uncapped sketch (`BloomFilter.create`),
         // NOT `stat.bloomFilter`: Spark routes the latter through the
         // runtime-filter aggregate, whose bitmap is silently clamped to
@@ -731,7 +698,7 @@ object Graph {
         bloomBcs = Graph.buildShardedBloom(spark,
           o.select(xxhash64(col("__a"), col("__b")).as("__h")).as[Long].rdd,
           expectedItems = math.max(edgeCount, 1L),
-          fpp = 0.01,
+          fpp = fpp,
           shardBytes = shardBytes)
         // codegen'd might-contain over the broadcast shard set (round-10
         // verdict: the previous udf() here pushed every wedge row through
@@ -855,13 +822,13 @@ object Graph {
     * curation: the k-core keeps densely-corroborated nodes and sheds
     * tendrils in O(peel depth) rounds.
     *
-    * Same loop discipline as [[pageRank]]/[[TextDedup.components]]:
-    * each round is ONE Spark job (a lazy `localCheckpoint` of the
-    * surviving edge set, materialized by the round's single count
-    * action, which doubles as the convergence check — edge count
-    * unchanged == fixpoint, since the edge set only ever shrinks);
-    * round N−1's checkpoint is freed eagerly. Nothing reaches the
-    * driver but the one count per round.
+    * Same round driver as [[pageRank]]/[[connectedComponents]]
+    * ([[Rounds.iterate]]): each round is ONE Spark job (a lazy
+    * checkpoint of the surviving edge set, materialized by the round's
+    * single count action, which doubles as the convergence check — edge
+    * count unchanged from the previous round == fixpoint, since the edge
+    * set only ever shrinks); round N−1's checkpoint is freed eagerly.
+    * Nothing reaches the driver but the one count per round.
     *
     * Peeling is IDEMPOTENT at its fixpoint (one more round of a
     * converged core changes nothing), which is what lets an external
@@ -894,7 +861,8 @@ object Graph {
     // caller-proven contract as [[triangleCounts]]): the input is
     // already distinct canonical src < dst, skip the normalization's
     // distinct exchange.
-    val init = Checkpoints.cut( // one init job; edge pipeline runs once
+    val spark = edges.sparkSession
+    val init = Rounds.init(spark, "kCore")(Checkpoints.cut( // edge pipeline runs once
       if (edgesCanonical)
         edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
       else edges
@@ -902,10 +870,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).as("__v"))
         .filter(col("__u") =!= col("__v"))
         .distinct(),
-      eager = true)
-    var cur = init
-    var prevCkpt = init
-    var prevCount = -1L
+      eager = true))
     // survivor-node count is bounded by 2× the surviving edge count, so
     // each round's keep-set broadcast decision (see [[broadcastMaxRows]])
     // rides the count the loop already takes per round — the init count
@@ -915,39 +880,35 @@ object Graph {
     // arms removes both full edge-table Exchange+Sort pairs from every
     // peel round (the keep side is a fresh aggregate each round, so the
     // planner otherwise sort-merges).
-    val bcastCap = broadcastMaxRows(edges.sparkSession)
-    var curCount = if (bcastCap > 0) init.count() else Long.MaxValue
-    var iter = 0
-    var converged = false
+    val bcastCap = broadcastMaxRows(spark)
+    var edgeCount =
+      if (bcastCap > 0) Rounds.init(spark, "kCore")(init.count()) else Long.MaxValue
     def degrees(df: DataFrame): DataFrame = df
       .select(col("__u").as("__id"))
       .unionAll(df.select(col("__v").as("__id")))
       .groupBy("__id").agg(count(lit(1)).as("__deg"))
-    while (!converged && iter < maxIters) {
-      val keep = degrees(cur)
-        .filter(col("__deg") >= k)
-        .select(col("__id"))
-      def keepSide(df: DataFrame): DataFrame = // overflow-safe: ÷ not ×
-        if (curCount <= bcastCap / 2) broadcast(df) else df
-      val next = Checkpoints.cut(
-        cur
-          .join(keepSide(keep.select(col("__id").as("__u"))), Seq("__u"))
-          .join(keepSide(keep.select(col("__id").as("__v"))), Seq("__v"))
-          .select(col("__u"), col("__v")),
-        eager = false)
-      // the ONE action of the round: materializes the checkpoint and
-      // returns the surviving edge count == the convergence signal
-      val cnt = next.count()
-      converged = cnt == prevCount
-      prevCount = cnt
-      curCount = cnt
-      Checkpoints.free(prevCkpt)
-      prevCkpt = next
-      cur = next
-      iter += 1
+    val core = Rounds.iterate("kCore", init, maxIters,
+      Some(n => s"k-core peeling did not converge within $n rounds; raise maxIters")) {
+      (cur, round) =>
+        val keep = degrees(cur)
+          .filter(col("__deg") >= k)
+          .select(col("__id"))
+        def keepSide(df: DataFrame): DataFrame = // overflow-safe: ÷ not ×
+          if (edgeCount <= bcastCap / 2) broadcast(df) else df
+        val next = Checkpoints.cut(
+          cur
+            .join(keepSide(keep.select(col("__id").as("__u"))), Seq("__u"))
+            .join(keepSide(keep.select(col("__id").as("__v"))), Seq("__v"))
+            .select(col("__u"), col("__v")),
+          eager = false)
+        // the ONE action of the round: materializes the checkpoint and
+        // returns the surviving edge count == the convergence signal
+        // (compared from round 2 on: round 1 has no round to compare with)
+        val cnt = next.count()
+        val converged = round > 1 && cnt == edgeCount
+        edgeCount = cnt
+        (next, converged)
     }
-    if (!converged) throw new IllegalStateException(
-      s"k-core peeling did not converge within $iter rounds; raise maxIters")
-    degrees(cur).select(col("__id").as("id"), col("__deg").as("core_degree"))
+    degrees(core).select(col("__id").as("id"), col("__deg").as("core_degree"))
   }
 }

@@ -272,25 +272,6 @@ object TextDedup {
           .otherwise("keep").as("status"))
   }
 
-  /** Connected components over a near-duplicate pair graph — the dedup
-    * decision a corpus pipeline actually ships: every node that appears
-    * in `pairs` mapped to its cluster's minimum id, with the canonical
-    * keeper flagged. Returns (id, componentId, isCanonical); nodes with
-    * no edges are simply absent (they are their own singleton component
-    * — left-join and `coalesce(componentId, id)` to close over a full
-    * corpus, as `t19_neardup_components` does).
-    *
-    * Delegates to [[Graph.connectedComponents]] — components is a graph
-    * operator first (min-label propagation, one Spark job per round,
-    * eager checkpoint lifecycle); this entry point just keeps the dedup
-    * surface's (idA, idB) column convention. */
-  def components(
-      pairs: DataFrame,
-      aCol: String = "idA",
-      bCol: String = "idB",
-      maxIters: Int = 50): DataFrame =
-    Graph.connectedComponents(pairs, aCol, bCol, maxIters)
-
   /** Exact-substring span dedup — the repeated-passage removal pass of
     * Lee et al., "Deduplicating Training Data Makes Language Models
     * Better" (ACL 2022), in its windowed distributed form: every

@@ -143,7 +143,7 @@ object SimQueries {
     * cosine pairs instead of Jaccard pairs): near-dup pairs at the v4
     * threshold become undirected edges, components close over them
     * (pointer-jumped O(log diameter) label propagation —
-    * [[graft.operators.TextDedup.components]], the SAME machinery t19
+    * [[graft.operators.Graph.connectedComponents]], the SAME machinery t19
     * rides), and each vector reports its component and whether it is
     * the canonical (minimum-id) representative — the row a dedup keeps.
     * Pairs here are the exact all-pairs generator (v4's, oracle-
@@ -174,7 +174,7 @@ object SimQueries {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, numBlocks = 0)
       .select(col("idA").as("a_id"), col("idB").as("b_id"))
-    val comps = graft.operators.TextDedup.components(pairs, "a_id", "b_id", maxIters = 20)
+    val comps = graft.operators.Graph.connectedComponents(pairs, "a_id", "b_id", maxIters = 20)
     t(s, dir, "embeddings").select(col("vec_id"))
       .join(comps.select(col("id").as("lid"), col("componentId").as("comp")),
         col("vec_id") === col("lid"), "left")
@@ -240,7 +240,7 @@ object SimQueries {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, bands = 24, bitsPerBand = 6, dim = 64)
       .select(col("idA").as("a_id"), col("idB").as("b_id"))
-    val comps = graft.operators.TextDedup.components(pairs, "a_id", "b_id", maxIters = 20)
+    val comps = graft.operators.Graph.connectedComponents(pairs, "a_id", "b_id", maxIters = 20)
     t(s, dir, "embeddings").select(col("vec_id"))
       .join(comps.select(col("id").as("lid"), col("componentId").as("comp")),
         col("vec_id") === col("lid"), "left")
@@ -2066,7 +2066,7 @@ object SimQueries {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, numBlocks = 0)
       .select(col("idA"), col("idB"))
-    val comps = graft.operators.TextDedup.components(pairs, "idA", "idB", maxIters = 20)
+    val comps = graft.operators.Graph.connectedComponents(pairs, "idA", "idB", maxIters = 20)
     t(s, dir, "embeddings").select(col("vec_id"))
       .join(comps.select(col("id").as("lid"), col("componentId").as("comp")),
         col("vec_id") === col("lid"), "left")

@@ -353,7 +353,7 @@ object TextQueries {
       |SELECT doc_id, MIN(comp) AS comp_id,
       |  CASE WHEN MIN(comp) = doc_id THEN 1 ELSE 0 END AS is_canonical
       |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // [[TextDedup.components]] persists the pair list internally (it
+    // [[Graph.connectedComponents]] persists the pair list internally (it
     // references it four times — symmetric + self-loop edges — and each
     // unpersisted reference would re-evaluate the whole LSH candidate
     // pipeline), runs eagerly, and unpersists before returning, so this
@@ -363,7 +363,7 @@ object TextQueries {
     // failure) lives in the reusable API; singletons rejoin via the
     // left join below.
     val e = lshPairs(s, dir).select(col("a_id"), col("b_id"))
-    val comps = graft.operators.TextDedup.components(e, "a_id", "b_id", maxIters = 20)
+    val comps = graft.operators.Graph.connectedComponents(e, "a_id", "b_id", maxIters = 20)
     // r21 optimization (guide §3.1): the label table is bounded by docs
     // incident to a near-dup pair — normally a sliver of the corpus —
     // while the left side is every document; broadcasting it removes

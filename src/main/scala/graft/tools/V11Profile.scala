@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.{SimilaritySearch, TextDedup}
+import graft.operators.{Graph, SimilaritySearch}
 
 /** Round-11 verdict #5: stage-attributed solo profile of the composed
   * semantic-dedup pipeline (`v11_embedding_dedup`) above oracle scale —
@@ -36,8 +36,7 @@ object V11Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same hook as Verify/Bench: e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.graft.components.roundLog=true"
+    // same hook as Verify/Bench: `k=v;k=v` session settings
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
@@ -96,11 +95,11 @@ object V11Profile {
     val (nPairs, tPairs) = timed("pairwise+verify")(pairsDf.count())
     val bPairs = drain("pairwise+verify")
 
-    // components() is EAGER (one action per propagation round), so the
+    // connectedComponents is EAGER (one action per propagation round), so the
     // construction call itself is the closure's wall time — time the call
     // plus the final count together, or the rounds attribute to nothing.
     val ((comps, nComp), tComp) = timed("closure (components)") {
-      val c = TextDedup.components(pairsDf, "idA", "idB", maxIters = 20)
+      val c = Graph.connectedComponents(pairsDf, "idA", "idB", maxIters = 20)
       (c, c.count())
     }
     val bComp = drain("closure")

@@ -12,15 +12,11 @@ class ConfKeysSpec extends AnyFunSuite {
 
   private val expected = Seq(
     "spark.graft.checkpoint.reliable",
-    "spark.graft.components.jump",
-    "spark.graft.components.roundLog",
     "spark.graft.components.targetPartitionRows",
     "spark.graft.graph.broadcastMaxRows",
     "spark.graft.lsh.bucketCap",
-    "spark.graft.pagerank.roundLog",
     "spark.graft.parallelHashJoin.auto",
     "spark.graft.parallelHashJoin.buildSpillThreshold",
-    "spark.graft.triangles.bloom",
     "spark.graft.triangles.bloom.shardBytes")
 
   /** Every distinct `"spark.graft.…"` string literal (the opening quote

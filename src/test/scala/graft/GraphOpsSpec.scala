@@ -125,11 +125,35 @@ class GraphOpsSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.triangles.bloom.shardBytes", "16")
     val sharded = try runTri(edges)
     finally spark.conf.unset("spark.graft.triangles.bloom.shardBytes")
-    spark.conf.set("spark.graft.triangles.bloom", "false")
-    val off = try runTri(edges)
-    finally spark.conf.unset("spark.graft.triangles.bloom")
-    assert(sharded == off)
     assert(sharded == triModel(edges))
+    // a driver-heap bound below the filter's estimated size skips the
+    // filter: no plan probes it, and the counts are the same
+    import spark.implicits._
+    def probesDuring(bloomMaxBytes: Long): (Map[Long, Long], Int) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.add(s.physicalPlanDescription)
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val got = Graph.triangleCounts(edges.toDF("src", "dst"), "src", "dst",
+            edgesCanonical = false, bloomMaxBytes = bloomMaxBytes)
+          .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+        (got, plans.toArray.count(_.toString.contains("graft_might_contain")))
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (off, offProbes) = probesDuring(bloomMaxBytes = 0L)
+    assert(off == triModel(edges))
+    assert(offProbes == 0, s"a skipped filter must not be probed, saw $offProbes plans")
+    val (on, onProbes) = probesDuring(bloomMaxBytes = Long.MaxValue)
+    assert(on == triModel(edges))
+    assert(onProbes > 0, "under the bound the closing join must probe the filter")
   }
 
   test("triangleCounts handles skewed hub graphs (degree orientation)") {
@@ -150,7 +174,12 @@ class GraphOpsSpec extends AnyFunSuite {
     * driver-round-trip pin for EVERY iterative loop lives here: a loop
     * that silently regresses to 2+ jobs per round (the pre-round-6
     * components shape) serializes on a busy driver at cluster scale. */
-  private def countJobs(body: => Unit): Int = {
+  private def countJobs(body: => Unit): Int = jobDescriptions(body).size
+
+  /** The job description of every Spark job `body` launches, in launch
+    * order ("" for none), under the same at-scale settings as
+    * [[countJobs]]. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -160,23 +189,19 @@ class GraphOpsSpec extends AnyFunSuite {
     // measuring the AT-SCALE shuffle shape, where the cap never fires
     spark.conf.set("spark.graft.graph.broadcastMaxRows", "0")
     spark.catalog.clearCache()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           start: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(Option(start.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      // listener events post asynchronously — wait for the count to settle
-      var last = -1
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != last && spins < 50) {
-        Thread.sleep(100); last = cur; cur = jobs.get(); spins += 1
-      }
-      cur
+      // listener events post asynchronously
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      jobs.toArray(Array.empty[String]).toSeq
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
@@ -351,30 +376,117 @@ class GraphOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents: pointer jumping converges long chains in O(log d) rounds") {
+  /** Sequential union-find reference: (id, component minimum,
+    * isCanonical) for every node of `edges`, sorted by id. */
+  private def componentsModel(edges: Seq[(Long, Long)]): Seq[(Long, Long, Int)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    parent.keys.toSeq.sorted.map { n =>
+      val c = find(n)
+      (n, c, if (c == n) 1 else 0)
+    }
+  }
+
+  private def runComponents(edges: Seq[(Long, Long)], maxIters: Int = 50): Seq[(Long, Long, Int)] = {
     import spark.implicits._
+    Graph.connectedComponents(edges.toDF("src", "dst"), maxIters = maxIters).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1).toSeq
+  }
+
+  /** Round numbers of the jobs tagged `"<op> round i"`, in launch order. */
+  private def roundsOf(op: String, jobs: Seq[String]): Seq[Int] =
+    jobs.filter(_.startsWith(s"$op round ")).map(_.stripPrefix(s"$op round ").toInt)
+
+  test("connectedComponents: pointer jumping converges long chains in O(log d) rounds") {
     // a 201-node path: bare propagation needs ~200 rounds; the pointer
-    // jump halves label distance per round, so 20 suffice (this is the
-    // exact failure the r12 sf1 replay hit in v11's near-dup graph —
-    // a chain of pairwise near-dups longer than maxIters)
-    val chain = (0 until 200).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
-    val out = Graph.connectedComponents(chain, maxIters = 20).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(out.size == 201 && out.values.forall(_ == 0L))
-    // bare propagation (the A/B baseline) cannot do it in 20
-    spark.conf.set("spark.graft.components.jump", "false")
-    try intercept[IllegalStateException] {
-      Graph.connectedComponents(chain, maxIters = 20).collect()
-    } finally spark.conf.unset("spark.graft.components.jump")
-    // and both modes agree where both converge
-    val edges = Seq((1L, 2L), (2L, 3L), (7L, 5L), (9L, 9L), (4L, 5L)).toDF("src", "dst")
-    val jumped = Graph.connectedComponents(edges).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1)
-    spark.conf.set("spark.graft.components.jump", "false")
-    val bare = try Graph.connectedComponents(edges).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1)
-    finally spark.conf.unset("spark.graft.components.jump")
-    assert(jumped == bare)
+    // jump halves label distance per round, so it converges in 8 (this
+    // is the exact failure the r12 sf1 replay hit in v11's near-dup
+    // graph — a chain of pairwise near-dups longer than maxIters)
+    val chain = (0 until 200).map(i => (i.toLong, i + 1L))
+    var out = Seq.empty[(Long, Long, Int)]
+    val jobs = jobDescriptions { out = runComponents(chain, maxIters = 20) }
+    assert(out == componentsModel(chain))
+    assert(roundsOf("connectedComponents", jobs) == (1 to 8),
+      s"the 201-node chain must take 8 one-job rounds: $jobs")
+    // self-loop, reversed edge, two components
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 5L), (9L, 9L), (4L, 5L))
+    assert(runComponents(edges) == componentsModel(edges))
+  }
+
+  test("the round driver tags each round's one job and restores the caller's description") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val triangle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val ring = (1L to 8L).map(i => (i, if (i == 8L) 1L else i + 1L)).toDF("src", "dst")
+    val longChain = (0 until 12).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_rounds")
+    sc.setCheckpointDir(ckptDir.toString)
+    /** Reliable checkpoints (one `rdd-<id>` directory each) on disk. */
+    def checkpointTrees(): Long = {
+      val paths = java.nio.file.Files.walk(ckptDir)
+      try paths.filter(_.getFileName.toString.startsWith("rdd-")).count()
+      finally paths.close()
+    }
+    /** Runs `call` under the caller description "caller" and checks that
+      * every job it launches is tagged "<op> init" or "<op> round i",
+      * that round i launches exactly `perRound` jobs for consecutive i
+      * from 1, and that "caller" is back afterwards, also when `call`
+      * fails; in reliable mode, that only the result's checkpoint stays
+      * on disk (none after a failure). Returns the number of rounds or
+      * rethrows the failure. */
+    def rounds(op: String, perRound: Int)(call: => Unit): Int = {
+      sc.setJobDescription("caller")
+      try {
+        var failure = Option.empty[IllegalStateException]
+        val treesBefore = checkpointTrees()
+        val jobs = jobDescriptions {
+          try call catch { case e: IllegalStateException => failure = Some(e) }
+        }
+        if (spark.conf.getOption(graft.operators.Checkpoints.ReliableConf).contains("true"))
+          assert(checkpointTrees() - treesBefore == (if (failure.isEmpty) 1 else 0),
+            s"$op must free every round's checkpoint but its result's")
+        assert(jobs.forall(d => d == s"$op init" || d.startsWith(s"$op round ")),
+          s"$op launched an untagged job: $jobs")
+        val ns = roundsOf(op, jobs)
+        val n = ns.lastOption.getOrElse(0)
+        assert(ns == (1 to n).flatMap(Seq.fill(perRound)(_)),
+          s"$op rounds must run $perRound job(s) each, numbered from 1: $jobs")
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        failure.foreach(e => throw e)
+        n
+      } finally sc.setJobDescription(null)
+    }
+    // one job per round in local mode; a reliable cut is eager, so a
+    // lazily-cut round (components, k-core) adds its action's job there
+    for ((reliable, lazyPerRound) <- Seq(false -> 1, true -> 2)) {
+      spark.conf.set(graft.operators.Checkpoints.ReliableConf, reliable.toString)
+      try {
+        assert(rounds("pageRank", 1)(Graph.pageRank(triangle, iters = 3)) == 3)
+        assert(rounds("connectedComponents", lazyPerRound)(
+          Graph.connectedComponents(Seq((1L, 2L)).toDF("src", "dst"))) == 2)
+        assert(rounds("kCore", lazyPerRound)(Graph.kCore(ring, k = 2)) == 2)
+        // a maxIters failure keeps its message and restores the description
+        val cc = intercept[IllegalStateException] {
+          rounds("connectedComponents", lazyPerRound)(
+            Graph.connectedComponents(longChain, maxIters = 2))
+        }
+        assert(cc.getMessage == "component propagation did not converge within 2 rounds " +
+          "(component diameter exceeds maxIters); raise maxIters")
+        val kc = intercept[IllegalStateException] {
+          rounds("kCore", lazyPerRound)(Graph.kCore(ring, k = 2, maxIters = 1))
+        }
+        assert(kc.getMessage == "k-core peeling did not converge within 1 rounds; raise maxIters")
+        assert(sc.getLocalProperty("spark.job.description") == null)
+      } finally spark.conf.set(graft.operators.Checkpoints.ReliableConf, "false")
+    }
+    assert(org.apache.spark.sql.classic.GraftSqlBridge.cacheIsEmpty(spark))
   }
 
   /** Sequential reference peel. */

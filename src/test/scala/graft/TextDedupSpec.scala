@@ -291,77 +291,4 @@ class TextDedupSpec extends AnyFunSuite {
     assert(expanded.forall { case (a, b, _) => a < b }, s"self or unordered pairs: $expanded")
     assert(expanded == viaJoin, "the classic join must match the expansion")
   }
-
-  test("components() resolves planted clusters to min-id with canonical flags") {
-    import spark.implicits._
-    // planted graph: a 5-node chain (10-11-12-13-14), a 3-node star
-    // (20 hub), a disconnected pair (30,31); edges in arbitrary order
-    val pairs = Seq(
-      (13L, 14L), (10L, 11L), (12L, 13L), (11L, 12L),
-      (21L, 20L), (20L, 22L),
-      (31L, 30L)).toDF("idA", "idB")
-    val out = TextDedup.components(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1)
-    val expected = Seq(
-      (10L, 10L, 1), (11L, 10L, 0), (12L, 10L, 0), (13L, 10L, 0), (14L, 10L, 0),
-      (20L, 20L, 1), (21L, 20L, 0), (22L, 20L, 0),
-      (30L, 30L, 1), (31L, 30L, 0))
-    assert(out.toSeq == expected)
-    // nodes without edges are absent (caller closes over the corpus)
-    assert(!out.exists(_._1 == 99L))
-    // diameter > maxIters fails loudly instead of emitting partial labels
-    val longChain = (0 until 12).map(i => (i.toLong, i + 1L)).toDF("idA", "idB")
-    intercept[IllegalStateException] {
-      TextDedup.components(longChain, maxIters = 2).collect()
-    }
-  }
-
-  test("components() costs one Spark job per round and unpersists its caches") {
-    import spark.implicits._
-    // AQE splits one action into per-stage jobs, which would make the
-    // job count measure stage structure rather than driver round trips
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // tiny test labels would otherwise broadcast, and the broadcast
-    // exchange materializes through an extra async job — at corpus scale
-    // the labels table is far beyond any broadcast threshold, so the
-    // job count of record is the shuffle-join shape
-    val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // the r21 size-conditional label broadcast costs one extra (tiny)
-    // broadcast-build job per round; zero the cap so this pin keeps
-    // measuring the at-scale shuffle shape, where the cap never fires
-    spark.conf.set("spark.graft.graph.broadcastMaxRows", "0")
-    spark.catalog.clearCache()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          start: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // single edge → exactly 2 rounds (one merge, one zero-change)
-      TextDedup.components(Seq((1L, 2L)).toDF("idA", "idB"))
-      // listener events post asynchronously — wait for the count to settle
-      var last = -1
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != last && spins < 50) {
-        Thread.sleep(100); last = cur; cur = jobs.get(); spins += 1
-      }
-      // 1 partition-sizing count (r21 — scale-adaptive loop
-      // parallelism) + 1 initialization job + 1 job per round; the
-      // pre-round-6 shape (eager checkpoint + separate convergence
-      // aggregate) cost 6 here
-      assert(cur <= 4, s"expected <=4 jobs (sizing count + init + 2 one-job rounds), saw $cur")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
-      spark.conf.unset("spark.graft.graph.broadcastMaxRows")
-    }
-    assert(org.apache.spark.sql.classic.GraftSqlBridge.cacheIsEmpty(spark),
-      "components() must leave no entries in the CacheManager")
-  }
 }

@@ -15,8 +15,10 @@ flags = [a for a in sys.argv[3:] if a.startswith("--")]
 only = [a for a in sys.argv[3:] if not a.startswith("--")]
 
 if "--skip-spark" not in flags:
+    # named queries: Verify runs only those (its third argument)
+    subset = f' {",".join(only)}' if only else ""
     r = subprocess.run(
-        ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
+        ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{subset}'],
         capture_output=True, text=True,
         # the checkout this script belongs to, not a fixed path: a copy of
         # the repo runs the gate against its own sources
